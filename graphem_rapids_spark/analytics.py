@@ -30,6 +30,7 @@ from graphem_rapids_spark.checkpoint import (
     checkpoint_count,
     eager_checkpoint,
     eager_materialize,
+    iter_materialize,
     lazy_checkpoint,
     release,
 )
@@ -1224,6 +1225,77 @@ def harmonic_centrality(
     )
 
 
+def _bfs_levels(sym, sources, n_sources, max_depth, col, init, agg):
+    """Forward sweep shared by the sampled Brandes-family kernels:
+    batched multi-source BFS over the symmetric edge table ``sym``
+    from the (id) ``sources``. Level 0 is (s, id=s, ``col``=``init``);
+    level d+1 holds the unseen vertices reached from level d, with
+    ``col`` = ``agg`` over their predecessor messages (``sum(sigma)``
+    for path counts, ``count(*)`` for predecessor counts). Returns the
+    per-level checkpointed tables and their sizes (the backward pass
+    reuses the sizes for the same broadcast↔shuffle choice)."""
+    from graphem_rapids_spark import session
+
+    broadcast_max = session.BROADCAST_POSITIONS_MAX
+    frontier = sources.select(
+        F.col("id").alias("s"), F.col("id"), init.alias(col)
+    ).transform(eager_checkpoint)
+    levels = [frontier]
+    level_counts = [n_sources]
+    seen = frontier.select("s", "id").transform(eager_checkpoint)
+    frontier_n = n_sources
+    for _ in range(max_depth):
+        fr = F.broadcast(frontier) if frontier_n <= broadcast_max else frontier
+        msgs = (
+            sym.withColumnRenamed("src", "id")
+            .join(fr, "id")
+            .select("s", F.col("dst").alias("id"), col)
+            .groupBy("s", "id")
+            .agg(agg.alias(col))
+        )
+        # materialization + frontier count in one job (checkpoint_count)
+        frontier, frontier_n = checkpoint_count(
+            msgs.join(seen, ["s", "id"], "left_anti")
+        )
+        if frontier_n == 0:
+            break
+        levels.append(frontier)
+        level_counts.append(frontier_n)
+        # seen is a flat union of already-checkpointed frontiers — no
+        # lineage growth, so no extra checkpoint job per round
+        seen = seen.unionAll(frontier.select("s", "id"))
+    return levels, level_counts
+
+
+def _rescaled_dependency(
+    spark, acc, vertices, n_vertices, n_sources, normalized, halve
+):
+    """Per-vertex value from the accumulated (id, delta_fp) parts:
+    2⁻⁴⁰ fixed-point sum, sampling rescale by n/k (networkx
+    convention), then ``normalized`` by (n-1)(n-2) or, unnormalized,
+    halved for undirected betweenness (``halve``; load does not
+    halve). Zero-filled over ``vertices`` (dense 0..n-1 when None)."""
+    if vertices is None:
+        vertices = spark.range(n_vertices).select(F.col("id").cast("long"))
+    else:
+        vertices = vertices.select(F.col("id").cast("long"))
+    if acc is None:
+        return vertices.select("id", F.lit(0.0).alias("value"))
+    raw = acc.groupBy("id").agg(F.sum("delta_fp").alias("dfp_sum"))
+    dsum = F.col("dfp_sum").cast("double") / F.lit(float(DELTA_FP_SCALE))
+    scale = float(n_vertices) / float(n_sources)
+    if normalized:
+        denom = float(max((n_vertices - 1) * (n_vertices - 2), 1))
+        val = dsum * scale / denom
+    elif halve:
+        val = dsum * scale / 2.0
+    else:
+        val = dsum * scale
+    return vertices.join(raw, "id", "left").select(
+        "id", F.coalesce(val, F.lit(0.0)).alias("value")
+    )
+
+
 def betweenness_sampled(
     edges: DataFrame,
     n_vertices: int,
@@ -1278,37 +1350,13 @@ def betweenness_sampled(
     from graphem_rapids_spark import session
 
     broadcast_max = session.BROADCAST_POSITIONS_MAX
-
     # sigma as DECIMAL(38,0): path counts are exact integers up to
     # 10³⁸ (a double would silently lose exactness past 2⁵³ on dense
     # graphs, reintroducing summation-order drift)
-    frontier = sources.select(
-        F.col("id").alias("s"), F.col("id"), F.lit(1).cast("decimal(38,0)").alias("sigma")
-    ).transform(eager_checkpoint)
-    levels = [frontier]
-    level_counts = [n_sources]  # frontier sizes, reused by the backward pass
-    seen = frontier.select("s", "id").transform(eager_checkpoint)
-    frontier_n = n_sources
-    for _ in range(max_depth):
-        fr = F.broadcast(frontier) if frontier_n <= broadcast_max else frontier
-        msgs = (
-            sym.withColumnRenamed("src", "id")
-            .join(fr, "id")
-            .select("s", F.col("dst").alias("id"), "sigma")
-            .groupBy("s", "id")
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        # materialization + frontier count in one job (checkpoint_count)
-        frontier, frontier_n = checkpoint_count(
-            msgs.join(seen, ["s", "id"], "left_anti")
-        )
-        if frontier_n == 0:
-            break
-        levels.append(frontier)
-        level_counts.append(frontier_n)
-        # seen is a flat union of already-checkpointed frontiers — no
-        # lineage growth, so no extra checkpoint job per round
-        seen = seen.unionAll(frontier.select("s", "id"))
+    levels, level_counts = _bfs_levels(
+        sym, sources, n_sources, max_depth, "sigma",
+        F.lit(1).cast("decimal(38,0)"), F.sum("sigma"),
+    )
 
     # backward accumulation, deepest level has delta = 0.
     # delta_fp as DECIMAL(38,0): a hub vertex's delta can reach
@@ -1366,23 +1414,8 @@ def betweenness_sampled(
         # non-predecessor joins (same-level neighbors) were filtered by
         # the inner join against `cur` (exactly the level-d vertices)
     sym.unpersist()
-
-    if vertices is None:
-        vertices = spark.range(n_vertices).select(F.col("id").cast("long"))
-    else:
-        vertices = vertices.select(F.col("id").cast("long"))
-    if acc is None:
-        return vertices.select("id", F.lit(0.0).alias("value"))
-    raw = acc.groupBy("id").agg(F.sum("delta_fp").alias("dfp_sum"))
-    dsum = F.col("dfp_sum").cast("double") / F.lit(float(DELTA_FP_SCALE))
-    scale = float(n_vertices) / float(n_sources)  # sampling rescale (nx convention)
-    if normalized:
-        denom = float(max((n_vertices - 1) * (n_vertices - 2), 1))
-        val = dsum * scale / denom
-    else:
-        val = dsum * scale / 2.0
-    return vertices.join(raw, "id", "left").select(
-        "id", F.coalesce(val, F.lit(0.0)).alias("value")
+    return _rescaled_dependency(
+        spark, acc, vertices, n_vertices, n_sources, normalized, halve=True
     )
 
 
@@ -1849,20 +1882,6 @@ def node2vec_walks(
     sym.unpersist()
     return out
 
-def _iter_materialize(df: DataFrame, old: DataFrame | None = None) -> DataFrame:
-    """Materialize one generation of a deep iterative kernel:
-    ``localCheckpoint`` truncates lineage AND ``persist``+``count``
-    substitutes honest cached stats for Catalyst's inherited
-    sizeInBytes estimate, which otherwise SQUARES per self-join
-    generation and melts the driver in BigInteger multiplies from
-    ~18 generations (SCALE.md §iteration-discipline). Pass ``old`` to
-    release the previous generation's cache."""
-    out = df.transform(eager_checkpoint).persist()
-    out.count()
-    if old is not None:
-        old.unpersist()
-    return out
-
 
 def minimum_spanning_forest(
     wedges: DataFrame,
@@ -1913,7 +1932,7 @@ def minimum_spanning_forest(
         .persist()
     )
 
-    _mat = _iter_materialize
+    _mat = iter_materialize
     comp = _mat(
         dire.select(F.col("u").alias("id"))
         .distinct()
@@ -2007,12 +2026,12 @@ def maximal_independent_set(
         * F.lit(2_147_483_648)
         + F.col("id")
     )
-    und = _iter_materialize(
+    und = iter_materialize(
         edges.select(F.explode(F.array("src", "dst")).alias("id"))
         .distinct()
         .select("id", pri.alias("p"))
     )
-    esym = _iter_materialize(
+    esym = iter_materialize(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionAll(
             edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
         )
@@ -2030,18 +2049,18 @@ def maximal_independent_set(
             .filter(F.col("nbr_min").isNull() | (F.col("p") < F.col("nbr_min")))
             .select("id")
         )
-        win = _iter_materialize(win)
-        mis = win if mis is None else _iter_materialize(mis.unionAll(win))
-        retired = _iter_materialize(
+        win = iter_materialize(win)
+        mis = win if mis is None else iter_materialize(mis.unionAll(win), mis)
+        retired = iter_materialize(
             win.unionAll(
                 esym.join(win.select(F.col("id").alias("_w")), esym["u"] == F.col("_w"))
                 .select(F.col("v").alias("id"))
             ).distinct()
         )
-        und = _iter_materialize(
+        und = iter_materialize(
             und.join(retired, "id", "left_anti"), und
         )
-        esym = _iter_materialize(
+        esym = iter_materialize(
             esym.join(und.select(F.col("id").alias("_ku")), esym["u"] == F.col("_ku"))
             .select("u", "v")
             .join(und.select(F.col("id").alias("_kv")), F.col("v") == F.col("_kv"))
@@ -2049,7 +2068,8 @@ def maximal_independent_set(
             esym,
         )
         retired.unpersist()
-        win.unpersist()
+        if win is not mis:  # round 1's winners ARE the MIS so far
+            win.unpersist()
         if und.count() == 0:
             break
     return mis, und.select("id")
@@ -2083,7 +2103,7 @@ def maximal_matching(
             * F.lit(float(MIX_M))
         ).cast("long")
     )
-    live = _iter_materialize(
+    live = iter_materialize(
         edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
         .distinct()
         .select("s", "d", h.alias("h"))
@@ -2104,7 +2124,7 @@ def maximal_matching(
         b2 = best.select(
             F.col("v").alias("_v2"), F.col("bs").alias("_s2"), F.col("bd").alias("_d2")
         )
-        win = _iter_materialize(
+        win = iter_materialize(
             live.join(
                 b1,
                 (F.col("_v1") == F.col("s"))
@@ -2119,16 +2139,19 @@ def maximal_matching(
             )
             .select("s", "d")
         )
-        matched = win if matched is None else _iter_materialize(matched.unionAll(win))
+        matched = (
+            win if matched is None else iter_materialize(matched.unionAll(win), matched)
+        )
         used = win.select(F.col("s").alias("u")).unionAll(
             win.select(F.col("d").alias("u"))
         )
-        live = _iter_materialize(
+        live = iter_materialize(
             live.join(used, live["s"] == used["u"], "left_anti")
             .join(used, F.col("d") == used["u"], "left_anti"),
             live,
         )
-        win.unpersist()
+        if win is not matched:  # round 1's winners ARE the matching so far
+            win.unpersist()
         if live.count() == 0:
             break
     return matched.select("s", "d")
@@ -2158,7 +2181,7 @@ def densest_subgraph(
     edges + two semi-joins; the scalar (n, m) round stats are the
     only driver state (bounded-collect contract). Generations use the
     checkpoint+persist discipline (SCALE.md §iteration-discipline)."""
-    live = _iter_materialize(
+    live = iter_materialize(
         edges.select(F.col("src").alias("s"), F.col("dst").alias("d")).distinct()
     )
     best = None  # (round, n, m), maximizing m/n by cross-multiplication
@@ -2166,7 +2189,7 @@ def densest_subgraph(
         m = live.count()
         if m == 0:
             break
-        deg = _iter_materialize(
+        deg = iter_materialize(
             live.select(F.col("s").alias("v"))
             .unionAll(live.select(F.col("d").alias("v")))
             .groupBy("v")
@@ -2178,7 +2201,7 @@ def densest_subgraph(
         keep = deg.filter(F.col("dg") * F.lit(n) > F.lit(eps_num) * F.lit(m)).select(
             "v"
         )
-        live = _iter_materialize(
+        live = iter_materialize(
             live.join(keep.select(F.col("v").alias("_ks")), F.col("s") == F.col("_ks"))
             .select("s", "d")
             .join(keep.select(F.col("v").alias("_kd")), F.col("d") == F.col("_kd"))
@@ -2275,7 +2298,7 @@ def hyperball(
             regs.unionByName(nbr).groupBy("id", "bucket").agg(F.max("m").alias("m"))
         )
         if rounds > 2:
-            regs = _iter_materialize(regs)
+            regs = iter_materialize(regs)
         ests.append(_estimate(regs, f"est_r{t}"))
 
     out = ests[0]
@@ -2325,34 +2348,12 @@ def load_sampled(
     from graphem_rapids_spark import session
 
     broadcast_max = session.BROADCAST_POSITIONS_MAX
-
     # npred of a source is never read (level 0 never plays w in the
     # backward pass) — 1 is a placeholder
-    frontier = sources.select(
-        F.col("id").alias("s"), F.col("id"), F.lit(1).cast("long").alias("npred")
-    ).transform(eager_checkpoint)
-    levels = [frontier]
-    level_counts = [n_sources]
-    seen = frontier.select("s", "id").transform(eager_checkpoint)
-    frontier_n = n_sources
-    for _ in range(max_depth):
-        fr = F.broadcast(frontier) if frontier_n <= broadcast_max else frontier
-        msgs = (
-            sym.withColumnRenamed("src", "id")
-            .join(fr.select("s", "id"), "id")
-            .select("s", F.col("dst").alias("id"))
-            .groupBy("s", "id")
-            .agg(F.count("*").alias("npred"))
-        )
-        # materialization + frontier count in one job (checkpoint_count)
-        frontier, frontier_n = checkpoint_count(
-            msgs.join(seen, ["s", "id"], "left_anti")
-        )
-        if frontier_n == 0:
-            break
-        levels.append(frontier)
-        level_counts.append(frontier_n)
-        seen = seen.unionAll(frontier.select("s", "id"))
+    levels, level_counts = _bfs_levels(
+        sym, sources, n_sources, max_depth, "npred",
+        F.lit(1).cast("long"), F.count("*"),
+    )
 
     acc = None
     delta_next = levels[-1].withColumn("delta_fp", F.lit(0).cast("decimal(38,0)"))
@@ -2397,52 +2398,91 @@ def load_sampled(
             part = delta_next.select("id", "delta_fp")
             acc = part if acc is None else acc.unionAll(part)
     sym.unpersist()
-
-    if vertices is None:
-        vertices = spark.range(n_vertices).select(F.col("id").cast("long"))
-    else:
-        vertices = vertices.select(F.col("id").cast("long"))
-    if acc is None:
-        return vertices.select("id", F.lit(0.0).alias("value"))
-    raw = acc.groupBy("id").agg(F.sum("delta_fp").alias("dfp_sum"))
-    dsum = F.col("dfp_sum").cast("double") / F.lit(float(DELTA_FP_SCALE))
-    scale = float(n_vertices) / float(n_sources)
-    if normalized:
-        denom = float(max((n_vertices - 1) * (n_vertices - 2), 1))
-        val = dsum * scale / denom
-    else:
-        val = dsum * scale
-    return vertices.join(raw, "id", "left").select(
-        "id", F.coalesce(val, F.lit(0.0)).alias("value")
+    return _rescaled_dependency(
+        spark, acc, vertices, n_vertices, n_sources, normalized, halve=False
     )
 
 
-def _louvain_move_pass(
-    ew: DataFrame,
-    selfw: DataFrame,
-    labels: DataFrame,
-    m_w: int,
-    phase: int | None = None,
-) -> DataFrame:
-    """One synchronized WEIGHTED Louvain modularity-gain pass.
+def modularity_numerators(
+    edges: DataFrame, labels: DataFrame, cols: list[str]
+) -> tuple[int, list[tuple[int, int]]]:
+    """Exact Newman modularity of the partitions in ``labels``' columns
+    ``cols`` (keyed by ``id``) on the canonical unweighted ``edges``:
+    Q = num / 4m² with num = Σ_c (4m·m_c − D_c²) = 4m·Σ_c m_c − Σ_c D_c²,
+    every term a BIGINT count, so both engines agree bit-exactly
+    before the one final division. Returns ``(m, [(num,
+    n_communities) per column])``, all from ONE collect: m and every
+    Σ_c m_c are conditional counts over one pass of the edge stream
+    (map-side partial, no per-community exchange), and only the n-row
+    degree table groups by community — once for all columns, via one
+    explode tagging each degree with every column's label.
+    Communities count the labels of non-isolated vertices."""
+    idx = range(len(cols))
+    src, dst = (
+        labels.select(
+            F.col("id").alias(end),
+            *[F.col(c).alias(f"_{end}{i}") for i, c in enumerate(cols)],
+        )
+        for end in ("src", "dst")
+    )
+    # LEFT joins: every edge counts toward m; an unlabelled end is
+    # never intra-community
+    intra = (
+        edges.join(src, "src", "left")
+        .join(dst, "dst", "left")
+        .agg(
+            F.count("*").alias("m"),
+            *[
+                F.coalesce(
+                    F.sum((F.col(f"_src{i}") == F.col(f"_dst{i}")).cast("long")),
+                    F.lit(0),
+                ).alias(f"mt{i}")
+                for i in idx
+            ],
+        )
+    )
+    tagged = F.explode(
+        F.array(
+            *[F.struct(F.lit(i).alias("t"), F.col(c).alias("label")) for i, c in enumerate(cols)]
+        )
+    ).alias("tl")
+    dsq = (
+        vertex_degrees(edges)
+        .join(labels, "id")
+        .select("degree", tagged)
+        .groupBy(F.col("tl.t").alias("t"), F.col("tl.label").alias("label"))
+        .agg(F.sum("degree").alias("s"))
+        .groupBy()
+        .agg(
+            *[
+                agg
+                for i in idx
+                for agg in (
+                    F.coalesce(
+                        F.sum(F.when(F.col("t") == i, F.col("s") * F.col("s"))),
+                        F.lit(0),
+                    ).alias(f"ss{i}"),
+                    F.count(F.when(F.col("t") == i, 1)).alias(f"nc{i}"),
+                )
+            ]
+        )
+    )
+    row = intra.crossJoin(F.broadcast(dsq)).first()
+    m = int(row["m"])
+    return m, [
+        (4 * m * int(row[f"mt{i}"]) - int(row[f"ss{i}"]), int(row[f"nc{i}"]))
+        for i in idx
+    ]
 
-    ``ew``: undirected weighted edges (a < b, w); ``selfw``: per-vertex
-    self-loop weight (id, sw — contributes 2·sw to the weighted
-    degree; intra-community mass the coarsening folds in); ``labels``:
-    (id, label). Every vertex evaluates moving to each NEIGHBOR
-    community against the OLD labels; all strictly-positive best
-    moves apply simultaneously (the parallel variant distributed
-    Louvain implementations use). Gain of i→c is the cross-multiplied
-    INTEGER 2m·(k_ic − k_i,own) − d_i·(D_c − (D_own − d_i)) over 2m²
-    — never a float; ties break on the smallest target community.
-    Shapes: one edges⋈labels groupBy for neighbor-community weights,
-    a vertex-PARTITIONED argmax window — the PageRank one-edge-shuffle
-    discipline. ``phase`` (0/1) restricts movers to vertices with
-    id % 2 == phase: alternating parities across passes breaks the
-    synchronized-swap oscillation (two vertices exchanging
-    communities forever) that unrestricted parallel moves exhibit —
-    the standard distributed-Louvain symmetry breaker, deterministic
-    and SQL-replayable. Returns the new (id, label)."""
+
+def louvain_degrees(ew: DataFrame, selfw: DataFrame):
+    """``(wsym, deg)`` for one level's move passes: both directions of
+    the undirected weighted edges ``ew`` (a < b, w) and the weighted
+    degree table (id, d), checkpointed lazily — constant while only
+    the labels move, so the first pass's scan writes it once and later
+    passes read the blocks. ``selfw``: per-vertex self-loop weight
+    (id, sw — contributes 2·sw to the weighted degree;
+    intra-community mass the coarsening folds in)."""
     wsym = ew.select("src", "dst", "w").unionAll(
         ew.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
@@ -2460,6 +2500,42 @@ def _louvain_move_pass(
             ).alias("d"),
         )
     )
+    # stats kept: built once per level, so nothing compounds
+    return wsym, lazy_checkpoint(deg, sever_stats=False)
+
+
+def louvain_move_pass(
+    wsym: DataFrame,
+    deg: DataFrame,
+    labels: DataFrame,
+    m_w: int,
+    phase: int | None = None,
+) -> DataFrame:
+    """One synchronized WEIGHTED Louvain modularity-gain pass.
+
+    ``wsym``/``deg``: from :func:`louvain_degrees`; ``labels``:
+    (id, label). Every vertex evaluates moving to each NEIGHBOR
+    community against the OLD labels; all strictly-positive best
+    moves apply simultaneously (the parallel variant distributed
+    Louvain implementations use). Gain of i→c is the cross-multiplied
+    INTEGER 2m·(k_ic − k_i,own) − d_i·(D_c − (D_own − d_i)) over 2m²
+    — never a float; ties break on the smallest target community.
+    Shapes: one edges⋈labels groupBy for neighbor-community weights,
+    a vertex-PARTITIONED argmax — the PageRank one-edge-shuffle
+    discipline. ``phase`` (0/1) restricts movers to vertices with
+    id % 2 == phase: alternating parities across passes breaks the
+    synchronized-swap oscillation (two vertices exchanging
+    communities forever) that unrestricted parallel moves exhibit —
+    the standard distributed-Louvain symmetry breaker, deterministic
+    and SQL-replayable.
+
+    Returns the new (id, label, _o) with the OLD label carried as
+    ``_o`` (a mover is exactly a row with label != _o), as a lazy
+    checkpoint: the caller's first full scan — e.g. the n_moved
+    filter-count — writes its blocks. Every scan of ``labels`` sits
+    below an exchange, so the caller may release ``labels`` as soon
+    as this returns (see :func:`lazy_checkpoint`)."""
+    labels = labels.select("id", "label")
     dc = deg.join(labels, "id").groupBy("label").agg(
         F.sum("d").alias("dsum")
     )
@@ -2477,14 +2553,12 @@ def _louvain_move_pass(
         # downstream join/aggregate half the rows, identical movers
         nbc = nbc.filter(F.pmod(F.col("id"), F.lit(2)) == phase)
     own = labels.withColumnRenamed("label", "own")
-    # gain fold (r8 opt round, mirrors community_louvain_move):
-    # g(i→c) = 2m(k−k_own) − d(dc−(down−d)) = s(c) + off(i) with
-    # s = 2m·k − d·dc and off constant per vertex, so the argmax over
-    # candidate communities needs only s (equal g ⇔ equal s per
-    # vertex — the (g DESC, c ASC) tie order is preserved exactly),
-    # k_own rides the same groupBy as a conditional aggregate, and
-    # the former kown self-join subtree plus one n-sized join
-    # disappear from every move pass
+    # gain fold (r8 opt round): g(i→c) = 2m(k−k_own) − d(dc−(down−d))
+    # = s(c) + off(i) with s = 2m·k − d·dc and off constant per
+    # vertex, so the argmax over candidate communities needs only s
+    # (equal g ⇔ equal s per vertex — the (g DESC, c ASC) tie order
+    # is preserved exactly), and k_own rides the same groupBy as a
+    # conditional aggregate
     scored = (
         nbc.join(own, "id")
         .join(deg, "id")
@@ -2521,15 +2595,15 @@ def _louvain_move_pass(
         )
         .select("id", (-F.col("_m._nc")).alias("new_label"))
     )
-    from graphem_rapids_spark.checkpoint import eager_checkpoint
-
     # stats-safe: this plan references `labels` in 4+ joins, so a
     # plain localCheckpoint compounds CBO sizeInBytes exponentially
     # across passes (see checkpoint.py — measured 0.7 s → 88 s by
     # pass 9 before severing)
-    return eager_checkpoint(
+    return lazy_checkpoint(
         labels.join(moves, "id", "left").select(
-            "id", F.coalesce("new_label", F.col("label")).alias("label")
+            "id",
+            F.coalesce("new_label", F.col("label")).alias("label"),
+            F.col("label").alias("_o"),
         )
     )
 
@@ -2566,56 +2640,17 @@ def _louvain_refine(ew_, labels_, max_rounds: int = LOUVAIN_REFINE_ROUNDS):
         .filter(F.col("_a") == F.col("_b"))
         .select("src", "dst")
     )
-    from graphem_rapids_spark.checkpoint import eager_checkpoint, release
-
-    isym = eager_checkpoint(
-        intra.unionAll(
-            intra.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    )
-    ref = eager_checkpoint(labels_.select("id", F.col("id").alias("label")))
-    changed = -1
-    for _ in range(max_rounds):
-        nbr = (
-            ref.join(isym.withColumnRenamed("src", "id"), "id")
-            .select(F.col("dst").alias("id"), F.col("label").alias("c"))
-            .groupBy("id")
-            .agg(F.min("c").alias("nbr"))
-        )
-        # carry the previous label through the round checkpoint (the
-        # LPA pattern): the changed-row count below is then a filter
-        # over the blocks the materialization itself writes — the
-        # former separate new⋈ref count job folds into it, and the _o
-        # column is pruned out of every downstream join
-        new = lazy_checkpoint(
-            ref.join(nbr, "id", "left").select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("nbr", F.col("label"))
-                ).alias("label"),
-                F.col("label").alias("_o"),
-            )
-        )
-        changed = new.filter(F.col("label") != F.col("_o")).count()
-        # release the prior round's checkpoint blocks eagerly (the
-        # connected_components pattern) — leaked blocks measurably
-        # slow every SUBSEQUENT job in the session
-        prev, ref = ref, new
-        release(prev)
-        if changed == 0:
-            break
-    release(isym)
-    if changed != 0:
-        raise RuntimeError(
-            f"louvain refine: intra-community min-label did not converge "
-            f"in {max_rounds} rounds — raise LOUVAIN_REFINE_ROUNDS (the "
-            "oracle unroll derives from it)"
-        )
+    ref = connected_components(
+        intra,
+        0,
+        max_iter=max_rounds,
+        algorithm="minlabel",
+        vertices=labels_,
+        require_convergence=True,
+    ).withColumnRenamed("component", "label")
     n_before = labels_.select("label").distinct().count()
     n_after = ref.select("label").distinct().count()
-    # project the carried _o column away so callers see the (id, label)
-    # contract unchanged
-    return ref.select("id", "label"), n_after - n_before
+    return ref, n_after - n_before
 
 
 def louvain(
@@ -2777,12 +2812,12 @@ def louvain(
         lab = coarse_verts.select(
             "id", F.col("id").alias("label")
         ).transform(eager_checkpoint)
+        wsym, deg = louvain_degrees(cur_ew, cur_self)
         for r in range(move_rounds):
             prev_lab = lab
-            lab = _louvain_move_pass(
-                cur_ew, cur_self, lab, m_w, phase=r % 2
-            )
+            lab = louvain_move_pass(wsym, deg, lab, m_w, phase=r % 2)
             release(prev_lab)  # dead checkpoint blocks slow later jobs
+        release(deg)
         n_split = 0
         if refine:
             prev_lab = lab
@@ -2846,33 +2881,10 @@ def edge_betweenness_sampled(
     from graphem_rapids_spark import session
 
     broadcast_max = session.BROADCAST_POSITIONS_MAX
-    frontier = sources.select(
-        F.col("id").alias("s"),
-        F.col("id"),
-        F.lit(1).cast("decimal(38,0)").alias("sigma"),
-    ).transform(eager_checkpoint)
-    levels = [frontier]
-    level_counts = [n_sources]
-    seen = frontier.select("s", "id").transform(eager_checkpoint)
-    frontier_n = n_sources
-    for _ in range(max_depth):
-        fr = F.broadcast(frontier) if frontier_n <= broadcast_max else frontier
-        msgs = (
-            sym.withColumnRenamed("src", "id")
-            .join(fr, "id")
-            .select("s", F.col("dst").alias("id"), "sigma")
-            .groupBy("s", "id")
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        # materialization + frontier count in one job (checkpoint_count)
-        frontier, frontier_n = checkpoint_count(
-            msgs.join(seen, ["s", "id"], "left_anti")
-        )
-        if frontier_n == 0:
-            break
-        levels.append(frontier)
-        level_counts.append(frontier_n)
-        seen = seen.unionAll(frontier.select("s", "id"))
+    levels, level_counts = _bfs_levels(
+        sym, sources, n_sources, max_depth, "sigma",
+        F.lit(1).cast("decimal(38,0)"), F.sum("sigma"),
+    )
 
     edge_acc = None
     delta_next = levels[-1].withColumn(

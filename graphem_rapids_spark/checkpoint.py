@@ -70,12 +70,11 @@ def _bind_release(df: DataFrame, jrdd) -> DataFrame:
     return df
 
 
-def eager_checkpoint(df: DataFrame, sever_stats: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager=True)`` + origin-stats severing +
-    working block release (see module docstring). Falls back to the
-    plain checkpoint if the internal constructor is unavailable
-    (non-classic sessions)."""
-    out = df.localCheckpoint(eager=True)
+def _sever_and_bind(out: DataFrame, sever_stats: bool) -> DataFrame:
+    """Stats severing + working block release for a freshly
+    ``localCheckpoint``'ed frame (shared by the eager and lazy forms).
+    Falls back to the plain checkpoint if the internal constructor is
+    unavailable (non-classic sessions)."""
     jrdd = _checkpoint_rdd(out)
     result = out
     if sever_stats:
@@ -93,6 +92,12 @@ def eager_checkpoint(df: DataFrame, sever_stats: bool = True) -> DataFrame:
     if jrdd is not None:
         result = _bind_release(result, jrdd)
     return result
+
+
+def eager_checkpoint(df: DataFrame, sever_stats: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` + origin-stats severing +
+    working block release (see module docstring)."""
+    return _sever_and_bind(df.localCheckpoint(eager=True), sever_stats)
 
 
 def _aqe_enabled(df: DataFrame) -> bool:
@@ -128,27 +133,17 @@ def lazy_checkpoint(df: DataFrame, sever_stats: bool = True) -> DataFrame:
     action on the result would die with "checkpoint block not found".
     On AQE-off sessions fall back to the eager checkpoint (one extra
     materialization job per round, the pre-r8 behavior — correct at
-    any scale)."""
+    any scale).
+
+    Precondition for that release: EVERY scan of the released frame
+    in ``df``'s plan must sit below a shuffle or broadcast exchange.
+    The conversion only runs the exchange stages; a scan in the final
+    stage (the streamed side of a broadcast join, a bare projection
+    or filter of the previous round) still runs at the first action,
+    after the blocks are gone."""
     if not _aqe_enabled(df):
         return eager_checkpoint(df, sever_stats=sever_stats)
-    out = df.localCheckpoint(eager=False)
-    jrdd = _checkpoint_rdd(out)
-    result = out
-    if sever_stats:
-        try:
-            jdf = out._jdf
-            spark = out.sparkSession
-            new_jdf = spark._jsparkSession.internalCreateDataFrame(
-                jdf.queryExecution().toRdd(), jdf.schema(), False
-            )
-            severed = DataFrame(new_jdf, spark)
-            severed._graphem_ckpt_src = out
-            result = severed
-        except Exception:  # pragma: no cover — connect/older builds
-            result = out
-    if jrdd is not None:
-        result = _bind_release(result, jrdd)
-    return result
+    return _sever_and_bind(df.localCheckpoint(eager=False), sever_stats)
 
 
 def checkpoint_count(df: DataFrame, sever_stats: bool = True):
@@ -197,6 +192,32 @@ def eager_materialize(df: DataFrame) -> DataFrame:
     ``df.unpersist()`` on the result actually frees the blocks (see
     :func:`eager_checkpoint`)."""
     return eager_checkpoint(df, sever_stats=False)
+
+
+def iter_materialize(df: DataFrame, old: DataFrame | None = None) -> DataFrame:
+    """Materialize one generation of a deep iterative kernel:
+    :func:`eager_checkpoint` truncates lineage AND ``persist``+``count``
+    substitutes honest cached stats for Catalyst's inherited
+    sizeInBytes estimate, which otherwise SQUARES per self-join
+    generation and melts the driver in BigInteger multiplies from
+    ~18 generations (SCALE.md §iteration-discipline). Pass ``old`` to
+    release the previous generation. ``unpersist()`` on the result
+    frees both its cache-manager entry and its checkpoint blocks (the
+    checkpoint's rebound ``unpersist`` alone frees only the blocks, and
+    the cached copy would stay resident for the life of the session)."""
+    out = eager_checkpoint(df)
+    free_blocks = out.unpersist
+    out.persist()
+    out.count()
+
+    def _unpersist(blocking: bool = False, _df=out):
+        DataFrame.unpersist(_df, blocking)
+        return free_blocks(blocking)
+
+    out.unpersist = _unpersist
+    if old is not None:
+        old.unpersist()
+    return out
 
 
 def release(df: DataFrame) -> None:

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 
 from graphem_rapids_spark.checkpoint import eager_checkpoint as _eager_ckpt
+from graphem_rapids_spark.checkpoint import iter_materialize
 from pyspark.sql import functions as F
 
 
@@ -875,12 +876,7 @@ def pca_power_int8(
     # norm crossJoin references u twice, so a 40-iteration chain hits
     # the Catalyst stats-squaring pathology (SCALE.md
     # §iteration-discipline) under a bare localCheckpoint
-    def _mat(df: DataFrame, old: DataFrame | None = None) -> DataFrame:
-        out = df.transform(_eager_ckpt).persist()
-        out.count()
-        if old is not None:
-            old.unpersist()
-        return out
+    _mat = iter_materialize
 
     full = _mat(
         b.unionAll(

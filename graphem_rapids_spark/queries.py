@@ -677,49 +677,30 @@ def dedup_near_clusters(spark, sf_dir):
     appear in some pair), checkpointed per round; at corpus scale the
     pair graph is orders of magnitude smaller than the corpus, so the
     loop is cheap regardless of input size."""
-    from graphem_rapids_spark.graph.canon import symmetrize_edges
+    labels = _near_dup_components(_t(spark, sf_dir, "documents"))
+    return labels.groupBy(F.col("component").alias("cluster_rep")).agg(
+        F.count("*").alias("n_members")
+    )
 
+
+def _near_dup_components(docs):
+    """(id, component) over the verified MinHash-LSH pair graph of
+    ``docs`` — min doc_id per near-dup cluster, paired docs only."""
     pairs = D.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"),
+        docs,
         n=4,
         threshold=0.5,
         num_perm=128,
         bands=64,
         max_shingle_df=_MAX_SHINGLE_DF,
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    sym = symmetrize_edges(pairs)
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("comp"))
-        .transform(_eager_ckpt)
-    )
     # cap ≥ any plausible cluster diameter (templated near-dup corpora
     # can chain deeply); the fixpoint break keeps common cases at ~3-5
     # rounds, and the oracle's recursive CTE is a true transitive
     # closure, so only a >60-diameter chain could ever diverge
-    for _ in range(60):
-        nbr = (
-            sym.join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("comp").alias("nbr"))
-        )
-        new_labels = (
-            labels.join(nbr, "id", "left")
-            .select("id", F.least("comp", F.coalesce("nbr", "comp")).alias("comp"))
-            .transform(_eager_ckpt)
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("comp", "old"), "id")
-            .filter(F.col("comp") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.groupBy(F.col("comp").alias("cluster_rep")).agg(
-        F.count("*").alias("n_members")
+    return A.connected_components(
+        pairs, 0, max_iter=60, algorithm="minlabel",
+        vertices=vertices_from_edges(pairs),
     )
 
 
@@ -2163,36 +2144,12 @@ SELECT round(corr(ra, rb), 6) AS rho FROM r
 
 
 def connected_components_copurchase(spark, sf_dir):
+    # min-label propagation over the sparse vertex set (part keys, so
+    # the vertex universe is passed explicitly)
     e = copurchase_edges(spark, sf_dir)
-    verts = vertices_from_edges(e)
-    # min-label propagation over the sparse vertex set; labels start
-    # as the vertex DataFrame itself (no driver round-trip — the
-    # localCheckpoint truncates the co-purchase CTE lineage once)
-    from graphem_rapids_spark.graph.canon import symmetrize_edges
-
-    sym = symmetrize_edges(e)
-    labels = verts.select("id", F.col("id").alias("component")).transform(_eager_ckpt)
-    for _ in range(30):
-        nbr = (
-            labels.join(sym.withColumnRenamed("src", "id"), "id")
-            .select(F.col("dst").alias("id"), F.col("component").alias("c"))
-            .groupBy("id")
-            .agg(F.min("c").alias("nbr"))
-        )
-        new_labels = labels.join(nbr, "id", "left").select(
-            "id",
-            F.least(F.col("component"), F.coalesce("nbr", F.col("component"))).alias(
-                "component"
-            ),
-        ).transform(_eager_ckpt)
-        changed = (
-            new_labels.join(labels.select("id", F.col("component").alias("o")), "id")
-            .filter(F.col("component") != F.col("o"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
+    labels = A.connected_components(
+        e, 0, max_iter=30, algorithm="minlabel", vertices=vertices_from_edges(e)
+    )
     return labels.groupBy("component").agg(F.count("*").alias("size"))
 
 
@@ -2420,62 +2377,24 @@ def community_modularity(spark, sf_dir):
     "LPA found structure". Q = Σ_c [m_c/m − (D_c/2m)²] computed as an
     EXACT integer numerator Σ_c (4·m·m_c − D_c²) over denominator
     4m² (one final double division — bit-identical cross-engine;
-    every m_c, D_c, m is a BIGINT count). Engine shape: intra-edge
-    counts are one edges⋈labels⋈labels double join keyed on vertex
-    id (the same key the LPA rounds shuffle on), degree sums one
-    groupBy — nothing quadratic, nothing driver-side. Output:
-    (n_communities, m_edges, q_num, modularity)."""
-    from graphem_rapids_spark.analytics import label_propagation
-
+    every m_c, D_c, m is a BIGINT count), via
+    :func:`analytics.modularity_numerators`; the final rounding stays
+    Spark's round(). Output: (n_communities, m_edges, q_num,
+    modularity)."""
     e = copurchase_edges(spark, sf_dir)
-    lab = label_propagation(e, max_rounds=_LPA_ROUNDS, converge=False)
-    # Σ_label (4m·mc − dsum²) = 4m·Σmc − Σ dsum² (r8 opt round): the
-    # edge stream takes ONE scalar aggregate (map-side partial, no
-    # per-label groupBy exchange, no dc⋈intra join); only the n-row
-    # degree table still groups by label. Identical exact integers.
-    la = lab.select(F.col("id").alias("src"), F.col("label").alias("_la"))
-    lb = lab.select(F.col("id").alias("dst"), F.col("label").alias("_lb"))
-    intra = (
-        e.join(la, "src")
-        .join(lb, "dst")
-        .agg(
-            F.coalesce(
-                F.sum((F.col("_la") == F.col("_lb")).cast("long")), F.lit(0)
-            ).alias("mt")
-        )
-    )
-    deg = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("d"))
-    )
-    dstat = (
-        deg.join(lab, "id")
-        .groupBy("label")
-        .agg(F.sum("d").alias("dsum"))
-        .agg(
-            F.count("*").alias("n_communities"),
-            F.coalesce(F.sum(F.col("dsum") * F.col("dsum")), F.lit(0)).alias(
-                "_ss"
-            ),
-        )
-    )
-    m = e.agg(F.count("*").alias("m_edges"))
-    qn = F.lit(4) * F.col("m_edges") * F.col("mt") - F.col("_ss")
-    return (
-        intra.crossJoin(F.broadcast(dstat))
-        .crossJoin(F.broadcast(m))
-        .select(
-            "n_communities",
-            "m_edges",
-            qn.alias("q_num"),
-            F.round(
-                qn.cast("double")
-                / (F.lit(4.0) * F.col("m_edges") * F.col("m_edges")),
-                6,
-            ).alias("modularity"),
-        )
+    lab = A.label_propagation(e, max_rounds=_LPA_ROUNDS, converge=False)
+    m, ((qn, nc),) = A.modularity_numerators(e, lab, ["label"])
+    return spark.createDataFrame(
+        [(nc, m, qn)], "n_communities long, m_edges long, q_num long"
+    ).select(
+        "n_communities",
+        "m_edges",
+        "q_num",
+        F.round(
+            F.col("q_num").cast("double")
+            / (F.lit(4.0) * F.col("m_edges") * F.col("m_edges")),
+            6,
+        ).alias("modularity"),
     )
 
 
@@ -5830,95 +5749,10 @@ def _gn_components(verts, edge_df):
     component needing more rounds must fail LOUDLY rather than
     silently hash-mismatch an under-unrolled oracle. Shared by the
     one-step and iterated Girvan-Newman queries."""
-    from graphem_rapids_spark.checkpoint import eager_checkpoint, release
-
-    sym = eager_checkpoint(
-        edge_df.select("src", "dst").unionAll(
-            edge_df.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+    return A.connected_components(
+        edge_df, 0, max_iter=_GN_CC_ROUNDS, algorithm="minlabel",
+        vertices=verts, require_convergence=True,
     )
-    labels = eager_checkpoint(
-        verts.select("id", F.col("id").alias("component"))
-    )
-    changed = -1
-    for _ in range(_GN_CC_ROUNDS):
-        nbr = (
-            labels.join(sym.withColumnRenamed("src", "id"), "id")
-            .select(F.col("dst").alias("id"), F.col("component").alias("c"))
-            .groupBy("id")
-            .agg(F.min("c").alias("nbr"))
-        )
-        new_labels = eager_checkpoint(
-            labels.join(nbr, "id", "left").select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce("nbr", F.col("component"))
-                ).alias("component"),
-            )
-        )
-        changed = (
-            new_labels.join(
-                labels.select("id", F.col("component").alias("o")), "id"
-            )
-            .filter(F.col("component") != F.col("o"))
-            .count()
-        )
-        # release the prior round's checkpoint blocks (the
-        # connected_components pattern — leaked blocks measurably
-        # slow every subsequent job)
-        prev, labels = labels, new_labels
-        release(prev)
-        if changed == 0:
-            break
-    release(sym)
-    if changed != 0:
-        raise RuntimeError(
-            f"GN min-label components did not converge within the "
-            f"oracle's {_GN_CC_ROUNDS}-round unroll — raise "
-            f"_GN_CC_ROUNDS (and the oracle derives from it)"
-        )
-    return labels
-
-
-def _gn_modularity_num(e, m, labels):
-    """Exact integer modularity numerator Σ_c (4m·m_c − d_c²) of the
-    ``labels`` partition measured on the ORIGINAL graph ``e`` (m
-    edges) — Q = num / 4m²; every term integer so both engines agree
-    bit-exactly before the one final division."""
-    sym = e.select("src", "dst").unionAll(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = sym.groupBy("src").agg(F.count("*").alias("d")).withColumnRenamed(
-        "src", "id"
-    )
-    # Σ_c (4m·m_c − d_c²) = 4m·Σm_c − Σ d_c² (r8 opt round): the edge
-    # stream takes ONE scalar aggregate (map-side partial, no
-    # per-component groupBy exchange, no dc⋈intra join); only the
-    # n-row degree table still groups by component. Identical exact
-    # integers.
-    la = labels.select(F.col("id").alias("src"), F.col("component").alias("_a"))
-    lb = labels.select(F.col("id").alias("dst"), F.col("component").alias("_b"))
-    intra = (
-        e.join(la, "src")
-        .join(lb, "dst")
-        .agg(
-            F.coalesce(
-                F.sum((F.col("_a") == F.col("_b")).cast("long")), F.lit(0)
-            ).alias("mt")
-        )
-    )
-    dsq = (
-        deg.join(labels, "id")
-        .groupBy("component")
-        .agg(F.sum("d").alias("dsum"))
-        .agg(
-            F.coalesce(F.sum(F.col("dsum") * F.col("dsum")), F.lit(0)).alias(
-                "ss"
-            )
-        )
-    )
-    row = intra.crossJoin(F.broadcast(dsq)).first()
-    return 4 * m * int(row["mt"]) - int(row["ss"])
 
 
 def community_girvan_newman_step(spark, sf_dir):
@@ -5940,7 +5774,6 @@ def community_girvan_newman_step(spark, sf_dir):
     e = copurchase_edges(spark, sf_dir).transform(_eager_ckpt)
     verts = vertices_from_edges(e).transform(_eager_ckpt)
     n = verts.count()
-    m = e.count()
     k = 16
     sources = (
         spark.range(k)
@@ -5966,7 +5799,7 @@ def community_girvan_newman_step(spark, sf_dir):
     stats = after.groupBy("component").agg(F.count("*").alias("sz"))
     n_after = stats.count()
     largest = int(stats.agg(F.max("sz")).collect()[0][0])
-    qn = _gn_modularity_num(e, m, after)
+    m, ((qn, _),) = A.modularity_numerators(e, after, ["component"])
     return spark.createDataFrame(
         [
             (
@@ -6099,7 +5932,6 @@ def community_girvan_newman_iter(spark, sf_dir):
     e0 = copurchase_edges(spark, sf_dir).transform(_eager_ckpt)
     verts = vertices_from_edges(e0).transform(_eager_ckpt)
     n = verts.count()
-    m = e0.count()
     sources = (
         spark.range(16)
         .select(((F.col("id") * 2654435761) % n).cast("long").alias("id"))
@@ -6130,7 +5962,7 @@ def community_girvan_newman_iter(spark, sf_dir):
         stats = labels.groupBy("component").agg(F.count("*").alias("sz"))
         n_comp = stats.count()
         largest = int(stats.agg(F.max("sz")).collect()[0][0])
-        qn = _gn_modularity_num(e0, m, labels)
+        m, ((qn, _),) = A.modularity_numerators(e0, labels, ["component"])
         rows.append(
             (
                 rnd,
@@ -12464,40 +12296,8 @@ def dedup_cluster_keep_best(spark, sf_dir):
     cluster, then min doc_id among the maxima) — never a global sort.
     Output per multi-member cluster: representative chosen by
     quality, its length, member count."""
-    from graphem_rapids_spark.graph.canon import symmetrize_edges
-
     docs = _t(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(
-        docs, n=4, threshold=0.5, num_perm=128, bands=64,
-        max_shingle_df=_MAX_SHINGLE_DF,
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    sym = symmetrize_edges(pairs)
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("comp"))
-        .transform(_eager_ckpt)
-    )
-    for _ in range(60):
-        nbr = (
-            sym.join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("comp").alias("nbr"))
-        )
-        new_labels = (
-            labels.join(nbr, "id", "left")
-            .select("id", F.least("comp", F.coalesce("nbr", "comp")).alias("comp"))
-            .transform(_eager_ckpt)
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("comp", "old"), "id")
-            .filter(F.col("comp") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
+    labels = _near_dup_components(docs).withColumnRenamed("component", "comp")
     members = labels.join(
         docs.select(F.col("doc_id").alias("id"), F.length("text").alias("len")), "id"
     )
@@ -19017,18 +18817,6 @@ FROM c
 _KLEIN_RATE_NUM = 2  # burst state rate = 2x base rate
 
 
-def _klein_consts(s_total: int, n_hours: int) -> tuple[int, int, int, int, int]:
-    """(c0, c1, l0, l1, gamma) — Poisson NLL pieces in 1e9 fixed
-    point, half-up rounded (floor(x+0.5) — Python round() is
-    banker's, DuckDB round() half-away; floor(x+0.5) is identical on
-    both engines for positive x)."""
-    lam0 = s_total / n_hours
-    lam1 = lam0 * _KLEIN_RATE_NUM
-    f = lambda x: math.floor(x * 1e9 + 0.5)  # noqa: E731
-    return f(lam0), f(lam1), f(math.log(lam0)), f(math.log(lam1)), f(
-        math.log(n_hours)
-    )
-
 
 def events_burst_kleinberg(spark, sf_dir):
     """Kleinberg 2-state burst detection over the hourly event-count
@@ -19490,178 +19278,42 @@ def community_louvain_move(spark, sf_dir):
     than claiming convergence). Exactness: the gain of i→c is the
     cross-multiplied integer 2m·(k_ic − k_own) − d_i·(D_c − (D_own −
     d_i)) over 2m² (never a float), ties break on the smallest target
-    community, and both modularities use the exact
-    :func:`community_modularity` numerator. Shapes: neighbor-
-    community counts are one edges⋈labels groupBy; the per-vertex
-    argmax is a vertex-PARTITIONED window. Output: m_edges, n_moved,
-    modularity_before, modularity_after."""
-    from graphem_rapids_spark.analytics import label_propagation
-    from graphem_rapids_spark.graph.canon import symmetrize_edges
-
+    community, and both modularities use the exact integer
+    numerator. Thin wrapper over :func:`analytics.louvain_move_pass`
+    (unit weights, no self loops, no parity phase) and
+    :func:`analytics.modularity_numerators`. Output: m_edges,
+    n_moved, modularity_before, modularity_after."""
     # copurchase_edges is already persisted+counted (memoized) and the
-    # LPA output is already an eager severed checkpoint — re-checking
-    # either just adds a materialization job to an overhead-dominated
-    # query (measured ~flat 21 s at sf0.001 AND sf0.1: the cost IS the
-    # job count, not the data)
+    # LPA output is already a severed checkpoint — re-checking either
+    # just adds a materialization job to an overhead-dominated query
+    # (measured ~flat 21 s at sf0.001 AND sf0.1: the cost IS the job
+    # count, not the data)
     e = copurchase_edges(spark, sf_dir)
-    lab = label_propagation(e, max_rounds=_LPA_ROUNDS, converge=False)
-    sym = symmetrize_edges(e)
-    deg = sym.groupBy("src").agg(F.count("*").alias("d")).withColumnRenamed(
-        "src", "id"
-    )
-    dc = (
-        deg.join(lab, "id").groupBy("label").agg(F.sum("d").alias("dsum"))
-    )
+    lab = A.label_propagation(e, max_rounds=_LPA_ROUNDS, converge=False)
     m = e.count()
-
-    def q_nums(lab_both):
-        # BOTH modularity numerators in ONE collect, with the
-        # per-label edge grouping cancelled algebraically (r8 opt
-        # round): Σ_label (4m·mc − dsum²) = 4m·Σmc − Σ dsum², and
-        # Σmc is just the count of intra-community edges — so the
-        # edge stream needs ONE pass with two broadcast-sized label
-        # joins and a scalar conditional aggregate (fully map-side
-        # partial, no groupBy exchange, no union doubling), while the
-        # Σ dsum² term groups only the n-row degree table. Identical
-        # exact-integer sums; the former shape tagged-unioned the
-        # label table and double-joined the edges (4m intermediate
-        # rows, per-label groupBy + left join behind one collect of
-        # 10 AQE stage jobs).
-        la = lab_both.select(
-            F.col("id").alias("src"),
-            F.col("l_old").alias("_oa"),
-            F.col("l_new").alias("_na"),
-        )
-        lb = lab_both.select(
-            F.col("id").alias("dst"),
-            F.col("l_old").alias("_ob"),
-            F.col("l_new").alias("_nb"),
-        )
-        intra = (
-            e.join(la, "src")
-            .join(lb, "dst")
-            .agg(
-                F.coalesce(
-                    F.sum((F.col("_oa") == F.col("_ob")).cast("long")), F.lit(0)
-                ).alias("mo"),
-                F.coalesce(
-                    F.sum((F.col("_na") == F.col("_nb")).cast("long")), F.lit(0)
-                ).alias("mn"),
-            )
-        )
-        dsq = (
-            deg.join(lab_both, "id")
-            .select(
-                "d",
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit(0).alias("_t"), F.col("l_old").alias("label")
-                        ),
-                        F.struct(
-                            F.lit(1).alias("_t"), F.col("l_new").alias("label")
-                        ),
-                    )
-                ).alias("_tl"),
-            )
-            .groupBy(F.col("_tl._t").alias("_t"), F.col("_tl.label").alias("label"))
-            .agg(F.sum("d").alias("s"))
-            .groupBy()
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("_t") == 0, F.col("s") * F.col("s"))),
-                    F.lit(0),
-                ).alias("so"),
-                F.coalesce(
-                    F.sum(F.when(F.col("_t") == 1, F.col("s") * F.col("s"))),
-                    F.lit(0),
-                ).alias("sn"),
-            )
-        )
-        r = intra.crossJoin(F.broadcast(dsq)).first()
-        return 4 * m * r["mo"] - r["so"], 4 * m * r["mn"] - r["sn"]
-
-    nbc = (
-        sym.join(
-            lab.select(F.col("id").alias("dst"), F.col("label").alias("c")),
-            "dst",
-        )
-        .groupBy(F.col("src").alias("id"), "c")
-        .agg(F.count("*").alias("k"))
-    )
-    own = lab.withColumnRenamed("label", "own")
-    # gain fold (r8 opt round): g(i→c) = 2m(k−k_own) − d(dc−(down−d))
-    # = s(c) + off(i) with s = 2m·k − d·dc and off = −2m·k_own +
-    # d·(down − d) CONSTANT per vertex — so the per-vertex argmax over
-    # candidate communities needs only s, and k_own rides the SAME
-    # groupBy as a conditional aggregate (max over the at-most-one
-    # c == own row). Equal g ⇔ equal s for one vertex, so the
-    # (g DESC, c ASC) tie order IS the (s DESC, c ASC) order, and all
-    # arithmetic stays exact integers. This deletes the former kown
-    # self-join subtree and moves the down-join behind the aggregate
-    # (label-sized input instead of candidate-sized) — at scale one
-    # fewer shuffle join of an n-row table per pass.
-    scored = (
-        nbc.join(own, "id")
-        .join(deg, "id")
-        .join(dc.select(F.col("label").alias("c"), F.col("dsum").alias("dc")), "c")
-    )
-    best = scored.groupBy("id").agg(
-        F.max(
-            F.when(
-                F.col("c") != F.col("own"),
-                F.struct(
-                    (
-                        F.lit(2) * F.lit(m) * F.col("k")
-                        - F.col("d") * F.col("dc")
-                    ).alias("s"),
-                    (-F.col("c")).alias("_nc"),
-                ),
-            )
-        ).alias("_m"),
-        F.max(F.when(F.col("c") == F.col("own"), F.col("k"))).alias("k_own"),
-        F.max("own").alias("own"),
-        F.max("d").alias("d"),
-    )
-    # checkpoint so the gain chain executes ONCE (it used to run
-    # twice: n_moved count + the new-label build); checkpoint_count
-    # returns the n_moved count from the materialization job itself
-    # instead of a second scan job (checkpoint.checkpoint_count)
-    from graphem_rapids_spark.checkpoint import checkpoint_count as _ckpt_count
-    from graphem_rapids_spark.checkpoint import lazy_checkpoint as _lazy_ckpt
-
-    moves, n_moved = _ckpt_count(
-        best.filter(F.col("_m").isNotNull())
-        .join(
-            dc.select(F.col("label").alias("own"), F.col("dsum").alias("down")),
-            "own",
-        )
-        .filter(
-            F.col("_m.s")
-            - F.lit(2) * F.lit(m) * F.coalesce("k_own", F.lit(0))
-            + F.col("d") * (F.col("down") - F.col("d"))
-            > 0
-        )
-        .select("id", (-F.col("_m._nc")).alias("new_label"))
-    )
-    # one (id, l_old, l_new) table feeds both numerators — q_nums never
-    # joins old against new. lazy: the q_nums intra job right below is
-    # the first full scan, so it materializes these blocks itself
-    lab_both = (
-        lab.join(moves, "id", "left")
-        .select(
-            "id",
-            F.col("label").alias("l_old"),
-            F.coalesce("new_label", F.col("label")).alias("l_new"),
-        )
-        .transform(_lazy_ckpt)
-    )
-    qb, qa = q_nums(lab_both)
+    wsym, deg = A.louvain_degrees(*_unit_weights(e))
+    # one (id, label, _o) frame: n_moved is a filter-count over the
+    # blocks its first scan writes, and both numerators read it
+    lab_both = A.louvain_move_pass(wsym, deg, lab, m)
+    n_moved = lab_both.filter(F.col("label") != F.col("_o")).count()
+    _, ((qb, _), (qa, _)) = A.modularity_numerators(e, lab_both, ["_o", "label"])
     den = 4.0 * m * m
     return spark.createDataFrame(
         [(m, n_moved, round(qb / den, 6), round(qa / den, 6))],
         "m_edges long, n_moved long, modularity_before double,"
         " modularity_after double",
+    )
+
+
+def _unit_weights(e):
+    """``(ew, selfw)`` for :func:`analytics.louvain_degrees` on the
+    canonical distinct co-purchase edges: every weight 1 and no self
+    loops, so every weighted gain is the unweighted integer gain."""
+    # limit(0) plans as an empty local relation, so the degree
+    # table's outer join with it optimizes away
+    return (
+        e.select("src", "dst", F.lit(1).cast("long").alias("w")),
+        e.select(F.col("src").alias("id"), F.lit(0).cast("long").alias("sw")).limit(0),
     )
 
 
@@ -19748,140 +19400,20 @@ def community_louvain_rounds(spark, sf_dir):
     round: round, n_moved, n_communities, modularity — a refinement
     curve (monotone on this graph; synchronized moves may oscillate
     in general, which the trajectory would SHOW rather than hide)."""
-    from graphem_rapids_spark.analytics import label_propagation
-    from graphem_rapids_spark.graph.canon import symmetrize_edges
+    from graphem_rapids_spark.checkpoint import release
 
-    e = copurchase_edges(spark, sf_dir).transform(_eager_ckpt)
-    lab = label_propagation(e, max_rounds=_LPA_ROUNDS, converge=False).transform(_eager_ckpt)
-    sym = symmetrize_edges(e).transform(_eager_ckpt)
-    deg = (
-        sym.groupBy("src")
-        .agg(F.count("*").alias("d"))
-        .withColumnRenamed("src", "id")
-        .transform(_eager_ckpt)
-    )
+    e = copurchase_edges(spark, sf_dir)
+    lab = A.label_propagation(e, max_rounds=_LPA_ROUNDS, converge=False)
     m = e.count()
-
-    def q_and_comms(labels):
-        # Σ_label (4m·mc − dsum²) = 4m·Σmc − Σ dsum² (r8 opt round):
-        # the edge stream takes ONE scalar aggregate (map-side partial,
-        # no per-label groupBy exchange, no dcx⋈intra join); only the
-        # n-row degree table still groups by label (for Σ dsum² and the
-        # community count). Identical exact integers.
-        la = labels.select(F.col("id").alias("src"), F.col("label").alias("_la"))
-        lb = labels.select(F.col("id").alias("dst"), F.col("label").alias("_lb"))
-        intra = (
-            e.join(la, "src")
-            .join(lb, "dst")
-            .agg(
-                F.coalesce(
-                    F.sum((F.col("_la") == F.col("_lb")).cast("long")),
-                    F.lit(0),
-                ).alias("mt")
-            )
-        )
-        dstat = (
-            deg.join(labels, "id")
-            .groupBy("label")
-            .agg(F.sum("d").alias("dsum"))
-            .agg(
-                F.coalesce(
-                    F.sum(F.col("dsum") * F.col("dsum")), F.lit(0)
-                ).alias("ss"),
-                F.count("*").alias("nc"),
-            )
-        )
-        row = intra.crossJoin(F.broadcast(dstat)).first()
-        return 4 * m * int(row["mt"]) - int(row["ss"]), int(row["nc"])
-
-    def one_pass(labels):
-        dc = (
-            deg.join(labels, "id")
-            .groupBy("label")
-            .agg(F.sum("d").alias("dsum"))
-        )
-        nbc = (
-            sym.join(
-                labels.select(
-                    F.col("id").alias("dst"), F.col("label").alias("c")
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("id"), "c")
-            .agg(F.count("*").alias("k"))
-        )
-        own = labels.withColumnRenamed("label", "own")
-        # same gain fold as community_louvain_move: g = s + off(id)
-        # with s = 2m·k − d·dc, so the per-vertex argmax
-        # max(struct(s, -c)) over c ≠ own replays the oracle's
-        # (g DESC, c ASC) row_number window exactly (equal g ⇔ equal
-        # s per vertex), k_own rides the same groupBy, and the former
-        # kown self-join subtree disappears
-        scored = (
-            nbc.join(own, "id")
-            .join(deg, "id")
-            .join(
-                dc.select(F.col("label").alias("c"), F.col("dsum").alias("dc")),
-                "c",
-            )
-        )
-        best = scored.groupBy("id").agg(
-            F.max(
-                F.when(
-                    F.col("c") != F.col("own"),
-                    F.struct(
-                        (
-                            F.lit(2) * F.lit(m) * F.col("k")
-                            - F.col("d") * F.col("dc")
-                        ).alias("s"),
-                        (-F.col("c")).alias("_nc"),
-                    ),
-                )
-            ).alias("_m"),
-            F.max(F.when(F.col("c") == F.col("own"), F.col("k"))).alias("k_own"),
-            F.max("own").alias("own"),
-            F.max("d").alias("d"),
-        )
-        # checkpoint_count: the gain chain materializes ONCE per pass
-        # (the former moves.count() + new_labels build executed it
-        # twice) and the n_moved count is the materialization job
-        from graphem_rapids_spark.checkpoint import checkpoint_count, release
-
-        moves, n_moved = checkpoint_count(
-            best.filter(F.col("_m").isNotNull())
-            .join(
-                dc.select(
-                    F.col("label").alias("own"), F.col("dsum").alias("down")
-                ),
-                "own",
-            )
-            .filter(
-                F.col("_m.s")
-                - F.lit(2) * F.lit(m) * F.coalesce("k_own", F.lit(0))
-                + F.col("d") * (F.col("down") - F.col("d"))
-                > 0
-            )
-            .select("id", (-F.col("_m._nc")).alias("new_label"))
-        )
-        new_labels = (
-            labels.join(moves, "id", "left")
-            .select(
-                "id",
-                F.coalesce("new_label", F.col("label")).alias("label"),
-            )
-            .transform(_eager_ckpt)
-        )
-        # new_labels is materialized (eager): the moves blocks have no
-        # reader left
-        release(moves)
-        return new_labels, n_moved
-
+    wsym, deg = A.louvain_degrees(*_unit_weights(e))
     den = 4.0 * m * m
-    q0, nc0 = q_and_comms(lab)
+    _, ((q0, nc0),) = A.modularity_numerators(e, lab, ["label"])
     out = [(0, 0, nc0, round(q0 / den, 6))]
     for r in range(1, _LOUVAIN_ROUNDS + 1):
-        lab, moved = one_pass(lab)
-        q, nc = q_and_comms(lab)
+        prev, lab = lab, A.louvain_move_pass(wsym, deg, lab, m)
+        release(prev)
+        moved = lab.filter(F.col("label") != F.col("_o")).count()
+        _, ((q, nc),) = A.modularity_numerators(e, lab, ["label"])
         out.append((r, moved, nc, round(q / den, 6)))
     return spark.createDataFrame(
         out, "round long, n_moved long, n_communities long, modularity double"
@@ -20055,7 +19587,7 @@ def _louvain_levels_sql(
     levels: int = _LOUVAIN_LEVELS, move_rounds: int = _LOUVAIN_LEVEL_MOVES
 ) -> str:
     """Unrolled multi-level weighted Louvain — mirrors
-    analytics.louvain/_louvain_move_pass exactly (weighted gains,
+    analytics.louvain/louvain_move_pass exactly (weighted gains,
     id-parity move phases, least/greatest coarsening).
     ``_louvain_refined_sql`` extends the same blocks with the
     Leiden-style refinement chain."""

@@ -40,6 +40,25 @@ CC_STAR_MIN_VERTICES = int(os.environ.get("GRAPHEM_CC_STAR_MIN", "5000000"))
 
 VERBOSE = os.environ.get("GRAPHEM_VERBOSE", "").lower() in ("1", "true", "yes")
 
+DRIVER_MEM_CAP_GB = 48
+DRIVER_MEM_FRACTION = 0.5
+
+
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: a fixed fraction of the host's
+    physical RAM (``total_bytes``; probed when None), capped at 48g.
+    In local mode the driver JVM is the whole engine and its resident
+    size runs past the heap, so a flat 48g let it outgrow a 15 GiB
+    host until the kernel OOM-killed it. ``GRAPHEM_DRIVER_MEM``
+    overrides."""
+    if total_bytes is None:
+        try:
+            total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, ValueError, OSError):  # non-POSIX hosts
+            return f"{DRIVER_MEM_CAP_GB}g"
+    gib = int(total_bytes * DRIVER_MEM_FRACTION) >> 30
+    return f"{max(1, min(DRIVER_MEM_CAP_GB, gib))}g"
+
 
 def get_spark(
     app_name: str = "graphem-rapids-spark",
@@ -86,7 +105,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("GRAPHEM_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("GRAPHEM_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -11,6 +11,27 @@ from graphem_rapids_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
+_background: list = []
+
+
+def pytest_collection_finish(session):
+    """Start the background work a selected test module declares
+    (``start_background()``, e.g. the examples' child process) as soon
+    as collection ends, so it overlaps the rest of the suite."""
+    if session.config.option.collectonly:
+        return
+    for mod in {getattr(item, "module", None) for item in session.items}:
+        start = getattr(mod, "start_background", None)
+        if start is not None:
+            start()
+            _background.append(mod)
+
+
+def pytest_sessionfinish(session):
+    # never leave a background process behind (interrupted runs too)
+    for mod in _background:
+        mod.stop_background()
+
 
 @pytest.fixture(scope="session")
 def spark():
