@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import math
 import warnings
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -31,8 +32,11 @@ from graphem_rapids_spark.checkpoint import (
     eager_checkpoint,
     eager_materialize,
     iter_materialize,
+    iterate,
     lazy_checkpoint,
     release,
+    released_with,
+    row_count,
 )
 from graphem_rapids_spark.graph.canon import symmetrize_edges, vertex_degrees
 
@@ -135,7 +139,10 @@ def pagerank(
     # one driver action per iteration (copurchase-style graphs have
     # none, saving max_iter jobs)
     has_dangling = base.filter(F.col("od") == 0).limit(1).count() > 0
-    for it in range(max_iter):
+    prev = {}
+
+    def step(pr, _r):
+        prev["pr"] = pr
         if has_dangling:
             dangling = pr.filter(F.col("od") == 0).agg(F.sum("value")).first()[0] or 0.0
         else:
@@ -149,41 +156,25 @@ def pagerank(
             .agg(F.sum("c").alias("s"))
         )
         const = (1.0 - alpha) / n + alpha * dangling / n
-        new_pr = base.join(contrib, "id", "left").select(
+        return base.join(contrib, "id", "left").select(
             "id",
             "od",
             (F.lit(const) + F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))).alias("value"),
         )
-        # checkpoint every iteration: truncates the logical plan (persist
-        # alone lets analysis cost grow exponentially with iterations).
-        # LAZY when a later full scan is guaranteed to materialize the
-        # blocks (checkpoint.lazy_checkpoint): with tol > 0 the delta
-        # aggregate below scans every row; in broadcast mode the NEXT
-        # round's rank-table broadcast scans every row during its own
-        # plan-to-RDD conversion — either way the dedicated
-        # materialization job per round folds into work the loop does
-        # anyway (one scheduling round-trip per iteration saved). The
-        # shuffle strategy at tol = 0 keeps the eager form: nothing
-        # there scans the frame before the next round stacks on top.
-        if use_broadcast or tol > 0:
-            new_pr = new_pr.transform(lazy_checkpoint)
-        else:
-            new_pr = new_pr.transform(eager_checkpoint)
-        if tol > 0:
-            delta = (
-                new_pr.join(pr.select("id", F.col("value").alias("old")), "id")
-                .agg(F.sum(F.abs(F.col("value") - F.col("old"))))
-                .first()[0]
-            )
-        else:
-            delta = None  # fixed-iteration mode: no convergence job
-        pr.unpersist()
-        pr = new_pr
-        if delta is not None and delta < n * tol:
-            break
+
+    def converged(new_pr, _r):
+        delta = (
+            new_pr.join(prev["pr"].select("id", F.col("value").alias("old")), "id")
+            .agg(F.sum(F.abs(F.col("value") - F.col("old"))))
+            .first()[0]
+        )
+        return delta < n * tol
+
+    # fixed-iteration mode (tol = 0) runs no convergence job
+    pr, _ = iterate(pr, step, max_iter, stop=converged if tol > 0 else None)
     base.unpersist()
     sym.unpersist()
-    return pr.select("id", "value")
+    return released_with(pr.select("id", "value"), [pr])
 
 
 def pagerank_personalized(
@@ -239,7 +230,8 @@ def pagerank_personalized(
     )
     pr = base.select("id", "od", "e", F.col("e").alias("value")).transform(eager_checkpoint)
     has_dangling = base.filter(F.col("od") == 0).limit(1).count() > 0
-    for _ in range(max_iter):
+
+    def step(pr, _r):
         if has_dangling:
             dangling = pr.filter(F.col("od") == 0).agg(F.sum("value")).first()[0] or 0.0
         else:
@@ -252,7 +244,7 @@ def pagerank_personalized(
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        pr_new = base.join(contrib, "id", "left").select(
+        return base.join(contrib, "id", "left").select(
             "id",
             "od",
             "e",
@@ -261,17 +253,12 @@ def pagerank_personalized(
                 + F.lit(alpha)
                 * (F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(dangling) * F.col("e"))
             ).alias("value"),
-        # LAZY in broadcast mode: this round's plan-to-RDD conversion
-        # already runs the rank-table broadcast job, which fully scans
-        # (and thereby materializes) the previous round's lazy
-        # checkpoint — the dedicated per-round materialization job
-        # folds away (see pagerank)
-        ).transform(lazy_checkpoint if use_broadcast else eager_checkpoint)
-        pr.unpersist()
-        pr = pr_new
+        )
+
+    pr, _ = iterate(pr, step, max_iter)
     base.unpersist()
     sym.unpersist()
-    return pr.select("id", "value")
+    return released_with(pr.select("id", "value"), [pr])
 
 
 def pagerank_weighted(
@@ -307,7 +294,8 @@ def pagerank_weighted(
         "id", F.coalesce("st", F.lit(0.0)).alias("st")
     ).persist()
     pr = base.select("id", "st", F.lit(1.0 / n).alias("value")).transform(eager_checkpoint)
-    for _ in range(max_iter):
+
+    def step(pr, _r):
         ranks = pr.filter(F.col("st") > 0)
         contrib = (
             sym.withColumnRenamed("src", "id")
@@ -319,32 +307,19 @@ def pagerank_weighted(
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        prev = pr
-        pr = (
-            base.join(contrib, "id", "left")
-            .select(
-                "id",
-                "st",
-                (
-                    F.lit((1.0 - alpha) / n)
-                    + F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("value"),
-            )
-            # LAZY in broadcast mode: the rank-table broadcast job run
-            # during this round's plan-to-RDD conversion fully scans
-            # the previous round's checkpoint, so the old pr is
-            # materialized-and-read by the time we release it below
-            # and the dedicated per-round materialization job folds
-            # away (see pagerank)
-            .transform(lazy_checkpoint if use_broadcast else eager_checkpoint)
+        return base.join(contrib, "id", "left").select(
+            "id",
+            "st",
+            (
+                F.lit((1.0 - alpha) / n)
+                + F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))
+            ).alias("value"),
         )
-        # ONLY after the old pr's last read — contrib reads it during
-        # the checkpoint conversion above, and release is no longer a
-        # silent no-op
-        prev.unpersist()
+
+    pr, _ = iterate(pr, step, max_iter)
     base.unpersist()
     sym.unpersist()
-    return pr.select("id", "value")
+    return released_with(pr.select("id", "value"), [pr])
 
 
 # ------------------------------------------------------------------- A3
@@ -366,9 +341,17 @@ def eigenvector_centrality(
     # per-iteration groupBy ships partial-aggregate output only)
     sym = eager_materialize(symmetrize_edges(edges))
     verts = spark.range(n_vertices).select(F.col("id").cast("long"))
-    x = verts.select("id", F.lit(1.0 / math.sqrt(n_vertices)).alias("value")).persist()
-    prev_ckpt = None
-    for it in range(max_iter):
+    # the state is the unnormalized product y (x0 with norm 1); the
+    # round's norm aggregate is its one full scan
+    y0 = verts.select("id", F.lit(1.0 / math.sqrt(n_vertices)).alias("value")).persist()
+    norm = [1.0]
+    prev = {}
+
+    def normalized(y):
+        return y.select("id", (F.col("value") / norm[0]).alias("value"))
+
+    def step(y, _r):
+        x = prev["x"] = normalized(y)
         y = (
             sym.withColumnRenamed("src", "id")
             .join(F.broadcast(x) if use_broadcast else x, "id")
@@ -376,45 +359,25 @@ def eigenvector_centrality(
             .groupBy("id")
             .agg(F.sum("c").alias("value"))
         )
-        y = verts.join(y, "id", "left").select(
+        return verts.join(y, "id", "left").select(
             "id", (F.coalesce("value", F.lit(0.0)) + F.col("id") * 0.0).alias("value")
         )
-        # checkpoint BEFORE the norm action: y is referenced twice (norm
-        # + normalized output) and would otherwise run the matvec twice
-        # per iteration. LAZY checkpoint: the norm aggregate right below
-        # scans every row, so it materializes the blocks itself — the
-        # separate per-iteration checkpoint job folds into the norm job
-        # (checkpoint.lazy_checkpoint)
-        y = y.transform(lazy_checkpoint)
-        norm = y.agg(F.sqrt(F.sum(F.col("value") * F.col("value")))).first()[0] or 1.0
-        if norm == 0:
-            break
-        new_x = y.select("id", (F.col("value") / norm).alias("value"))
-        if tol > 0:
-            delta = (
-                new_x.join(x.select("id", F.col("value").alias("old")), "id")
-                .agg(F.sum(F.abs(F.col("value") - F.col("old"))))
-                .first()[0]
-            )
-        else:
-            delta = None
-        # x was a thin projection over the PREVIOUS round's checkpoint,
-        # so x.unpersist() here was a cache-manager no-op and every
-        # round's blocks leaked for the session's life (checkpoint.py
-        # module docstring). The norm job above (and the delta job when
-        # tol > 0) was the previous checkpoint's last reader — release
-        # its blocks directly; the persisted init is a real cache entry
-        # and keeps the plain unpersist.
-        if it == 0:
-            x.unpersist()
-        if prev_ckpt is not None:
-            release(prev_ckpt)
-        prev_ckpt = y
-        x = new_x
-        if delta is not None and delta < n_vertices * tol:
-            break
+
+    def normalize(y, _r):
+        norm[0] = y.agg(F.sqrt(F.sum(F.col("value") * F.col("value")))).first()[0] or 1.0
+        if tol <= 0:
+            return False
+        delta = (
+            normalized(y)
+            .join(prev["x"].select("id", F.col("value").alias("old")), "id")
+            .agg(F.sum(F.abs(F.col("value") - F.col("old"))))
+            .first()[0]
+        )
+        return delta < n_vertices * tol
+
+    y, _ = iterate(y0, step, max_iter, stop=normalize)
     sym.unpersist()
-    return x
+    return released_with(normalized(y), [y])
 
 
 # ------------------------------------------------------------------- A7
@@ -578,41 +541,44 @@ def connected_components(
         labels = vertices.select(
             F.col("id").cast("long"), F.col("id").cast("long").alias("component")
         ).persist()
-    changed = -1
-    for it in range(max_iter):
+    changed = []
+
+    def step(labels, _r):
         nbr_min = (
             labels.join(sym.withColumnRenamed("src", "id"), "id")
             .select(F.col("dst").alias("id"), F.col("component").alias("c"))
             .groupBy("id")
             .agg(F.min("c").alias("nbr"))
         )
-        # carry the previous label through the round checkpoint: the
-        # changed-row count becomes a scan of the blocks the
-        # materialization itself writes (no separate join job), and the
-        # checkpoint still truncates the plan + severs stats every
-        # round (see checkpoint.py)
-        new_labels = labels.join(nbr_min, "id", "left").select(
+        return labels.join(nbr_min, "id", "left").select(
             "id",
             F.least(F.col("component"), F.coalesce("nbr", F.col("component"))).alias("component"),
             F.col("component").alias("_o"),
         )
-        from graphem_rapids_spark.checkpoint import lazy_checkpoint
 
-        new_labels = lazy_checkpoint(new_labels)
-        changed = new_labels.filter(F.col("component") != F.col("_o")).count()
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
+    labels, _ = iterate(labels, step, max_iter, stop=_settled("component", changed))
     sym.unpersist()
-    if require_convergence and changed != 0:
+    if require_convergence and changed[-1:] != [0]:
         raise RuntimeError(
             f"connected_components(minlabel) did not converge in "
             f"{max_iter} rounds (component diameter exceeds the budget); "
             "use algorithm='star' (O(log d) rounds) instead of raising "
             "the cap"
         )
-    return labels.select("id", "component")
+    return released_with(labels.select("id", "component"), [labels])
+
+
+def _settled(col: str, changed: list):
+    """``stop`` for the loops whose step carries the previous value of
+    ``col`` as ``_o``: appends the count of rows that moved to
+    ``changed`` — a scan of the round's own checkpoint, its one
+    full-scan action — and stops once it is zero."""
+
+    def stop(new, _r):
+        changed.append(row_count(new.filter(F.col(col) != F.col("_o"))))
+        return changed[-1] == 0
+
+    return stop
 
 
 def label_propagation(
@@ -636,24 +602,19 @@ def label_propagation(
     same way every neighborhood aggregation here does (AQE skew
     splitting applies).
 
-    ``converge=False`` (r8 opt round) runs EXACTLY ``max_rounds``
-    rounds with no per-round convergence job: by the idempotence
-    above the output is identical, and each checkpoint is
-    materialized by the NEXT batch's plan-to-RDD conversion (its
-    label-table exchange fully scans the previous checkpoint — the
-    PageRank fold), so a round costs zero dedicated driver actions.
-    Rounds are additionally batched TWO per checkpoint (r9 opt
-    round): each round is a pure deterministic transform, so two
-    composed rounds in one plan are bit-identical while paying half
-    the plan conversions. The right mode for the small fixed unrolls
+    ``converge=False`` runs EXACTLY ``max_rounds`` rounds, two per
+    checkpoint, with no convergence job: by the idempotence above the
+    output is identical. The right mode for the small fixed unrolls
     the oracle replays; keep the default for exploratory calls where
     early stopping saves real rounds."""
-    sym = symmetrize_edges(edges).transform(eager_checkpoint)
+    # lazy: the initial labels' distinct scans sym, the first round's
+    # vote join scans the labels
+    sym = symmetrize_edges(edges).transform(lazy_checkpoint)
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("label"))
-        .transform(eager_checkpoint)
+        .transform(lazy_checkpoint)
     )
 
     def _one_round(lbl: DataFrame) -> DataFrame:
@@ -675,55 +636,22 @@ def label_propagation(
             .select("id", (-F.col("_m._nl")).alias("label"))
         )
 
-    if not converge:
-        # fixed-round mode with rounds BATCHED two per checkpoint (r9
-        # opt round): each round is a pure, deterministic DataFrame
-        # transform (integer vote counts, exact argmax tie-break), so
-        # composing two rounds inside ONE plan and checkpointing once
-        # yields bit-identical labels while halving the plan-to-RDD
-        # conversions (analysis + AQE planning + py4j per round — the
-        # driver-floor cost the fixed unrolls pay). The intermediate
-        # label table is referenced exactly once (the next round's
-        # vote join), so the batched plan has no duplicated subtree;
-        # the lazy checkpoint's conversion executes both rounds'
-        # exchanges, whose first vote-join scan fully materializes
-        # (and is the last read of) the PREVIOUS checkpoint, keeping
-        # the release below safe (AQE-off sessions fall back to eager
-        # checkpoints inside lazy_checkpoint itself).
-        done = 0
-        while done < max_rounds:
-            step = min(2, max_rounds - done)
-            cur = labels
-            for _ in range(step):
-                cur = _one_round(cur)
-            new = lazy_checkpoint(cur)
-            prev, labels = labels, new
-            release(prev)
-            done += step
-        release(sym)
-        return labels.select("id", "label")
-
-    for _ in range(max_rounds):
-        top1 = _one_round(labels)
-        # carry the previous label through the round checkpoint so
-        # the changed-row convergence count is a scan of the blocks
-        # the materialization itself writes — the former separate
-        # new⋈labels count job folds away
-        # (checkpoint.lazy_checkpoint); the extra _o column is
-        # pruned out of every downstream join
-        new = lazy_checkpoint(
-            top1.join(labels.select("id", F.col("label").alias("_o")), "id")
+    if converge:
+        labels, _ = iterate(
+            labels,
+            lambda lbl, _r: _one_round(lbl).join(
+                lbl.select("id", F.col("label").alias("_o")), "id"
+            ),
+            max_rounds,
+            stop=_settled("label", []),
         )
-        changed = new.filter(F.col("label") != F.col("_o")).count()
-        prev, labels = labels, new
-        # release(), not unpersist(): these are SEVERED checkpoints
-        # (checkpoint.py) — unpersist on the severed frame is a no-op
-        # and leaked round blocks slow every subsequent job
-        release(prev)
-        if changed == 0:
-            break
+    else:
+        # each round is a pure deterministic transform, so two composed
+        # rounds per checkpoint are bit-identical at half the plan
+        # conversions
+        labels, _ = iterate(labels, lambda lbl, _r: _one_round(lbl), max_rounds, batch=2)
     release(sym)
-    return labels.select("id", "label")
+    return released_with(labels.select("id", "label"), [labels])
 
 
 def k_core(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
@@ -740,30 +668,35 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
     set on its endpoint keys; real graphs converge in a few rounds at
     moderate k (deeper peeling chains shrink the data fast)."""
     cur = symmetrize_edges(edges).transform(eager_checkpoint)
-    n_cur = cur.count()
-    for _ in range(max_rounds):
+
+    def peel(cur, _r):
         surv = (
             cur.groupBy("src")
             .agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= k)
             .select(F.col("src").alias("id"))
         )
-        # materialization + edge count in one job (checkpoint_count)
-        new, n_new = checkpoint_count(
+        return (
             cur.join(surv.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(surv.withColumnRenamed("id", "dst"), "dst", "left_semi")
         )
-        # release the prior round's checkpoint blocks — without this,
-        # checkpointed RDDs accumulate across peel rounds until the
-        # context cleaner GCs them (connected_components pattern)
-        prev, cur = cur, new
-        prev.unpersist()
-        if n_new == n_cur:
-            break
-        n_cur = n_new
-    return cur.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("core_degree")
+
+    cur, _ = iterate(cur, peel, max_rounds, stop=_size_fixpoint(cur.count()))
+    return released_with(
+        cur.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("core_degree")), [cur]
     )
+
+
+def _size_fixpoint(n: int):
+    """``stop`` for the peeling loops: the state's row count (one job,
+    the round's full scan) no longer shrinks from ``n``."""
+    last = [n]
+
+    def stop(new, _r):
+        n_old, last[0] = last[0], row_count(new)
+        return last[0] == n_old
+
+    return stop
 
 
 # hub factor (max degree / avg degree) above which triangle
@@ -891,7 +824,7 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
 
 
 def _ktruss_peel(cur, n_cur, k, max_rounds, skewed):
-    for _ in range(max_rounds):
+    def peel(cur, _r):
         if skewed:
             tri = oriented_triangles(cur)
         else:
@@ -926,18 +859,13 @@ def _ktruss_peel(cur, n_cur, k, max_rounds, skewed):
             .groupBy("src", "dst")
             .agg(F.count("*").alias("sup"))
         )
-        new = (
+        return (
             cur.join(sup, ["src", "dst"], "left")
             .filter(F.coalesce("sup", F.lit(0)) >= k - 2)
             .select("src", "dst")
-            .transform(eager_checkpoint)
         )
-        n_new = new.count()
-        prev, cur = cur, new
-        prev.unpersist()
-        if n_new == n_cur:
-            break
-        n_cur = n_new
+
+    cur, _ = iterate(cur, peel, max_rounds, stop=_size_fixpoint(n_cur))
     return cur
 
 
@@ -1120,50 +1048,19 @@ def bfs_distances(
     BFS (all sources advance in the same frontier join per step).
     The shared kernel under closeness and harmonic centrality; same
     broadcast↔shuffle frontier switch and per-round localCheckpoint
-    discipline as the IC cascade."""
+    discipline as the IC cascade (the one frontier sweep,
+    :func:`_bfs_levels`). ``unpersist()``/``release`` on the result
+    frees every level's blocks."""
     sym = eager_materialize(symmetrize_edges(edges))
-    from graphem_rapids_spark import session
-
-    broadcast_max = session.BROADCAST_POSITIONS_MAX
-    # localCheckpoint per round — see influence.independent_cascade:
-    # the visited set nests inside each anti-join, so without plan
-    # truncation the plan grows exponentially with BFS depth.
-    # checkpoint_count: materialization + convergence count in ONE job
-    # per round (checkpoint.checkpoint_count)
-    visited, frontier_n = checkpoint_count(
-        sources.select(F.col("id").alias("s"), F.col("id"), F.lit(0).alias("d"))
-    )
-    frontier = visited.select("s", "id")
-    for depth in range(max_depth):
-        # a multi-source frontier is O(sources·reach) — broadcast only
-        # while provably small (count is free on the eagerly-
-        # checkpointed table), else shuffle-join (see IC cascade)
-        fr = F.broadcast(frontier) if frontier_n <= broadcast_max else frontier
-        # every vertex first reached this round is at distance depth+1
-        # by construction (the frontier is exactly the previous round's
-        # newly-visited set), so d never rides the message shuffle —
-        # (s, id) pairs deduplicate with distinct and the constant
-        # distance is stamped afterwards. Identical output to the
-        # former groupBy(s, id).min(d) over d = depth+1 messages, with
-        # one fewer column in the round's largest exchange.
-        nxt = (
-            sym.withColumnRenamed("src", "id")
-            .join(fr, "id")
-            .select("s", F.col("dst").alias("id"))
-            .distinct()
-        )
-        new_v, frontier_n = checkpoint_count(
-            nxt.join(visited.select("s", "id"), ["s", "id"], "left_anti")
-            .select("s", "id", F.lit(depth + 1).alias("d"))
-        )
-        if frontier_n == 0:
-            break
-        # flat union of already-checkpointed frontiers — no lineage
-        # growth, so no extra checkpoint job per BFS round
-        visited = visited.unionAll(new_v)
-        frontier = new_v.select("s", "id")
+    levels, _ = _bfs_levels(sym, sources.select(F.col("id").alias("s"), "id"), ["s"], max_depth)
     sym.unpersist()
-    return visited
+    # every vertex first reached at level d is at distance d by
+    # construction, so d is stamped per level, never shuffled
+    visited = reduce(
+        DataFrame.unionAll,
+        [lvl.select("s", "id", F.lit(d).alias("d")) for d, lvl in enumerate(levels)],
+    )
+    return released_with(visited, levels)
 
 
 def closeness_centrality(
@@ -1180,12 +1077,15 @@ def closeness_centrality(
     per_src = visited.groupBy("s").agg(
         F.sum("d").alias("tot"), (F.count("*") - 1).alias("r")
     )
-    return per_src.select(
-        F.col("s").alias("id"),
-        F.when(
-            F.col("tot") > 0,
-            (F.col("r") / F.col("tot")) * (F.col("r") / float(max(n - 1, 1))),
-        ).otherwise(F.lit(0.0)).alias("value"),
+    return released_with(
+        per_src.select(
+            F.col("s").alias("id"),
+            F.when(
+                F.col("tot") > 0,
+                (F.col("r") / F.col("tot")) * (F.col("r") / float(max(n - 1, 1))),
+            ).otherwise(F.lit(0.0)).alias("value"),
+        ),
+        [visited],
     )
 
 
@@ -1213,7 +1113,7 @@ def harmonic_centrality(
         raise ValueError("harmonic_centrality: max_depth must be in 1..40")
     lcm = math.lcm(*range(1, max_depth + 1))
     visited = bfs_distances(edges, sources, max_depth=max_depth)
-    return (
+    return released_with(
         visited.filter(F.col("d") > 0)
         .groupBy("id")
         # DECIMAL sum: Σ lcm/d over many sources can pass 2⁶³ at deep
@@ -1221,50 +1121,57 @@ def harmonic_centrality(
         .agg(F.sum(F.expr(f"{lcm} div d").cast("decimal(38,0)")).alias("h_fp"))
         .select(
             "id", (F.col("h_fp").cast("double") / F.lit(float(lcm))).alias("value")
-        )
+        ),
+        [visited],
     )
 
 
-def _bfs_levels(sym, sources, n_sources, max_depth, col, init, agg):
-    """Forward sweep shared by the sampled Brandes-family kernels:
-    batched multi-source BFS over the symmetric edge table ``sym``
-    from the (id) ``sources``. Level 0 is (s, id=s, ``col``=``init``);
-    level d+1 holds the unseen vertices reached from level d, with
-    ``col`` = ``agg`` over their predecessor messages (``sum(sigma)``
-    for path counts, ``count(*)`` for predecessor counts). Returns the
-    per-level checkpointed tables and their sizes (the backward pass
-    reuses the sizes for the same broadcast↔shuffle choice)."""
+def _bfs_levels(edge_tbl, level0, keys, max_depth, col=None, agg=None):
+    """The one accumulate-every-level frontier sweep — batched
+    multi-source BFS under closeness/harmonic/eccentricity, the
+    Brandes-family forward pass and the IC cascade. ``edge_tbl``
+    (src, dst[, key columns]) is directed; ``level0`` holds
+    (*``keys``, id[, ``col``]) and every key advances in the same
+    frontier join, which matches ``id`` plus each key column the edge
+    table carries (IC's live-edge table carries ``trial``). Level d+1
+    holds the (keys, id) pairs first reached from level d, with
+    ``col`` = ``agg`` over their predecessor messages when given
+    (``sum(sigma)`` path counts, ``count(*)`` predecessor counts).
+    Each level is one :func:`checkpoint_count` job; the frontier is
+    broadcast only while provably small (its count is free), else
+    shuffle-joined. ``seen`` is a flat union of checkpointed levels,
+    so nothing grows but the union. Returns the per-level tables and
+    their sizes (the Brandes backward pass reuses the sizes for the
+    same broadcast↔shuffle choice)."""
     from graphem_rapids_spark import session
 
     broadcast_max = session.BROADCAST_POSITIONS_MAX
-    frontier = sources.select(
-        F.col("id").alias("s"), F.col("id"), init.alias(col)
-    ).transform(eager_checkpoint)
-    levels = [frontier]
-    level_counts = [n_sources]
-    seen = frontier.select("s", "id").transform(eager_checkpoint)
-    frontier_n = n_sources
+    on = [k for k in keys if k in edge_tbl.columns] + ["id"]
+    carried = [col] if col else []
+    frontier, frontier_n = checkpoint_count(level0)
+    levels, level_counts = [frontier], [frontier_n]
+    seen = frontier.select(*keys, "id")
     for _ in range(max_depth):
         fr = F.broadcast(frontier) if frontier_n <= broadcast_max else frontier
         msgs = (
-            sym.withColumnRenamed("src", "id")
-            .join(fr, "id")
-            .select("s", F.col("dst").alias("id"), col)
-            .groupBy("s", "id")
-            .agg(agg.alias(col))
+            edge_tbl.withColumnRenamed("src", "id")
+            .join(fr, on)
+            .select(*keys, F.col("dst").alias("id"), *carried)
         )
-        # materialization + frontier count in one job (checkpoint_count)
-        frontier, frontier_n = checkpoint_count(
-            msgs.join(seen, ["s", "id"], "left_anti")
-        )
+        msgs = msgs.groupBy(*keys, "id").agg(agg.alias(col)) if col else msgs.distinct()
+        frontier, frontier_n = checkpoint_count(msgs.join(seen, [*keys, "id"], "left_anti"))
         if frontier_n == 0:
+            release(frontier)
             break
         levels.append(frontier)
         level_counts.append(frontier_n)
-        # seen is a flat union of already-checkpointed frontiers — no
-        # lineage growth, so no extra checkpoint job per round
-        seen = seen.unionAll(frontier.select("s", "id"))
+        seen = seen.unionAll(frontier.select(*keys, "id"))
     return levels, level_counts
+
+
+def _sweep_sources(sources, col, init):
+    """Level 0 of a Brandes-family sweep: (s, id=s, ``col``=``init``)."""
+    return sources.select(F.col("id").alias("s"), F.col("id"), init.alias(col))
 
 
 def _rescaled_dependency(
@@ -1346,7 +1253,6 @@ def betweenness_sampled(
     sym = eager_materialize(symmetrize_edges(edges))
     if sources is None:
         sources = spark.range(n_vertices).select(F.col("id").cast("long"))
-    n_sources = sources.count()
     from graphem_rapids_spark import session
 
     broadcast_max = session.BROADCAST_POSITIONS_MAX
@@ -1354,9 +1260,10 @@ def betweenness_sampled(
     # 10³⁸ (a double would silently lose exactness past 2⁵³ on dense
     # graphs, reintroducing summation-order drift)
     levels, level_counts = _bfs_levels(
-        sym, sources, n_sources, max_depth, "sigma",
-        F.lit(1).cast("decimal(38,0)"), F.sum("sigma"),
+        sym, _sweep_sources(sources, "sigma", F.lit(1).cast("decimal(38,0)")),
+        ["s"], max_depth, "sigma", F.sum("sigma"),
     )
+    n_sources = level_counts[0]
 
     # backward accumulation, deepest level has delta = 0.
     # delta_fp as DECIMAL(38,0): a hub vertex's delta can reach
@@ -1599,23 +1506,18 @@ def coreness(edges: DataFrame, max_rounds: int = 60) -> DataFrame:
         .agg(F.count("*").alias("c"))
         .transform(eager_checkpoint)
     )
-    changed = -1  # "never iterated" sentinel for the max_rounds=0 case
-    for _ in range(max_rounds):
-        new = hindex_round(sym, c).transform(eager_checkpoint)
-        changed = (
-            new.join(c.select("id", F.col("c").alias("_old")), "id")
-            .filter(F.col("c") != F.col("_old"))
-            .count()
-        )
-        prev, c = c, new
-        prev.unpersist()
-        if changed == 0:
-            break
-    else:
-        # loop exhausted max_rounds with changed > 0: values are still
+    changed = []
+    c, _ = iterate(
+        c,
+        lambda c, _r: hindex_round(sym, c).join(c.select("id", F.col("c").alias("_o")), "id"),
+        max_rounds,
+        stop=_settled("c", changed),
+    )
+    if changed[-1:] != [0]:
+        # max_rounds exhausted with changed > 0: values are still
         # upper bounds, not exact coreness — surface it instead of
         # silently returning (the docstring promises exactness)
-        still = "never iterated" if changed < 0 else f"{changed} vertices still changing"
+        still = f"{changed[-1]} vertices still changing" if changed else "never iterated"
         warnings.warn(
             f"coreness: not converged after {max_rounds} rounds "
             f"({still}); returned values are upper bounds — raise "
@@ -1624,7 +1526,7 @@ def coreness(edges: DataFrame, max_rounds: int = 60) -> DataFrame:
             stacklevel=2,
         )
     sym.unpersist()
-    return c.select("id", F.col("c").alias("core"))
+    return released_with(c.select("id", F.col("c").alias("core")), [c])
 
 
 def katz_centrality(
@@ -1657,7 +1559,8 @@ def katz_centrality(
         F.col("dst") if use_broadcast else F.col("src")
     ).persist()
     x = verts.select("id", F.lit(beta).alias("value")).transform(eager_checkpoint)
-    for _ in range(max_iter):
+
+    def step(x, _r):
         msg = (
             sym.withColumnRenamed("src", "id")
             .join(F.broadcast(x) if use_broadcast else x, "id")
@@ -1665,12 +1568,12 @@ def katz_centrality(
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        x_new = verts.join(msg, "id", "left").select(
+        return verts.join(msg, "id", "left").select(
             "id",
             (F.lit(beta) + F.lit(alpha) * F.coalesce("s", F.lit(0.0))).alias("value"),
-        ).transform(eager_checkpoint)
-        x.unpersist()
-        x = x_new
+        )
+
+    x, _ = iterate(x, step, max_iter)
     sym.unpersist()
     return x
 
@@ -2344,16 +2247,16 @@ def load_sampled(
     sym = eager_materialize(symmetrize_edges(edges))
     if sources is None:
         sources = spark.range(n_vertices).select(F.col("id").cast("long"))
-    n_sources = sources.count()
     from graphem_rapids_spark import session
 
     broadcast_max = session.BROADCAST_POSITIONS_MAX
     # npred of a source is never read (level 0 never plays w in the
     # backward pass) — 1 is a placeholder
     levels, level_counts = _bfs_levels(
-        sym, sources, n_sources, max_depth, "npred",
-        F.lit(1).cast("long"), F.count("*"),
+        sym, _sweep_sources(sources, "npred", F.lit(1).cast("long")),
+        ["s"], max_depth, "npred", F.count("*"),
     )
+    n_sources = level_counts[0]
 
     acc = None
     delta_next = levels[-1].withColumn("delta_fp", F.lit(0).cast("decimal(38,0)"))
@@ -2529,12 +2432,11 @@ def louvain_move_pass(
     the standard distributed-Louvain symmetry breaker, deterministic
     and SQL-replayable.
 
-    Returns the new (id, label, _o) with the OLD label carried as
-    ``_o`` (a mover is exactly a row with label != _o), as a lazy
-    checkpoint: the caller's first full scan — e.g. the n_moved
-    filter-count — writes its blocks. Every scan of ``labels`` sits
-    below an exchange, so the caller may release ``labels`` as soon
-    as this returns (see :func:`lazy_checkpoint`)."""
+    Returns the plan of the new (id, label, _o) with the OLD label
+    carried as ``_o`` (a mover is exactly a row with label != _o) —
+    a step for :func:`checkpoint.iterate`. Every scan of ``labels``
+    sits below an exchange, so the driver may release ``labels`` as
+    soon as it has checkpointed the result."""
     labels = labels.select("id", "label")
     dc = deg.join(labels, "id").groupBy("label").agg(
         F.sum("d").alias("dsum")
@@ -2595,16 +2497,13 @@ def louvain_move_pass(
         )
         .select("id", (-F.col("_m._nc")).alias("new_label"))
     )
-    # stats-safe: this plan references `labels` in 4+ joins, so a
-    # plain localCheckpoint compounds CBO sizeInBytes exponentially
-    # across passes (see checkpoint.py — measured 0.7 s → 88 s by
-    # pass 9 before severing)
-    return lazy_checkpoint(
-        labels.join(moves, "id", "left").select(
-            "id",
-            F.coalesce("new_label", F.col("label")).alias("label"),
-            F.col("label").alias("_o"),
-        )
+    # this plan references `labels` in 4+ joins: only a stats-severing
+    # checkpoint keeps CBO sizeInBytes from compounding across passes
+    # (see checkpoint.py — measured 0.7 s → 88 s by pass 9 before)
+    return labels.join(moves, "id", "left").select(
+        "id",
+        F.coalesce("new_label", F.col("label")).alias("label"),
+        F.col("label").alias("_o"),
     )
 
 
@@ -2692,8 +2591,6 @@ def louvain(
     Reference analog: community structure consumed by the benchmark
     analytics (run_benchmarks.py); the reference has no Louvain —
     this is engine-breadth beyond parity, VERDICT r6 item 7."""
-    from graphem_rapids_spark.checkpoint import eager_checkpoint, release
-
     spark = edges.sparkSession
     ew = eager_checkpoint(
         edges.select("src", "dst")
@@ -2782,8 +2679,6 @@ def louvain(
                 ).alias("sw"),
             )
         )
-        from graphem_rapids_spark.checkpoint import eager_checkpoint
-
         return (eager_checkpoint(inter), eager_checkpoint(new_self))
 
     trajectory = []
@@ -2809,14 +2704,16 @@ def louvain(
             .unionAll(cur_self.select("id"))
             .distinct()
         )
+        # lazy: the first move pass scans it below its exchanges
         lab = coarse_verts.select(
             "id", F.col("id").alias("label")
-        ).transform(eager_checkpoint)
+        ).transform(lazy_checkpoint)
         wsym, deg = louvain_degrees(cur_ew, cur_self)
-        for r in range(move_rounds):
-            prev_lab = lab
-            lab = louvain_move_pass(wsym, deg, lab, m_w, phase=r % 2)
-            release(prev_lab)  # dead checkpoint blocks slow later jobs
+        lab, _ = iterate(
+            lab,
+            lambda lab, r: louvain_move_pass(wsym, deg, lab, m_w, phase=r % 2),
+            move_rounds,
+        )
         release(deg)
         n_split = 0
         if refine:
@@ -2877,14 +2774,14 @@ def edge_betweenness_sampled(
     sym = eager_materialize(symmetrize_edges(edges))
     if sources is None:
         sources = spark.range(n_vertices).select(F.col("id").cast("long"))
-    n_sources = sources.count()
     from graphem_rapids_spark import session
 
     broadcast_max = session.BROADCAST_POSITIONS_MAX
     levels, level_counts = _bfs_levels(
-        sym, sources, n_sources, max_depth, "sigma",
-        F.lit(1).cast("decimal(38,0)"), F.sum("sigma"),
+        sym, _sweep_sources(sources, "sigma", F.lit(1).cast("decimal(38,0)")),
+        ["s"], max_depth, "sigma", F.sum("sigma"),
     )
+    n_sources = level_counts[0]
 
     edge_acc = None
     delta_next = levels[-1].withColumn(

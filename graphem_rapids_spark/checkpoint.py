@@ -32,6 +32,16 @@ RDD, so :func:`eager_checkpoint` captures that RDD and rebinds the
 returned frame's ``unpersist`` (and :func:`release`) to free it
 directly — verified: storage-info entry count drops by exactly one
 per released checkpoint.
+
+Iteration discipline: :func:`iterate` is the one round driver — every
+replace-the-state loop (power iterations, label moves, peeling,
+relaxation) hands it a ``step`` and gets the batching, lazy
+checkpoint, convergence action and predecessor release from one
+place. The accumulate-every-level frontier loop (BFS, the Brandes
+forward pass, the IC cascade) is the one sweep
+``analytics._bfs_levels``; its union frees every level through
+:func:`released_with`. :func:`iter_materialize` stays the generation
+helper for deep self-join kernels that need honest cached stats.
 """
 
 from __future__ import annotations
@@ -52,22 +62,34 @@ def _checkpoint_rdd(df: DataFrame):
         return None
 
 
-def _bind_release(df: DataFrame, jrdd) -> DataFrame:
-    """Attach the owning checkpoint RDD and make ``df.unpersist()``
-    actually free its blocks (after release the checkpoint is
+def _bind_release(df: DataFrame, jrdds: list) -> DataFrame:
+    """Attach the owning checkpoint RDDs and make ``df.unpersist()``
+    actually free their blocks, plus the cache-manager entry when the
+    frame was also ``persist``ed (after release the checkpoint is
     lineage-truncated and must not be read again — same contract as
     a plain localCheckpoint unpersist)."""
-    df._graphem_ckpt_rdd = jrdd
+    df._graphem_ckpt_rdds = jrdds
 
-    def _unpersist(blocking: bool = False, _jrdd=jrdd, _df=df):
-        try:
-            _jrdd.unpersist(bool(blocking))
-        except Exception:  # pragma: no cover — session teardown races
-            pass
+    def _unpersist(blocking: bool = False, _df=df):
+        DataFrame.unpersist(_df, blocking)
+        for jrdd in jrdds:
+            try:
+                jrdd.unpersist(bool(blocking))
+            except Exception:  # pragma: no cover — session teardown races
+                pass
         return _df
 
     df.unpersist = _unpersist
     return df
+
+
+def released_with(df: DataFrame, parts) -> DataFrame:
+    """``df`` rebound so that its ``unpersist()``/:func:`release` frees
+    the checkpoint blocks of every frame in ``parts`` — for results
+    derived from several checkpoints (a union of per-level tables, an
+    aggregate over them) that the caller releases as one."""
+    jrdds = [j for p in parts for j in getattr(p, "_graphem_ckpt_rdds", ())]
+    return _bind_release(df, jrdds)
 
 
 def _sever_and_bind(out: DataFrame, sever_stats: bool) -> DataFrame:
@@ -90,7 +112,7 @@ def _sever_and_bind(out: DataFrame, sever_stats: bool) -> DataFrame:
         except Exception:  # pragma: no cover — connect/older builds
             result = out
     if jrdd is not None:
-        result = _bind_release(result, jrdd)
+        result = _bind_release(result, [jrdd])
     return result
 
 
@@ -163,12 +185,19 @@ def checkpoint_count(df: DataFrame, sever_stats: bool = True):
     exactly what the driver-floor-bound kernels (LPA, IC, BFS,
     PageRank) pay per round at any scale."""
     result = lazy_checkpoint(df, sever_stats=sever_stats)
-    jrdd = getattr(result, "_graphem_ckpt_rdd", None)
-    if jrdd is not None:
-        n = int(jrdd.count())  # materializes the checkpoint
-    else:  # pragma: no cover — connect sessions
-        n = result.count()
-    return result, n
+    return result, row_count(result)
+
+
+def row_count(df: DataFrame) -> int:
+    """Row count in ONE job of a frame whose plan has no exchange — a
+    checkpoint, or a filter/projection over one: the RDD-level
+    ``count`` of its physical plan (a DataFrame ``count`` adds a
+    partial-aggregate exchange stage, a second job under AQE). Over a
+    lazy checkpoint this is the full scan that writes its blocks."""
+    try:
+        return int(df._jdf.queryExecution().toRdd().count())
+    except AttributeError:  # pragma: no cover — connect sessions
+        return df.count()
 
 
 def eager_materialize(df: DataFrame) -> DataFrame:
@@ -202,19 +231,10 @@ def iter_materialize(df: DataFrame, old: DataFrame | None = None) -> DataFrame:
     generation and melts the driver in BigInteger multiplies from
     ~18 generations (SCALE.md §iteration-discipline). Pass ``old`` to
     release the previous generation. ``unpersist()`` on the result
-    frees both its cache-manager entry and its checkpoint blocks (the
-    checkpoint's rebound ``unpersist`` alone frees only the blocks, and
-    the cached copy would stay resident for the life of the session)."""
+    frees both its cache-manager entry and its checkpoint blocks."""
     out = eager_checkpoint(df)
-    free_blocks = out.unpersist
     out.persist()
     out.count()
-
-    def _unpersist(blocking: bool = False, _df=out):
-        DataFrame.unpersist(_df, blocking)
-        return free_blocks(blocking)
-
-    out.unpersist = _unpersist
     if old is not None:
         old.unpersist()
     return out
@@ -222,15 +242,48 @@ def iter_materialize(df: DataFrame, old: DataFrame | None = None) -> DataFrame:
 
 def release(df: DataFrame) -> None:
     """Free the checkpoint blocks behind a frame produced by
-    :func:`eager_checkpoint` (``DataFrame.unpersist`` alone is a
+    :func:`eager_checkpoint`, :func:`lazy_checkpoint` or
+    :func:`released_with` (``DataFrame.unpersist`` alone is a
     cache-manager lookup and no-ops on checkpoints — see module
-    docstring)."""
-    jrdd = getattr(df, "_graphem_ckpt_rdd", None)
-    if jrdd is not None:
-        try:
-            jrdd.unpersist(False)
-            return
-        except Exception:  # pragma: no cover — session teardown races
-            pass
+    docstring); any other frame is plainly unpersisted."""
+    if hasattr(df, "_graphem_ckpt_rdds"):
+        df.unpersist()
+        return
     src = getattr(df, "_graphem_ckpt_src", None)
     (src if src is not None else df).unpersist()
+
+
+def iterate(state: DataFrame, step, rounds: int, *, batch: int = 1, stop=None):
+    """The one round driver of the iterative kernels (a Pregel-style
+    superstep loop): runs ``state = step(state, r)`` for r = 0 ..
+    ``rounds``-1 and returns ``(state, rounds_run)``.
+
+    Per checkpoint it composes ``batch`` rounds into one plan, takes a
+    :func:`lazy_checkpoint` of it (stats severing; eager fallback on
+    AQE-off sessions), runs ``stop(new, r)`` — the round's one
+    full-scan action, e.g. a changed-row count over a carried ``_o``
+    column; a truthy result ends the loop — and only then releases the
+    predecessor, including the caller's initial ``state`` (pass a
+    projection to keep one that is read later).
+
+    Preconditions (:func:`lazy_checkpoint`):
+
+    - every scan of the previous state in ``step``'s plan sits below a
+      shuffle or broadcast exchange, or ``stop`` scans every partition
+      of the new state — otherwise the release frees blocks the new
+      state still reads;
+    - the returned frame's first action scans every partition (when
+      there is no ``stop``), or unread partitions stay lazy and are
+      recomputed from shuffle output later."""
+    done = 0
+    while done < rounds:
+        new = state
+        for r in range(done, min(done + batch, rounds)):
+            new = step(new, r)
+        new = lazy_checkpoint(new)
+        halt = stop is not None and stop(new, r)
+        release(state)
+        state, done = new, r + 1
+        if halt:
+            break
+    return state, done

@@ -25,13 +25,13 @@ DuckDB oracle replays (unrolled frontier CTEs in queries.py).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphem_rapids_spark.checkpoint import (
-    checkpoint_count,
-    eager_materialize,
-)
+from graphem_rapids_spark.analytics import _bfs_levels
+from graphem_rapids_spark.checkpoint import eager_materialize, released_with
 
 from graphem_rapids_spark.functions import edge_coin_key, mix_uniform
 from graphem_rapids_spark.graph.canon import symmetrize_edges
@@ -76,13 +76,11 @@ def independent_cascade(
     ``seeds`` must have column ``id`` (+ any ``key_cols`` for batched
     evaluation, e.g. greedy's candidate_id). All trials/keys share the
     same iteration loop — one Spark job per cascade step.
+    ``unpersist()`` on the result frees every step's blocks.
     """
     spark = edges.sparkSession
     trials_df = spark.range(trials).select(F.col("id").cast("int").alias("trial"))
     keys = ["trial", *key_cols]
-    from graphem_rapids_spark import session
-
-    broadcast_max = session.BROADCAST_POSITIONS_MAX
     # live-edge subgraph ONCE (row checkpoint): each directed edge's
     # per-trial coin is round-independent, so the cascade equals
     # reachability over the live edges — the exact formulation the
@@ -99,37 +97,13 @@ def independent_cascade(
         .filter(_coin([F.col("src"), F.col("dst"), F.col("trial")], seed) < p)
         .select("trial", "src", "dst")
     )
-    # localCheckpoint each round: the activated set is a union chain
-    # that is ALSO nested inside every anti-join — without plan
-    # truncation the logical plan doubles per iteration (the classic
-    # iterative-dataflow pitfall; persist() caches data but keeps the
-    # plan). Checkpointing makes each round's plan O(1).
-    # checkpoint_count: materialize + row count in ONE job per round
-    # (the count drove a second job that re-scanned the blocks the
-    # checkpoint had just written — see checkpoint.checkpoint_count)
-    activated, frontier_n = checkpoint_count(
-        seeds.crossJoin(trials_df).select(*keys, "id")
+    # the cascade is the frontier sweep over the live edges; its
+    # per-level checkpoints are freed by the union's unpersist()
+    levels, _ = _bfs_levels(
+        live, seeds.crossJoin(trials_df).select(*keys, "id"), keys, max_iter
     )
-    frontier = activated
-    for _ in range(max_iter):
-        # a cascade frontier is O(n·trials) mid-epidemic — broadcast
-        # only while it is provably small (count is free: the frontier
-        # is an eagerly-checkpointed table), else shuffle-join against
-        # the live-edge table
-        fr = F.broadcast(frontier) if frontier_n <= broadcast_max else frontier
-        msgs = live.withColumnRenamed("src", "id").join(fr, ["trial", "id"])
-        succ = msgs.select(*keys, F.col("dst").alias("id")).distinct()
-        new_active, frontier_n = checkpoint_count(
-            succ.join(activated, [*keys, "id"], "left_anti")
-        )
-        if frontier_n == 0:
-            break
-        # flat union of checkpointed per-round tables — no lineage
-        # growth, so no extra checkpoint job per cascade round
-        activated = activated.unionAll(new_active)
-        frontier = new_active
     live.unpersist()
-    return activated
+    return released_with(reduce(DataFrame.unionAll, levels), levels)
 
 
 def estimated_influence(

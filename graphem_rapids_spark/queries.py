@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphem_rapids_spark.checkpoint import eager_checkpoint as _eager_ckpt
+from graphem_rapids_spark.checkpoint import iterate, release
 from pyspark.sql import functions as F
 
 from graphem_rapids_spark.graph.canon import canonicalize_edges, vertex_degrees, vertices_from_edges
@@ -5939,25 +5940,22 @@ def community_girvan_newman_iter(spark, sf_dir):
         .join(verts, "id", "left_semi")
         .transform(_eager_ckpt)
     )
-    cur = e0
     rows = []
-    for rnd in range(1, _GN_ITER_ROUNDS + 1):
+
+    def cut_top(cur, _r):
         eb = edge_betweenness_sampled(
             cur, n, sources=sources, normalized=True, max_depth=_BETW_DEPTH
         )
-        from graphem_rapids_spark.checkpoint import eager_checkpoint, release
-
-        cut = eager_checkpoint(
+        cut = _eager_ckpt(
             eb.orderBy(
                 F.col("value").desc(), F.col("src").asc(), F.col("dst").asc()
             )
             .limit(_GN_CUT)
             .select("src", "dst")
         )
-        prev_cur = cur
-        cur = eager_checkpoint(cur.join(cut, ["src", "dst"], "left_anti"))
-        if prev_cur is not e0:  # keep the original graph for modularity
-            release(prev_cur)
+        return cur.join(cut, ["src", "dst"], "left_anti")
+
+    def record(cur, r):
         labels = _gn_components(verts, cur)
         stats = labels.groupBy("component").agg(F.count("*").alias("sz"))
         n_comp = stats.count()
@@ -5965,13 +5963,18 @@ def community_girvan_newman_iter(spark, sf_dir):
         m, ((qn, _),) = A.modularity_numerators(e0, labels, ["component"])
         rows.append(
             (
-                rnd,
-                rnd * _GN_CUT,
+                r + 1,
+                (r + 1) * _GN_CUT,
                 n_comp,
                 largest,
                 round(qn / (4.0 * m * m), 6),
             )
         )
+
+    # a projection as the initial state: the driver's release of it
+    # keeps e0, which every round's modularity reads
+    cur, _ = iterate(e0.select("src", "dst"), cut_top, _GN_ITER_ROUNDS, stop=record)
+    release(cur)
     return spark.createDataFrame(
         rows,
         "round long, n_cut_total long, n_components long, largest long,"
@@ -10478,16 +10481,14 @@ def weighted_closeness_sampled(spark, sf_dir):
     d = srcs.select(
         F.col("id").alias("s"), F.col("id"), F.lit(0).cast("long").alias("d")
     ).transform(_eager_ckpt)
-    last_ckpt = d
-    for i in range(_WCLOSE_ROUNDS):
+
+    def relax(d, _r):
         relaxed = sym.join(d.withColumnRenamed("id", "src"), "src").select(
             "s", F.col("dst").alias("id"), (F.col("d") + F.col("cost")).alias("d")
         )
-        d = d.unionAll(relaxed).groupBy("s", "id").agg(F.min("d").alias("d"))
-        if (i + 1) % 4 == 0 or i == _WCLOSE_ROUNDS - 1:
-            d = d.transform(_eager_ckpt)
-            last_ckpt.unpersist()
-            last_ckpt = d
+        return d.unionAll(relaxed).groupBy("s", "id").agg(F.min("d").alias("d"))
+
+    d, _ = iterate(d, relax, _WCLOSE_ROUNDS, batch=4)
     per = d.groupBy("s").agg(F.sum("d").alias("tot"), (F.count("*") - 1).alias("r"))
     return per.select(
         F.col("s").alias("part_id"),
@@ -10568,16 +10569,14 @@ def graph_weighted_sssp(spark, sf_dir):
     src0 = we.agg(F.least(F.min("src"), F.min("dst")).alias("s"))
     d = src0.select(F.col("s").alias("id"), F.lit(0).cast("long").alias("d"))
     d = d.transform(_eager_ckpt)
-    last_ckpt = d
-    for i in range(_SSSP_ROUNDS):
+
+    def relax(d, _r):
         relaxed = sym.join(d.withColumnRenamed("id", "src"), "src").select(
             F.col("dst").alias("id"), (F.col("d") + F.col("cost")).alias("d")
         )
-        d = d.unionAll(relaxed).groupBy("id").agg(F.min("d").alias("d"))
-        if (i + 1) % 4 == 0:
-            d = d.transform(_eager_ckpt)
-            last_ckpt.unpersist()
-            last_ckpt = d
+        return d.unionAll(relaxed).groupBy("id").agg(F.min("d").alias("d"))
+
+    d, _ = iterate(d, relax, _SSSP_ROUNDS, batch=4)
     sym.unpersist()
     return d.select("id", F.col("d").alias("dist"))
 
@@ -10810,16 +10809,9 @@ def graph_coreness_hindex(spark, sf_dir):
         .agg(F.count("*").alias("c"))
         .transform(_eager_ckpt)
     )
-    # checkpoint every 4th round — the fixed-depth loop needs lineage
-    # truncation (not caching) and 3-deep join+window+agg chains plan
-    # fine; eager per-round checkpoints triple the wall time here
-    last_ckpt = c
-    for i in range(_CORENESS_ROUNDS):
-        c = A.hindex_round(sym, c)
-        if (i + 1) % 4 == 0:
-            c = c.transform(_eager_ckpt)
-            last_ckpt.unpersist()
-            last_ckpt = c
+    # four join+window+agg rounds per checkpoint plan fine; a
+    # checkpoint per round triples the wall time here
+    c, _ = iterate(c, lambda c, _r: A.hindex_round(sym, c), _CORENESS_ROUNDS, batch=4)
     sym.unpersist()
     return c.select("id", F.col("c").alias("core_ub"))
 
@@ -13219,6 +13211,24 @@ def tokenizer_bpe_train_rounds(spark, sf_dir):
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
+    _, merges = _bpe_merges(wc, _BPE_TRAIN_ROUNDS)
+    return spark.createDataFrame(
+        [(r + 1, a, b, a + b, cnt) for r, (a, b, cnt) in enumerate(merges)],
+        "round long, sym_a string, sym_b string, merged string, pair_count long",
+    )
+
+
+def _bpe_merges(wc, rounds):
+    """The BPE merge loop of :func:`tokenizer_bpe_train_rounds` and
+    :func:`tokenizer_bpe_encode` over the word-frequency table ``wc``
+    (w, c): up to ``rounds`` merges of the argmax adjacent pair,
+    stopping when no pair is left. Returns the final (w, c, e) state
+    — ``e`` the delimited segmentation — and the merges as
+    ``[(a, b, count)]``. The argmax collect over a round's new
+    segmentation is that round's stop action — the full scan that
+    writes its lazy checkpoint before the predecessor is released (a
+    merge is a bare projection of the previous state) — and it picks
+    the next round's pair."""
     enc = F.concat(
         F.lit(" "),
         F.array_join(
@@ -13227,10 +13237,11 @@ def tokenizer_bpe_train_rounds(spark, sf_dir):
         ),
         F.lit(" "),
     )
-    state = wc.select("c", enc.alias("e")).transform(_eager_ckpt)
-    rows = []
-    for r in range(1, _BPE_TRAIN_ROUNDS + 1):
-        st = state.select("c", F.split(F.trim(F.col("e")), "  ").alias("s")).filter(
+    state = wc.select("w", "c", enc.alias("e")).transform(_eager_ckpt)
+    merges = []
+
+    def no_pair_left(df, _r=None):
+        st = df.select("c", F.split(F.trim(F.col("e")), "  ").alias("s")).filter(
             F.size("s") >= 2
         )
         pc = (
@@ -13247,19 +13258,20 @@ def tokenizer_bpe_train_rounds(spark, sf_dir):
             .agg(F.sum("c").alias("cnt"))
         )
         top = pc.orderBy(F.desc("cnt"), "a", "b").limit(1).collect()
-        if not top:
-            break
-        a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
-        rows.append((r, a, b, a + b, cnt))
-        state = state.select(
-            "c",
-            F.replace(
-                F.col("e"), F.lit(f" {a}  {b} "), F.lit(f" {a}{b} ")
-            ).alias("e"),
-        ).transform(_eager_ckpt)
-    return spark.createDataFrame(
-        rows, "round long, sym_a string, sym_b string, merged string, pair_count long"
-    )
+        if top:
+            merges.append((top[0]["a"], top[0]["b"], int(top[0]["cnt"])))
+        return not top
+
+    def merge(df, r):
+        a, b, _ = merges[r]
+        return df.select(
+            "w", "c", F.replace(F.col("e"), F.lit(f" {a}  {b} "), F.lit(f" {a}{b} ")).alias("e")
+        )
+
+    if no_pair_left(state):
+        return state, merges
+    state, _ = iterate(state, merge, rounds, stop=no_pair_left)
+    return state, merges[:rounds]
 
 
 def tokenizer_bpe_encode(spark, sf_dir):
@@ -13279,43 +13291,7 @@ def tokenizer_bpe_encode(spark, sf_dir):
         "lang", F.explode(F.split(F.lower(F.col("text")), "\\s+")).alias("w")
     ).filter(F.col("w") != "")
     wc = words.groupBy("w").agg(F.count("*").alias("c"))
-    enc = F.concat(
-        F.lit(" "),
-        F.array_join(
-            F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"),
-            "  ",
-        ),
-        F.lit(" "),
-    )
-    state = wc.select("w", "c", enc.alias("e")).transform(_eager_ckpt)
-    for _ in range(_BPE_TRAIN_ROUNDS):
-        st = state.select("c", F.split(F.trim(F.col("e")), "  ").alias("s")).filter(
-            F.size("s") >= 2
-        )
-        pc = (
-            st.select(
-                "c",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(s) - 1), i -> "
-                        "struct(element_at(s, i) AS a, element_at(s, i + 1) AS b))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("c").alias("cnt"))
-        )
-        top = pc.orderBy(F.desc("cnt"), "a", "b").limit(1).collect()
-        if not top:
-            break
-        a, b = top[0]["a"], top[0]["b"]
-        state = state.select(
-            "w",
-            "c",
-            F.replace(
-                F.col("e"), F.lit(f" {a}  {b} "), F.lit(f" {a}{b} ")
-            ).alias("e"),
-        ).transform(_eager_ckpt)
+    state, _ = _bpe_merges(wc, _BPE_TRAIN_ROUNDS)
     # n_syms = '  '-separator count + 1, an exact length difference
     t = F.trim(F.col("e"))
     wt = state.select(
@@ -19294,12 +19270,15 @@ def community_louvain_move(spark, sf_dir):
     wsym, deg = A.louvain_degrees(*_unit_weights(e))
     # one (id, label, _o) frame: n_moved is a filter-count over the
     # blocks its first scan writes, and both numerators read it
-    lab_both = A.louvain_move_pass(wsym, deg, lab, m)
-    n_moved = lab_both.filter(F.col("label") != F.col("_o")).count()
+    moved = []
+    lab_both, _ = iterate(
+        lab, lambda lab, _r: A.louvain_move_pass(wsym, deg, lab, m), 1,
+        stop=A._settled("label", moved),
+    )
     _, ((qb, _), (qa, _)) = A.modularity_numerators(e, lab_both, ["_o", "label"])
     den = 4.0 * m * m
     return spark.createDataFrame(
-        [(m, n_moved, round(qb / den, 6), round(qa / den, 6))],
+        [(m, moved[0], round(qb / den, 6), round(qa / den, 6))],
         "m_edges long, n_moved long, modularity_before double,"
         " modularity_after double",
     )
@@ -19400,8 +19379,6 @@ def community_louvain_rounds(spark, sf_dir):
     round: round, n_moved, n_communities, modularity — a refinement
     curve (monotone on this graph; synchronized moves may oscillate
     in general, which the trajectory would SHOW rather than hide)."""
-    from graphem_rapids_spark.checkpoint import release
-
     e = copurchase_edges(spark, sf_dir)
     lab = A.label_propagation(e, max_rounds=_LPA_ROUNDS, converge=False)
     m = e.count()
@@ -19409,12 +19386,18 @@ def community_louvain_rounds(spark, sf_dir):
     den = 4.0 * m * m
     _, ((q0, nc0),) = A.modularity_numerators(e, lab, ["label"])
     out = [(0, 0, nc0, round(q0 / den, 6))]
-    for r in range(1, _LOUVAIN_ROUNDS + 1):
-        prev, lab = lab, A.louvain_move_pass(wsym, deg, lab, m)
-        release(prev)
-        moved = lab.filter(F.col("label") != F.col("_o")).count()
+    moved = []
+    count_moved = A._settled("label", moved)
+
+    def record(lab, r):  # never stops the loop: every round is reported
+        count_moved(lab, r)
         _, ((q, nc),) = A.modularity_numerators(e, lab, ["label"])
-        out.append((r, moved, nc, round(q / den, 6)))
+        out.append((r + 1, moved[-1], nc, round(q / den, 6)))
+
+    lab, _ = iterate(
+        lab, lambda lab, _r: A.louvain_move_pass(wsym, deg, lab, m), _LOUVAIN_ROUNDS, stop=record
+    )
+    release(lab)
     return spark.createDataFrame(
         out, "round long, n_moved long, n_communities long, modularity double"
     )

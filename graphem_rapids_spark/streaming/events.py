@@ -44,7 +44,19 @@ from pyspark.sql import functions as F
 # the driver's own 8-core runs prove). On a cluster with state larger
 # than a few GB per store, raise GRAPHEM_STREAM_PARTITIONS toward
 # state_bytes / ~1 GB so stores stay memory-bounded.
-STREAM_PARTITIONS = int(os.environ.get("GRAPHEM_STREAM_PARTITIONS", "8"))
+# A malformed or non-positive value falls back to the default.
+
+
+def _positive_int(text, default: int) -> int:
+    """``int(text)`` when that is a positive integer, else ``default``."""
+    try:
+        value = int(text)
+    except (TypeError, ValueError):
+        return default
+    return value if value > 0 else default
+
+
+STREAM_PARTITIONS = _positive_int(os.environ.get("GRAPHEM_STREAM_PARTITIONS"), 8)
 
 
 def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -193,7 +205,10 @@ def run_available_now(
     # conf is captured by the streaming query at start() and restored
     # for batch work immediately after the drain
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    bounded = str(min(int(prev_parts), max(STREAM_PARTITIONS, 1)))
+    try:
+        bounded = str(min(int(prev_parts), STREAM_PARTITIONS))
+    except ValueError:  # a non-numeric session value: run with it unchanged
+        bounded = prev_parts
     spark.conf.set("spark.sql.shuffle.partitions", bounded)
     try:
         q = (

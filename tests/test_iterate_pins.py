@@ -1,0 +1,95 @@
+"""Pins for the round driver ``checkpoint.iterate`` and the private-API
+tricks it relies on: no iterative kernel leaves checkpoint blocks
+behind once its result is released, and stats severing keeps a
+self-joining state's plan statistics flat across rounds."""
+
+from __future__ import annotations
+
+import pyspark.sql.functions as F
+
+from graphem_rapids_spark.analytics import (
+    closeness_centrality,
+    connected_components,
+    label_propagation,
+)
+from graphem_rapids_spark.checkpoint import eager_checkpoint, iterate
+from graphem_rapids_spark.influence import estimated_influence
+
+# two triangles joined by three edges (FIXTURES.md)
+TWO_TRIANGLES_LINKED = [
+    (0, 1), (0, 2), (1, 2), (1, 3), (2, 4), (3, 4), (3, 5), (4, 5), (0, 5),
+]
+
+
+def _cached_rdds(spark) -> set[int]:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _assert_no_leak(spark, run):
+    """``run`` leaves no RDD with cached partitions behind. Only new
+    ids count: the context cleaner may drop an earlier test's blocks
+    while ``run`` executes."""
+    before = _cached_rdds(spark)
+    run()
+    assert _cached_rdds(spark) - before == set()
+
+
+def _collect_and_release(df):
+    df.collect()
+    df.unpersist()
+
+
+def test_estimated_influence_leaks_no_blocks(spark):
+    edges = spark.createDataFrame(TWO_TRIANGLES_LINKED, "src long, dst long")
+    _assert_no_leak(
+        spark, lambda: estimated_influence(edges, [0, 3], p=0.5, trials=4, seed=3)
+    )
+
+
+def test_closeness_leaks_no_blocks_once_released(spark):
+    edges = spark.createDataFrame(TWO_TRIANGLES_LINKED, "src long, dst long")
+    _assert_no_leak(spark, lambda: _collect_and_release(closeness_centrality(edges, 6)))
+
+
+def test_fixed_round_kernel_leaks_no_blocks_once_released(spark):
+    edges = spark.createDataFrame(TWO_TRIANGLES_LINKED, "src long, dst long")
+    _assert_no_leak(
+        spark,
+        lambda: _collect_and_release(label_propagation(edges, max_rounds=5, converge=False)),
+    )
+
+
+def test_converging_kernel_leaks_no_blocks_once_released(spark):
+    edges = spark.createDataFrame([(i, i + 1) for i in range(9)], "src long, dst long")
+    _assert_no_leak(
+        spark,
+        lambda: _collect_and_release(connected_components(edges, 10, algorithm="minlabel")),
+    )
+
+
+def test_iterate_severs_self_join_stats(spark):
+    """Each round joins the previous state with itself, so an unsevered
+    checkpoint's size estimate (a product of its children's) would
+    double its digit count per round."""
+    state = eager_checkpoint(
+        spark.range(64).select("id", (F.col("id") % 7).alias("v"))
+    )
+    digits = []
+
+    def step(df, _r):
+        other = df.select("id", F.col("v").alias("w"))
+        return df.join(other, "id").select("id", ((F.col("v") + F.col("w")) % 7).alias("v"))
+
+    def record(new, _r):
+        stats = new._jdf.queryExecution().optimizedPlan().stats()
+        digits.append(len(str(stats.sizeInBytes())))
+        new.count()  # writes the blocks, so the release never depends on severing
+        return False
+
+    state, rounds = iterate(state, step, 5, stop=record)
+    assert rounds == 5
+    assert len(set(digits)) == 1, digits
+    assert sorted(r.v for r in state.collect()) == sorted(
+        (i % 7) * 32 % 7 for i in range(64)
+    )
+    state.unpersist()

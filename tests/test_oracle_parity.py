@@ -37,23 +37,46 @@ QUERIES = entry_mod.queries()
 
 # Spark jobs per query at sf0.001 with the co-purchase edge table
 # already built (local[4]); a change that adds a job per iteration
-# trips these. Counts repeat within ±2 across runs (AQE stage timing),
-# so each budget is the max measured + 2, capped below the lowest
-# count before the community kernels were merged into one
-# implementation each; modularity and the single move pass did not
-# fall, so theirs is that earlier highest. Other scales run other
-# round counts.
+# trips these. Counts move by up to ±2 across runs (AQE stage
+# timing), so each budget is the max measured + 2, capped at the
+# highest count measured before the round loops moved onto
+# checkpoint.iterate — no query may run more jobs than it did then.
+# Other scales run other round counts.
 JOB_BUDGETS = {
-    "connected_components_copurchase": 25,
-    "dedup_near_clusters": 34,
-    "community_girvan_newman_step": 121,
-    "community_girvan_newman_iter": 261,
-    "community_modularity": 31,
-    "community_louvain_move": 46,
-    "community_louvain_rounds": 101,
-    "community_louvain_levels": 223,
-    "community_louvain_refined": 299,
-    "dedup_cluster_keep_best": 38,
+    "pagerank_copurchase": 42,
+    "ppr_copurchase": 47,
+    "pagerank_weighted_copurchase": 44,
+    "eigenvector_copurchase": 40,
+    "katz_copurchase": 26,
+    "community_lpa": 20,
+    "community_density_profile": 25,
+    "community_modularity": 29,
+    "graph_conductance_profile": 35,
+    "kcore_copurchase": 23,
+    "ktruss_copurchase": 23,
+    "graph_coreness_hindex": 28,
+    "closeness_sampled": 23,
+    "harmonic_sampled": 20,
+    "graph_eccentricity_sampled": 20,
+    "influence_ic": 47,
+    "graph_weighted_sssp": 52,
+    "weighted_closeness_sampled": 50,
+    "tokenizer_bpe_train_rounds": 20,
+    "tokenizer_bpe_encode": 26,
+    "betweenness_copurchase": 43,
+    "betweenness_tree": 156,
+    "load_copurchase": 43,
+    "edge_betweenness_copurchase": 46,
+    "connected_components_copurchase": 22,
+    "dedup_near_clusters": 32,
+    "dedup_cluster_keep_best": 36,
+    "embedding_dbscan": 86,
+    "community_girvan_newman_step": 108,
+    "community_girvan_newman_iter": 240,
+    "community_louvain_move": 43,
+    "community_louvain_rounds": 96,
+    "community_louvain_levels": 221,
+    "community_louvain_refined": 292,
 }
 
 
