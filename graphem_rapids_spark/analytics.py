@@ -5,10 +5,11 @@ Centralities (A1–A6): degree, PageRank and eigenvector are proper
 distributed iterative dataflows (each step = one edges⋈scores join +
 one groupBy-sum — the aggregateMessages pattern). Closeness runs
 batched multi-source BFS (source_id as a key column: all sources share
-each frontier shuffle). Betweenness/load keep the reference's own
-small-n driver fallback (networkx guarded to n<5000,
-``benchmarks/run_benchmarks.py:313-319``) — exact distributed Brandes
-is out of scope, as it is for the reference.
+each frontier shuffle). Betweenness, load and edge betweenness run
+sampled-source distributed Brandes over one shared backward pass
+(:func:`_brandes_dependencies`); the reference's own small-n driver
+fallback (networkx guarded to n<5000,
+``benchmarks/run_benchmarks.py:313-319``) is kept beside it.
 
 Statistics (A7–A10): graph stats, Spearman via mean-rank windows +
 built-in ``corr`` (Pearson on ranks — exactly scipy's definition),
@@ -22,7 +23,7 @@ from __future__ import annotations
 
 import math
 import warnings
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -40,11 +41,7 @@ from graphem_rapids_spark.checkpoint import (
 )
 from graphem_rapids_spark.graph.canon import symmetrize_edges, vertex_degrees
 
-# Brandes dependency accumulation quantum (power of two, so integer
-# deltas — e.g. on trees — stay bit-exact through the scaling): each
-# σ(v)/σ(w)·(1+δ) contribution is rounded to a multiple of 2⁻⁴⁰ and
-# summed as exact BIGINT, making results independent of summation
-# order (partitioning, engine, rerun).
+# Brandes dependency quantum 2⁻⁴⁰ (see _brandes_dependencies)
 DELTA_FP_SCALE = 1 << 40
 
 _HASH_BUCKETS = 1 << 30
@@ -1169,28 +1166,136 @@ def _bfs_levels(edge_tbl, level0, keys, max_depth, col=None, agg=None):
     return levels, level_counts
 
 
-def _sweep_sources(sources, col, init):
-    """Level 0 of a Brandes-family sweep: (s, id=s, ``col``=``init``)."""
-    return sources.select(F.col("id").alias("s"), F.col("id"), init.alias(col))
+def _brandes_term(one_plus_delta):
+    """Brandes' successor share σ_v/σ_w·(1+δ_w) — betweenness and edge
+    betweenness (:func:`load_sampled` splits by predecessor count)."""
+    return (
+        F.col("sigma").cast("double") / F.col("sigma_w").cast("double")
+    ) * one_plus_delta
 
 
-def _rescaled_dependency(
-    spark, acc, vertices, n_vertices, n_sources, normalized, halve
+def _successor_rows(sym, carry, term, cur, nxt, nxt_n):
+    """(s, id, w, term) — one row per shortest-path DAG edge id → w
+    from a level table ``cur`` (s, id, ``carry``) into the next
+    level's dependency table ``nxt`` (s, id, ``carry``, delta_fp) of
+    ``nxt_n`` rows. ``term`` maps the scaled (1+δ_w) to the
+    successor's share, reading ``carry`` and ``<carry>_w``; the share
+    is quantized to the 2⁻⁴⁰ fixed point of
+    :func:`_brandes_dependencies`. ``nxt`` is broadcast under the
+    forward sweep's size switch (its size was counted there, so no
+    extra job); the inner join against ``cur`` drops same-level
+    neighbors."""
+    from graphem_rapids_spark import session
+
+    carry_w = f"{carry}_w"
+    lvl = nxt.select(
+        "s",
+        F.col("id").alias("w"),
+        F.col(carry).alias(carry_w),
+        F.col("delta_fp").alias("dfp_w"),
+    )
+    up = (
+        sym.withColumnRenamed("src", "w")
+        .join(F.broadcast(lvl) if nxt_n <= session.BROADCAST_POSITIONS_MAX else lvl, "w")
+        .select("s", F.col("dst").alias("id"), "w", carry_w, "dfp_w")
+    )
+    scaled = (F.lit(DELTA_FP_SCALE) + F.col("dfp_w")).cast("double")
+    return cur.join(up, ["s", "id"]).select(
+        "s", "id", "w", F.round(term(scaled)).cast("decimal(38,0)").alias("term")
+    )
+
+
+def _brandes_dependencies(
+    edges, n_vertices, sources, max_depth, carry, init, agg, term
 ):
-    """Per-vertex value from the accumulated (id, delta_fp) parts:
-    2⁻⁴⁰ fixed-point sum, sampling rescale by n/k (networkx
-    convention), then ``normalized`` by (n-1)(n-2) or, unnormalized,
-    halved for undirected betweenness (``halve``; load does not
-    halve). Zero-filled over ``vertices`` (dense 0..n-1 when None)."""
+    """The one Brandes dependency accumulation, shared by betweenness
+    (``carry`` = sigma, summed path counts), load (npred, predecessor
+    counts) and edge betweenness.
+
+    Forward: the frontier sweep :func:`_bfs_levels` from every source
+    (level 0 = (s, id=s, ``carry``=``init``); ``sources`` defaults to
+    the dense ids 0..n-1), each deeper vertex carrying ``agg`` over
+    its predecessor messages. Backward, deepest level first (δ = 0
+    there): a level-d vertex's δ is the sum of its
+    :func:`_successor_rows` terms into level d+1 — one broadcast-join
+    + groupBy per level; each level's table is eager-checkpointed and
+    its forward table released at once. Level 0's own δ is never
+    computed: Brandes excludes the sources, and edge betweenness reads
+    only their ``carry``.
+
+    Exactness: every successor term is rounded to a multiple of 2⁻⁴⁰
+    (``DELTA_FP_SCALE``, a power of two, so integer deltas — e.g. on
+    trees — stay bit-exact) and summed as DECIMAL(38,0), so each δ is
+    an exact integer sum with no float accumulation order: results are
+    bit-identical across partitionings, engines and reruns (the
+    property the cross-engine oracle relies on). (1+δ_w) is an exact
+    DECIMAL sum converted once to double and the term is one IEEE
+    ratio, both converting decimal→double exactly as the oracle's
+    HUGEINT→DOUBLE does. DECIMAL, not BIGINT or double: a hub's δ
+    reaches n·2⁴⁰ ≈ 10²¹ at 10⁹ vertices and σ path counts pass 2⁵³
+    on dense graphs; both stay exact to 10³⁸. The rounding error is
+    ≤ 2⁻⁴¹ per term, far below the 1e-6 output rounding.
+
+    Returns ``(sym, tables, counts)``: the materialized symmetric edge
+    table, one table per BFS level — level 0 as swept, deeper levels
+    (s, id, ``carry``, delta_fp) — and the level sizes (``counts[0]``
+    is the number of sources). The caller releases ``sym`` and every
+    table."""
+    spark = edges.sparkSession
+    # row checkpoint (see pagerank): broadcast rounds are map-side
+    # joins and AQE does not reuse a checkpoint's partitioning anyway
+    sym = eager_materialize(symmetrize_edges(edges))
+    if sources is None:
+        sources = spark.range(n_vertices).select(F.col("id").cast("long"))
+    level0 = sources.select(F.col("id").alias("s"), F.col("id"), init.alias(carry))
+    levels, counts = _bfs_levels(sym, level0, ["s"], max_depth, carry, agg)
+    if len(levels) == 1:
+        return sym, levels, counts
+    zero = F.lit(0).cast("decimal(38,0)")
+    tables = [released_with(levels[-1].withColumn("delta_fp", zero), levels[-1:])]
+    for d in range(len(levels) - 2, 0, -1):
+        contrib = (
+            _successor_rows(sym, carry, term, levels[d], tables[0], counts[d + 1])
+            .groupBy("s", "id")
+            .agg(F.sum("term").alias("delta_fp"))
+        )
+        # LEFT join: BFS dead-ends (no successors) keep δ = 0 and still
+        # feed (1+0) upstream
+        delta = (
+            levels[d].join(contrib, ["s", "id"], "left")
+            .select("s", "id", carry, F.coalesce("delta_fp", zero).alias("delta_fp"))
+            .transform(eager_checkpoint)
+        )
+        release(levels[d])
+        tables.insert(0, delta)
+    return sym, levels[:1] + tables, counts
+
+
+def _rescaled_dependency(sym, tables, counts, vertices, n_vertices, normalized, halve):
+    """Per-vertex value from :func:`_brandes_dependencies`' tables:
+    the 2⁻⁴⁰ fixed-point δ sum over the levels strictly between the
+    sources (which Brandes excludes) and the deepest level (δ = 0),
+    sampling rescale by n/k (networkx convention), then ``normalized``
+    by (n-1)(n-2) or, unnormalized, halved for undirected betweenness
+    (``halve``; load does not halve). Zero-filled over ``vertices``
+    (dense 0..n-1 when None). ``sym`` and the unread tables are
+    released at once; ``unpersist()`` on the result frees the rest."""
+    inner = tables[1:-1]
+    for t in (sym, tables[0], tables[-1]):
+        release(t)
     if vertices is None:
-        vertices = spark.range(n_vertices).select(F.col("id").cast("long"))
+        vertices = sym.sparkSession.range(n_vertices).select(F.col("id").cast("long"))
     else:
         vertices = vertices.select(F.col("id").cast("long"))
-    if acc is None:
+    if not inner:
         return vertices.select("id", F.lit(0.0).alias("value"))
-    raw = acc.groupBy("id").agg(F.sum("delta_fp").alias("dfp_sum"))
+    raw = (
+        reduce(DataFrame.unionAll, [t.select("id", "delta_fp") for t in inner])
+        .groupBy("id")
+        .agg(F.sum("delta_fp").alias("dfp_sum"))
+    )
     dsum = F.col("dfp_sum").cast("double") / F.lit(float(DELTA_FP_SCALE))
-    scale = float(n_vertices) / float(n_sources)
+    scale = float(n_vertices) / float(counts[0])
     if normalized:
         denom = float(max((n_vertices - 1) * (n_vertices - 2), 1))
         val = dsum * scale / denom
@@ -1198,8 +1303,11 @@ def _rescaled_dependency(
         val = dsum * scale / 2.0
     else:
         val = dsum * scale
-    return vertices.join(raw, "id", "left").select(
-        "id", F.coalesce(val, F.lit(0.0)).alias("value")
+    return released_with(
+        vertices.join(raw, "id", "left").select(
+            "id", F.coalesce(val, F.lit(0.0)).alias("value")
+        ),
+        inner,
     )
 
 
@@ -1222,21 +1330,10 @@ def betweenness_sampled(
     broadcast-join + groupBy per level, the edge table never
     shuffles). Backward pass: dependency accumulation per level,
     ``delta(v) = Σ_w σ(v)/σ(w)·(1+delta(w))`` over successor edges —
-    again one broadcast-join + groupBy per level. Every per-level
-    table is ``localCheckpoint``-ed so plans stay flat.
-
-    Dependencies accumulate in **2⁻⁴⁰ fixed point**: each successor
-    contribution is quantized to a DECIMAL(38,0) integer before
-    summing (σ path counts are DECIMAL too), so the per-vertex sums
-    are exact integers with no float accumulation order — results are
-    bit-identical across partitionings, engines, and reruns (the
-    property the cross-engine oracle relies on), and stay exact to
-    10³⁸ where 64-bit (or 2⁵³-double) accumulators would overflow on
-    billion-vertex hubs or dense-graph path counts.
-    Quantization error is ≤ 2⁻⁴¹ per edge contribution — orders of
-    magnitude below the 1e-6 output rounding. On exact-integer
-    dependency graphs (trees: every σ ratio is 1) the fixed-point
-    path reproduces the float path bit-for-bit.
+    again one broadcast-join + groupBy per level, in exact 2⁻⁴⁰ fixed
+    point (:func:`_brandes_dependencies`). Every per-level table is
+    ``localCheckpoint``-ed so plans stay flat; ``unpersist()`` on the
+    result frees them.
 
     With all vertices as sources this is exact Brandes; with k sampled
     sources the result is rescaled by n/k (networkx ``_rescale``
@@ -1247,82 +1344,28 @@ def betweenness_sampled(
     vertex table for graphs with raw/sparse ids (e.g. part keys) —
     otherwise high-id vertices silently fall outside ``range(n)``.
     """
-    spark = edges.sparkSession
-    # row checkpoint (see pagerank): broadcast rounds are map-side
-    # joins and AQE does not reuse a checkpoint's partitioning anyway
-    sym = eager_materialize(symmetrize_edges(edges))
-    if sources is None:
-        sources = spark.range(n_vertices).select(F.col("id").cast("long"))
-    from graphem_rapids_spark import session
-
-    broadcast_max = session.BROADCAST_POSITIONS_MAX
-    # sigma as DECIMAL(38,0): path counts are exact integers up to
-    # 10³⁸ (a double would silently lose exactness past 2⁵³ on dense
-    # graphs, reintroducing summation-order drift)
-    levels, level_counts = _bfs_levels(
-        sym, _sweep_sources(sources, "sigma", F.lit(1).cast("decimal(38,0)")),
-        ["s"], max_depth, "sigma", F.sum("sigma"),
+    sym, tables, counts = _brandes_dependencies(
+        edges, n_vertices, sources, max_depth,
+        "sigma", F.lit(1).cast("decimal(38,0)"), F.sum("sigma"), _brandes_term,
     )
-    n_sources = level_counts[0]
-
-    # backward accumulation, deepest level has delta = 0.
-    # delta_fp as DECIMAL(38,0): a hub vertex's delta can reach
-    # n·2⁴⁰ ≈ 10²¹ at 10⁹ vertices — far past BIGINT — while the
-    # oracle sums HUGEINT; DECIMAL keeps both engines exact to 10³⁸.
-    acc = None
-    delta_next = levels[-1].withColumn("delta_fp", F.lit(0).cast("decimal(38,0)"))
-    for d in range(len(levels) - 2, -1, -1):
-        # level sizes were counted in the forward pass — same
-        # broadcast↔shuffle decision, no extra jobs
-        dn = delta_next.select(
-            "s", "id", F.col("sigma").alias("sigma_w"), F.col("delta_fp").alias("dfp_w")
-        )
-        up = (
-            sym.withColumnRenamed("src", "id")
-            .join(F.broadcast(dn) if level_counts[d + 1] <= broadcast_max else dn, "id")
-            .select("s", F.col("dst").alias("id"), "sigma_w", "dfp_w")
-        )
-        cur = levels[d]
-        # σ(v)/σ(w)·(1+delta_w) in 2⁻⁴⁰ fixed point: (FP + dfp_w) is an
-        # exact DECIMAL sum converted once to double, the ratio·scale
-        # product is one IEEE multiply, and round→DECIMAL makes the
-        # groupBy sum order-free (exact integer arithmetic; both the
-        # ratio operands and the scaled delta convert decimal→double
-        # identically to the oracle's HUGEINT→DOUBLE)
-        contrib = (
-            cur.join(up, ["s", "id"])
-            .groupBy("s", "id")
-            .agg(
-                F.sum(
-                    F.round(
-                        (F.col("sigma").cast("double") / F.col("sigma_w").cast("double"))
-                        * (F.lit(DELTA_FP_SCALE) + F.col("dfp_w")).cast("double")
-                    ).cast("decimal(38,0)")
-                ).alias("delta_fp")
-            )
-        )
-        # LEFT join: BFS dead-ends at this level (no successors below)
-        # must stay with delta=0 — they still feed (1+0) upstream
-        delta_next = (
-            cur.join(contrib, ["s", "id"], "left")
-            .select(
-                "s",
-                "id",
-                "sigma",
-                F.coalesce("delta_fp", F.lit(0).cast("decimal(38,0)")).alias(
-                    "delta_fp"
-                ),
-            )
-            .transform(eager_checkpoint)
-        )
-        if d > 0:  # level 0 is the sources themselves — excluded by Brandes
-            part = delta_next.select("id", "delta_fp")
-            acc = part if acc is None else acc.unionAll(part)
-        # non-predecessor joins (same-level neighbors) were filtered by
-        # the inner join against `cur` (exactly the level-d vertices)
-    sym.unpersist()
     return _rescaled_dependency(
-        spark, acc, vertices, n_vertices, n_sources, normalized, halve=True
+        sym, tables, counts, vertices, n_vertices, normalized, halve=True
+    )
+
+
+def _networkx_centrality(edges: DataFrame, n_vertices: int, measure: str, what: str) -> DataFrame:
+    """(id, value) of the networkx centrality ``measure`` over the
+    collected edge list — driver-side, guarded to n<5000 like the
+    reference."""
+    import networkx as nx
+
+    if n_vertices >= 5000:
+        raise ValueError(f"{what}; guarded to n<5000 like the reference")
+    G = nx.Graph()
+    G.add_nodes_from(range(n_vertices))
+    G.add_edges_from((r.src, r.dst) for r in edges.collect())
+    return edges.sparkSession.createDataFrame(
+        [(int(i), float(v)) for i, v in getattr(nx, measure)(G).items()], "id long, value double"
     )
 
 
@@ -1330,33 +1373,15 @@ def betweenness_centrality(edges: DataFrame, n_vertices: int) -> DataFrame:
     """Driver-side networkx exact Brandes — the reference itself guards
     betweenness to n<5000 and runs networkx on CPU
     (``benchmarks/run_benchmarks.py:313-319``); same disposition here."""
-    import networkx as nx
-
-    if n_vertices >= 5000:
-        raise ValueError("betweenness is exact/driver-side; guarded to n<5000 like the reference")
-    spark = edges.sparkSession
-    G = nx.Graph()
-    G.add_nodes_from(range(n_vertices))
-    G.add_edges_from((r.src, r.dst) for r in edges.collect())
-    bc = nx.betweenness_centrality(G)
-    return spark.createDataFrame(
-        [(int(i), float(v)) for i, v in bc.items()], "id long, value double"
+    return _networkx_centrality(
+        edges, n_vertices, "betweenness_centrality", "betweenness is exact/driver-side"
     )
 
 
 def load_centrality(edges: DataFrame, n_vertices: int) -> DataFrame:
     """Driver-side networkx (reference ``benchmark.py:105-108``)."""
-    import networkx as nx
-
-    if n_vertices >= 5000:
-        raise ValueError("load centrality is driver-side; guarded to n<5000 like the reference")
-    spark = edges.sparkSession
-    G = nx.Graph()
-    G.add_nodes_from(range(n_vertices))
-    G.add_edges_from((r.src, r.dst) for r in edges.collect())
-    lc = nx.load_centrality(G)
-    return spark.createDataFrame(
-        [(int(i), float(v)) for i, v in lc.items()], "id long, value double"
+    return _networkx_centrality(
+        edges, n_vertices, "load_centrality", "load centrality is driver-side"
     )
 
 
@@ -1604,20 +1629,22 @@ def hits(
     )
     a = None
     for _ in range(max_iter):
-        a = (
+        a_new = (
             e.join(h.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("score").alias("score"))
             .transform(eager_checkpoint)
         )
         h_new = (
-            e.join(a.withColumnRenamed("id", "dst"), "dst")
+            e.join(a_new.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("score").alias("score"))
             .transform(eager_checkpoint)
         )
-        h.unpersist()
-        h = h_new
+        release(h)
+        if a is not None:
+            release(a)
+        h, a = h_new, a_new
     e.unpersist()
 
     def _norm(df, role):
@@ -1628,7 +1655,7 @@ def hits(
             (F.col("score") / F.lit(mx)).alias("score"),
         )
 
-    return _norm(h, "hub").unionAll(_norm(a, "authority"))
+    return released_with(_norm(h, "hub").unionAll(_norm(a, "authority")), [h, a])
 
 
 def random_walks(
@@ -2232,10 +2259,8 @@ def load_sampled(
     pass therefore carries ``npred`` (number of level-d neighbors,
     the free count(*) of the same predecessor-message groupBy Brandes
     sums sigma over) and needs no path counts at all; the backward
-    pass is the same per-level broadcast-join + groupBy with the
-    ratio swapped. Contributions accumulate in the same 2^-40 fixed
-    point (DECIMAL(38,0) sums — exact integers, no float summation
-    order, bit-identical across engines/partitionings/reruns).
+    pass is the same one (:func:`_brandes_dependencies`) with the
+    ratio swapped.
 
     networkx conventions: contributions never flow INTO a source
     (level 0 is excluded from the accumulation, matching nx's
@@ -2243,66 +2268,15 @@ def load_sampled(
     ``normalized`` divides by (n-1)(n-2) — note NO extra /2 for
     undirected graphs, unlike betweenness (nx.load_centrality does
     not halve)."""
-    spark = edges.sparkSession
-    sym = eager_materialize(symmetrize_edges(edges))
-    if sources is None:
-        sources = spark.range(n_vertices).select(F.col("id").cast("long"))
-    from graphem_rapids_spark import session
-
-    broadcast_max = session.BROADCAST_POSITIONS_MAX
     # npred of a source is never read (level 0 never plays w in the
     # backward pass) — 1 is a placeholder
-    levels, level_counts = _bfs_levels(
-        sym, _sweep_sources(sources, "npred", F.lit(1).cast("long")),
-        ["s"], max_depth, "npred", F.count("*"),
+    sym, tables, counts = _brandes_dependencies(
+        edges, n_vertices, sources, max_depth,
+        "npred", F.lit(1).cast("long"), F.count("*"),
+        lambda one_plus_delta: one_plus_delta / F.col("npred_w").cast("double"),
     )
-    n_sources = level_counts[0]
-
-    acc = None
-    delta_next = levels[-1].withColumn("delta_fp", F.lit(0).cast("decimal(38,0)"))
-    for d in range(len(levels) - 2, -1, -1):
-        dn = delta_next.select(
-            "s", "id", F.col("npred").alias("npred_w"), F.col("delta_fp").alias("dfp_w")
-        )
-        up = (
-            sym.withColumnRenamed("src", "id")
-            .join(F.broadcast(dn) if level_counts[d + 1] <= broadcast_max else dn, "id")
-            .select("s", F.col("dst").alias("id"), "npred_w", "dfp_w")
-        )
-        cur = levels[d]
-        # (1 + delta_w)/npred_w in 2^-40 fixed point: the numerator is
-        # an exact DECIMAL sum converted once to double, one IEEE
-        # divide, round -> DECIMAL makes the groupBy sum order-free
-        contrib = (
-            cur.join(up, ["s", "id"])
-            .groupBy("s", "id")
-            .agg(
-                F.sum(
-                    F.round(
-                        (F.lit(DELTA_FP_SCALE) + F.col("dfp_w")).cast("double")
-                        / F.col("npred_w").cast("double")
-                    ).cast("decimal(38,0)")
-                ).alias("delta_fp")
-            )
-        )
-        delta_next = (
-            cur.join(contrib, ["s", "id"], "left")
-            .select(
-                "s",
-                "id",
-                "npred",
-                F.coalesce("delta_fp", F.lit(0).cast("decimal(38,0)")).alias(
-                    "delta_fp"
-                ),
-            )
-            .transform(eager_checkpoint)
-        )
-        if d > 0:
-            part = delta_next.select("id", "delta_fp")
-            acc = part if acc is None else acc.unionAll(part)
-    sym.unpersist()
     return _rescaled_dependency(
-        spark, acc, vertices, n_vertices, n_sources, normalized, halve=False
+        sym, tables, counts, vertices, n_vertices, normalized, halve=False
     )
 
 
@@ -2539,14 +2513,15 @@ def _louvain_refine(ew_, labels_, max_rounds: int = LOUVAIN_REFINE_ROUNDS):
         .filter(F.col("_a") == F.col("_b"))
         .select("src", "dst")
     )
-    ref = connected_components(
+    cc = connected_components(
         intra,
         0,
         max_iter=max_rounds,
         algorithm="minlabel",
         vertices=labels_,
         require_convergence=True,
-    ).withColumnRenamed("component", "label")
+    )
+    ref = released_with(cc.withColumnRenamed("component", "label"), [cc])
     n_before = labels_.select("label").distinct().count()
     n_after = ref.select("label").distinct().count()
     return ref, n_after - n_before
@@ -2602,6 +2577,7 @@ def louvain(
     )
     m_w = int(ew.agg(F.sum("w")).collect()[0][0] or 0)
     if m_w == 0:
+        release(ew)
         empty = spark.createDataFrame([], "id long, community long")
         return empty, []
     verts = (
@@ -2688,15 +2664,19 @@ def louvain(
     # moves. No-op (and cheap) for the default singleton init.
     n_split0 = 0
     if refine:
+        init = labels
         labels, n_split0 = _louvain_refine(ew, labels)
+        release(init)
         mapping = labels.select("id", F.col("label").alias("community"))
     # level 0 = the (refined) init partition, after a virtual coarsen
     ew0, sw0 = coarsen(ew, selfw, labels)
+    release(ew)
     qn, nc = q_of(ew0, sw0, m_w)
     q0 = (0, nc, round(qn / (4.0 * m_w * m_w), 6))
     trajectory.append(q0 + (n_split0,) if refine else q0)
     cur_ew, cur_self = ew0, sw0
     mapping = mapping.transform(eager_checkpoint)
+    release(labels)
     for level in range(1, levels + 1):
         coarse_verts = (
             cur_ew.select(F.col("src").alias("id"))
@@ -2720,11 +2700,14 @@ def louvain(
             prev_lab = lab
             lab, n_split = _louvain_refine(cur_ew, lab)
             release(prev_lab)
+        # superseded once the coarse graph and mapping are rebuilt
+        done = [cur_ew, cur_self, lab, mapping]
         cur_ew, cur_self = coarsen(cur_ew, cur_self, lab)
         # sever small coarse graphs to local relations (see
         # LOUVAIN_SEVER_MAX) — values unchanged, plans broadcast-only
         n_coarse = cur_ew.count()
         if n_coarse <= LOUVAIN_SEVER_MAX:
+            done += [cur_ew, cur_self]
             cur_ew = spark.createDataFrame(
                 cur_ew.collect() or [], "src long, dst long, w long"
             )
@@ -2742,10 +2725,12 @@ def louvain(
             .select("id", F.col("_new").alias("community"))
             .transform(eager_checkpoint)
         )
+        for df in done:
+            release(df)
         qn, nc = q_of(cur_ew, cur_self, m_w)
         row = (level, nc, round(qn / (4.0 * m_w * m_w), 6))
         trajectory.append(row + (n_split,) if refine else row)
-    return mapping, trajectory
+    return released_with(mapping, [mapping, cur_ew, cur_self]), trajectory
 
 
 def edge_betweenness_sampled(
@@ -2760,91 +2745,43 @@ def edge_betweenness_sampled(
     the edge analog of :func:`betweenness_sampled`, riding the same
     forward/backward Brandes dataflow: the per-edge contribution of
     source s to DAG edge (v → w) is exactly the pre-aggregation term
-    σ_v/σ_w·(1+δ_w) the vertex pass sums — so the edge scores fall
-    out of the SAME per-level broadcast-join, accumulated per
-    canonical (least, greatest) pair instead of per vertex. Same
-    2⁻⁴⁰ fixed-point DECIMAL(38,0) exactness (order-free sums,
-    bit-identical across engines/partitionings). networkx
-    conventions: sampled sources rescale by n/k; undirected halves
-    (each unordered (s,t) pair drives the edge twice);
-    ``normalized`` divides by n(n-1)/2 (nx edge normalization).
-    Returns (src, dst, value) over the canonical edge table
-    (zero-filled)."""
-    spark = edges.sparkSession
-    sym = eager_materialize(symmetrize_edges(edges))
-    if sources is None:
-        sources = spark.range(n_vertices).select(F.col("id").cast("long"))
-    from graphem_rapids_spark import session
-
-    broadcast_max = session.BROADCAST_POSITIONS_MAX
-    levels, level_counts = _bfs_levels(
-        sym, _sweep_sources(sources, "sigma", F.lit(1).cast("decimal(38,0)")),
-        ["s"], max_depth, "sigma", F.sum("sigma"),
+    σ_v/σ_w·(1+δ_w) the vertex pass sums — so the edge scores are the
+    SAME :func:`_successor_rows`, re-derived from the retained
+    per-level dependency tables and accumulated per canonical (least,
+    greatest) pair instead of per vertex. networkx conventions:
+    sampled sources rescale by n/k; undirected halves (each unordered
+    (s,t) pair drives the edge twice); ``normalized`` divides by
+    n(n-1)/2 (nx edge normalization). Returns (src, dst, value) over
+    the canonical edge table (zero-filled); ``unpersist()`` on it
+    frees every checkpoint the call made."""
+    sym, tables, counts = _brandes_dependencies(
+        edges, n_vertices, sources, max_depth,
+        "sigma", F.lit(1).cast("decimal(38,0)"), F.sum("sigma"), _brandes_term,
     )
-    n_sources = level_counts[0]
-
-    edge_acc = None
-    delta_next = levels[-1].withColumn(
-        "delta_fp", F.lit(0).cast("decimal(38,0)")
-    )
-    for d in range(len(levels) - 2, -1, -1):
-        dn = delta_next.select(
-            "s",
-            F.col("id").alias("w"),
-            F.col("sigma").alias("sigma_w"),
-            F.col("delta_fp").alias("dfp_w"),
-        )
-        up = (
-            sym.withColumnRenamed("src", "w")
-            .join(
-                F.broadcast(dn) if level_counts[d + 1] <= broadcast_max else dn,
-                "w",
-            )
-            .select("s", F.col("dst").alias("id"), "w", "sigma_w", "dfp_w")
-        )
-        cur = levels[d]
-        term = F.round(
-            (F.col("sigma").cast("double") / F.col("sigma_w").cast("double"))
-            * (F.lit(DELTA_FP_SCALE) + F.col("dfp_w")).cast("double")
-        ).cast("decimal(38,0)")
-        tagged = cur.join(up, ["s", "id"]).transform(eager_checkpoint)
-        epart = tagged.select(
-            F.least(F.col("id"), F.col("w")).alias("ea"),
-            F.greatest(F.col("id"), F.col("w")).alias("eb"),
-            term.alias("e_fp"),
-        )
-        edge_acc = epart if edge_acc is None else edge_acc.unionAll(epart)
-        contrib = (
-            tagged.groupBy("s", "id").agg(F.sum(term).alias("delta_fp"))
-        )
-        delta_next = (
-            cur.join(contrib, ["s", "id"], "left")
-            .select(
-                "s",
-                "id",
-                "sigma",
-                F.coalesce("delta_fp", F.lit(0).cast("decimal(38,0)")).alias(
-                    "delta_fp"
-                ),
-            )
-            .transform(eager_checkpoint)
-        )
-    sym.unpersist()
     canon = edges.select(
         F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
     ).distinct()
-    if edge_acc is None:
-        return canon.select("src", "dst", F.lit(0.0).alias("value"))
-    raw = edge_acc.groupBy("ea", "eb").agg(F.sum("e_fp").alias("efp_sum"))
-    esum = F.col("efp_sum").cast("double") / F.lit(float(DELTA_FP_SCALE))
-    scale = float(n_vertices) / float(n_sources)
-    val = esum * scale / 2.0  # undirected: each (s,t) pair drives twice
-    if normalized:
-        val = val / float(max(n_vertices * (n_vertices - 1) / 2.0, 1.0))
-    return canon.join(
-        raw,
-        (canon.src == raw.ea) & (canon.dst == raw.eb),
-        "left",
-    ).select(
-        "src", "dst", F.coalesce(val, F.lit(0.0)).alias("value")
+    rows = list(
+        map(partial(_successor_rows, sym, "sigma", _brandes_term), tables, tables[1:], counts[1:])
     )
+    if not rows:
+        out = canon.select("src", "dst", F.lit(0.0).alias("value"))
+    else:
+        raw = (
+            reduce(DataFrame.unionAll, rows)
+            .groupBy(F.least("id", "w").alias("ea"), F.greatest("id", "w").alias("eb"))
+            .agg(F.sum("term").alias("efp_sum"))
+        )
+        esum = F.col("efp_sum").cast("double") / F.lit(float(DELTA_FP_SCALE))
+        scale = float(n_vertices) / float(counts[0])
+        val = esum * scale / 2.0  # undirected: each (s,t) pair drives twice
+        if normalized:
+            val = val / float(max(n_vertices * (n_vertices - 1) / 2.0, 1.0))
+        out = canon.join(
+            raw,
+            (canon.src == raw.ea) & (canon.dst == raw.eb),
+            "left",
+        ).select(
+            "src", "dst", F.coalesce(val, F.lit(0.0)).alias("value")
+        )
+    return released_with(out, [sym, *tables])

@@ -40,8 +40,13 @@ checkpoint, convergence action and predecessor release from one
 place. The accumulate-every-level frontier loop (BFS, the Brandes
 forward pass, the IC cascade) is the one sweep
 ``analytics._bfs_levels``; its union frees every level through
-:func:`released_with`. :func:`iter_materialize` stays the generation
-helper for deep self-join kernels that need honest cached stats.
+:func:`released_with`. The Brandes backward pass (betweenness, load,
+edge betweenness) is the one deepest-first loop
+``analytics._brandes_dependencies``: it releases each forward level
+once that level's dependency table is checkpointed, and each kernel's
+result frees the rest through :func:`released_with`.
+:func:`iter_materialize` stays the generation helper for deep
+self-join kernels that need honest cached stats.
 """
 
 from __future__ import annotations

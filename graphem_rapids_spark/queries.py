@@ -5793,6 +5793,7 @@ def community_girvan_newman_step(spark, sf_dir):
         .select("src", "dst")
         .transform(_eager_ckpt)
     )
+    release(eb)
     remaining = e.join(cut, ["src", "dst"], "left_anti").transform(_eager_ckpt)
     before = _gn_components(verts, e)
     after = _gn_components(verts, remaining)
@@ -5953,6 +5954,7 @@ def community_girvan_newman_iter(spark, sf_dir):
             .limit(_GN_CUT)
             .select("src", "dst")
         )
+        release(eb)
         return cur.join(cut, ["src", "dst"], "left_anti")
 
     def record(cur, r):
@@ -15009,7 +15011,6 @@ ORDER BY hour, event_type
 
 
 _KL_BUCKETS = 4096
-_KL_SEED_COL = "w"
 
 
 def doc_source_kl(spark, sf_dir):
@@ -19526,9 +19527,10 @@ def community_louvain_levels(spark, sf_dir):
     from graphem_rapids_spark.analytics import louvain
 
     e = copurchase_edges(spark, sf_dir)
-    _labels, traj = louvain(
+    labels, traj = louvain(
         e, levels=_LOUVAIN_LEVELS, move_rounds=_LOUVAIN_LEVEL_MOVES
     )
+    release(labels)
     return spark.createDataFrame(
         traj, "level long, n_communities long, modularity double"
     )
@@ -19554,12 +19556,13 @@ def community_louvain_refined(spark, sf_dir):
     from graphem_rapids_spark.analytics import louvain
 
     e = copurchase_edges(spark, sf_dir)
-    _labels, traj = louvain(
+    labels, traj = louvain(
         e,
         levels=_LOUVAIN_LEVELS,
         move_rounds=_LOUVAIN_LEVEL_MOVES,
         refine=True,
     )
+    release(labels)
     return spark.createDataFrame(
         traj,
         "level long, n_communities long, modularity double, n_split long",

@@ -6,11 +6,17 @@ self-joining state's plan statistics flat across rounds."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from graphem_rapids_spark.analytics import (
+    betweenness_sampled,
     closeness_centrality,
     connected_components,
+    edge_betweenness_sampled,
+    hits,
     label_propagation,
+    load_sampled,
+    louvain,
 )
 from graphem_rapids_spark.checkpoint import eager_checkpoint, iterate
 from graphem_rapids_spark.influence import estimated_influence
@@ -65,6 +71,25 @@ def test_converging_kernel_leaks_no_blocks_once_released(spark):
         spark,
         lambda: _collect_and_release(connected_components(edges, 10, algorithm="minlabel")),
     )
+
+
+RELEASED_KERNELS = {
+    "betweenness_sampled": lambda e: betweenness_sampled(e, 6),
+    "load_sampled": lambda e: load_sampled(e, 6),
+    "edge_betweenness_sampled": lambda e: edge_betweenness_sampled(e, 6),
+    "hits": hits,
+    "louvain": lambda e: louvain(e)[0],
+    "louvain_refine": lambda e: louvain(e, refine=True)[0],
+}
+
+
+@pytest.mark.parametrize("name", sorted(RELEASED_KERNELS))
+def test_kernel_result_frees_its_checkpoints(spark, name):
+    """The Brandes-family, HITS and Louvain results are bound to every
+    checkpoint their call left live, so releasing the result frees
+    them all."""
+    edges = spark.createDataFrame(TWO_TRIANGLES_LINKED, "src long, dst long")
+    _assert_no_leak(spark, lambda: _collect_and_release(RELEASED_KERNELS[name](edges)))
 
 
 def test_iterate_severs_self_join_stats(spark):

@@ -63,20 +63,20 @@ JOB_BUDGETS = {
     "weighted_closeness_sampled": 50,
     "tokenizer_bpe_train_rounds": 20,
     "tokenizer_bpe_encode": 26,
-    "betweenness_copurchase": 43,
-    "betweenness_tree": 156,
-    "load_copurchase": 43,
-    "edge_betweenness_copurchase": 46,
+    "betweenness_copurchase": 36,
+    "betweenness_tree": 151,
+    "load_copurchase": 36,
+    "edge_betweenness_copurchase": 42,
     "connected_components_copurchase": 22,
     "dedup_near_clusters": 32,
     "dedup_cluster_keep_best": 36,
     "embedding_dbscan": 86,
-    "community_girvan_newman_step": 108,
-    "community_girvan_newman_iter": 240,
+    "community_girvan_newman_step": 106,
+    "community_girvan_newman_iter": 229,
     "community_louvain_move": 43,
     "community_louvain_rounds": 96,
     "community_louvain_levels": 221,
-    "community_louvain_refined": 292,
+    "community_louvain_refined": 290,
 }
 
 
