@@ -32,7 +32,6 @@ from graphem_rapids_spark.checkpoint import (
     checkpoint_count,
     eager_checkpoint,
     eager_materialize,
-    iter_materialize,
     iterate,
     lazy_checkpoint,
     release,
@@ -40,6 +39,7 @@ from graphem_rapids_spark.checkpoint import (
     row_count,
 )
 from graphem_rapids_spark.graph.canon import symmetrize_edges, vertex_degrees
+from graphem_rapids_spark.session import scoped_shuffle_partitions
 
 # Brandes dependency quantum 2⁻⁴⁰ (see _brandes_dependencies)
 DELTA_FP_SCALE = 1 << 40
@@ -797,11 +797,9 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
     # size shuffle partitions to the wedge volume: the triangle join
     # streams Σ out-deg² candidate rows — at 32 partitions (sized for
     # sf0.1) a 10× graph spills every round (sf1 smoke: 516 s cold).
-    # ~150k edges per partition keeps sort buffers in memory; restored
-    # in the finally below. AQE can only coalesce DOWN, so scaling up
+    # ~150k edges per partition keeps sort buffers in memory; scoped
+    # to the peel below. AQE can only coalesce DOWN, so scaling up
     # must happen here.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    want_parts = max(int(old_parts), min(2048, n_cur // 150_000))
     # skew probe: one tiny aggregate over the degree table. Hub factor
     # max/avg ≥ TRIANGLE_SKEW_RATIO → degree-oriented enumeration.
     dstats = (
@@ -813,11 +811,8 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
         .first()
     )
     skewed = bool(dstats and dstats["av"] and dstats["mx"] / dstats["av"] >= TRIANGLE_SKEW_RATIO)
-    spark.conf.set("spark.sql.shuffle.partitions", str(want_parts))
-    try:
+    with scoped_shuffle_partitions(spark, lambda p: max(p, min(2048, n_cur // 150_000))):
         return _ktruss_peel(cur, n_cur, k, max_rounds, skewed)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _ktruss_peel(cur, n_cur, k, max_rounds, skewed):
@@ -1841,15 +1836,13 @@ def minimum_spanning_forest(
     geometrically) — the O(log² n) total-work discipline of the
     star-contraction CC kernel, plus the MST pick.
 
-    Iteration discipline (measured, not theoretical): every generation
-    is materialized with ``localCheckpoint`` (truncates lineage — a
-    lazy doubling chain is a 2^jumps-leaf plan) **and** ``persist`` +
-    ``count`` (resets Catalyst's sizeInBytes estimate — ``visitJoin``
-    multiplies both sides' estimates, the product survives a bare
-    localCheckpoint via the LogicalRDD's inherited stats, and after
-    ~18 self-join generations the estimate is a million-bit BigInt
-    whose multiplication dominates planning: the 10-row repro went
-    0.2 s → 50 s per step; SCALE.md §iteration-discipline)."""
+    Iteration discipline: every generation is one stats-severed
+    :func:`eager_checkpoint` — it truncates lineage (a lazy doubling
+    chain is a 2^jumps-leaf plan) and drops the inherited size
+    estimate, which ``visitJoin`` would otherwise multiply per
+    self-join generation (SCALE.md §"Deep self-join chains") — and
+    the superseded generation is released. The returned edge set is
+    bound to the per-round picks it reads."""
     dir_ = wedges.select(
         F.col("src").alias("esrc"), F.col("dst").alias("edst"),
         F.col("weight").cast("long").alias("w"),
@@ -1862,13 +1855,13 @@ def minimum_spanning_forest(
         .persist()
     )
 
-    _mat = iter_materialize
-    comp = _mat(
+    comp = eager_checkpoint(
         dire.select(F.col("u").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("lbl"))
     )
     picked = None
+    sels = []
     for _r in range(rounds):
         lab = comp.select(F.col("id").alias("_i"), F.col("lbl").alias("_l"))
         ce = (
@@ -1878,7 +1871,7 @@ def minimum_spanning_forest(
             .select("esrc", "edst", "w", "cu", F.col("_l").alias("cv"))
             .filter(F.col("cu") != F.col("cv"))
         )
-        sel = _mat(
+        sel = eager_checkpoint(
             ce.groupBy("cu")
             .agg(F.min(F.struct("w", "esrc", "edst", "cv")).alias("m"))
             .select(
@@ -1889,6 +1882,7 @@ def minimum_spanning_forest(
                 F.col("m.cv").alias("cv"),
             )
         )
+        sels.append(sel)
         picks = sel.select("esrc", "edst", "w")
         picked = picks if picked is None else picked.unionAll(picks)
         mu = sel.select(F.col("cu").alias("mc"), F.col("cv").alias("mt"))
@@ -1903,26 +1897,39 @@ def minimum_spanning_forest(
                 .alias("par"),
             )
         )
-        # materialize EVERY generation (lineage + stats reset — see
-        # docstring): a doubling references the pointer table twice
-        p = _mat(p)
+        # checkpoint EVERY generation (see docstring): a doubling
+        # references the pointer table twice
+        p = eager_checkpoint(p)
         for _j in range(jumps):
             pr = p.select(F.col("c").alias("c2"), F.col("par").alias("par2"))
-            p = _mat(
+            nxt = eager_checkpoint(
                 p.join(pr, p["par"] == pr["c2"], "left").select(
                     "c", F.coalesce("par2", "par").alias("par")
-                ),
-                p,
+                )
             )
-        comp = _mat(
+            release(p)
+            p = nxt
+        nxt = eager_checkpoint(
             comp.join(p, comp["lbl"] == p["c"], "left").select(
                 "id", F.coalesce("par", "lbl").alias("lbl")
-            ),
-            comp,
+            )
         )
-        p.unpersist()
+        release(comp)
+        release(p)
+        comp = nxt
     dire.unpersist()
-    return comp, picked.distinct()
+    return comp, released_with(picked.distinct(), sels)
+
+
+def _accumulate(acc: DataFrame | None, win: DataFrame) -> DataFrame:
+    """``acc ∪ win`` as one checkpoint, releasing ``acc``; round 1's
+    winners (``acc`` None) ARE the accumulated set."""
+    if acc is None:
+        return win
+    grown = eager_checkpoint(acc.unionAll(win))
+    release(acc)
+    return grown
+
 
 def maximal_independent_set(
     edges: DataFrame,
@@ -1945,9 +1952,9 @@ def maximal_independent_set(
 
     Physical shape: per round one neighbor-min aggregate over the
     surviving edge set + two semi-joins to retire vertices; the edge
-    set shrinks geometrically. Each generation is materialized with
-    the checkpoint+persist discipline (SCALE.md
-    §iteration-discipline)."""
+    set shrinks geometrically. Each generation is one stats-severed
+    checkpoint and the superseded one is released (SCALE.md §"Deep
+    self-join chains"); the results hold only their own blocks."""
     from graphem_rapids_spark.functions import MIX_M, mix_uniform
 
     pri = (
@@ -1956,12 +1963,12 @@ def maximal_independent_set(
         * F.lit(2_147_483_648)
         + F.col("id")
     )
-    und = iter_materialize(
+    und = eager_checkpoint(
         edges.select(F.explode(F.array("src", "dst")).alias("id"))
         .distinct()
         .select("id", pri.alias("p"))
     )
-    esym = iter_materialize(
+    esym = eager_checkpoint(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionAll(
             edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
         )
@@ -1979,30 +1986,32 @@ def maximal_independent_set(
             .filter(F.col("nbr_min").isNull() | (F.col("p") < F.col("nbr_min")))
             .select("id")
         )
-        win = iter_materialize(win)
-        mis = win if mis is None else iter_materialize(mis.unionAll(win), mis)
-        retired = iter_materialize(
+        win = eager_checkpoint(win)
+        mis = _accumulate(mis, win)
+        retired = eager_checkpoint(
             win.unionAll(
                 esym.join(win.select(F.col("id").alias("_w")), esym["u"] == F.col("_w"))
                 .select(F.col("v").alias("id"))
             ).distinct()
         )
-        und = iter_materialize(
-            und.join(retired, "id", "left_anti"), und
-        )
-        esym = iter_materialize(
+        if win is not mis:
+            release(win)
+        left, n_left = checkpoint_count(und.join(retired, "id", "left_anti"))
+        release(und)
+        release(retired)
+        und = left
+        if n_left == 0:
+            break
+        kept = eager_checkpoint(
             esym.join(und.select(F.col("id").alias("_ku")), esym["u"] == F.col("_ku"))
             .select("u", "v")
             .join(und.select(F.col("id").alias("_kv")), F.col("v") == F.col("_kv"))
-            .select("u", "v"),
-            esym,
+            .select("u", "v")
         )
-        retired.unpersist()
-        if win is not mis:  # round 1's winners ARE the MIS so far
-            win.unpersist()
-        if und.count() == 0:
-            break
-    return mis, und.select("id")
+        release(esym)
+        esym = kept
+    release(esym)
+    return mis, released_with(und.select("id"), [und])
 
 def maximal_matching(
     edges: DataFrame,
@@ -2022,9 +2031,10 @@ def maximal_matching(
 
     Physical shape: per round one per-vertex min aggregate over the
     surviving edges + two semi-joins to retire matched endpoints; the
-    live edge set shrinks geometrically. Generations are materialized
-    with the checkpoint+persist discipline (SCALE.md
-    §iteration-discipline)."""
+    live edge set shrinks geometrically. Each generation is one
+    stats-severed checkpoint and the superseded one is released
+    (SCALE.md §"Deep self-join chains"); the result holds only its
+    own blocks."""
     from graphem_rapids_spark.functions import MIX_M, mix_uniform
 
     h = (
@@ -2033,7 +2043,7 @@ def maximal_matching(
             * F.lit(float(MIX_M))
         ).cast("long")
     )
-    live = iter_materialize(
+    live = eager_checkpoint(
         edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
         .distinct()
         .select("s", "d", h.alias("h"))
@@ -2054,7 +2064,7 @@ def maximal_matching(
         b2 = best.select(
             F.col("v").alias("_v2"), F.col("bs").alias("_s2"), F.col("bd").alias("_d2")
         )
-        win = iter_materialize(
+        win = eager_checkpoint(
             live.join(
                 b1,
                 (F.col("_v1") == F.col("s"))
@@ -2069,22 +2079,22 @@ def maximal_matching(
             )
             .select("s", "d")
         )
-        matched = (
-            win if matched is None else iter_materialize(matched.unionAll(win), matched)
-        )
+        matched = _accumulate(matched, win)
         used = win.select(F.col("s").alias("u")).unionAll(
             win.select(F.col("d").alias("u"))
         )
-        live = iter_materialize(
+        left, n_left = checkpoint_count(
             live.join(used, live["s"] == used["u"], "left_anti")
-            .join(used, F.col("d") == used["u"], "left_anti"),
-            live,
+            .join(used, F.col("d") == used["u"], "left_anti")
         )
-        if win is not matched:  # round 1's winners ARE the matching so far
-            win.unpersist()
-        if live.count() == 0:
+        release(live)
+        if win is not matched:
+            release(win)
+        live = left
+        if n_left == 0:
             break
-    return matched.select("s", "d")
+    release(live)
+    return matched
 
 def densest_subgraph(
     edges: DataFrame,
@@ -2109,36 +2119,37 @@ def densest_subgraph(
 
     Physical shape: per round one degree aggregate over the surviving
     edges + two semi-joins; the scalar (n, m) round stats are the
-    only driver state (bounded-collect contract). Generations use the
-    checkpoint+persist discipline (SCALE.md §iteration-discipline)."""
-    live = iter_materialize(
+    only driver state (bounded-collect contract). Each generation is
+    one stats-severed checkpoint whose count is the same job
+    (:func:`checkpoint_count`), and the superseded one is released."""
+    live, m = checkpoint_count(
         edges.select(F.col("src").alias("s"), F.col("dst").alias("d")).distinct()
     )
     best = None  # (round, n, m), maximizing m/n by cross-multiplication
     for r in range(1, rounds + 1):
-        m = live.count()
         if m == 0:
             break
-        deg = iter_materialize(
+        deg, n = checkpoint_count(
             live.select(F.col("s").alias("v"))
             .unionAll(live.select(F.col("d").alias("v")))
             .groupBy("v")
             .agg(F.count("*").alias("dg"))
         )
-        n = deg.count()
         if best is None or m * best[1] > best[2] * n:
             best = (r, n, m)
         keep = deg.filter(F.col("dg") * F.lit(n) > F.lit(eps_num) * F.lit(m)).select(
             "v"
         )
-        live = iter_materialize(
+        left, m = checkpoint_count(
             live.join(keep.select(F.col("v").alias("_ks")), F.col("s") == F.col("_ks"))
             .select("s", "d")
             .join(keep.select(F.col("v").alias("_kd")), F.col("d") == F.col("_kd"))
-            .select("s", "d"),
-            live,
+            .select("s", "d")
         )
-        deg.unpersist()
+        release(live)
+        release(deg)
+        live = left
+    release(live)
     return best
 
 
@@ -2155,7 +2166,9 @@ def hyperball(
     Returns ``(id, est_r1, ..., est_r{rounds})``: the estimated number
     of vertices within distance t of each vertex (including itself),
     as a plain DataFrame a user can aggregate into the neighborhood
-    function / effective diameter.
+    function / effective diameter. Past two rounds it reads one
+    checkpoint per register generation; ``unpersist()`` on it frees
+    them.
 
     This is the SKETCH-ONLY library operator the registry demo query
     ``graph_hyperball`` wraps (that entry fuses an exact-2-hop
@@ -2219,7 +2232,10 @@ def hyperball(
         ).otherwise(raw)
         return per_v.select("id", F.round(est, 4).alias(alias))
 
-    ests = []
+    # past two rounds each register generation is checkpointed: the
+    # state self-joins every round (SCALE.md §"Deep self-join
+    # chains")
+    ests, gens = [], []
     for t in range(1, rounds + 1):
         nbr = sym.join(regs.withColumnRenamed("id", "src"), "src").select(
             F.col("dst").alias("id"), "bucket", "m"
@@ -2228,13 +2244,14 @@ def hyperball(
             regs.unionByName(nbr).groupBy("id", "bucket").agg(F.max("m").alias("m"))
         )
         if rounds > 2:
-            regs = iter_materialize(regs)
+            regs = eager_checkpoint(regs)
+            gens.append(regs)
         ests.append(_estimate(regs, f"est_r{t}"))
 
     out = ests[0]
     for e in ests[1:]:
         out = out.join(e, "id")
-    return out
+    return released_with(out, gens)
 
 
 def load_sampled(

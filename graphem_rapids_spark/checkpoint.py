@@ -44,9 +44,12 @@ forward pass, the IC cascade) is the one sweep
 edge betweenness) is the one deepest-first loop
 ``analytics._brandes_dependencies``: it releases each forward level
 once that level's dependency table is checkpointed, and each kernel's
-result frees the rest through :func:`released_with`.
-:func:`iter_materialize` stays the generation helper for deep
-self-join kernels that need honest cached stats.
+result frees the rest through :func:`released_with`. The deep
+self-join kernels (MST pointer jumping, MIS, matching, densest
+subgraph, HyperBall, PCA) keep explicit generation loops: each
+generation is one severed :func:`eager_checkpoint` (or
+:func:`checkpoint_count` when it is counted at once), and the
+superseded one is released.
 """
 
 from __future__ import annotations
@@ -226,23 +229,6 @@ def eager_materialize(df: DataFrame) -> DataFrame:
     ``df.unpersist()`` on the result actually frees the blocks (see
     :func:`eager_checkpoint`)."""
     return eager_checkpoint(df, sever_stats=False)
-
-
-def iter_materialize(df: DataFrame, old: DataFrame | None = None) -> DataFrame:
-    """Materialize one generation of a deep iterative kernel:
-    :func:`eager_checkpoint` truncates lineage AND ``persist``+``count``
-    substitutes honest cached stats for Catalyst's inherited
-    sizeInBytes estimate, which otherwise SQUARES per self-join
-    generation and melts the driver in BigInteger multiplies from
-    ~18 generations (SCALE.md §iteration-discipline). Pass ``old`` to
-    release the previous generation. ``unpersist()`` on the result
-    frees both its cache-manager entry and its checkpoint blocks."""
-    out = eager_checkpoint(df)
-    out.persist()
-    out.count()
-    if old is not None:
-        old.unpersist()
-    return out
 
 
 def release(df: DataFrame) -> None:

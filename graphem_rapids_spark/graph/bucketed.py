@@ -44,13 +44,3 @@ def bucketed_degrees(spark: SparkSession, table: str) -> DataFrame:
     e = spark.table(table)
     out_deg = e.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("out_degree"))
     return out_deg
-
-
-def bucketed_self_join_count(spark: SparkSession, table: str) -> int:
-    """Two-hop path count via a self-join on the bucket key — both
-    sides read pre-partitioned, so the join needs no shuffle of
-    either side (SortMergeJoin over bucketed scans)."""
-    e = spark.table(table)
-    a = e.select(F.col("src").alias("k"), F.col("dst").alias("a_dst"))
-    b = e.select(F.col("src").alias("k"), F.col("dst").alias("b_dst"))
-    return a.join(b, "k").count()

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 
 from graphem_rapids_spark.checkpoint import eager_checkpoint as _eager_ckpt
-from graphem_rapids_spark.checkpoint import iter_materialize
+from graphem_rapids_spark.checkpoint import release, released_with
 from pyspark.sql import functions as F
 
 
@@ -872,13 +872,10 @@ def pca_power_int8(
         "i", "j",
         F.expr("(c - ((c % n + n) % n)) div n").cast("long").alias("b"),
     )
-    # materialize every generation with checkpoint+persist+count: the
-    # norm crossJoin references u twice, so a 40-iteration chain hits
-    # the Catalyst stats-squaring pathology (SCALE.md
-    # §iteration-discipline) under a bare localCheckpoint
-    _mat = iter_materialize
-
-    full = _mat(
+    # checkpoint every generation (stats severed): the norm crossJoin
+    # references u twice, so a 40-iteration chain would compound its
+    # size estimate (SCALE.md §"Deep self-join chains")
+    full = _eager_ckpt(
         b.unionAll(
             b.filter(F.col("i") != F.col("j")).select(
                 F.col("j").alias("i"), F.col("i").alias("j"), "b"
@@ -892,11 +889,13 @@ def pca_power_int8(
         iters_by_comp += [iters_by_comp[-1]] * (components - len(iters_by_comp))
     outs = []
     # (w_df(vi, w), g_df(g)) per extracted component — the deflation
-    # basis; each is a tiny checkpointed table kept persisted for the
-    # remaining components' loops
+    # basis the remaining components' loops read: w_df projects the
+    # component's final v, g_df is a one-row checkpoint
     basis: list = []
+    # each component's final (u, v_prev, v): the output rows read them
+    held: list = []
     for comp in range(1, components + 1):
-        v = _mat(
+        v = _eager_ckpt(
             spark.range(dim).select(
                 F.col("id").cast("long").alias("vi"),
                 F.lit(1000000).cast("long").alias("v"),
@@ -906,9 +905,9 @@ def pca_power_int8(
         v_prev = v
         for _t in range(iters_by_comp[comp - 1]):
             if u is not None:
-                u.unpersist()
+                release(u)
             if v_prev is not v:
-                v_prev.unpersist()
+                release(v_prev)
             v_prev = v
             u_raw = (
                 full.join(v, full["j"] == v["vi"])
@@ -937,13 +936,13 @@ def pca_power_int8(
                         ).alias("u"),
                     )
                 )
-            u = _mat(u_raw)
+            u = _eager_ckpt(u_raw)
             norm = u.agg(
                 F.sqrt(
                     F.sum(F.col("u").cast("decimal(38,0)") * F.col("u")).cast("double")
                 ).alias("nrm")
             )
-            v = _mat(
+            v = _eager_ckpt(
                 u.crossJoin(F.broadcast(norm)).select(
                     F.col("i").alias("vi"),
                     F.round(F.col("u").cast("double") / F.col("nrm") * F.lit(1e6))
@@ -974,14 +973,18 @@ def pca_power_int8(
                 "lam",
             )
         )
+        held += [u, v_prev, v]
         if comp < components:
-            w_df = _mat(v.select("vi", F.col("v").alias("w")))
-            g_df = _mat(w_df.agg(F.sum(F.col("w") * F.col("w")).alias("g")))
+            w_df = v.select("vi", F.col("v").alias("w"))
+            g_df = _eager_ckpt(w_df.agg(F.sum(F.col("w") * F.col("w")).alias("g")))
             basis.append((w_df, g_df))
+    release(full)
+    for _w, g_df in basis:
+        release(g_df)
     result = outs[0]
     for o in outs[1:]:
         result = result.unionAll(o)
-    return result
+    return released_with(result, held)
 
 
 def kcenter_select(

@@ -2,10 +2,10 @@
 
 Mirrors the reference's env-var config surface
 (``utils/backend_selection.py:286-293``: GRAPHEM_BACKEND /
-GRAPHEM_PREFER_GPU / GRAPHEM_MEMORY_LIMIT / GRAPHEM_VERBOSE) with
-Spark-native knobs. Under Spark the reference's "backend selection"
-collapses into strategy selection inside one engine (exact vs LSH kNN
-by size, broadcast vs shuffle join — mostly delegated to Catalyst/AQE).
+GRAPHEM_PREFER_GPU / GRAPHEM_MEMORY_LIMIT) with Spark-native knobs.
+Under Spark the reference's "backend selection" collapses into
+strategy selection inside one engine (exact vs LSH kNN by size,
+broadcast vs shuffle join — mostly delegated to Catalyst/AQE).
 
 Scale notes (100 TB design):
 - AQE on everywhere: runtime partition coalescing, skew-join splitting.
@@ -16,6 +16,7 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -38,10 +39,33 @@ BROADCAST_POSITIONS_MAX = int(os.environ.get("GRAPHEM_BROADCAST_POS_MAX", "10000
 # min-label's 1, so small graphs stay on the cheap path)
 CC_STAR_MIN_VERTICES = int(os.environ.get("GRAPHEM_CC_STAR_MIN", "5000000"))
 
-VERBOSE = os.environ.get("GRAPHEM_VERBOSE", "").lower() in ("1", "true", "yes")
-
 DRIVER_MEM_CAP_GB = 48
 DRIVER_MEM_FRACTION = 0.5
+
+
+@contextmanager
+def scoped_shuffle_partitions(spark, choose):
+    """Run the body with ``spark.sql.shuffle.partitions`` set to
+    ``choose(current)`` and restore the session value afterwards, also
+    when the body raises. A non-numeric session value runs the body
+    with it unchanged.
+
+    The conf is session-global: this assumes a single-threaded driver,
+    where no other query starts (and plans with the scoped value)
+    while the body runs."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        current = int(prev)
+    except ValueError:
+        scoped = prev
+    else:
+        scoped = str(choose(current))
+    spark.conf.set(key, scoped)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def default_driver_memory(total_bytes: int | None = None) -> str:

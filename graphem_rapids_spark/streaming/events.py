@@ -26,6 +26,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphem_rapids_spark.session import scoped_shuffle_partitions
+
 # Stateful micro-batch plans run with AQE DISABLED (Spark turns it off
 # for stateful workloads), so every shuffle executes at the session's
 # full ``spark.sql.shuffle.partitions`` — and each shuffle partition
@@ -204,13 +206,7 @@ def run_available_now(
     # bounded state-store fan-out (see STREAM_PARTITIONS above): the
     # conf is captured by the streaming query at start() and restored
     # for batch work immediately after the drain
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        bounded = str(min(int(prev_parts), STREAM_PARTITIONS))
-    except ValueError:  # a non-numeric session value: run with it unchanged
-        bounded = prev_parts
-    spark.conf.set("spark.sql.shuffle.partitions", bounded)
-    try:
+    with scoped_shuffle_partitions(spark, lambda p: min(p, STREAM_PARTITIONS)):
         q = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -219,6 +215,4 @@ def run_available_now(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(name)

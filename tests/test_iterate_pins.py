@@ -17,9 +17,13 @@ from graphem_rapids_spark.analytics import (
     label_propagation,
     load_sampled,
     louvain,
+    maximal_independent_set,
+    maximal_matching,
+    minimum_spanning_forest,
 )
-from graphem_rapids_spark.checkpoint import eager_checkpoint, iterate
+from graphem_rapids_spark.checkpoint import eager_checkpoint, iterate, release
 from graphem_rapids_spark.influence import estimated_influence
+from graphem_rapids_spark.pipeline.similarity import pca_power_int8
 
 # two triangles joined by three edges (FIXTURES.md)
 TWO_TRIANGLES_LINKED = [
@@ -40,9 +44,11 @@ def _assert_no_leak(spark, run):
     assert _cached_rdds(spark) - before == set()
 
 
-def _collect_and_release(df):
-    df.collect()
-    df.unpersist()
+def _collect_and_release(*dfs):
+    for df in dfs:
+        df.collect()
+    for df in dfs:
+        df.unpersist()
 
 
 def test_estimated_influence_leaks_no_blocks(spark):
@@ -92,7 +98,52 @@ def test_kernel_result_frees_its_checkpoints(spark, name):
     _assert_no_leak(spark, lambda: _collect_and_release(RELEASED_KERNELS[name](edges)))
 
 
-def test_iterate_severs_self_join_stats(spark):
+def _weighted(spark):
+    return spark.createDataFrame(
+        [(s, d, i + 1) for i, (s, d) in enumerate(TWO_TRIANGLES_LINKED)],
+        "src long, dst long, weight long",
+    )
+
+
+def _vectors(spark):
+    rows = [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(4)]) for i in range(8)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+GENERATION_KERNELS = {
+    "minimum_spanning_forest": lambda s: minimum_spanning_forest(_weighted(s), 3, 3),
+    "maximal_independent_set": lambda s: maximal_independent_set(
+        s.createDataFrame(TWO_TRIANGLES_LINKED, "src long, dst long")
+    ),
+    "maximal_matching": lambda s: (
+        maximal_matching(s.createDataFrame(TWO_TRIANGLES_LINKED, "src long, dst long")),
+    ),
+    "pca_power_int8": lambda s: (
+        pca_power_int8(_vectors(s), iters=[3, 4], dim=4, components=2),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(GENERATION_KERNELS))
+def test_generation_kernel_results_free_their_checkpoints(spark, name):
+    """The deep self-join kernels release each superseded generation
+    and bind every frame they return to the checkpoints it reads, so
+    releasing the returned frames frees them all."""
+    _assert_no_leak(spark, lambda: _collect_and_release(*GENERATION_KERNELS[name](spark)))
+
+
+def _checkpoint_loop(state, step, rounds, stop):
+    """The explicit generation loop of the deep self-join kernels:
+    one eager checkpoint per round, then the predecessor's release."""
+    for r in range(rounds):
+        new = eager_checkpoint(step(state, r))
+        stop(new, r)
+        release(state)
+        state = new
+    return state, rounds
+
+
+def _assert_self_join_stats_flat(spark, run):
     """Each round joins the previous state with itself, so an unsevered
     checkpoint's size estimate (a product of its children's) would
     double its digit count per round."""
@@ -111,10 +162,18 @@ def test_iterate_severs_self_join_stats(spark):
         new.count()  # writes the blocks, so the release never depends on severing
         return False
 
-    state, rounds = iterate(state, step, 5, stop=record)
+    state, rounds = run(state, step, 5, stop=record)
     assert rounds == 5
     assert len(set(digits)) == 1, digits
     assert sorted(r.v for r in state.collect()) == sorted(
         (i % 7) * 32 % 7 for i in range(64)
     )
     state.unpersist()
+
+
+def test_iterate_severs_self_join_stats(spark):
+    _assert_self_join_stats_flat(spark, iterate)
+
+
+def test_eager_generations_sever_self_join_stats(spark):
+    _assert_self_join_stats_flat(spark, _checkpoint_loop)

@@ -77,6 +77,12 @@ JOB_BUDGETS = {
     "community_louvain_rounds": 96,
     "community_louvain_levels": 221,
     "community_louvain_refined": 290,
+    "graph_mst": 91,
+    "graph_mis_luby": 93,
+    "graph_matching_luby": 68,
+    "graph_densest_subgraph": 46,
+    "embedding_pca_power": 1905,
+    "graph_effective_diameter": 19,
 }
 
 

@@ -1,6 +1,8 @@
 """Streaming configuration parsing that needs no Spark session: a
 malformed ``GRAPHEM_STREAM_PARTITIONS`` or a non-numeric
-``spark.sql.shuffle.partitions`` must not break the stream drain."""
+``spark.sql.shuffle.partitions`` must not break the stream drain, and
+the scoped shuffle-partitions override always restores the session
+value."""
 
 from __future__ import annotations
 
@@ -8,6 +10,9 @@ import os
 import subprocess
 import sys
 
+import pytest
+
+from graphem_rapids_spark.session import scoped_shuffle_partitions
 from graphem_rapids_spark.streaming import events
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -86,3 +91,25 @@ def test_malformed_stream_partitions_env_imports():
             capture_output=True, text=True, check=True, cwd=REPO,
         )
         assert out.stdout.strip() == "8"
+
+
+def test_scoped_shuffle_partitions_sets_and_restores():
+    s = _Stream("32")
+    with scoped_shuffle_partitions(s, lambda p: p * 2):
+        assert s.conf.get("spark.sql.shuffle.partitions") == "64"
+    assert s.conf.get("spark.sql.shuffle.partitions") == "32"
+
+
+def test_scoped_shuffle_partitions_keeps_non_numeric():
+    s = _Stream("auto")
+    with scoped_shuffle_partitions(s, lambda p: p * 2):
+        assert s.conf.get("spark.sql.shuffle.partitions") == "auto"
+    assert s.conf.get("spark.sql.shuffle.partitions") == "auto"
+
+
+def test_scoped_shuffle_partitions_restores_on_error():
+    s = _Stream("32")
+    with pytest.raises(RuntimeError):
+        with scoped_shuffle_partitions(s, lambda p: 4):
+            raise RuntimeError("body failed")
+    assert s.conf.get("spark.sql.shuffle.partitions") == "32"
