@@ -1412,33 +1412,61 @@ def _corr_safe(a: str, b: str):
     )
 
 
-def spearman_correlation(df: DataFrame, col_a: str, col_b: str) -> float:
-    """scipy.stats.spearmanr (reference ``benchmark.py:217-238``):
-    Pearson ``corr`` of mean-ranks."""
-    ranked = rank_column(rank_column(df, col_a, "_ra"), col_b, "_rb")
-    out = ranked.agg(_corr_safe("_ra", "_rb")).first()[0]
-    return float(out) if out is not None else float("nan")
+def _rank_key(col: str):
+    """``col`` as a double with Spark SQL's ascending order and ties —
+    nulls first, NaN last and equal to itself, −0.0 = 0.0 — which MLlib's
+    sort does not give (NaN ≠ NaN, −0.0 < 0.0): null → −∞, NaN → +∞,
+    −0.0 → 0.0. Differences to ranking the column itself: a column
+    holding both null and −∞ (or NaN and +∞) ties them, and values the
+    double cast cannot tell apart (longs past 2⁵³, decimals past 15
+    significant digits) tie."""
+    x = F.col(col).cast("double")
+    return (
+        F.when(x.isNull(), float("-inf"))
+        .when(F.isnan(x), float("inf"))
+        .when(x == 0.0, 0.0)
+        .otherwise(x)
+    )
 
 
 def full_correlation_matrix(df: DataFrame, cols: list[str]) -> dict:
-    """Pairwise Spearman over measure columns (reference
-    ``visualization.py:52-90``). Ranks computed once per column, all
-    correlations in ONE aggregate pass."""
-    ranked = df
-    for c in cols:
-        ranked = rank_column(ranked, c, f"_r_{c}")
-    aggs = [
-        _corr_safe(f"_r_{a}", f"_r_{b}").alias(f"{a}|{b}")
-        for i, a in enumerate(cols)
-        for b in cols[i:]
-    ]
-    row = ranked.agg(*aggs).first()
-    out = {}
-    for i, a in enumerate(cols):
-        for b in cols[i:]:
-            v = row[f"{a}|{b}"]
-            out[(a, b)] = out[(b, a)] = float(v) if v is not None else float("nan")
-    return out
+    """Pairwise Spearman ρ over measure columns (reference
+    ``visualization.py:52-90``; scipy.stats.spearmanr semantics:
+    Pearson correlation of mean ranks, ties averaged) as
+    ``{(a, b): ρ}``. All columns go through ONE MLlib
+    ``Correlation.corr(..., "spearman")``: a distributed sort-based
+    global rank of every column, then one Pearson aggregate — no
+    single-partition window.
+
+    Zero-variance pairs (a constant column, fewer than two rows) are
+    NaN; the diagonal is 1.0. MLlib averages a tie group in chunks of
+    10M rows, so a value repeated more often than that no longer gets
+    one shared rank."""
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.stat import Correlation
+
+    keys = [f"_k{i}" for i in range(len(cols))]
+    vec = VectorAssembler(inputCols=keys, outputCol="_v").transform(
+        df.select(*[_rank_key(c).alias(k) for c, k in zip(cols, keys)])
+    )
+    try:
+        m = Correlation.corr(vec, "_v", "spearman").head()[0].toArray().tolist()
+    except Exception as exc:
+        # MLlib's RowMatrix refuses a covariance of an empty or one-row
+        # input; scipy gives nan there, as the formula does
+        if "rows RDD is empty" not in str(exc) and "<= 1 row" not in str(exc):
+            raise
+        d = len(cols)
+        m = [[1.0 if i == j else math.nan for j in range(d)] for i in range(d)]
+    return {
+        (a, b): float(m[i][j]) for i, a in enumerate(cols) for j, b in enumerate(cols)
+    }
+
+
+def spearman_correlation(df: DataFrame, col_a: str, col_b: str) -> float:
+    """scipy.stats.spearmanr (reference ``benchmark.py:217-238``):
+    Pearson ``corr`` of mean-ranks, via :func:`full_correlation_matrix`."""
+    return full_correlation_matrix(df, [col_a, col_b])[(col_a, col_b)]
 
 
 def bootstrap_spearman_ci(

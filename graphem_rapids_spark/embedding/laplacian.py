@@ -5,10 +5,17 @@ eigenvectors, drop the trivial first; random-init fallback on failure.
 Two strategies, auto-selected by size (mirroring the reference's own
 backend-selection ethos, ``utils/backend_selection.py:178-196``):
 
-- **driver**: collect the (small) edge list, dense ``numpy.linalg.eigh``
-  of the normalized Laplacian, parallelize the n×k result back.
-  Exact; for n ≤ DRIVER_EIG_MAX_VERTICES.
-- **distributed**: orthogonal (block power) iteration on
+- **driver** (n ≤ DRIVER_EIG_MAX_VERTICES): collect the edge list, solve
+  in numpy, parallelize the n×k result back. The solver depends on n:
+
+  - n ≤ DRIVER_EXACT_MAX_VERTICES: exact. Block LOBPCG on the shifted
+    operator ``2I − L``, converged to a residual of ``_LOBPCG_TOL``;
+    dense ``numpy.linalg.eigh`` of L only for graphs too small for the
+    LOBPCG basis (or should LOBPCG not converge in ``_LOBPCG_MAX_ITERS``).
+  - larger n: orthogonal iteration capped at 24 rounds — a good
+    low-frequency subspace for the layout, not exact eigenvectors.
+
+- **distributed** (larger n): orthogonal (block power) iteration on
   ``M = D^{-1/2} A D^{-1/2}`` — the top-(k+1) eigenvectors of M are the
   bottom-(k+1) of L = I − M, and the trivial one (``D^{1/2}·1``) is
   deflated analytically. Each iteration is one edges⋈positions join +
@@ -19,12 +26,37 @@ backend-selection ethos, ``utils/backend_selection.py:178-196``):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from graphem_rapids_spark.checkpoint import eager_checkpoint
 
 from graphem_rapids_spark.graph.canon import symmetrize_edges
+
+# Largest n the driver path solves exactly. Above it the capped
+# orthogonal iteration runs instead: exact convergence there costs far
+# more than the layout gains (LOBPCG to a 1e-8 residual took 10 s at
+# nnz = 1.6M, against 1.2 s for the 24-round cap).
+DRIVER_EXACT_MAX_VERTICES = 2000
+
+# LOBPCG block = k wanted vectors + guard vectors: convergence of the
+# k-th pair runs at the gap to the first eigenvalue outside the block,
+# so the guards carry it past tiny gaps (0.0008 between the 2nd and 3rd
+# eigenvalue on a seeded 2,000-vertex heavy-tailed graph).
+_LOBPCG_GUARD = 4
+# residual ‖(2I − L)x − θx‖ of each wanted unit Ritz vector at exit
+_LOBPCG_TOL = 1e-9
+# rounds before falling back to the dense eigh: seeded heavy-tailed
+# 2,000-vertex graphs converge in 42-86 rounds and a 44×44 grid in 162,
+# while a 2,000-vertex path (eigengaps ~1e-6) needs over 1,000. At
+# n = 2000 a round costs ~3 ms and the dense eigh ~1.7 s, so the cap
+# bounds the wasted time on such graphs by about one dense solve.
+_LOBPCG_MAX_ITERS = 300
+# nnz from which the matvec's columns run on a thread pool
+_POOL_MIN_NNZ = 1 << 16
 
 
 def laplacian_embedding(
@@ -61,11 +93,16 @@ def _driver_eigh(
 ) -> DataFrame:
     """Driver-side eigensolve — the reference's own strategy
     (``embedder_pytorch.py:337-379`` collects to the driver regardless
-    of size). Pure numpy (scipy is not a dependency): dense ``eigh``
-    for small n, otherwise orthogonal iteration on the shifted
-    normalized adjacency ``M' = D^{-1/2} A D^{-1/2} + I`` (bincount
-    matvec, analytic deflation of the trivial eigenvector, final
-    Rayleigh–Ritz rotation) — top-k of M' = bottom nontrivial of L."""
+    of size). Pure numpy (scipy is not a dependency), on the normalized
+    Laplacian with L_ii = 0 on isolated rows:
+
+    - n ≤ DRIVER_EXACT_MAX_VERTICES: exact bottom nontrivial
+      eigenvectors — block LOBPCG (:func:`_numpy_lobpcg`), or dense
+      ``eigh`` where the LOBPCG basis does not fit (tiny graphs);
+    - larger n: :func:`_numpy_orthogonal_iteration`, a capped block
+      power iteration.
+
+    All three share the sign canonicalization below."""
     spark = edges.sparkSession
     try:
         sel = edges.select("src", "dst")
@@ -94,17 +131,12 @@ def _driver_eigh(
             code = np.unique(rows * np.int64(n) + cols)
             rows, cols = code // n, code % n
         deg = np.bincount(rows, minlength=n).astype(np.float64)
-        if n <= 2000:
-            A = np.zeros((n, n))
-            A[rows, cols] = 1.0
-            with np.errstate(divide="ignore"):
-                dinv = np.where(deg > 0, 1.0 / np.sqrt(np.maximum(deg, 1e-300)), 0.0)
-            L = -A * dinv[:, None] * dinv[None, :]
-            np.fill_diagonal(L, np.where(deg > 0, 1.0, 0.0))
-            vals, vecs = np.linalg.eigh(L)
-            emb = vecs[:, np.argsort(vals)[1 : k + 1]]
-        else:
+        if n > DRIVER_EXACT_MAX_VERTICES:
             emb = _numpy_orthogonal_iteration(rows, cols, deg, n, k, seed)
+        else:
+            emb = _numpy_lobpcg(rows, cols, deg, n, k, seed)
+            if emb is None:
+                emb = _dense_eigh(rows, cols, deg, n, k)
         if emb.shape[1] < k:  # degenerate tiny graphs: pad with zeros
             emb = np.hstack([emb, np.zeros((n, k - emb.shape[1]))])
         # sign canonicalization so the embedding is deterministic
@@ -129,6 +161,63 @@ def _driver_eigh(
     return spark.createDataFrame(out, "id long, pos array<double>")
 
 
+def _dinv(deg: np.ndarray) -> np.ndarray:
+    """D^{-1/2}, 0 on isolated rows."""
+    with np.errstate(divide="ignore"):
+        return np.where(deg > 0, 1.0 / np.sqrt(np.maximum(deg, 1e-300)), 0.0)
+
+
+def _dense_eigh(
+    rows: np.ndarray, cols: np.ndarray, deg: np.ndarray, n: int, k: int
+) -> np.ndarray:
+    """Bottom k nontrivial eigenvectors of L by dense ``eigh`` — O(n³)."""
+    A = np.zeros((n, n))
+    A[rows, cols] = 1.0
+    dinv = _dinv(deg)
+    L = -A * dinv[:, None] * dinv[None, :]
+    np.fill_diagonal(L, np.where(deg > 0, 1.0, 0.0))
+    vals, vecs = np.linalg.eigh(L)
+    return vecs[:, np.argsort(vals)[1 : k + 1]]
+
+
+@contextmanager
+def _shifted_adjacency(
+    rows: np.ndarray, cols: np.ndarray, deg: np.ndarray, n: int, width: int
+):
+    """Yield ``matvec(X) = (M + I)·X`` for X of at most ``width``
+    columns, M = D^{-1/2} A D^{-1/2} given as the symmetric (rows, cols)
+    pair list: one gather-multiply and one bincount per column."""
+    dinv = _dinv(deg)
+    w = dinv[rows] * dinv[cols]
+    bufs = [np.empty(rows.shape[0]) for _ in range(width)]
+
+    def _col(args) -> None:
+        # per-column gather+multiply into a preallocated buffer: the
+        # broadcast form (w[:,None] * X[rows,:]) materializes an
+        # (nnz, k) temporary per call — measured 147 -> 34 ms/matvec
+        # at nnz=2.4M. Columns are independent, so running them on a
+        # small thread pool (numpy's multiply/bincount release the GIL
+        # for most of their work) is bit-identical per column.
+        d, X, Y = args
+        np.multiply(w, X[rows, d], out=bufs[d])
+        Y[:, d] = np.bincount(cols, weights=bufs[d], minlength=n)
+
+    def matvec(X: np.ndarray) -> np.ndarray:
+        Y = np.empty_like(X)
+        list(run(_col, [(d, X, Y) for d in range(X.shape[1])]))
+        Y += X  # shift by +I
+        return Y
+
+    pool = ThreadPoolExecutor(max_workers=max(width, 1))
+    # below ~64k entries a column takes tens of microseconds, less than
+    # handing it to a thread
+    run = pool.map if rows.shape[0] >= _POOL_MIN_NNZ else map
+    try:
+        yield matvec
+    finally:
+        pool.shutdown(wait=False)
+
+
 def _numpy_orthogonal_iteration(
     rows: np.ndarray,
     cols: np.ndarray,
@@ -148,60 +237,99 @@ def _numpy_orthogonal_iteration(
     anyway, and the force layout only needs a good low-frequency
     subspace as its starting point (the reference itself falls back to
     *random* init when eigsh fails, ``embedder_pytorch.py:366-369``)."""
-    with np.errstate(divide="ignore"):
-        dinv = np.where(deg > 0, 1.0 / np.sqrt(np.maximum(deg, 1e-300)), 0.0)
-    w = dinv[rows] * dinv[cols]
     two_m = deg.sum()
     v0 = np.sqrt(deg / max(two_m, 1.0))  # trivial eigenvector of M
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    _bufs = [np.empty(rows.shape[0]) for _ in range(k)]
-    _pool = ThreadPoolExecutor(max_workers=max(k, 1))
-
-    def _col(args) -> None:
-        # per-column gather+multiply into a preallocated buffer: the
-        # broadcast form (w[:,None] * X[rows,:]) materializes an
-        # (nnz, k) temporary per call — measured 147 -> 34 ms/matvec
-        # at nnz=2.4M. Columns are independent, so running them on a
-        # small thread pool (numpy's multiply/bincount release the GIL
-        # for most of their work) is bit-identical per column.
-        d, X, Y = args
-        np.multiply(w, X[rows, d], out=_bufs[d])
-        Y[:, d] = np.bincount(cols, weights=_bufs[d], minlength=n)
-
-    def matvec(X: np.ndarray) -> np.ndarray:
-        Y = np.empty_like(X)
-        list(_pool.map(_col, [(d, X, Y) for d in range(X.shape[1])]))
-        Y += X  # shift by +I
-        return Y
-
-    rng = np.random.default_rng(seed)
-    X = rng.standard_normal((n, k))
-    X -= v0[:, None] * (v0 @ X)
-    X, _ = np.linalg.qr(X)
-    prev_ritz = None
-    for it in range(iters):
-        Y = matvec(X)
-        Y -= v0[:, None] * (v0 @ Y)  # deflate the trivial direction
-        Q, R = np.linalg.qr(Y)
-        sgn = np.sign(np.diag(R))
-        sgn[sgn == 0] = 1.0
-        X = Q * sgn
-        # convergence check every 6 rounds, free of extra matvecs:
-        # |diag(R)| → the eigenvalues as orthogonal iteration converges
-        # (layout init needs a good subspace, not 1e-12 eigsh)
-        if (it + 1) % 6 == 0:
-            ritz = np.sort(np.abs(np.diag(R)))
-            if prev_ritz is not None and np.max(np.abs(ritz - prev_ritz)) < 1e-5:
-                break
-            prev_ritz = ritz
-    # Rayleigh–Ritz: rotate to eigenvector approximations, order by
-    # eigenvalue of M' descending = eigenvalue of L ascending
-    T = X.T @ matvec(X)
-    _pool.shutdown(wait=False)
+    with _shifted_adjacency(rows, cols, deg, n, k) as matvec:
+        rng = np.random.default_rng(seed)
+        X = rng.standard_normal((n, k))
+        X -= v0[:, None] * (v0 @ X)
+        X, _ = np.linalg.qr(X)
+        prev_ritz = None
+        for it in range(iters):
+            Y = matvec(X)
+            Y -= v0[:, None] * (v0 @ Y)  # deflate the trivial direction
+            Q, R = np.linalg.qr(Y)
+            sgn = np.sign(np.diag(R))
+            sgn[sgn == 0] = 1.0
+            X = Q * sgn
+            # convergence check every 6 rounds, free of extra matvecs:
+            # |diag(R)| → the eigenvalues as orthogonal iteration converges
+            # (layout init needs a good subspace, not 1e-12 eigsh)
+            if (it + 1) % 6 == 0:
+                ritz = np.sort(np.abs(np.diag(R)))
+                if prev_ritz is not None and np.max(np.abs(ritz - prev_ritz)) < 1e-5:
+                    break
+                prev_ritz = ritz
+        # Rayleigh–Ritz: rotate to eigenvector approximations, order by
+        # eigenvalue of M' descending = eigenvalue of L ascending
+        T = X.T @ matvec(X)
     tvals, tvecs = np.linalg.eigh((T + T.T) / 2.0)
     return X @ tvecs[:, np.argsort(-tvals)]
+
+
+def _numpy_lobpcg(
+    rows: np.ndarray,
+    cols: np.ndarray,
+    deg: np.ndarray,
+    n: int,
+    k: int,
+    seed: int,
+) -> np.ndarray | None:
+    """Bottom k nontrivial eigenvectors of L, exact to ``_LOBPCG_TOL``:
+    block LOBPCG (Knyazev 2001) for the top of B = 2I − L, which is
+    M + I on non-isolated rows and 2 on isolated ones (L_ii = 0, as in
+    :func:`_dense_eigh`). The trivial eigenvector D^{1/2}·1 of B is a
+    hard constraint, so the block never spends a vector on it.
+
+    Each round is one Rayleigh–Ritz step over [X, W, P] (Ritz vectors,
+    residuals, previous search directions), with [W, P] orthonormalized
+    against X and D^{1/2}·1, and one matvec of [W, P]. Returns None
+    when the basis cannot fit n (scipy's ``lobpcg`` rule: n − 1
+    constraints ≥ 5 × block) or the solve does not converge — the
+    caller then takes the dense ``eigh``."""
+    b = k + _LOBPCG_GUARD
+    if n - 1 < 5 * b:
+        return None
+    v0 = np.sqrt(deg / max(deg.sum(), 1.0))  # trivial eigenvector of B
+    iso = deg == 0
+
+    def orthonormal(Y: np.ndarray, Q: np.ndarray) -> np.ndarray:
+        # two rounds of block Gram–Schmidt against the orthonormal Q,
+        # each followed by SVQB (Stathopoulos & Wu 2002) on unit-scaled
+        # columns, so tiny residuals keep their directions; directions
+        # whose Gram eigenvalue falls below 1e-14 of the largest are
+        # numerically dependent and dropped
+        for _ in range(2):
+            Y = Y - Q @ (Q.T @ Y)
+            Y = Y / np.maximum(np.linalg.norm(Y, axis=0), 1e-300)
+            s, U = np.linalg.eigh(Y.T @ Y)
+            keep = s > 1e-14 * s.max(initial=0.0)
+            Y = Y @ (U[:, keep] / np.sqrt(s[keep]))
+        return Y
+
+    with _shifted_adjacency(rows, cols, deg, n, 2 * b) as shifted:
+
+        def apply(Y: np.ndarray) -> np.ndarray:
+            Z = shifted(Y)
+            Z[iso] += Y[iso]
+            return Z
+
+        rng = np.random.default_rng(seed)
+        S = orthonormal(rng.standard_normal((n, b)), v0[:, None])
+        AS = apply(S)
+        for _ in range(_LOBPCG_MAX_ITERS):
+            T = S.T @ AS
+            theta, C = np.linalg.eigh((T + T.T) / 2.0)
+            C = C[:, ::-1][:, :b]  # top b: B descending = L ascending
+            X, AX = S @ C, AS @ C
+            R = AX - X * theta[::-1][:b]
+            if np.linalg.norm(R[:, :k], axis=0).max() < _LOBPCG_TOL:
+                return X[:, :k]
+            P = S[:, b:] @ C[b:]  # the step taken outside the old Ritz block
+            Z = orthonormal(np.hstack([R, P]), np.hstack([v0[:, None], X]))
+            S, AS = np.hstack([X, Z]), np.hstack([AX, apply(Z)])
+    return None
 
 
 def _matvec_normalized_adjacency(sym_edges: DataFrame, deg: DataFrame, X: DataFrame, k: int) -> DataFrame:

@@ -2766,14 +2766,13 @@ def _eig_sql(iters: int = _EIG_ITERS) -> str:
 
 def spearman_matrix(spark, sf_dir):
     """A10 full correlation matrix: pairwise Spearman over three
-    lineitem measures (rank-window + corr per pair)."""
+    lineitem measures (one rank correlation of all three columns)."""
     li = _t(spark, sf_dir, "lineitem")
     cols = ["l_quantity", "l_extendedprice", "l_discount"]
-    rows = []
-    for i, a in enumerate(cols):
-        for b in cols[i + 1 :]:
-            rho = A.spearman_correlation(li.select(a, b), a, b)
-            rows.append((a, b, round(rho, 6)))
+    rho = A.full_correlation_matrix(li, cols)
+    rows = [
+        (a, b, round(rho[(a, b)], 6)) for i, a in enumerate(cols) for b in cols[i + 1 :]
+    ]
     return spark.createDataFrame(rows, "col_a string, col_b string, rho double")
 
 

@@ -38,6 +38,78 @@ def test_laplacian_matches_dense_oracle(spark, two_triangles):
         assert min(abs(lam - ev) for ev in vals) < 1e-8
 
 
+def _heavy_tailed_edges(n, seed, avg_degree=8.0):
+    """Canonical src<dst edges: a random spanning tree (connected) plus
+    Chung-Lu edges on Pareto vertex weights (heavy-tailed degrees)."""
+    rng = np.random.default_rng(seed)
+    p = rng.pareto(1.2, n) + 1.0
+    p /= p.sum()
+    tree = np.stack([np.arange(1, n), (rng.random(n - 1) * np.arange(1, n)).astype(np.int64)], 1)
+    m = int(n * avg_degree / 2)
+    e = np.concatenate([tree, np.stack([rng.choice(n, m, p=p), rng.choice(n, m, p=p)], 1)])
+    lo, hi = e.min(1), e.max(1)
+    key = np.unique(lo[lo < hi] * n + hi[lo < hi])
+    return np.stack([key // n, key % n], 1)
+
+
+def _dense_laplacian(e, n):
+    """Normalized Laplacian with L_ii = 0 on isolated vertices."""
+    A = np.zeros((n, n))
+    A[e[:, 0], e[:, 1]] = A[e[:, 1], e[:, 0]] = 1.0
+    deg = A.sum(1)
+    dinv = np.where(deg > 0, 1.0 / np.sqrt(np.maximum(deg, 1.0)), 0.0)
+    L = -A * np.outer(dinv, dinv)
+    np.fill_diagonal(L, (deg > 0).astype(float))
+    return L
+
+
+def _driver_spectral(spark, monkeypatch, e, n, k):
+    """laplacian_embedding's driver path, asserting it never fell back
+    to the dense eigh."""
+    from graphem_rapids_spark.embedding import laplacian
+
+    def no_dense(*args):
+        raise AssertionError("dense eigh fallback taken")
+
+    monkeypatch.setattr(laplacian, "_dense_eigh", no_dense)
+    df = spark.createDataFrame([(int(a), int(b)) for a, b in e], "src long, dst long")
+    rows = laplacian_embedding(df, n, n_components=k, seed=5).orderBy("id").collect()
+    return np.array([r.pos for r in rows])
+
+
+def _sign_canonical(X):
+    s = np.sign(X[np.abs(X).argmax(axis=0), np.arange(X.shape[1])])
+    return X * np.where(s == 0, 1.0, s)
+
+
+@pytest.mark.parametrize("n,seed", [(300, 1), (2000, 2)])
+def test_driver_eigenvectors_match_dense_eigh(spark, monkeypatch, n, seed):
+    e = _heavy_tailed_edges(n, seed)
+    X = _driver_spectral(spark, monkeypatch, e, n, 2)
+    vals, vecs = np.linalg.eigh(_dense_laplacian(e, n))
+    want = _sign_canonical(vecs[:, 1:3])
+    assert np.abs(X - want).max() <= 1e-6
+
+
+@pytest.mark.parametrize(
+    "e,n",
+    [
+        # vertex 299 has no edge
+        (_heavy_tailed_edges(299, 3), 300),
+        # two components of 150 vertices
+        (np.concatenate([_heavy_tailed_edges(150, 4), _heavy_tailed_edges(150, 5) + 150]), 300),
+    ],
+    ids=["isolated_vertex", "two_components"],
+)
+def test_driver_rayleigh_quotients_match_dense(spark, monkeypatch, e, n):
+    k = 3
+    X = _driver_spectral(spark, monkeypatch, e, n, k)
+    L = _dense_laplacian(e, n)
+    vals = np.linalg.eigvalsh(L)
+    got = [X[:, d] @ L @ X[:, d] / (X[:, d] @ X[:, d]) for d in range(k)]
+    assert np.abs(np.array(got) - vals[1 : k + 1]).max() <= 1e-8
+
+
 def test_distributed_power_iteration_agrees(spark, two_triangles):
     from graphem_rapids_spark.embedding.laplacian import (
         _distributed_orthogonal_iteration,

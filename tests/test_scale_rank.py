@@ -3,13 +3,19 @@ bit-identical to the single-partition window formulation it replaces
 (Spearman and relabel feed hash-gated oracles, so exactness is the
 contract, not approximation)."""
 
+import math
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from graphem_rapids_spark.analytics import rank_column, spearman_correlation
+from graphem_rapids_spark.analytics import (
+    full_correlation_matrix,
+    rank_column,
+    spearman_correlation,
+)
 from graphem_rapids_spark.graph.canon import relabel_contiguous
 from graphem_rapids_spark.scale import global_dense_index, global_mean_rank
 
@@ -82,3 +88,76 @@ def test_spearman_unchanged(spark):
         [(float(i // 3), float((i // 3) ** 2)) for i in range(99)], "a double, b double"
     )
     assert spearman_correlation(df, "a", "b") == pytest.approx(1.0, abs=1e-12)
+
+
+# ---- Spearman contract: MLlib's sort-based rank correlation must give
+# scipy.stats.spearmanr (Pearson of average ranks) on any partitioning
+def _average_ranks(x):
+    order = np.argsort(x, kind="stable")
+    xs = x[order]
+    starts = np.flatnonzero(np.r_[True, xs[1:] != xs[:-1]])
+    ends = np.r_[starts[1:], len(xs)]
+    r = np.empty(len(x))
+    r[order] = np.repeat((starts + ends - 1) / 2.0 + 1.0, ends - starts)
+    return r
+
+
+@pytest.fixture(scope="module")
+def tie_pairs(spark):
+    # ties (zeros of both signs included) in both columns, 8 partitions
+    rng = random.Random(11)
+    rows = [
+        (rng.choice([0.0, -0.0, 0.5, 1.0, 1.0, 2.5, -3.0, 7.0]), rng.choice([0, 0, 0, 1, 2, 2, 5, 9]))
+        for _ in range(2000)
+    ]
+    want = np.corrcoef(
+        _average_ranks(np.array([a for a, _ in rows])),
+        _average_ranks(np.array([float(b) for _, b in rows])),
+    )[0, 1]
+    return spark.createDataFrame(rows, "a double, b long").repartition(8), want
+
+
+def test_spearman_matches_numpy_average_ranks(tie_pairs):
+    df, want = tie_pairs
+    assert abs(spearman_correlation(df, "a", "b") - want) <= 1e-12
+
+
+def test_spearman_same_without_aqe(spark, tie_pairs):
+    df, want = tie_pairs
+    before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        got = spearman_correlation(df, "a", "b")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", before)
+    assert abs(got - want) <= 1e-12
+
+
+def test_spearman_constant_column_is_nan(spark):
+    df = spark.createDataFrame([(float(i), 4.0) for i in range(50)], "a double, b double")
+    assert math.isnan(spearman_correlation(df, "a", "b"))
+    mat = full_correlation_matrix(df, ["a", "b"])
+    assert math.isnan(mat[("a", "b")]) and math.isnan(mat[("b", "a")])
+
+
+@pytest.mark.parametrize("n", [0, 1])
+def test_spearman_fewer_than_two_rows_is_nan(spark, n):
+    df = spark.createDataFrame([(1.0, 2.0)][:n], "a double, b double")
+    assert math.isnan(spearman_correlation(df, "a", "b"))
+
+
+def test_spearman_null_and_nan_keep_sql_order(spark):
+    # Spark SQL's order: null below every value, NaN above, each its own
+    # tie group — the value the window/prefix-sum ranks gave
+    rows = [(1.0, 2.0), (2.0, None), (None, 1.0), (3.0, 5.0), (4.0, 4.0), (5.0, 7.0), (math.nan, 3.0)]
+    df = spark.createDataFrame(rows, "a double, b double")
+    assert spearman_correlation(df, "a", "b") == pytest.approx(0.6428571428571427, abs=1e-12)
+
+
+def test_full_correlation_matrix_matches_pairwise(tie_pairs):
+    df, want = tie_pairs
+    mat = full_correlation_matrix(df.withColumn("c", -F.col("a")), ["a", "b", "c"])
+    assert abs(mat[("a", "b")] - want) <= 1e-12
+    assert abs(mat[("c", "b")] + want) <= 1e-12
+    assert mat[("a", "c")] == pytest.approx(-1.0, abs=1e-12)
+    assert all(mat[(x, x)] == 1.0 for x in "abc")
