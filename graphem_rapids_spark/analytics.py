@@ -1388,12 +1388,14 @@ def rank_column(df: DataFrame, col: str, out: str, partition_cols: tuple[str, ..
 
     With partition_cols the windows are already distributed. The
     GLOBAL case avoids the partition-less window (all rows → one
-    partition) via the range-partitioned prefix-sum in ``scale.py`` —
-    bit-identical values, every stage distributed."""
+    partition) via the range-partitioned prefix-sum
+    ``scale.global_mean_ranks`` — bit-identical values, every stage
+    distributed, one small collect at call time; ``release`` on the
+    result frees its persisted rank table."""
     if not partition_cols:
-        from graphem_rapids_spark.scale import global_mean_rank
+        from graphem_rapids_spark.scale import global_mean_ranks
 
-        return global_mean_rank(df, col, out)
+        return global_mean_ranks(df, [col], [out])
     w = Window.partitionBy(*partition_cols).orderBy(F.col(col).asc())
     wt = Window.partitionBy(*partition_cols, col)
     return df.withColumn(
@@ -1412,55 +1414,33 @@ def _corr_safe(a: str, b: str):
     )
 
 
-def _rank_key(col: str):
-    """``col`` as a double with Spark SQL's ascending order and ties —
-    nulls first, NaN last and equal to itself, −0.0 = 0.0 — which MLlib's
-    sort does not give (NaN ≠ NaN, −0.0 < 0.0): null → −∞, NaN → +∞,
-    −0.0 → 0.0. Differences to ranking the column itself: a column
-    holding both null and −∞ (or NaN and +∞) ties them, and values the
-    double cast cannot tell apart (longs past 2⁵³, decimals past 15
-    significant digits) tie."""
-    x = F.col(col).cast("double")
-    return (
-        F.when(x.isNull(), float("-inf"))
-        .when(F.isnan(x), float("inf"))
-        .when(x == 0.0, 0.0)
-        .otherwise(x)
-    )
-
-
 def full_correlation_matrix(df: DataFrame, cols: list[str]) -> dict:
     """Pairwise Spearman ρ over measure columns (reference
     ``visualization.py:52-90``; scipy.stats.spearmanr semantics:
     Pearson correlation of mean ranks, ties averaged) as
-    ``{(a, b): ρ}``. All columns go through ONE MLlib
-    ``Correlation.corr(..., "spearman")``: a distributed sort-based
-    global rank of every column, then one Pearson aggregate — no
-    single-partition window.
+    ``{(a, b): ρ}``. Every column is ranked in ONE distributed
+    prefix-sum pass (``scale.global_mean_ranks``: exact tie ranks at any
+    row count, nulls lowest, NaN highest), then all correlations are ONE
+    aggregate. Zero-variance pairs (a constant column, fewer than two
+    rows) are NaN."""
+    from graphem_rapids_spark.scale import global_mean_ranks
 
-    Zero-variance pairs (a constant column, fewer than two rows) are
-    NaN; the diagonal is 1.0. MLlib averages a tie group in chunks of
-    10M rows, so a value repeated more often than that no longer gets
-    one shared rank."""
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.stat import Correlation
-
-    keys = [f"_k{i}" for i in range(len(cols))]
-    vec = VectorAssembler(inputCols=keys, outputCol="_v").transform(
-        df.select(*[_rank_key(c).alias(k) for c, k in zip(cols, keys)])
-    )
-    try:
-        m = Correlation.corr(vec, "_v", "spearman").head()[0].toArray().tolist()
-    except Exception as exc:
-        # MLlib's RowMatrix refuses a covariance of an empty or one-row
-        # input; scipy gives nan there, as the formula does
-        if "rows RDD is empty" not in str(exc) and "<= 1 row" not in str(exc):
-            raise
-        d = len(cols)
-        m = [[1.0 if i == j else math.nan for j in range(d)] for i in range(d)]
-    return {
-        (a, b): float(m[i][j]) for i, a in enumerate(cols) for j, b in enumerate(cols)
-    }
+    ranks = [f"_r{i}" for i in range(len(cols))]
+    ranked = global_mean_ranks(df.select(*cols), cols, ranks)
+    row = ranked.agg(
+        *[
+            _corr_safe(ranks[i], ranks[j]).alias(f"{i}|{j}")
+            for i in range(len(cols))
+            for j in range(i, len(cols))
+        ]
+    ).first()
+    release(ranked)
+    out = {}
+    for i, a in enumerate(cols):
+        for j in range(i, len(cols)):
+            v = row[f"{i}|{j}"]
+            out[(a, cols[j])] = out[(cols[j], a)] = float(v) if v is not None else float("nan")
+    return out
 
 
 def spearman_correlation(df: DataFrame, col_a: str, col_b: str) -> float:

@@ -75,7 +75,8 @@ def _bind_release(df: DataFrame, jrdds: list) -> DataFrame:
     actually free their blocks, plus the cache-manager entry when the
     frame was also ``persist``ed (after release the checkpoint is
     lineage-truncated and must not be read again — same contract as
-    a plain localCheckpoint unpersist)."""
+    a plain localCheckpoint unpersist). A persisted frame's JVM
+    Dataset works in place of an RDD: both take ``unpersist(blocking)``."""
     df._graphem_ckpt_rdds = jrdds
 
     def _unpersist(blocking: bool = False, _df=df):

@@ -11,7 +11,8 @@ backend-selection ethos, ``utils/backend_selection.py:178-196``):
   - n ≤ DRIVER_EXACT_MAX_VERTICES: exact. Block LOBPCG on the shifted
     operator ``2I − L``, converged to a residual of ``_LOBPCG_TOL``;
     dense ``numpy.linalg.eigh`` of L only for graphs too small for the
-    LOBPCG basis (or should LOBPCG not converge in ``_LOBPCG_MAX_ITERS``).
+    LOBPCG basis, or where LOBPCG will not converge within
+    ``_LOBPCG_MAX_ITERS`` rounds.
   - larger n: orthogonal iteration capped at 24 rounds — a good
     low-frequency subspace for the layout, not exact eigenvectors.
 
@@ -49,14 +50,15 @@ DRIVER_EXACT_MAX_VERTICES = 2000
 _LOBPCG_GUARD = 4
 # residual ‖(2I − L)x − θx‖ of each wanted unit Ritz vector at exit
 _LOBPCG_TOL = 1e-9
-# rounds before falling back to the dense eigh: seeded heavy-tailed
+# round cap before falling back to the dense eigh: seeded heavy-tailed
 # 2,000-vertex graphs converge in 42-86 rounds and a 44×44 grid in 162,
-# while a 2,000-vertex path (eigengaps ~1e-6) needs over 1,000. At
-# n = 2000 a round costs ~3 ms and the dense eigh ~1.7 s, so the cap
-# bounds the wasted time on such graphs by about one dense solve.
+# while paths (eigengaps ~1e-6 at n = 2000) need 650-1,500.
 _LOBPCG_MAX_ITERS = 300
-# nnz from which the matvec's columns run on a thread pool
-_POOL_MIN_NNZ = 1 << 16
+# every this many rounds the solve projects, from the residual drop over
+# the last window, the round it would converge at, and falls back to the
+# dense eigh at once when that passes the cap: paths of 500-2,000
+# vertices leave after 40-60 rounds (0.1-0.2 s) instead of 300
+_LOBPCG_WINDOW = 20
 
 
 def laplacian_embedding(
@@ -204,14 +206,11 @@ def _shifted_adjacency(
 
     def matvec(X: np.ndarray) -> np.ndarray:
         Y = np.empty_like(X)
-        list(run(_col, [(d, X, Y) for d in range(X.shape[1])]))
+        list(pool.map(_col, [(d, X, Y) for d in range(X.shape[1])]))
         Y += X  # shift by +I
         return Y
 
     pool = ThreadPoolExecutor(max_workers=max(width, 1))
-    # below ~64k entries a column takes tens of microseconds, less than
-    # handing it to a thread
-    run = pool.map if rows.shape[0] >= _POOL_MIN_NNZ else map
     try:
         yield matvec
     finally:
@@ -286,8 +285,9 @@ def _numpy_lobpcg(
     residuals, previous search directions), with [W, P] orthonormalized
     against X and D^{1/2}·1, and one matvec of [W, P]. Returns None
     when the basis cannot fit n (scipy's ``lobpcg`` rule: n − 1
-    constraints ≥ 5 × block) or the solve does not converge — the
-    caller then takes the dense ``eigh``."""
+    constraints ≥ 5 × block) or the solve will not converge within
+    ``_LOBPCG_MAX_ITERS`` rounds at its current rate — the caller then
+    takes the dense ``eigh``."""
     b = k + _LOBPCG_GUARD
     if n - 1 < 5 * b:
         return None
@@ -318,14 +318,23 @@ def _numpy_lobpcg(
         rng = np.random.default_rng(seed)
         S = orthonormal(rng.standard_normal((n, b)), v0[:, None])
         AS = apply(S)
-        for _ in range(_LOBPCG_MAX_ITERS):
+        best = []  # lowest wanted residual after each round
+        for it in range(_LOBPCG_MAX_ITERS):
             T = S.T @ AS
             theta, C = np.linalg.eigh((T + T.T) / 2.0)
             C = C[:, ::-1][:, :b]  # top b: B descending = L ascending
             X, AX = S @ C, AS @ C
             R = AX - X * theta[::-1][:b]
-            if np.linalg.norm(R[:, :k], axis=0).max() < _LOBPCG_TOL:
+            res = np.linalg.norm(R[:, :k], axis=0).max()
+            if res < _LOBPCG_TOL:
                 return X[:, :k]
+            best.append(min(res, best[-1]) if best else res)
+            if it and it % _LOBPCG_WINDOW == 0:
+                # decades gained per round over the last window
+                rate = np.log10(best[-1 - _LOBPCG_WINDOW] / best[-1]) / _LOBPCG_WINDOW
+                left = np.log10(best[-1] / _LOBPCG_TOL) / rate if rate > 0 else np.inf
+                if it + left > _LOBPCG_MAX_ITERS:
+                    return None
             P = S[:, b:] @ C[b:]  # the step taken outside the old Ritz block
             Z = orthonormal(np.hstack([R, P]), np.hstack([v0[:, None], X]))
             S, AS = np.hstack([X, Z]), np.hstack([AX, apply(Z)])

@@ -16,7 +16,8 @@ reference ``datasets.py:148-166``). Both are re-expressed here as:
 3. per-partition running sums via a window PARTITIONED by
    ``spark_partition_id()`` — bounded partitions, no funnel.
 4. partition-boundary offsets: one tiny aggregate (≤ #partitions rows)
-   prefix-summed and broadcast back.
+   prefix-summed and broadcast back — or, for the mean ranks, collected
+   to the driver, so that one persisted table ranks several columns.
 
 mean_rank(v) = (# rows < v) + 1 + (tie_count(v) − 1)/2 — arithmetic
 identical to ``rank() + (count(*) over (partition by v) − 1)/2.0``, so
@@ -28,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from graphem_rapids_spark.checkpoint import _bind_release
 
 
 def _prefix_counts(df: DataFrame, col: str) -> DataFrame:
@@ -76,20 +79,79 @@ def _prefix_counts(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def global_mean_rank(df: DataFrame, col: str, out: str) -> DataFrame:
-    """Append mean-tie (scipy ``rankdata``-style) global ranks of
-    ``col`` as ``out`` without a partition-less window: rank table via
-    :func:`_prefix_counts`, then an equi-join back on the value (hash
-    partitionable; null-safe so null rows keep their rank like the
-    window formulation)."""
-    ranks = _prefix_counts(df, col).select(
-        F.col(col).alias("_rank_key"),
-        (F.col("_less") + 1 + (F.col("_c") - 1) / 2.0).alias(out),
+def global_mean_ranks(df: DataFrame, cols: list[str], outs: list[str]) -> DataFrame:
+    """Append the mean-tie (scipy ``rankdata``-style) global rank of
+    each ``cols[j]`` as ``outs[j]`` without a partition-less window,
+    every column in ONE pass:
+
+    1. each row becomes one (j, value) entry per column — the value
+       sits in a struct whose other fields are null, so every column
+       keeps its own type and Spark's order (nulls first, NaN last,
+       −0.0 = 0.0);
+    2. entries collapse to one (j, value, tie count) row per tie group —
+       so ties are exact at any row count — which are range-partitioned
+       on (j, value) and persisted;
+    3. the per-(range partition, column) totals (≤ shuffle partitions ×
+       columns rows) are collected — the one action at call time;
+    4. one window partitioned by range partition gives each tie group
+       the rows before it, and the rank table is joined back per column
+       on the value (null-safe, so null rows keep their rank).
+
+    ``unpersist()``/``checkpoint.release`` on the result frees the
+    persisted table."""
+    spark = df.sparkSession
+    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    d = len(cols)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    entries = [
+        F.struct(
+            F.lit(j).alias("_j"),
+            F.struct(
+                *[
+                    (F.col(c) if i == j else F.lit(None).cast(types[c])).alias(f"_v{i}")
+                    for i, c in enumerate(cols)
+                ]
+            ).alias("_v"),
+        )
+        for j in range(d)
+    ]
+    part = (
+        df.select(F.explode(F.array(*entries)).alias("_e"))
+        .groupBy("_e._j", "_e._v")
+        .agg(F.count("*").alias("_c"))
+        .repartitionByRange(npart, F.col("_j").asc(), F.col("_v").asc())
+        .withColumn("_pid", F.spark_partition_id())
+        # persisted: range boundaries come from a sample of the input;
+        # a recompute could draw another sample and disagree with the
+        # collected totals
+        .persist()
     )
-    joined = df.join(
-        ranks, F.col(col).eqNullSafe(F.col("_rank_key")), "left"
-    ).drop("_rank_key")
-    return joined
+    tot = {
+        (r._pid, r._j): r._t
+        for r in part.groupBy("_pid", "_j").agg(F.sum("_c").alias("_t")).collect()
+    }
+    # the window sums all columns of a range partition in (j, value)
+    # order, so a (partition, column) starts from the rows of that column
+    # in earlier partitions, minus the rows of earlier columns in its own
+    base, seen = {}, [0] * d
+    for p, j in sorted(tot):
+        base[p * d + j] = seen[j] - sum(tot.get((p, i), 0) for i in range(j))
+        seen[j] += tot[(p, j)]
+    lookup = F.create_map(*[F.lit(x) for kv in sorted(base.items()) for x in kv]).cast(
+        "map<bigint,bigint>"  # typed even when empty (no rows)
+    )
+    w = Window.partitionBy("_pid").orderBy("_j", "_v")
+    less = lookup[F.col("_pid") * d + F.col("_j")] + F.sum("_c").over(w) - F.col("_c")
+    table = part.select("_j", "_v", (less + 1 + (F.col("_c") - 1) / 2.0).alias("_rank"))
+    out = df
+    for j, (c, o) in enumerate(zip(cols, outs)):
+        ranks = table.filter(F.col("_j") == j).select(
+            F.col(f"_v._v{j}").alias("_rank_key"), F.col("_rank").alias(o)
+        )
+        out = out.join(ranks, F.col(c).eqNullSafe(F.col("_rank_key")), "left").drop(
+            "_rank_key"
+        )
+    return _bind_release(out, [part._jdf])
 
 
 def global_dense_index(df: DataFrame, col: str, out: str) -> DataFrame:

@@ -14,9 +14,6 @@ few seconds and without starting Spark:
    re-run) and its allowlist table is well-formed (3 pipe-delimited
    cells per row — catches the r4 corruption).
 3. bench.py's query list only names registered queries.
-4. The runtime dependencies beyond pyspark.sql import: MLlib's
-   ``VectorAssembler`` and ``Correlation`` (``analytics``' Spearman),
-   so a stripped PySpark install fails here instead of mid-suite.
 
 Run before ANY commit that touches queries.py / COVERAGE.md /
 PLANS.md:  python scripts/preflight.py   (exit 0 = safe to commit).
@@ -37,16 +34,7 @@ def fail(msg: str) -> None:
     sys.exit(1)
 
 
-def check_runtime_deps() -> None:
-    try:
-        from pyspark.ml.feature import VectorAssembler  # noqa: F401
-        from pyspark.ml.stat import Correlation  # noqa: F401
-    except ImportError as exc:
-        fail(f"pyspark.ml is not importable ({exc}); analytics' Spearman needs it")
-
-
 def main() -> None:
-    check_runtime_deps()
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 

@@ -3,6 +3,7 @@ finiteness, coordinate bound, no dimension collapse, determinism, and
 an exact spring-force oracle on K4 (FIXTURES.md)."""
 
 import math
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -108,6 +109,31 @@ def test_driver_rayleigh_quotients_match_dense(spark, monkeypatch, e, n):
     vals = np.linalg.eigvalsh(L)
     got = [X[:, d] @ L @ X[:, d] / (X[:, d] @ X[:, d]) for d in range(k)]
     assert np.abs(np.array(got) - vals[1 : k + 1]).max() <= 1e-8
+
+
+def test_slow_lobpcg_falls_back_to_dense_early(spark, monkeypatch):
+    # a 500-vertex path needs ~650 LOBPCG rounds: the rate check hands it
+    # to the dense eigh after 40, well before the round cap, and the
+    # result is still the exact bottom pair
+    from graphem_rapids_spark.embedding import laplacian
+
+    n = 500
+    e = np.stack([np.arange(n - 1), np.arange(1, n)], 1)
+    calls = []
+    shifted = laplacian._shifted_adjacency
+
+    @contextmanager
+    def counted(*args):
+        with shifted(*args) as matvec:
+            yield lambda X: calls.append(1) or matvec(X)
+
+    monkeypatch.setattr(laplacian, "_shifted_adjacency", counted)
+    df = spark.createDataFrame([(int(a), int(b)) for a, b in e], "src long, dst long")
+    rows = laplacian_embedding(df, n, n_components=2, seed=5).orderBy("id").collect()
+    assert len(calls) <= 2 * laplacian._LOBPCG_WINDOW + 1 < laplacian._LOBPCG_MAX_ITERS
+    X = np.array([r.pos for r in rows])
+    vals, vecs = np.linalg.eigh(_dense_laplacian(e, n))
+    assert np.abs(X - _sign_canonical(vecs[:, 1:3])).max() <= 1e-6
 
 
 def test_distributed_power_iteration_agrees(spark, two_triangles):

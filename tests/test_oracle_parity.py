@@ -83,8 +83,8 @@ JOB_BUDGETS = {
     "graph_densest_subgraph": 46,
     "embedding_pca_power": 1905,
     "graph_effective_diameter": 19,
-    "spearman_qty_price": 8,
-    "spearman_matrix": 8,
+    "spearman_qty_price": 16,
+    "spearman_matrix": 18,
 }
 
 

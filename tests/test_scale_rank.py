@@ -16,8 +16,9 @@ from graphem_rapids_spark.analytics import (
     rank_column,
     spearman_correlation,
 )
+from graphem_rapids_spark.checkpoint import release
 from graphem_rapids_spark.graph.canon import relabel_contiguous
-from graphem_rapids_spark.scale import global_dense_index, global_mean_rank
+from graphem_rapids_spark.scale import global_dense_index, global_mean_ranks
 
 
 def _window_mean_rank(df, col, out):
@@ -36,9 +37,32 @@ def tie_heavy(spark):
 
 
 def test_global_mean_rank_matches_window(tie_heavy):
-    got = {r.id: r.rk for r in global_mean_rank(tie_heavy, "v", "rk").collect()}
+    got = {r.id: r.rk for r in global_mean_ranks(tie_heavy, ["v"], ["rk"]).collect()}
     want = {r.id: r.rk for r in _window_mean_rank(tie_heavy, "v", "rk").collect()}
     assert got == want
+
+
+def test_global_mean_ranks_many_columns_match_window(spark):
+    # one pass ranks columns of different types; nulls rank lowest, NaN
+    # highest, -0.0 ties 0.0 — each column exactly as its own window
+    rng = random.Random(5)
+    rows = [
+        (
+            i,
+            rng.choice([None, math.nan, -0.0, 0.0, 1.5, 1.5, -2.0]),
+            rng.choice([None, 3, 3, 7, -1]),
+            rng.choice(["x", "y", "y", None]),
+        )
+        for i in range(600)
+    ]
+    df = spark.createDataFrame(rows, "id long, a double, b long, c string").repartition(8)
+    ranked = global_mean_ranks(df, ["a", "b", "c"], ["ra", "rb", "rc"])
+    got = {r.id: (r.ra, r.rb, r.rc) for r in ranked.collect()}
+    release(ranked)
+    want = df
+    for c in "abc":
+        want = _window_mean_rank(want, c, "r" + c)
+    assert got == {r.id: (r.ra, r.rb, r.rc) for r in want.collect()}
 
 
 def test_rank_column_global_path_matches_window(tie_heavy):
@@ -49,7 +73,7 @@ def test_rank_column_global_path_matches_window(tie_heavy):
 
 def test_all_equal_column(spark):
     df = spark.createDataFrame([(i, 4.0) for i in range(100)], "id long, v double")
-    out = global_mean_rank(df, "v", "rk").select("rk").distinct().collect()
+    out = global_mean_ranks(df, ["v"], ["rk"]).select("rk").distinct().collect()
     assert [r.rk for r in out] == [(1 + 100) / 2.0]  # mean of 1..100
 
 
@@ -90,7 +114,7 @@ def test_spearman_unchanged(spark):
     assert spearman_correlation(df, "a", "b") == pytest.approx(1.0, abs=1e-12)
 
 
-# ---- Spearman contract: MLlib's sort-based rank correlation must give
+# ---- Spearman contract: the prefix-sum rank correlation must give
 # scipy.stats.spearmanr (Pearson of average ranks) on any partitioning
 def _average_ranks(x):
     order = np.argsort(x, kind="stable")
@@ -160,4 +184,12 @@ def test_full_correlation_matrix_matches_pairwise(tie_pairs):
     assert abs(mat[("a", "b")] - want) <= 1e-12
     assert abs(mat[("c", "b")] + want) <= 1e-12
     assert mat[("a", "c")] == pytest.approx(-1.0, abs=1e-12)
-    assert all(mat[(x, x)] == 1.0 for x in "abc")
+    assert all(mat[(x, x)] == pytest.approx(1.0, abs=1e-12) for x in "abc")
+
+
+def test_spearman_frees_its_rank_table(spark, tie_pairs):
+    df, _ = tie_pairs
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    before = len(storage())
+    full_correlation_matrix(df, ["a", "b"])
+    assert len(storage()) == before
