@@ -19,9 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from graphem_rapids_spark.queries import layout_seed_selection
+    from graphem_rapids_spark.queries import QUERIES
 
-    return layout_seed_selection(spark, "/root/testdata/sf0.001")
+    return QUERIES["layout_seed_selection"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

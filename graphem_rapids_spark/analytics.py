@@ -34,8 +34,9 @@ from graphem_rapids_spark.checkpoint import (
     eager_materialize,
     iterate,
     lazy_checkpoint,
+    owned,
+    persist,
     release,
-    released_with,
     row_count,
 )
 from graphem_rapids_spark.graph.canon import symmetrize_edges, vertex_degrees
@@ -85,6 +86,7 @@ def graph_stats(edges: DataFrame, n_vertices: int) -> dict:
 
 
 # ------------------------------------------------------------------- A4
+@owned
 def pagerank(
     edges: DataFrame,
     n_vertices: int | None = None,
@@ -128,9 +130,9 @@ def pagerank(
     # ships partial-aggregate output (n-sized), never the edge stream.
     sym = eager_materialize(symmetrize_edges(edges))
     out_deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("od"))
-    base = verts.join(out_deg, "id", "left").select(
+    base = persist(verts.join(out_deg, "id", "left").select(
         "id", F.coalesce("od", F.lit(0)).alias("od")
-    ).persist()
+    ))
     pr = base.select("id", "od", F.lit(1.0 / n).alias("value")).transform(eager_checkpoint)
     # dangling vertices exist only if some od == 0 — check ONCE, not
     # one driver action per iteration (copurchase-style graphs have
@@ -169,11 +171,10 @@ def pagerank(
 
     # fixed-iteration mode (tol = 0) runs no convergence job
     pr, _ = iterate(pr, step, max_iter, stop=converged if tol > 0 else None)
-    base.unpersist()
-    sym.unpersist()
-    return released_with(pr.select("id", "value"), [pr])
+    return pr.select("id", "value")
 
 
+@owned
 def pagerank_personalized(
     edges: DataFrame,
     seeds: DataFrame,
@@ -215,7 +216,7 @@ def pagerank_personalized(
     # partial-agg output shuffles per iteration)
     sym = eager_materialize(symmetrize_edges(edges))
     out_deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("od"))
-    base = (
+    base = persist(
         verts.join(out_deg, "id", "left")
         .join(s.select("id", F.lit(1).alias("_seed")), "id", "left")
         .select(
@@ -223,7 +224,6 @@ def pagerank_personalized(
             F.coalesce("od", F.lit(0)).alias("od"),
             (F.coalesce("_seed", F.lit(0)) / F.lit(float(k))).alias("e"),
         )
-        .persist()
     )
     pr = base.select("id", "od", "e", F.col("e").alias("value")).transform(eager_checkpoint)
     has_dangling = base.filter(F.col("od") == 0).limit(1).count() > 0
@@ -253,11 +253,10 @@ def pagerank_personalized(
         )
 
     pr, _ = iterate(pr, step, max_iter)
-    base.unpersist()
-    sym.unpersist()
-    return released_with(pr.select("id", "value"), [pr])
+    return pr.select("id", "value")
 
 
+@owned
 def pagerank_weighted(
     edges: DataFrame,
     alpha: float = 0.85,
@@ -287,9 +286,9 @@ def pagerank_weighted(
     strength = sym.groupBy(F.col("src").alias("id")).agg(
         F.sum("weight").cast("double").alias("st")
     )
-    base = verts.join(strength, "id", "left").select(
+    base = persist(verts.join(strength, "id", "left").select(
         "id", F.coalesce("st", F.lit(0.0)).alias("st")
-    ).persist()
+    ))
     pr = base.select("id", "st", F.lit(1.0 / n).alias("value")).transform(eager_checkpoint)
 
     def step(pr, _r):
@@ -314,12 +313,11 @@ def pagerank_weighted(
         )
 
     pr, _ = iterate(pr, step, max_iter)
-    base.unpersist()
-    sym.unpersist()
-    return released_with(pr.select("id", "value"), [pr])
+    return pr.select("id", "value")
 
 
 # ------------------------------------------------------------------- A3
+@owned
 def eigenvector_centrality(
     edges: DataFrame,
     n_vertices: int,
@@ -340,7 +338,7 @@ def eigenvector_centrality(
     verts = spark.range(n_vertices).select(F.col("id").cast("long"))
     # the state is the unnormalized product y (x0 with norm 1); the
     # round's norm aggregate is its one full scan
-    y0 = verts.select("id", F.lit(1.0 / math.sqrt(n_vertices)).alias("value")).persist()
+    y0 = persist(verts.select("id", F.lit(1.0 / math.sqrt(n_vertices)).alias("value")))
     norm = [1.0]
     prev = {}
 
@@ -373,8 +371,7 @@ def eigenvector_centrality(
         return delta < n_vertices * tol
 
     y, _ = iterate(y0, step, max_iter, stop=normalize)
-    sym.unpersist()
-    return released_with(normalized(y), [y])
+    return normalized(y)
 
 
 # ------------------------------------------------------------------- A7
@@ -395,8 +392,6 @@ def star_contract_edges(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     ``GRAPHEM_CC_STAR_MIN`` switch). Convergence = stable edge set,
     detected by a (count, Σxxhash64) signature and confirmed with an
     exact exceptAll before exiting (runs once, at the fixpoint)."""
-    from graphem_rapids_spark.checkpoint import eager_checkpoint, release
-
     e = eager_checkpoint(
         edges.select(
             F.greatest("src", "dst").alias("x"), F.least("src", "dst").alias("y")
@@ -425,8 +420,6 @@ def star_contract_edges(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         # small-star over the canonical orientation: every neighbor of
         # x (all < x) and x itself link to x's min neighbor
         smins = e1.groupBy("x").agg(F.min("y").alias("m"))
-        from graphem_rapids_spark.checkpoint import eager_checkpoint
-
         e2 = eager_checkpoint(
             e1.join(smins, "x")
             .filter(F.col("y") != F.col("m"))
@@ -468,15 +461,11 @@ def _connected_components_star(
     (isolated ids label themselves)."""
     spark = edges.sparkSession
     e = star_contract_edges(edges, max_iter)
-    from graphem_rapids_spark.checkpoint import eager_checkpoint, release
-
-    # materialize the component-sized star map BEFORE freeing the
-    # forest: release actually drops the blocks now (checkpoint.py),
-    # so a lazy groupBy over e would read freed state at action time
+    # the component-sized star map, materialized so the forest is not
+    # read by the result (its owning call frees it at return)
     stars = eager_checkpoint(
         e.groupBy(F.col("x").alias("id")).agg(F.min("y").alias("component"))
     )
-    release(e)
     if vertices is None:
         ids = spark.range(n_vertices).select(F.col("id").cast("long"))
     else:
@@ -486,6 +475,7 @@ def _connected_components_star(
     )
 
 
+@owned
 def connected_components(
     edges: DataFrame,
     n_vertices: int,
@@ -529,15 +519,11 @@ def connected_components(
     if algorithm != "minlabel":
         raise ValueError(f"unknown algorithm {algorithm!r}")
     spark = edges.sparkSession
-    sym = symmetrize_edges(edges).persist()
-    if vertices is None:
-        labels = spark.range(n_vertices).select(
-            F.col("id").cast("long"), F.col("id").cast("long").alias("component")
-        ).persist()
-    else:
-        labels = vertices.select(
-            F.col("id").cast("long"), F.col("id").cast("long").alias("component")
-        ).persist()
+    sym = persist(symmetrize_edges(edges))
+    ids = spark.range(n_vertices) if vertices is None else vertices
+    labels = persist(
+        ids.select(F.col("id").cast("long"), F.col("id").cast("long").alias("component"))
+    )
     changed = []
 
     def step(labels, _r):
@@ -554,7 +540,6 @@ def connected_components(
         )
 
     labels, _ = iterate(labels, step, max_iter, stop=_settled("component", changed))
-    sym.unpersist()
     if require_convergence and changed[-1:] != [0]:
         raise RuntimeError(
             f"connected_components(minlabel) did not converge in "
@@ -562,7 +547,7 @@ def connected_components(
             "use algorithm='star' (O(log d) rounds) instead of raising "
             "the cap"
         )
-    return released_with(labels.select("id", "component"), [labels])
+    return labels.select("id", "component")
 
 
 def _settled(col: str, changed: list):
@@ -578,6 +563,7 @@ def _settled(col: str, changed: list):
     return stop
 
 
+@owned
 def label_propagation(
     edges: DataFrame, max_rounds: int = 10, converge: bool = True
 ) -> DataFrame:
@@ -647,10 +633,10 @@ def label_propagation(
         # rounds per checkpoint are bit-identical at half the plan
         # conversions
         labels, _ = iterate(labels, lambda lbl, _r: _one_round(lbl), max_rounds, batch=2)
-    release(sym)
-    return released_with(labels.select("id", "label"), [labels])
+    return labels.select("id", "label")
 
 
+@owned
 def k_core(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
     """(id, core_degree) — the k-core: the maximal subgraph where every
     vertex has degree ≥ k within the subgraph, by iterative peeling
@@ -679,9 +665,7 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
         )
 
     cur, _ = iterate(cur, peel, max_rounds, stop=_size_fixpoint(cur.count()))
-    return released_with(
-        cur.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("core_degree")), [cur]
-    )
+    return cur.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("core_degree"))
 
 
 def _size_fixpoint(n: int):
@@ -705,6 +689,7 @@ def _size_fixpoint(n: int):
 TRIANGLE_SKEW_RATIO = 8.0
 
 
+@owned
 def oriented_triangles(cur: DataFrame) -> DataFrame:
     """(a, b, c) — every triangle of the canonical edge set exactly
     once, enumerated with the DEGREE-ORDERED orientation
@@ -747,9 +732,7 @@ def oriented_triangles(cur: DataFrame) -> DataFrame:
     )
     # localCheckpoint, not persist: fwd is probed three times below
     # (both wedge sides + the closing join) so materializing it avoids
-    # re-running the two degree joins, and the block is reclaimed by
-    # the context cleaner once the caller drops the triangle frame
-    # (k_truss consumes it fully every round)
+    # re-running the two degree joins
     fwd = e.select(
         F.when(F.col("_ks") < F.col("_kd"), F.col("src")).otherwise(F.col("dst")).alias("u"),
         F.when(F.col("_ks") < F.col("_kd"), F.col("dst")).otherwise(F.col("src")).alias("w"),
@@ -770,6 +753,7 @@ def oriented_triangles(cur: DataFrame) -> DataFrame:
     return tri
 
 
+@owned
 def k_truss(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
     """Canonical (src, dst) edges of the k-truss: the maximal subgraph
     where every edge participates in ≥ k−2 triangles, by iterative
@@ -873,6 +857,7 @@ MOTIF_WEDGE_VOLUME_MAX = 200_000_000
 MOTIF_CAP_DEFAULT = 64
 
 
+@owned
 def motif_census(edges: DataFrame, cap: int | None = None) -> DataFrame:
     """1-row (n_wedges, n_closed, n_triangles, n_squares,
     n_wedges_dropped) wedge/triangle/4-cycle census with a hub-capped
@@ -1018,6 +1003,7 @@ def motif_census(edges: DataFrame, cap: int | None = None) -> DataFrame:
     )
 
 
+@owned
 def largest_connected_component(edges: DataFrame, n_vertices: int) -> DataFrame:
     """Edge list restricted to the LCC (reference LCC extraction)."""
     comp = connected_components(edges, n_vertices)
@@ -1032,6 +1018,7 @@ def largest_connected_component(edges: DataFrame, n_vertices: int) -> DataFrame:
 
 
 # ------------------------------------------------------------------- A5
+@owned
 def bfs_distances(
     edges: DataFrame, sources: DataFrame, max_depth: int = 100
 ) -> DataFrame:
@@ -1041,20 +1028,19 @@ def bfs_distances(
     The shared kernel under closeness and harmonic centrality; same
     broadcast↔shuffle frontier switch and per-round localCheckpoint
     discipline as the IC cascade (the one frontier sweep,
-    :func:`_bfs_levels`). ``unpersist()``/``release`` on the result
-    frees every level's blocks."""
+    :func:`_bfs_levels`). ``release`` on the result frees every
+    level's blocks."""
     sym = eager_materialize(symmetrize_edges(edges))
     levels, _ = _bfs_levels(sym, sources.select(F.col("id").alias("s"), "id"), ["s"], max_depth)
-    sym.unpersist()
     # every vertex first reached at level d is at distance d by
     # construction, so d is stamped per level, never shuffled
-    visited = reduce(
+    return reduce(
         DataFrame.unionAll,
         [lvl.select("s", "id", F.lit(d).alias("d")) for d, lvl in enumerate(levels)],
     )
-    return released_with(visited, levels)
 
 
+@owned
 def closeness_centrality(
     edges: DataFrame, n_vertices: int, sources: DataFrame | None = None, max_iter: int = 100
 ) -> DataFrame:
@@ -1069,18 +1055,16 @@ def closeness_centrality(
     per_src = visited.groupBy("s").agg(
         F.sum("d").alias("tot"), (F.count("*") - 1).alias("r")
     )
-    return released_with(
-        per_src.select(
-            F.col("s").alias("id"),
-            F.when(
-                F.col("tot") > 0,
-                (F.col("r") / F.col("tot")) * (F.col("r") / float(max(n - 1, 1))),
-            ).otherwise(F.lit(0.0)).alias("value"),
-        ),
-        [visited],
+    return per_src.select(
+        F.col("s").alias("id"),
+        F.when(
+            F.col("tot") > 0,
+            (F.col("r") / F.col("tot")) * (F.col("r") / float(max(n - 1, 1))),
+        ).otherwise(F.lit(0.0)).alias("value"),
     )
 
 
+@owned
 def harmonic_centrality(
     edges: DataFrame,
     sources: DataFrame | None = None,
@@ -1105,7 +1089,7 @@ def harmonic_centrality(
         raise ValueError("harmonic_centrality: max_depth must be in 1..40")
     lcm = math.lcm(*range(1, max_depth + 1))
     visited = bfs_distances(edges, sources, max_depth=max_depth)
-    return released_with(
+    return (
         visited.filter(F.col("d") > 0)
         .groupBy("id")
         # DECIMAL sum: Σ lcm/d over many sources can pass 2⁶³ at deep
@@ -1113,8 +1097,7 @@ def harmonic_centrality(
         .agg(F.sum(F.expr(f"{lcm} div d").cast("decimal(38,0)")).alias("h_fp"))
         .select(
             "id", (F.col("h_fp").cast("double") / F.lit(float(lcm))).alias("value")
-        ),
-        [visited],
+        )
     )
 
 
@@ -1153,7 +1136,6 @@ def _bfs_levels(edge_tbl, level0, keys, max_depth, col=None, agg=None):
         msgs = msgs.groupBy(*keys, "id").agg(agg.alias(col)) if col else msgs.distinct()
         frontier, frontier_n = checkpoint_count(msgs.join(seen, [*keys, "id"], "left_anti"))
         if frontier_n == 0:
-            release(frontier)
             break
         levels.append(frontier)
         level_counts.append(frontier_n)
@@ -1234,8 +1216,7 @@ def _brandes_dependencies(
     Returns ``(sym, tables, counts)``: the materialized symmetric edge
     table, one table per BFS level — level 0 as swept, deeper levels
     (s, id, ``carry``, delta_fp) — and the level sizes (``counts[0]``
-    is the number of sources). The caller releases ``sym`` and every
-    table."""
+    is the number of sources)."""
     spark = edges.sparkSession
     # row checkpoint (see pagerank): broadcast rounds are map-side
     # joins and AQE does not reuse a checkpoint's partitioning anyway
@@ -1247,7 +1228,7 @@ def _brandes_dependencies(
     if len(levels) == 1:
         return sym, levels, counts
     zero = F.lit(0).cast("decimal(38,0)")
-    tables = [released_with(levels[-1].withColumn("delta_fp", zero), levels[-1:])]
+    tables = [levels[-1].withColumn("delta_fp", zero)]
     for d in range(len(levels) - 2, 0, -1):
         contrib = (
             _successor_rows(sym, carry, term, levels[d], tables[0], counts[d + 1])
@@ -1266,20 +1247,17 @@ def _brandes_dependencies(
     return sym, levels[:1] + tables, counts
 
 
-def _rescaled_dependency(sym, tables, counts, vertices, n_vertices, normalized, halve):
+def _rescaled_dependency(tables, counts, vertices, n_vertices, normalized, halve):
     """Per-vertex value from :func:`_brandes_dependencies`' tables:
     the 2⁻⁴⁰ fixed-point δ sum over the levels strictly between the
     sources (which Brandes excludes) and the deepest level (δ = 0),
     sampling rescale by n/k (networkx convention), then ``normalized``
     by (n-1)(n-2) or, unnormalized, halved for undirected betweenness
     (``halve``; load does not halve). Zero-filled over ``vertices``
-    (dense 0..n-1 when None). ``sym`` and the unread tables are
-    released at once; ``unpersist()`` on the result frees the rest."""
+    (dense 0..n-1 when None)."""
     inner = tables[1:-1]
-    for t in (sym, tables[0], tables[-1]):
-        release(t)
     if vertices is None:
-        vertices = sym.sparkSession.range(n_vertices).select(F.col("id").cast("long"))
+        vertices = tables[0].sparkSession.range(n_vertices).select(F.col("id").cast("long"))
     else:
         vertices = vertices.select(F.col("id").cast("long"))
     if not inner:
@@ -1298,14 +1276,12 @@ def _rescaled_dependency(sym, tables, counts, vertices, n_vertices, normalized, 
         val = dsum * scale / 2.0
     else:
         val = dsum * scale
-    return released_with(
-        vertices.join(raw, "id", "left").select(
-            "id", F.coalesce(val, F.lit(0.0)).alias("value")
-        ),
-        inner,
+    return vertices.join(raw, "id", "left").select(
+        "id", F.coalesce(val, F.lit(0.0)).alias("value")
     )
 
 
+@owned
 def betweenness_sampled(
     edges: DataFrame,
     n_vertices: int,
@@ -1327,8 +1303,7 @@ def betweenness_sampled(
     ``delta(v) = Σ_w σ(v)/σ(w)·(1+delta(w))`` over successor edges —
     again one broadcast-join + groupBy per level, in exact 2⁻⁴⁰ fixed
     point (:func:`_brandes_dependencies`). Every per-level table is
-    ``localCheckpoint``-ed so plans stay flat; ``unpersist()`` on the
-    result frees them.
+    ``localCheckpoint``-ed so plans stay flat.
 
     With all vertices as sources this is exact Brandes; with k sampled
     sources the result is rescaled by n/k (networkx ``_rescale``
@@ -1339,13 +1314,11 @@ def betweenness_sampled(
     vertex table for graphs with raw/sparse ids (e.g. part keys) —
     otherwise high-id vertices silently fall outside ``range(n)``.
     """
-    sym, tables, counts = _brandes_dependencies(
+    _, tables, counts = _brandes_dependencies(
         edges, n_vertices, sources, max_depth,
         "sigma", F.lit(1).cast("decimal(38,0)"), F.sum("sigma"), _brandes_term,
     )
-    return _rescaled_dependency(
-        sym, tables, counts, vertices, n_vertices, normalized, halve=True
-    )
+    return _rescaled_dependency(tables, counts, vertices, n_vertices, normalized, halve=True)
 
 
 def _networkx_centrality(edges: DataFrame, n_vertices: int, measure: str, what: str) -> DataFrame:
@@ -1390,8 +1363,7 @@ def rank_column(df: DataFrame, col: str, out: str, partition_cols: tuple[str, ..
     GLOBAL case avoids the partition-less window (all rows → one
     partition) via the range-partitioned prefix-sum
     ``scale.global_mean_ranks`` — bit-identical values, every stage
-    distributed, one small collect at call time; ``release`` on the
-    result frees its persisted rank table."""
+    distributed, one small collect at call time."""
     if not partition_cols:
         from graphem_rapids_spark.scale import global_mean_ranks
 
@@ -1414,6 +1386,7 @@ def _corr_safe(a: str, b: str):
     )
 
 
+@owned
 def full_correlation_matrix(df: DataFrame, cols: list[str]) -> dict:
     """Pairwise Spearman ρ over measure columns (reference
     ``visualization.py:52-90``; scipy.stats.spearmanr semantics:
@@ -1426,15 +1399,13 @@ def full_correlation_matrix(df: DataFrame, cols: list[str]) -> dict:
     from graphem_rapids_spark.scale import global_mean_ranks
 
     ranks = [f"_r{i}" for i in range(len(cols))]
-    ranked = global_mean_ranks(df.select(*cols), cols, ranks)
-    row = ranked.agg(
+    row = global_mean_ranks(df.select(*cols), cols, ranks).agg(
         *[
             _corr_safe(ranks[i], ranks[j]).alias(f"{i}|{j}")
             for i in range(len(cols))
             for j in range(i, len(cols))
         ]
     ).first()
-    release(ranked)
     out = {}
     for i, a in enumerate(cols):
         for j in range(i, len(cols)):
@@ -1519,6 +1490,7 @@ def hindex_round(sym: DataFrame, c: DataFrame) -> DataFrame:
     )
 
 
+@owned
 def coreness(edges: DataFrame, max_rounds: int = 60) -> DataFrame:
     """(id, core) — the full k-core decomposition (every vertex's core
     number) by synchronous h-index iteration from degrees; converges
@@ -1553,10 +1525,10 @@ def coreness(edges: DataFrame, max_rounds: int = 60) -> DataFrame:
             RuntimeWarning,
             stacklevel=2,
         )
-    sym.unpersist()
-    return released_with(c.select("id", F.col("c").alias("core")), [c])
+    return c.select("id", F.col("c").alias("core"))
 
 
+@owned
 def katz_centrality(
     edges: DataFrame,
     alpha: float = 0.001,
@@ -1583,9 +1555,9 @@ def katz_centrality(
     )
     n = verts.count()
     use_broadcast = _vertex_table_fits_broadcast(n, broadcast_max)
-    sym = symmetrize_edges(edges).repartition(
+    sym = persist(symmetrize_edges(edges).repartition(
         F.col("dst") if use_broadcast else F.col("src")
-    ).persist()
+    ))
     x = verts.select("id", F.lit(beta).alias("value")).transform(eager_checkpoint)
 
     def step(x, _r):
@@ -1602,10 +1574,10 @@ def katz_centrality(
         )
 
     x, _ = iterate(x, step, max_iter)
-    sym.unpersist()
     return x
 
 
+@owned
 def hits(
     edges: DataFrame,
     max_iter: int = 4,
@@ -1624,7 +1596,7 @@ def hits(
     there."""
     if max_iter < 1:
         raise ValueError("hits: max_iter must be >= 1")
-    e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long")).persist()
+    e = persist(edges.select(F.col("src").cast("long"), F.col("dst").cast("long")))
     h = (
         e.select(F.col("src").alias("id")).distinct()
         .select("id", F.lit(1.0).alias("score"))
@@ -1648,7 +1620,6 @@ def hits(
         if a is not None:
             release(a)
         h, a = h_new, a_new
-    e.unpersist()
 
     def _norm(df, role):
         mx = df.agg(F.max("score")).first()[0] or 1.0
@@ -1658,9 +1629,10 @@ def hits(
             (F.col("score") / F.lit(mx)).alias("score"),
         )
 
-    return released_with(_norm(h, "hub").unionAll(_norm(a, "authority")), [h, a])
+    return _norm(h, "hub").unionAll(_norm(a, "authority"))
 
 
+@owned
 def random_walks(
     edges: DataFrame,
     seeds: DataFrame,
@@ -1687,11 +1659,10 @@ def random_walks(
 
     sym = symmetrize_edges(edges)
     w_nbr = Window.partitionBy("src").orderBy(F.col("dst").asc())
-    nbr = (
+    nbr = persist(
         sym.select("src", "dst")
         .withColumn("rn", F.row_number().over(w_nbr))
         .withColumn("deg", F.count("*").over(Window.partitionBy("src")))
-        .persist()
     )
     rep = seeds.sparkSession.range(reps).select(F.col("id").cast("long").alias("rep"))
     state = (
@@ -1721,9 +1692,10 @@ def random_walks(
             .transform(eager_checkpoint)
         )
         out = out.unionAll(state)
-    nbr.unpersist()
     return out
 
+
+@owned
 def node2vec_walks(
     edges: DataFrame,
     seeds: DataFrame,
@@ -1756,7 +1728,7 @@ def node2vec_walks(
     per walker with a walker-partitioned running-sum window."""
     from graphem_rapids_spark.functions import mix_uniform
 
-    sym = symmetrize_edges(edges).select("src", "dst").persist()
+    sym = persist(symmetrize_edges(edges).select("src", "dst"))
     adj = sym.select(F.col("src").alias("_pa"), F.col("dst").alias("_pb"))
     rep = seeds.sparkSession.range(reps).select(F.col("id").cast("long").alias("rep"))
     state = (
@@ -1812,10 +1784,10 @@ def node2vec_walks(
         out = out.unionAll(
             state.select("walker", F.lit(t).alias("step"), F.col("cur").alias("id"))
         )
-    sym.unpersist()
     return out
 
 
+@owned
 def minimum_spanning_forest(
     wedges: DataFrame,
     rounds: int = 5,
@@ -1849,18 +1821,16 @@ def minimum_spanning_forest(
     chain is a 2^jumps-leaf plan) and drops the inherited size
     estimate, which ``visitJoin`` would otherwise multiply per
     self-join generation (SCALE.md §"Deep self-join chains") — and
-    the superseded generation is released. The returned edge set is
-    bound to the per-round picks it reads."""
+    the superseded generation is released."""
     dir_ = wedges.select(
         F.col("src").alias("esrc"), F.col("dst").alias("edst"),
         F.col("weight").cast("long").alias("w"),
     )
-    dire = (
+    dire = persist(
         dir_.select("esrc", "edst", "w", F.col("esrc").alias("u"), F.col("edst").alias("v"))
         .unionAll(
             dir_.select("esrc", "edst", "w", F.col("edst").alias("u"), F.col("esrc").alias("v"))
         )
-        .persist()
     )
 
     comp = eager_checkpoint(
@@ -1869,7 +1839,6 @@ def minimum_spanning_forest(
         .select("id", F.col("id").alias("lbl"))
     )
     picked = None
-    sels = []
     for _r in range(rounds):
         lab = comp.select(F.col("id").alias("_i"), F.col("lbl").alias("_l"))
         ce = (
@@ -1890,7 +1859,6 @@ def minimum_spanning_forest(
                 F.col("m.cv").alias("cv"),
             )
         )
-        sels.append(sel)
         picks = sel.select("esrc", "edst", "w")
         picked = picks if picked is None else picked.unionAll(picks)
         mu = sel.select(F.col("cu").alias("mc"), F.col("cv").alias("mt"))
@@ -1925,8 +1893,7 @@ def minimum_spanning_forest(
         release(comp)
         release(p)
         comp = nxt
-    dire.unpersist()
-    return comp, released_with(picked.distinct(), sels)
+    return comp, picked.distinct()
 
 
 def _accumulate(acc: DataFrame | None, win: DataFrame) -> DataFrame:
@@ -1939,6 +1906,7 @@ def _accumulate(acc: DataFrame | None, win: DataFrame) -> DataFrame:
     return grown
 
 
+@owned
 def maximal_independent_set(
     edges: DataFrame,
     rounds: int = 8,
@@ -1962,7 +1930,7 @@ def maximal_independent_set(
     surviving edge set + two semi-joins to retire vertices; the edge
     set shrinks geometrically. Each generation is one stats-severed
     checkpoint and the superseded one is released (SCALE.md §"Deep
-    self-join chains"); the results hold only their own blocks."""
+    self-join chains")."""
     from graphem_rapids_spark.functions import MIX_M, mix_uniform
 
     pri = (
@@ -2018,9 +1986,10 @@ def maximal_independent_set(
         )
         release(esym)
         esym = kept
-    release(esym)
-    return mis, released_with(und.select("id"), [und])
+    return mis, und.select("id")
 
+
+@owned
 def maximal_matching(
     edges: DataFrame,
     rounds: int = 16,
@@ -2041,8 +2010,7 @@ def maximal_matching(
     surviving edges + two semi-joins to retire matched endpoints; the
     live edge set shrinks geometrically. Each generation is one
     stats-severed checkpoint and the superseded one is released
-    (SCALE.md §"Deep self-join chains"); the result holds only its
-    own blocks."""
+    (SCALE.md §"Deep self-join chains")."""
     from graphem_rapids_spark.functions import MIX_M, mix_uniform
 
     h = (
@@ -2101,9 +2069,10 @@ def maximal_matching(
         live = left
         if n_left == 0:
             break
-    release(live)
     return matched
 
+
+@owned
 def densest_subgraph(
     edges: DataFrame,
     rounds: int = 28,
@@ -2157,10 +2126,10 @@ def densest_subgraph(
         release(live)
         release(deg)
         live = left
-    release(live)
     return best
 
 
+@owned
 def hyperball(
     edges: DataFrame,
     m: int = 16,
@@ -2175,8 +2144,7 @@ def hyperball(
     of vertices within distance t of each vertex (including itself),
     as a plain DataFrame a user can aggregate into the neighborhood
     function / effective diameter. Past two rounds it reads one
-    checkpoint per register generation; ``unpersist()`` on it frees
-    them.
+    checkpoint per register generation.
 
     This is the SKETCH-ONLY library operator the registry demo query
     ``graph_hyperball`` wraps (that entry fuses an exact-2-hop
@@ -2243,7 +2211,7 @@ def hyperball(
     # past two rounds each register generation is checkpointed: the
     # state self-joins every round (SCALE.md §"Deep self-join
     # chains")
-    ests, gens = [], []
+    ests = []
     for t in range(1, rounds + 1):
         nbr = sym.join(regs.withColumnRenamed("id", "src"), "src").select(
             F.col("dst").alias("id"), "bucket", "m"
@@ -2253,15 +2221,15 @@ def hyperball(
         )
         if rounds > 2:
             regs = eager_checkpoint(regs)
-            gens.append(regs)
         ests.append(_estimate(regs, f"est_r{t}"))
 
     out = ests[0]
     for e in ests[1:]:
         out = out.join(e, "id")
-    return released_with(out, gens)
+    return out
 
 
+@owned
 def load_sampled(
     edges: DataFrame,
     n_vertices: int,
@@ -2295,14 +2263,12 @@ def load_sampled(
     not halve)."""
     # npred of a source is never read (level 0 never plays w in the
     # backward pass) — 1 is a placeholder
-    sym, tables, counts = _brandes_dependencies(
+    _, tables, counts = _brandes_dependencies(
         edges, n_vertices, sources, max_depth,
         "npred", F.lit(1).cast("long"), F.count("*"),
         lambda one_plus_delta: one_plus_delta / F.col("npred_w").cast("double"),
     )
-    return _rescaled_dependency(
-        sym, tables, counts, vertices, n_vertices, normalized, halve=False
-    )
+    return _rescaled_dependency(tables, counts, vertices, n_vertices, normalized, halve=False)
 
 
 def modularity_numerators(
@@ -2520,6 +2486,7 @@ LOUVAIN_REFINE_ROUNDS = 14  # fixed min-label unroll for the refine CC
 LOUVAIN_SEVER_MAX = 100_000
 
 
+@owned
 def _louvain_refine(ew_, labels_, max_rounds: int = LOUVAIN_REFINE_ROUNDS):
     """Leiden-style CONNECTIVITY refinement (Traag et al. 2019's fix
     for Louvain's known disconnected-community artifact): split every
@@ -2546,12 +2513,13 @@ def _louvain_refine(ew_, labels_, max_rounds: int = LOUVAIN_REFINE_ROUNDS):
         vertices=labels_,
         require_convergence=True,
     )
-    ref = released_with(cc.withColumnRenamed("component", "label"), [cc])
+    ref = cc.withColumnRenamed("component", "label")
     n_before = labels_.select("label").distinct().count()
     n_after = ref.select("label").distinct().count()
     return ref, n_after - n_before
 
 
+@owned
 def louvain(
     edges: DataFrame,
     levels: int = 2,
@@ -2602,7 +2570,6 @@ def louvain(
     )
     m_w = int(ew.agg(F.sum("w")).collect()[0][0] or 0)
     if m_w == 0:
-        release(ew)
         empty = spark.createDataFrame([], "id long, community long")
         return empty, []
     verts = (
@@ -2755,9 +2722,10 @@ def louvain(
         qn, nc = q_of(cur_ew, cur_self, m_w)
         row = (level, nc, round(qn / (4.0 * m_w * m_w), 6))
         trajectory.append(row + (n_split,) if refine else row)
-    return released_with(mapping, [mapping, cur_ew, cur_self]), trajectory
+    return mapping, trajectory
 
 
+@owned
 def edge_betweenness_sampled(
     edges: DataFrame,
     n_vertices: int,
@@ -2777,8 +2745,7 @@ def edge_betweenness_sampled(
     sampled sources rescale by n/k; undirected halves (each unordered
     (s,t) pair drives the edge twice); ``normalized`` divides by
     n(n-1)/2 (nx edge normalization). Returns (src, dst, value) over
-    the canonical edge table (zero-filled); ``unpersist()`` on it
-    frees every checkpoint the call made."""
+    the canonical edge table (zero-filled)."""
     sym, tables, counts = _brandes_dependencies(
         edges, n_vertices, sources, max_depth,
         "sigma", F.lit(1).cast("decimal(38,0)"), F.sum("sigma"), _brandes_term,
@@ -2809,4 +2776,4 @@ def edge_betweenness_sampled(
         ).select(
             "src", "dst", F.coalesce(val, F.lit(0.0)).alias("value")
         )
-    return released_with(out, [sym, *tables])
+    return out

@@ -36,6 +36,7 @@ from graphem_rapids_spark.analytics import (
     pagerank,
     spearman_correlation,
 )
+from graphem_rapids_spark.checkpoint import owned, persist
 from graphem_rapids_spark.embedding.embedder import GraphEmbedderSpark
 from graphem_rapids_spark.graph.generators import SparkGraph
 from graphem_rapids_spark.influence import (
@@ -70,6 +71,7 @@ def _as_edges(graph) -> tuple[DataFrame, int, bool]:
     return edges, n, False
 
 
+@owned
 def benchmark_correlations(
     radii: DataFrame, centralities: dict[str, DataFrame]
 ) -> dict[str, float]:
@@ -81,15 +83,14 @@ def benchmark_correlations(
         wide = wide.join(
             df.select("id", F.col("value").alias(f"c_{name}")), "id", "left"
         )
-    wide = wide.fillna(0.0).persist()
-    out = {
+    wide = persist(wide.fillna(0.0))
+    return {
         name: spearman_correlation(wide, "radius", f"c_{name}")
         for name in centralities
     }
-    wide.unpersist()
-    return out
 
 
+@owned
 def run_benchmark(
     graph,
     dim: int = 3,
@@ -112,7 +113,7 @@ def run_benchmark(
     """
     edges, n, canonical = _as_edges(graph)
     t0 = time.time()
-    edges = edges.persist()
+    edges = persist(edges)
     m = edges.count()
     build_time = time.time() - t0
 
@@ -127,7 +128,7 @@ def run_benchmark(
             skipped.append(name)  # same guard as the reference harness
             continue
         t = time.time()
-        cent_dfs[name] = CENTRALITY_FNS[name](edges, n).persist()
+        cent_dfs[name] = persist(CENTRALITY_FNS[name](edges, n))
         cent_dfs[name].count()
         cent_times[name] = time.time() - t
 
@@ -138,7 +139,7 @@ def run_benchmark(
         seed=seed, canonical=canonical,
     )
     emb.run_layout(num_iterations)
-    radii = emb.radial_distances().persist()
+    radii = persist(emb.radial_distances())
     radii.count()
     layout_time = time.time() - t
 
@@ -171,13 +172,10 @@ def run_benchmark(
         result["correlation_matrix"] = full_correlation_matrix(
             wide.fillna(0.0), cols
         )
-    for df in cent_dfs.values():
-        df.unpersist()
-    radii.unpersist()
-    edges.unpersist()
     return result
 
 
+@owned
 def run_influence_benchmark(
     graph,
     k: int = 10,
@@ -193,7 +191,7 @@ def run_influence_benchmark(
     ``benchmarks/run_benchmarks.py:392-461``). Efficiency =
     influence / selection-seconds, the reference's headline metric."""
     edges, n, canonical = _as_edges(graph)
-    edges = edges.persist()
+    edges = persist(edges)
     edges.count()
     out: dict = {"n_vertices": n, "k": k, "p": p, "trials": trials}
 
@@ -227,7 +225,6 @@ def run_influence_benchmark(
             edges, n, k, p, trials, n_sets=n_random_sets, seed=seed
         )
     }
-    edges.unpersist()
     return out
 
 

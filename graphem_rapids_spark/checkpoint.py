@@ -1,60 +1,62 @@
-"""Stats-safe eager checkpointing for iterative kernels.
+"""Stats-safe checkpointing and block ownership for iterative kernels.
 
-Root cause (measured r8, this VM, Spark 4.1): ``localCheckpoint``
-propagates the child plan's CBO statistics into the resulting
-``LogicalRDD`` (SPARK-39834 behavior). Catalyst's size-only join
-estimate is a PRODUCT of child sizes, so a per-iteration plan that
-references its previous checkpoint in k places compounds the
-``sizeInBytes`` BigInt k-fold per iteration — the digit count grows
-exponentially (measured on the Louvain move pass: 132 → 582 → 2383 →
-9585 digits over four passes), and the driver ends up spending entire
-cores inside ``BigInteger.multiplyToomCook3`` DURING PLANNING: pass
-cost exploded 0.7 s → 88 s by pass 9 on a 10-vertex graph with
-constant data, constant lineage (7 RDD lines), and a constant 18 jobs
-per pass. This single mechanism explains the "move passes get slower
-each round" behavior previously attributed to JIT/VM weather.
+Stats severing (measured r8, Spark 4.1): ``localCheckpoint`` keeps the
+child plan's CBO statistics on its ``LogicalRDD`` (SPARK-39834), and
+Catalyst's size-only join estimate is a PRODUCT of child sizes, so a
+state that references its previous checkpoint k times compounds
+``sizeInBytes`` k-fold per round — 132 → 9585 digits over four Louvain
+move passes, pass cost 0.7 s → 88 s inside ``BigInteger`` planning
+math. Rebuilding the frame from the checkpointed RDD through
+``internalCreateDataFrame`` gives the same rows on a fresh
+``LogicalRDD`` with default stats (flat at 19 digits); AQE re-plans
+joins from runtime sizes, so nothing is lost.
 
-Fix: after the eager localCheckpoint, rebuild the DataFrame from the
-checkpointed physical RDD via ``internalCreateDataFrame`` — same
-rows, same schema, but a fresh ``LogicalRDD`` carrying only default
-stats (digit count pinned at 19; the same 14-pass probe holds flat at
-0.5–0.9 s). The pessimistic default size only affects STATIC broadcast
-planning, and AQE re-plans joins from actual runtime shuffle sizes, so
-nothing is lost at any scale.
+Block release (r8, measured with getRDDStorageInfo):
+``DataFrame.unpersist`` only consults the cache manager, which has no
+entry for a checkpoint, so it no-ops on every ``localCheckpoint``'ed
+frame. Each checkpoint therefore captures its ``LogicalRDD``'s RDD and
+rebinds the frame's ``unpersist`` (and :func:`release`) to free it.
 
-Block release (second r8 finding, measured with getRDDStorageInfo):
-``DataFrame.unpersist`` only consults the CACHE MANAGER, which has no
-entry for a checkpoint, so it silently no-ops on ANY localCheckpoint'ed
-frame — severed or not — and the per-round blocks of every iterative
-kernel leak until the driver GC happens to drop the last RDD
-reference. The persisted blocks belong to the ``LogicalRDD`` plan's
-RDD, so :func:`eager_checkpoint` captures that RDD and rebinds the
-returned frame's ``unpersist`` (and :func:`release`) to free it
-directly — verified: storage-info entry count drops by exactly one
-per released checkpoint.
-
-Iteration discipline: :func:`iterate` is the one round driver — every
-replace-the-state loop (power iterations, label moves, peeling,
-relaxation) hands it a ``step`` and gets the batching, lazy
-checkpoint, convergence action and predecessor release from one
-place. The accumulate-every-level frontier loop (BFS, the Brandes
-forward pass, the IC cascade) is the one sweep
-``analytics._bfs_levels``; its union frees every level through
-:func:`released_with`. The Brandes backward pass (betweenness, load,
-edge betweenness) is the one deepest-first loop
-``analytics._brandes_dependencies``: it releases each forward level
-once that level's dependency table is checkpointed, and each kernel's
-result frees the rest through :func:`released_with`. The deep
-self-join kernels (MST pointer jumping, MIS, matching, densest
-subgraph, HyperBall, PCA) keep explicit generation loops: each
-generation is one severed :func:`eager_checkpoint` (or
-:func:`checkpoint_count` when it is counted at once), and the
-superseded one is released.
+Ownership: a result owns the blocks it reads, so release it after
+its last reader. Each checkpoint (through :func:`_sever_and_bind`) and
+each :func:`persist` registers in the innermost open scope; an
+:func:`owned` call frees at return every registered block its
+returned frame(s) cannot read (:func:`readable_blocks`), binds the
+rest to them and hands those to the enclosing scope. A call that
+raises, or returns no frame, frees all it registered. Session memos
+are built :func:`unowned`. In-loop release of superseded state stays,
+for peak memory: :func:`iterate`'s predecessors, the generation loops
+and the Brandes backward pass.
 """
 
 from __future__ import annotations
 
+import contextvars
+import functools
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
+
+# the open ownership scopes, innermost last: each maps a block key
+# (a checkpoint RDD id, or ``_cache_key`` of a persisted Dataset) to
+# the JVM handle whose ``unpersist(blocking)`` frees it
+_SCOPES: contextvars.ContextVar[tuple] = contextvars.ContextVar(
+    "graphem_block_scopes", default=()
+)
+
+
+def _register(key, handle) -> None:
+    scopes = _SCOPES.get()
+    if scopes:
+        scopes[-1][key] = handle
+
+
+def _free(handles, blocking: bool = False) -> None:
+    for handle in handles:
+        try:
+            handle.unpersist(bool(blocking))
+        except Exception:  # pragma: no cover — session teardown races
+            pass
 
 
 def _checkpoint_rdd(df: DataFrame):
@@ -70,35 +72,127 @@ def _checkpoint_rdd(df: DataFrame):
         return None
 
 
-def _bind_release(df: DataFrame, jrdds: list) -> DataFrame:
-    """Attach the owning checkpoint RDDs and make ``df.unpersist()``
-    actually free their blocks, plus the cache-manager entry when the
-    frame was also ``persist``ed (after release the checkpoint is
-    lineage-truncated and must not be read again — same contract as
-    a plain localCheckpoint unpersist). A persisted frame's JVM
-    Dataset works in place of an RDD: both take ``unpersist(blocking)``."""
-    df._graphem_ckpt_rdds = jrdds
+def _bind_release(df: DataFrame, blocks: dict) -> DataFrame:
+    """Add ``blocks`` (key → JVM RDD or persisted JVM Dataset) to what
+    ``df`` owns; ``df.unpersist()`` then frees them too. A released
+    checkpoint is lineage-truncated and must not be read again."""
+    owned_blocks = getattr(df, "_graphem_blocks", None)
+    if owned_blocks is None:
+        owned_blocks = df._graphem_blocks = {}
 
-    def _unpersist(blocking: bool = False, _df=df):
-        DataFrame.unpersist(_df, blocking)
-        for jrdd in jrdds:
-            try:
-                jrdd.unpersist(bool(blocking))
-            except Exception:  # pragma: no cover — session teardown races
-                pass
-        return _df
+        def _unpersist(blocking: bool = False, _df=df):
+            DataFrame.unpersist(_df, blocking)
+            _free(owned_blocks.values(), blocking)
+            return _df
 
-    df.unpersist = _unpersist
+        df.unpersist = _unpersist
+    owned_blocks.update(blocks)
     return df
 
 
-def released_with(df: DataFrame, parts) -> DataFrame:
-    """``df`` rebound so that its ``unpersist()``/:func:`release` frees
-    the checkpoint blocks of every frame in ``parts`` — for results
-    derived from several checkpoints (a union of per-level tables, an
-    aggregate over them) that the caller releases as one."""
-    jrdds = [j for p in parts for j in getattr(p, "_graphem_ckpt_rdds", ())]
-    return _bind_release(df, jrdds)
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _cache_key(jvm, builder) -> tuple:
+    return ("cache", jvm.System.identityHashCode(builder))
+
+
+def readable_blocks(df: DataFrame) -> set:
+    """Keys of every block ``df`` can read: RDD ids and persisted
+    Datasets (``_cache_key``) reachable from the leaves of its
+    cache-substituted plan and of all its subqueries — an
+    ``InMemoryRelation`` gives its column buffers, or the plan it will
+    cache when not built yet — closed over RDD dependencies (so an
+    unmaterialized lazy checkpoint reaches what it will read)."""
+    jvm = df.sparkSession._jvm
+    found, rdds = set(), []
+    plans = [(df._jdf.queryExecution().withCachedData(), True)]
+    while plans:
+        plan, top = plans.pop()
+        if top:  # subqueriesAll is transitive: nested ones need no walk of their own
+            plans.extend((sub, False) for sub in _seq(plan.subqueriesAll()))
+        for leaf in _seq(plan.collectLeaves()):
+            kind = leaf.getClass().getSimpleName()
+            if kind in ("LogicalRDD", "ExternalRDD"):
+                rdds.append(leaf.rdd())
+            elif kind == "InMemoryRelation":
+                builder = leaf.cacheBuilder()
+                found.add(_cache_key(jvm, builder))
+                if builder.isCachedColumnBuffersLoaded():
+                    rdds.append(builder.cachedColumnBuffers())
+                else:
+                    plans.append((builder.logicalPlan(), True))
+    while rdds:
+        rdd = rdds.pop()
+        rid = rdd.id()
+        if rid not in found:
+            found.add(rid)
+            rdds.extend(dep.rdd() for dep in _seq(rdd.dependencies()))
+    return found
+
+
+def _settle(out, blocks: dict) -> None:
+    if isinstance(out, DataFrame):
+        frames = [out]
+    elif isinstance(out, (tuple, list)):
+        frames = [x for x in out if isinstance(x, DataFrame)]
+    else:
+        frames = []
+    kept = {}
+    for df in frames:
+        mine = {k: blocks[k] for k in readable_blocks(df) if k in blocks}
+        if mine:
+            _bind_release(df, mine)
+            kept.update(mine)
+    _free(h for k, h in blocks.items() if k not in kept)
+    for key, handle in kept.items():
+        _register(key, handle)
+
+
+def owned(fn):
+    """Run ``fn`` in an ownership scope (see module docstring)."""
+
+    @functools.wraps(fn)
+    def call(*args, **kwargs):
+        blocks: dict = {}
+        token = _SCOPES.set((*_SCOPES.get(), blocks))
+        try:
+            out = fn(*args, **kwargs)
+        except BaseException:
+            _free(blocks.values())
+            raise
+        finally:
+            _SCOPES.reset(token)
+        if blocks:
+            _settle(out, blocks)
+        return out
+
+    return call
+
+
+@contextmanager
+def unowned():
+    """Run the body outside every scope (session memos)."""
+    token = _SCOPES.set(())
+    try:
+        yield
+    finally:
+        _SCOPES.reset(token)
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()`` owned by the innermost scope. A plan some other
+    owner already cached is left to that owner."""
+    if not _SCOPES.get():
+        return df.persist()
+    cache = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    fresh = cache.lookupCachedData(df._jdf).isEmpty()
+    out = df.persist()
+    if fresh:
+        builder = cache.lookupCachedData(out._jdf).get().cachedRepresentation().cacheBuilder()
+        _register(_cache_key(df.sparkSession._jvm, builder), out._jdf)
+    return out
 
 
 def _sever_and_bind(out: DataFrame, sever_stats: bool) -> DataFrame:
@@ -115,13 +209,13 @@ def _sever_and_bind(out: DataFrame, sever_stats: bool) -> DataFrame:
             new_jdf = spark._jsparkSession.internalCreateDataFrame(
                 jdf.queryExecution().toRdd(), jdf.schema(), False
             )
-            severed = DataFrame(new_jdf, spark)
-            severed._graphem_ckpt_src = out
-            result = severed
+            result = DataFrame(new_jdf, spark)
         except Exception:  # pragma: no cover — connect/older builds
             result = out
     if jrdd is not None:
-        result = _bind_release(result, [jrdd])
+        rid = jrdd.id()
+        result = _bind_release(result, {rid: jrdd})
+        _register(rid, jrdd)
     return result
 
 
@@ -178,21 +272,14 @@ def lazy_checkpoint(df: DataFrame, sever_stats: bool = True) -> DataFrame:
 
 
 def checkpoint_count(df: DataFrame, sever_stats: bool = True):
-    """``(checkpointed_df, row_count)`` in ONE Spark job.
-
-    Every iterative kernel here ends a round with an eager checkpoint
-    followed by a driver action on the result (``count`` for the
-    convergence test) — two jobs whose second one re-scans the blocks
-    the first one just wrote. ``localCheckpoint(eager=True)`` already
-    runs ``rdd.count()`` internally to materialize the blocks and then
-    DISCARDS the number; this helper runs the lazy form and issues that
-    same RDD-level ``count()`` itself — one job that both materializes
-    the checkpoint (blocks persist as the count computes them, lineage
-    truncates at the job boundary) and returns the row count. Measured
-    141 ms vs 241 ms per round on a 20k-row table at local[32]; the
-    saving is a whole scheduling round-trip per iteration, which is
-    exactly what the driver-floor-bound kernels (LPA, IC, BFS,
-    PageRank) pay per round at any scale."""
+    """``(checkpointed_df, row_count)`` in ONE Spark job: the lazy
+    checkpoint plus the RDD-level ``count()`` that
+    ``localCheckpoint(eager=True)`` runs internally and discards — one
+    job materializes the blocks and returns the count, where an eager
+    checkpoint then a ``count`` pays a second scheduling round-trip
+    (measured 141 ms vs 241 ms per round on a 20k-row table at
+    local[32]) — exactly what the driver-floor-bound kernels (LPA, IC,
+    BFS, PageRank) pay per round at any scale."""
     result = lazy_checkpoint(df, sever_stats=sever_stats)
     return result, row_count(result)
 
@@ -216,33 +303,20 @@ def eager_materialize(df: DataFrame) -> DataFrame:
     have no iterative stats compounding, and consumers' auto-broadcast
     decisions still see the real size.
 
-    Why not ``.persist()``: building the columnar in-memory cache runs
-    the compression-encoder pass over every column (measured 10-25
-    µs/row on long/array columns — 30+ CPU-seconds for a 1.2 M-row
-    edge list at sf0.1, erratically worse under memory pressure),
-    while the checkpoint writes rows once at ~1 µs/row. The columnar
-    form only pays off when consumers prune columns out of a wide
-    cached table; every consumer here scans the whole (narrow) table.
-    Under AQE neither form preserves child partitioning for downstream
-    exchange reuse (AdaptiveSparkPlan reports UnknownPartitioning at
-    checkpoint/cache-build time), so the cache's only remaining edge —
-    stable reusable partitioning — does not materialize either.
-    ``df.unpersist()`` on the result actually frees the blocks (see
-    :func:`eager_checkpoint`)."""
+    Why not ``.persist()``: the columnar cache build runs a
+    compression-encoder pass over every column (measured 10-25 µs/row
+    on long/array columns, 30+ CPU-seconds for a 1.2 M-row edge list
+    at sf0.1) where the checkpoint writes rows once at ~1 µs/row, and
+    every consumer here scans the whole narrow table, so column
+    pruning never pays it back. Under AQE neither form keeps child
+    partitioning for exchange reuse."""
     return eager_checkpoint(df, sever_stats=False)
 
 
 def release(df: DataFrame) -> None:
-    """Free the checkpoint blocks behind a frame produced by
-    :func:`eager_checkpoint`, :func:`lazy_checkpoint` or
-    :func:`released_with` (``DataFrame.unpersist`` alone is a
-    cache-manager lookup and no-ops on checkpoints — see module
-    docstring); any other frame is plainly unpersisted."""
-    if hasattr(df, "_graphem_ckpt_rdds"):
-        df.unpersist()
-        return
-    src = getattr(df, "_graphem_ckpt_src", None)
-    (src if src is not None else df).unpersist()
+    """Free the blocks ``df`` owns (a checkpoint's own, those an
+    :func:`owned` call bound to it, or its cache entry)."""
+    df.unpersist()
 
 
 def iterate(state: DataFrame, step, rounds: int, *, batch: int = 1, stop=None):

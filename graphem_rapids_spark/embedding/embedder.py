@@ -22,9 +22,11 @@ Semantics preserved exactly (SURVEY.md §7.4 item 5):
   (``:723-734``), scatter-added per endpoint
 - update + center + divide by per-dim sample std + 1e-6 (``:795-804``)
 
-Iteration/lineage strategy (the Pregel problem, SURVEY.md §4): persist
-each iteration's positions, ``localCheckpoint`` every
-``checkpoint_every`` iterations to truncate lineage.
+Iteration/lineage strategy (the Pregel problem, SURVEY.md §4): every
+iteration checkpoints its moved positions (``localCheckpoint``, lazy
+on the intersection path), which truncates lineage each round; the
+superseded round's blocks are released once a later scan has read
+them.
 
 Scale notes: positions are n×(d+1) doubles — broadcast-joined while
 they fit (< ~1e8 vertices with 64 MB threshold the planner decides);
@@ -43,6 +45,7 @@ from graphem_rapids_spark.checkpoint import (
     eager_checkpoint,
     eager_materialize,
     lazy_checkpoint,
+    persist,
     release,
 )
 
@@ -69,8 +72,6 @@ class GraphEmbedderSpark:
         n_neighbors: int = 10,
         sample_size: int = 256,
         seed: int = 0,
-        knn_method: str = "auto",
-        checkpoint_every: int = 4,
         verbose: bool = False,
         canonical: bool = False,
         weight_col: str | None = None,
@@ -89,8 +90,6 @@ class GraphEmbedderSpark:
         self.n_neighbors = n_neighbors
         self.sample_size = sample_size
         self.seed = seed
-        self.knn_method = knn_method
-        self.checkpoint_every = checkpoint_every
         self.verbose = verbose
         self._iter = 0
 
@@ -132,13 +131,13 @@ class GraphEmbedderSpark:
             )
         )
         self.n_edges = self.edges.count()
-        self._positions = laplacian_embedding(
+        self._positions = persist(laplacian_embedding(
             self.edges, self.n, self.dim, seed=self.seed,
             # self.edges is src<dst distinct by construction (canonical
             # contract or the canonicalize/groupBy above): the driver
             # eigensolve can skip its dedupe sort
             assume_canonical=True,
-        ).persist()
+        ))
         # frame owning the blocks behind _positions (the persisted
         # init, then each round's checkpointed `moved`) + releases
         # deferred until a later scan materializes their last reader
@@ -159,7 +158,7 @@ class GraphEmbedderSpark:
 
     def set_positions(self, df: DataFrame) -> None:
         old_owner = self._pos_owner
-        self._positions = df.persist()
+        self._positions = persist(df)
         self._positions.count()  # materializes before any release
         self._pos_owner = self._positions
         self._release_stale()

@@ -33,7 +33,7 @@ from contextlib import contextmanager
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from graphem_rapids_spark.checkpoint import eager_checkpoint
+from graphem_rapids_spark.checkpoint import eager_checkpoint, owned, persist
 
 from graphem_rapids_spark.graph.canon import symmetrize_edges
 
@@ -366,6 +366,7 @@ def _matvec_normalized_adjacency(sym_edges: DataFrame, deg: DataFrame, X: DataFr
     )
 
 
+@owned
 def _distributed_orthogonal_iteration(
     edges: DataFrame, n: int, n_components: int, seed: int, iters: int
 ) -> DataFrame:
@@ -373,8 +374,8 @@ def _distributed_orthogonal_iteration(
     eigenvector v0 ∝ D^{1/2}·1 of M = D^{-1/2} A D^{-1/2}."""
     spark = edges.sparkSession
     k = n_components
-    sym = symmetrize_edges(edges)
-    deg = (
+    sym = persist(symmetrize_edges(edges))
+    deg = persist(
         sym.groupBy(F.col("src").alias("id"))
         .agg(F.count("*").alias("degree"))
         .select(
@@ -383,8 +384,6 @@ def _distributed_orthogonal_iteration(
             (1.0 / F.sqrt(F.col("degree").cast("double"))).alias("dinv"),
         )
     )
-    deg.persist()
-    sym.persist()
     two_m = deg.agg(F.sum("degree")).first()[0] or 1.0
 
     # deterministic hash-random init
@@ -402,7 +401,7 @@ def _distributed_orthogonal_iteration(
         ).alias("pos"),
     )
     # isolated vertices (deg null) contribute nothing; keep them at 0
-    X = X.join(deg.select("id"), "id", "left_semi").persist()
+    X = persist(X.join(deg.select("id"), "id", "left_semi"))
 
     for it in range(iters):
         Y = _matvec_normalized_adjacency(sym, deg, X, k)
@@ -465,8 +464,6 @@ def _distributed_orthogonal_iteration(
         # materializes it without lineage growth
         X = newX
 
-    deg.unpersist()
-    sym.unpersist()
     # parity with the driver path: isolated vertices (left-semi-dropped
     # before the matvecs — they contribute nothing) re-enter at the
     # origin, so the output always has exactly n rows

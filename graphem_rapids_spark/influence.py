@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphem_rapids_spark.analytics import _bfs_levels
-from graphem_rapids_spark.checkpoint import eager_materialize, released_with
+from graphem_rapids_spark.checkpoint import eager_materialize, owned
 
 from graphem_rapids_spark.functions import edge_coin_key, mix_uniform
 from graphem_rapids_spark.graph.canon import symmetrize_edges
@@ -62,6 +62,7 @@ def graphem_seed_selection(embedder, k: int, num_iterations: int = 20) -> DataFr
     )
 
 
+@owned
 def independent_cascade(
     edges: DataFrame,
     seeds: DataFrame,
@@ -76,7 +77,6 @@ def independent_cascade(
     ``seeds`` must have column ``id`` (+ any ``key_cols`` for batched
     evaluation, e.g. greedy's candidate_id). All trials/keys share the
     same iteration loop — one Spark job per cascade step.
-    ``unpersist()`` on the result frees every step's blocks.
     """
     spark = edges.sparkSession
     trials_df = spark.range(trials).select(F.col("id").cast("int").alias("trial"))
@@ -97,15 +97,14 @@ def independent_cascade(
         .filter(_coin([F.col("src"), F.col("dst"), F.col("trial")], seed) < p)
         .select("trial", "src", "dst")
     )
-    # the cascade is the frontier sweep over the live edges; its
-    # per-level checkpoints are freed by the union's unpersist()
+    # the cascade is the frontier sweep over the live edges
     levels, _ = _bfs_levels(
         live, seeds.crossJoin(trials_df).select(*keys, "id"), keys, max_iter
     )
-    live.unpersist()
-    return released_with(reduce(DataFrame.unionAll, levels), levels)
+    return reduce(DataFrame.unionAll, levels)
 
 
+@owned
 def estimated_influence(
     edges: DataFrame,
     seeds: list[int] | DataFrame,
@@ -124,7 +123,6 @@ def estimated_influence(
     act = independent_cascade(edges, seeds, p, trials, seed, max_iter)
     per_trial = act.groupBy("trial").agg(F.count("*").alias("n"))
     out = per_trial.agg(F.avg("n")).first()[0]
-    act.unpersist()
     return float(out or 0.0)
 
 
@@ -177,6 +175,7 @@ def greedy_seed_selection(
     return chosen
 
 
+@owned
 def random_seed_baseline(
     edges: DataFrame,
     n_vertices: int,
@@ -207,5 +206,4 @@ def random_seed_baseline(
         .agg(F.avg("n"))
         .first()[0]
     )
-    act.unpersist()
     return float(out or 0.0)

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from graphem_rapids_spark.checkpoint import owned, persist
+
 DOCUMENT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -64,6 +66,7 @@ def read_jsonl_corpus(
     return spark.read.schema(schema).option("mode", "DROPMALFORMED").json(path)
 
 
+@owned
 def corrupt_record_count(df: DataFrame) -> int:
     """Audit count of unparseable lines captured by the PERMISSIVE read.
 
@@ -75,11 +78,8 @@ def corrupt_record_count(df: DataFrame) -> int:
     shards first and audit the parquet (one pass either way)."""
     if "_corrupt_record" not in df.columns:
         return 0
-    cached = df.cache()
-    try:
-        return cached.filter(cached["_corrupt_record"].isNotNull()).count()
-    finally:
-        cached.unpersist()
+    cached = persist(df)
+    return cached.filter(cached["_corrupt_record"].isNotNull()).count()
 
 
 def write_jsonl_corpus(

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 
 from graphem_rapids_spark.checkpoint import checkpoint_count
 from graphem_rapids_spark.checkpoint import eager_checkpoint as _eager_ckpt
-from graphem_rapids_spark.checkpoint import eager_materialize, release
+from graphem_rapids_spark.checkpoint import eager_materialize, owned, persist
 from pyspark.sql import functions as F
 
 _MERSENNE31 = (1 << 31) - 1
@@ -184,6 +184,7 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(F.expr(one))
 
 
+@owned
 def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 4,
@@ -243,7 +244,6 @@ def minhash_lsh_pairs(
         .distinct()
     )
     if not verify:
-        sh.unpersist()
         return cand
     # materialize + count the candidate list in one job: it feeds the
     # verify pass TWICE (member-doc filter + exact pair filter), and
@@ -266,12 +266,9 @@ def minhash_lsh_pairs(
         F.col("n_common").cast("double") >= F.lit(threshold) * F.col("n_union")
     )
     # the verified pair set is small (near-dups) — materialize it so
-    # the shingle cache (O(corpus) rows) and the candidate checkpoint
-    # can be released instead of lingering for the session
-    out = out.transform(_eager_ckpt)
-    sh.unpersist()
-    release(cand)
-    return out
+    # the result no longer reads the shingle table (O(corpus) rows) or
+    # the candidate checkpoint, and the call frees both at return
+    return out.transform(_eager_ckpt)
 
 
 def simhash_fingerprints(
@@ -322,6 +319,7 @@ def simhash60_md5(
     return agg.select(id_col, fp.alias("simhash"))
 
 
+@owned
 def simhash_near_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
@@ -331,7 +329,7 @@ def simhash_near_pairs(
     """(doc_a, doc_b, hamming) — pairs within Hamming distance
     ``max_hamming`` of 64-bit SimHash. Candidates via 16-bit-chunk
     banding (pigeonhole: ≤3 differing bits ⇒ ≥1 of 4 chunks equal)."""
-    fp = simhash_fingerprints(docs, id_col, text_col).persist()
+    fp = persist(simhash_fingerprints(docs, id_col, text_col))
     chunks = fp.select(
         F.col(id_col),
         F.col("simhash"),
@@ -362,11 +360,10 @@ def simhash_near_pairs(
         cand.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
-        # small near-pair set — materialize so the O(corpus)
-        # fingerprint cache can be released (no further consumers)
+        # small near-pair set — materialize so the result no longer
+        # reads the O(corpus) fingerprint cache, freed at return
         .transform(_eager_ckpt)
     )
-    fp.unpersist()
     return out
 
 

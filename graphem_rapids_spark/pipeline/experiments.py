@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graphem_rapids_spark.checkpoint import eager_materialize
+
 POWER_MDES = (1, 2, 5)           # minimum detectable effects, % of mean
 POWER_Z_A = 1.959963984540054    # z_{0.975} (two-sided alpha 0.05)
 POWER_Z_B = 0.8416212335729143   # z_{0.80} (80% power)
@@ -362,9 +364,9 @@ def uplift_qini(
     )
     # bounded (#distinct score values); materialize so the window
     # runs exactly once rather than once per plan branch
-    above = per_v.select(
+    above = eager_materialize(per_v.select(
         "_score", F.coalesce(F.sum("cnt").over(wv), F.lit(0)).alias("above")
-    ).localCheckpoint(eager=True)
+    ))
     dec = pu.join(F.broadcast(above), "_score").select(
         "treated",
         "_out",
@@ -387,7 +389,7 @@ def uplift_qini(
                 F.when(~F.col("treated"), F.col("_out")).otherwise(0)
             ).alias("sc"),
         )
-        .localCheckpoint(eager=True)
+        .transform(eager_materialize)
     )
     a = per_d.alias("a")
     b = per_d.alias("b")
@@ -555,7 +557,7 @@ def msprt_trajectory(
         "nc",
         F.round(delta, 6).alias("diff_dollars"),
         F.when(ok, loglam).otherwise(F.lit(0.0)).alias("_ll"),
-    ).localCheckpoint(eager=True)  # bounded: one row per calendar day
+    ).transform(eager_materialize)  # bounded: one row per calendar day
     pd_ = F.least(F.lit(1.0), F.exp(-F.col("_ll")))
     scored = per_day.select("d", "nt", "nc", "diff_dollars", "_ll", pd_.alias("_p"))
     runmin = (

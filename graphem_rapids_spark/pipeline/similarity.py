@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 
 from graphem_rapids_spark.checkpoint import eager_checkpoint as _eager_ckpt
-from graphem_rapids_spark.checkpoint import release, released_with
+from graphem_rapids_spark.checkpoint import owned, persist, release
 from pyspark.sql import functions as F
 
 
@@ -338,6 +338,7 @@ def semdedup(
     )
 
 
+@owned
 def ivf_build(
     vectors: DataFrame,
     n_cells: int = 16,
@@ -353,7 +354,7 @@ def ivf_build(
     ``iters`` Lloyd rounds — every step is a join + groupBy (no
     driver-side data beyond the k×dim centroid table, which is tiny
     and broadcast)."""
-    v = vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v")).persist()
+    v = persist(vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v")))
     if init == "mix":
         # cross-engine-replayable init: the n_cells vectors with the
         # smallest mixer value become the centroids VERBATIM (no
@@ -412,13 +413,12 @@ def ivf_build(
         .filter(F.col("_rk") == 1)
         .select(id_col, "cell")
         # the assignment table must be computed anyway; materializing
-        # it releases the cached vector projection (no more consumers)
+        # it frees the cached vector projection (no more consumers)
         .transform(_eager_ckpt)
     )
     # cents is k×dim (tiny) but its lineage is the whole Lloyd chain
-    # over v — pin it before dropping the cache it reads
+    # over v — pin it so the result no longer reads the cache
     cents = cents.transform(_eager_ckpt)
-    v.unpersist()
     return assign, cents
 
 
@@ -478,6 +478,7 @@ def ivf_cosine_topk(
     )
 
 
+@owned
 def kmeans_int8(
     vectors: DataFrame,
     k: int = 8,
@@ -507,14 +508,12 @@ def kmeans_int8(
     distributed Lloyd via broadcast centroids replaces cuVS's on-GPU
     k-means."""
     spark = vectors.sparkSession
-    q = (
+    q = persist(
         quantize_int8(vectors, id_col, vec_col)
         .select(F.col(id_col).alias("_id"), F.col("q").cast("array<long>").alias("_q"))
-        .persist()
     )
     init = q.orderBy("_id").limit(k).collect()
     if not init:
-        q.unpersist()
         raise ValueError("kmeans_int8: input table is empty")
     # fewer rows than k: every point seeds its own cluster (matches
     # the MLlib contract of k <= n)
@@ -559,13 +558,13 @@ def kmeans_int8(
         stats = sorted(
             (int(r["cluster"]), int(r["n_members"]), int(r["inertia"])) for r in rows
         )
-    q.unpersist()
     final = [(c, n, i, cents[c]) for (c, n, i) in stats]
     return spark.createDataFrame(
         final, "cluster long, n_members long, inertia long, centroid array<long>"
     )
 
 
+@owned
 def ivfpq_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -600,15 +599,13 @@ def ivfpq_topk(
     keyed on (cell, m, code) — candidate work ∝ probed-cell size,
     never O(n)."""
     spark = vectors.sparkSession
-    q = (
+    q = persist(
         quantize_int8(vectors, id_col, vec_col)
         .select(F.col(id_col).alias("_id"), F.col("q").cast("array<long>").alias("_q"))
-        .persist()
     )
     n_init = max(n_cells, k_codes)
     init = q.orderBy("_id").limit(n_init).collect()
     if not init:
-        q.unpersist()
         raise ValueError("ivfpq_topk: input table is empty")
     n_cells = min(n_cells, len(init))
     k_codes = min(k_codes, len(init))
@@ -656,7 +653,7 @@ def ivfpq_topk(
             ).alias("_e"),
         ).select(out_id, "cell", F.col("_e.m").alias("m"), F.col("_e.sv").alias("sv"))
 
-    subs = _subspaces(q, "rid").persist()
+    subs = persist(_subspaces(q, "rid"))
     # codebook init: residual subvectors of the k_codes smallest ids,
     # codeword index = rank of the id (deterministic, mirrors the
     # coarse init)
@@ -719,7 +716,6 @@ def ivfpq_topk(
         .select("rid", "cell", "m", "code")
         .transform(_eager_ckpt)
     )
-    subs.unpersist()
 
     # query side: same quantization, n_probe nearest coarse cells,
     # per-probe residual subvectors, ADC distance table over every
@@ -777,9 +773,10 @@ def ivfpq_topk(
         .filter(F.col("rank") <= k)
         .select("qid", "rid", "approx_d2", "rank")
     )
-    q.unpersist()
     return out
 
+
+@owned
 def pca_power_int8(
     vectors: DataFrame,
     iters: int | list[int] = 40,
@@ -892,8 +889,6 @@ def pca_power_int8(
     # basis the remaining components' loops read: w_df projects the
     # component's final v, g_df is a one-row checkpoint
     basis: list = []
-    # each component's final (u, v_prev, v): the output rows read them
-    held: list = []
     for comp in range(1, components + 1):
         v = _eager_ckpt(
             spark.range(dim).select(
@@ -973,18 +968,14 @@ def pca_power_int8(
                 "lam",
             )
         )
-        held += [u, v_prev, v]
         if comp < components:
             w_df = v.select("vi", F.col("v").alias("w"))
             g_df = _eager_ckpt(w_df.agg(F.sum(F.col("w") * F.col("w")).alias("g")))
             basis.append((w_df, g_df))
-    release(full)
-    for _w, g_df in basis:
-        release(g_df)
     result = outs[0]
     for o in outs[1:]:
         result = result.unionAll(o)
-    return released_with(result, held)
+    return result
 
 
 def kcenter_select(
@@ -1084,6 +1075,7 @@ def covering_radii(
     return [float(row[f"_r{i}"]) for i in range(len(centers))]
 
 
+@owned
 def kcenter_two_level(
     vectors: DataFrame,
     k: int = 8,

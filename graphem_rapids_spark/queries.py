@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphem_rapids_spark.checkpoint import eager_checkpoint as _eager_ckpt
-from graphem_rapids_spark.checkpoint import iterate, release
+from graphem_rapids_spark.checkpoint import iterate, owned, persist, release, unowned
 from pyspark.sql import functions as F
 
 from graphem_rapids_spark.graph.canon import canonicalize_edges, vertex_degrees, vertices_from_edges
@@ -323,7 +323,12 @@ def copurchase_edges(spark, sf_dir) -> DataFrame:
     # columnar form at this width). Stats are kept (sever_stats=False:
     # one-shot table, no iterative stats compounding) so consumers'
     # auto-broadcast decisions still see the real ~19 MB size.
-    edges = _eager_ckpt(raw.distinct(), sever_stats=False)
+    # built outside every ownership scope (no call frees the memo),
+    # and memoized as a plain frame over the checkpoint, so releasing a
+    # query result never frees it
+    with unowned():
+        edges = _eager_ckpt(raw.distinct(), sever_stats=False)
+    edges = DataFrame(edges._jdf, spark)
     _COPURCHASE_CACHE[key] = edges
     return edges
 
@@ -5974,8 +5979,7 @@ def community_girvan_newman_iter(spark, sf_dir):
 
     # a projection as the initial state: the driver's release of it
     # keeps e0, which every round's modularity reads
-    cur, _ = iterate(e0.select("src", "dst"), cut_top, _GN_ITER_ROUNDS, stop=record)
-    release(cur)
+    iterate(e0.select("src", "dst"), cut_top, _GN_ITER_ROUNDS, stop=record)
     return spark.createDataFrame(
         rows,
         "round long, n_cut_total long, n_components long, largest long,"
@@ -10578,7 +10582,6 @@ def graph_weighted_sssp(spark, sf_dir):
         return d.unionAll(relaxed).groupBy("id").agg(F.min("d").alias("d"))
 
     d, _ = iterate(d, relax, _SSSP_ROUNDS, batch=4)
-    sym.unpersist()
     return d.select("id", F.col("d").alias("dist"))
 
 
@@ -10813,7 +10816,6 @@ def graph_coreness_hindex(spark, sf_dir):
     # four join+window+agg rounds per checkpoint plan fine; a
     # checkpoint per round triples the wall time here
     c, _ = iterate(c, lambda c, _r: A.hindex_round(sym, c), _CORENESS_ROUNDS, batch=4)
-    sym.unpersist()
     return c.select("id", F.col("c").alias("core_ub"))
 
 
@@ -11610,7 +11612,7 @@ def embedding_mmr_select(spark, sf_dir):
             ).alias("rel"),
         )
     )
-    pool = rel.orderBy(F.desc("rel"), F.asc("vec_id")).limit(_MMR_POOL).persist()
+    pool = persist(rel.orderBy(F.desc("rel"), F.asc("vec_id")).limit(_MMR_POOL))
     pool.count()
     out: list = []
     for pick in range(1, _MMR_K + 1):
@@ -11649,7 +11651,6 @@ def embedding_mmr_select(spark, sf_dir):
         out.append(
             (pick, best["vec_id"], best["rel"], best["pen"], best["score"])
         )
-    pool.unpersist()
     return spark.createDataFrame(
         out, "pick int, vec_id long, rel long, pen long, score long"
     )
@@ -19394,10 +19395,9 @@ def community_louvain_rounds(spark, sf_dir):
         _, ((q, nc),) = A.modularity_numerators(e, lab, ["label"])
         out.append((r + 1, moved[-1], nc, round(q / den, 6)))
 
-    lab, _ = iterate(
+    iterate(
         lab, lambda lab, _r: A.louvain_move_pass(wsym, deg, lab, m), _LOUVAIN_ROUNDS, stop=record
     )
-    release(lab)
     return spark.createDataFrame(
         out, "round long, n_moved long, n_communities long, modularity double"
     )
@@ -19526,10 +19526,7 @@ def community_louvain_levels(spark, sf_dir):
     from graphem_rapids_spark.analytics import louvain
 
     e = copurchase_edges(spark, sf_dir)
-    labels, traj = louvain(
-        e, levels=_LOUVAIN_LEVELS, move_rounds=_LOUVAIN_LEVEL_MOVES
-    )
-    release(labels)
+    _, traj = louvain(e, levels=_LOUVAIN_LEVELS, move_rounds=_LOUVAIN_LEVEL_MOVES)
     return spark.createDataFrame(
         traj, "level long, n_communities long, modularity double"
     )
@@ -19555,13 +19552,12 @@ def community_louvain_refined(spark, sf_dir):
     from graphem_rapids_spark.analytics import louvain
 
     e = copurchase_edges(spark, sf_dir)
-    labels, traj = louvain(
+    _, traj = louvain(
         e,
         levels=_LOUVAIN_LEVELS,
         move_rounds=_LOUVAIN_LEVEL_MOVES,
         refine=True,
     )
-    release(labels)
     return spark.createDataFrame(
         traj,
         "level long, n_communities long, modularity double, n_split long",
@@ -21876,6 +21872,9 @@ QUERIES = {
     "q12_late_lines": q12_late_lines,
     "q16_supplier_count": q16_supplier_count,
 }
+# each registry call owns the blocks it creates: at return it frees
+# whatever its result cannot read (checkpoint.owned)
+QUERIES = {name: owned(fn) for name, fn in QUERIES.items()}
 
 ORACLES = {
     "q1_pricing_summary": _Q1_SQL,

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graphem_rapids_spark.checkpoint import _bind_release
+from graphem_rapids_spark.checkpoint import owned, persist
 
 
 def _prefix_counts(df: DataFrame, col: str) -> DataFrame:
@@ -42,14 +42,13 @@ def _prefix_counts(df: DataFrame, col: str) -> DataFrame:
     spark = df.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     cnt = df.groupBy(col).agg(F.count("*").alias("_c"))
-    part = (
+    # persisted: range boundaries come from a sample of the input;
+    # recomputing the exchange per consumer could draw a different
+    # sample and disagree with the collected offsets
+    part = persist(
         cnt.repartitionByRange(npart, F.col(col).asc())
         .sortWithinPartitions(F.col(col).asc())
         .withColumn("_pid", F.spark_partition_id())
-        # persisted: range boundaries come from a sample of the input;
-        # recomputing the exchange per consumer could draw a different
-        # sample and disagree with the collected offsets
-        .persist()
     )
     tot = part.groupBy("_pid").agg(F.sum("_c").alias("_t"))
     # INTENTIONAL bounded single-partition window: Catalyst folds the
@@ -79,6 +78,7 @@ def _prefix_counts(df: DataFrame, col: str) -> DataFrame:
     )
 
 
+@owned
 def global_mean_ranks(df: DataFrame, cols: list[str], outs: list[str]) -> DataFrame:
     """Append the mean-tie (scipy ``rankdata``-style) global rank of
     each ``cols[j]`` as ``outs[j]`` without a partition-less window,
@@ -97,8 +97,7 @@ def global_mean_ranks(df: DataFrame, cols: list[str], outs: list[str]) -> DataFr
        the rows before it, and the rank table is joined back per column
        on the value (null-safe, so null rows keep their rank).
 
-    ``unpersist()``/``checkpoint.release`` on the result frees the
-    persisted table."""
+    ``checkpoint.release`` on the result frees the persisted table."""
     spark = df.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     d = len(cols)
@@ -115,16 +114,15 @@ def global_mean_ranks(df: DataFrame, cols: list[str], outs: list[str]) -> DataFr
         )
         for j in range(d)
     ]
-    part = (
+    # persisted: range boundaries come from a sample of the input; a
+    # recompute could draw another sample and disagree with the
+    # collected totals
+    part = persist(
         df.select(F.explode(F.array(*entries)).alias("_e"))
         .groupBy("_e._j", "_e._v")
         .agg(F.count("*").alias("_c"))
         .repartitionByRange(npart, F.col("_j").asc(), F.col("_v").asc())
         .withColumn("_pid", F.spark_partition_id())
-        # persisted: range boundaries come from a sample of the input;
-        # a recompute could draw another sample and disagree with the
-        # collected totals
-        .persist()
     )
     tot = {
         (r._pid, r._j): r._t
@@ -151,9 +149,10 @@ def global_mean_ranks(df: DataFrame, cols: list[str], outs: list[str]) -> DataFr
         out = out.join(ranks, F.col(c).eqNullSafe(F.col("_rank_key")), "left").drop(
             "_rank_key"
         )
-    return _bind_release(out, [part._jdf])
+    return out
 
 
+@owned
 def global_dense_index(df: DataFrame, col: str, out: str) -> DataFrame:
     """(col, out) — dense 0..n-1 index of the DISTINCT values of
     ``col`` in ascending order (``row_number() over (order by col) - 1``
@@ -163,6 +162,7 @@ def global_dense_index(df: DataFrame, col: str, out: str) -> DataFrame:
     )
 
 
+@owned
 def global_strict_prefix_max(df: DataFrame, key: str, val: str, out: str) -> DataFrame:
     """Append ``out`` = max of ``val`` over all rows with a STRICTLY
     smaller ``key`` (the ``max(val) OVER (ORDER BY key RANGE BETWEEN
@@ -175,14 +175,13 @@ def global_strict_prefix_max(df: DataFrame, key: str, val: str, out: str) -> Dat
     broadcast back. ``out`` is null when no smaller key exists."""
     spark = df.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    part = (
+    # persisted for the same reason as _prefix_counts: the range
+    # exchange samples the input; a per-consumer recompute could
+    # re-bucket rows and disagree with the collected offsets
+    part = persist(
         df.repartitionByRange(npart, F.col(key).asc())
         .sortWithinPartitions(F.col(key).asc())
         .withColumn("_pid", F.spark_partition_id())
-        # persisted for the same reason as _prefix_counts: the range
-        # exchange samples the input; a per-consumer recompute could
-        # re-bucket rows and disagree with the collected offsets
-        .persist()
     )
     tot = part.groupBy("_pid").agg(F.max(val).alias("_t"))
     # bounded single-partition window over ≤ npart per-partition maxima

@@ -90,6 +90,7 @@ def main():
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry
+    from graphem_rapids_spark.checkpoint import release
     from graphem_rapids_spark.session import get_spark
 
     extra = {}
@@ -134,6 +135,9 @@ def main():
                 continue
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+            # a result owns the blocks it reads: free them after the
+            # last reader, as a long-lived session must
+            release(sdf)
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {exc}")
             n_fail += 1

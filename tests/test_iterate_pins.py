@@ -1,7 +1,9 @@
 """Pins for the round driver ``checkpoint.iterate`` and the private-API
 tricks it relies on: no iterative kernel leaves checkpoint blocks
-behind once its result is released, and stats severing keeps a
-self-joining state's plan statistics flat across rounds."""
+behind once its result is released, the ownership walk behind
+``checkpoint.owned`` keeps exactly what a result reads, and stats
+severing keeps a self-joining state's plan statistics flat across
+rounds."""
 
 from __future__ import annotations
 
@@ -21,9 +23,19 @@ from graphem_rapids_spark.analytics import (
     maximal_matching,
     minimum_spanning_forest,
 )
-from graphem_rapids_spark.checkpoint import eager_checkpoint, iterate, release
+from graphem_rapids_spark.checkpoint import (
+    eager_checkpoint,
+    iterate,
+    lazy_checkpoint,
+    owned,
+    persist,
+    readable_blocks,
+    release,
+)
 from graphem_rapids_spark.influence import estimated_influence
 from graphem_rapids_spark.pipeline.similarity import pca_power_int8
+from graphem_rapids_spark.queries import QUERIES
+from graphem_rapids_spark.scale import global_dense_index
 
 # two triangles joined by three edges (FIXTURES.md)
 TWO_TRIANGLES_LINKED = [
@@ -169,6 +181,88 @@ def _assert_self_join_stats_flat(spark, run):
         (i % 7) * 32 % 7 for i in range(64)
     )
     state.unpersist()
+
+
+def test_global_dense_index_frees_its_range_table(spark):
+    """The range-partitioned table ``scale._prefix_counts`` persists is
+    bound to the index it feeds."""
+    df = spark.createDataFrame([(i % 5,) for i in range(20)], "v long")
+    _assert_no_leak(spark, lambda: _collect_and_release(global_dense_index(df, "v", "ix")))
+
+
+def test_bootstrap_point_estimate_frees_its_range_tables(spark, sf_dir):
+    """The registry bootstrap ranks its point estimate through two
+    ``scale._prefix_counts`` tables; releasing the result frees them."""
+    _assert_no_leak(
+        spark, lambda: _collect_and_release(QUERIES["spearman_bootstrap_ci"](spark, sf_dir))
+    )
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _scalar_subquery(spark):
+    ck = eager_checkpoint(spark.range(5).select(F.col("id").alias("v")))
+    return ck, spark.range(3).select("id", ck.agg(F.max("v")).scalar().alias("m"))
+
+
+def _lazy_over_earlier(spark):
+    first = eager_checkpoint(spark.range(3).select("id", (F.col("id") + 4).alias("m")))
+    return first, lazy_checkpoint(first.select("id", F.col("m")))
+
+
+def _join_union_projection(spark):
+    ck = eager_checkpoint(spark.range(3).select("id", (F.col("id") + 4).alias("m")))
+    other = spark.range(3).select("id", F.lit(0).cast("long").alias("z"))
+    joined = ck.join(other, "id").select("id", (F.col("m") + F.col("z")).alias("m"))
+    return ck, joined.unionAll(joined.limit(0)).select("id", "m")
+
+
+def _persisted_dataset(spark):
+    cached = persist(spark.range(3).select("id", (F.col("id") + 4).alias("m")))
+    return None, cached.filter(F.col("m") >= 0)
+
+
+READ_PATHS = {
+    "scalar_subquery": (_scalar_subquery, [(0, 4), (1, 4), (2, 4)]),
+    "lazy_checkpoint_over_earlier": (_lazy_over_earlier, [(0, 4), (1, 5), (2, 6)]),
+    "join_union_projection": (_join_union_projection, [(0, 4), (1, 5), (2, 6)]),
+    "persisted_dataset": (_persisted_dataset, [(0, 4), (1, 5), (2, 6)]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(READ_PATHS))
+def test_owned_result_keeps_exactly_what_it_reads(spark, name):
+    """The reachability walk behind ``checkpoint.owned`` (plan leaves
+    of the cache-substituted plan and its subqueries, closed over RDD
+    dependencies) pinned on each private-API path it takes: the block
+    the result reads survives the call and is bound to the result, an
+    unrelated checkpoint of the same call is freed at return, and
+    releasing the result frees the rest."""
+    build, want = READ_PATHS[name]
+    made = {}
+
+    @owned
+    def call():
+        made["block"], result = build(spark)
+        made["unrelated"] = eager_checkpoint(spark.range(7).select(F.col("id").alias("u")))
+        return result
+
+    before = _persistent_rdds(spark)
+    result = call()
+    reads = readable_blocks(result)
+    if made["block"] is not None:
+        assert set(made["block"]._graphem_blocks) <= reads
+        assert set(made["block"]._graphem_blocks) <= set(result._graphem_blocks)
+    assert not set(made["unrelated"]._graphem_blocks) & _persistent_rdds(spark)
+    assert sorted(tuple(r) for r in result.collect()) == want
+    # a lazy checkpoint stops reading its inputs once materialized, and
+    # a persisted Dataset's buffers exist only once read
+    kept = _persistent_rdds(spark) - before
+    assert kept and kept <= reads | readable_blocks(result)
+    release(result)
+    assert _persistent_rdds(spark) - before == set()
 
 
 def test_iterate_severs_self_join_stats(spark):

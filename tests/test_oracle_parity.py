@@ -20,6 +20,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from graphem_rapids_spark.checkpoint import readable_blocks, release
 from graphem_rapids_spark.queries import copurchase_edges
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
@@ -110,6 +111,24 @@ def _max_job_id(spark) -> int:
     return it.next().info().jobId() if it.hasNext() else -1
 
 
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _assert_owns_its_blocks(spark, name, sdf, before, reads):
+    """Every persistent RDD the call created is read by its result —
+    ``reads`` at return, or after the collect (a lazy checkpoint stops
+    reading its inputs once materialized; a persisted Dataset's
+    buffers exist only once read) — and releasing the result frees
+    them all."""
+    made = _persistent_rdds(spark) - before
+    unread = made - reads - readable_blocks(sdf)
+    assert not unread, f"{name}: persistent RDDs {sorted(unread)} not read by the result"
+    release(sdf)
+    left = _persistent_rdds(spark) - before
+    assert not left, f"{name}: persistent RDDs {sorted(left)} left after release"
+
+
 def _canon_rows(rows, cols):
     order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
     return sorted("|".join(canon(r[i]) for i in order) for r in rows)
@@ -118,10 +137,12 @@ def _canon_rows(rows, cols):
 @pytest.mark.parametrize("name", sorted(ORACLES.keys()))
 def test_oracle_parity(spark, duck, name):
     budget = JOB_BUDGETS.get(name) if os.path.basename(SF_DIR.rstrip("/")) == "sf0.001" else None
+    copurchase_edges(spark, SF_DIR)  # memoized; shared by the graph queries
+    before = _persistent_rdds(spark)
     if budget is not None:
-        copurchase_edges(spark, SF_DIR)  # memoized; shared by the graph queries
         job0 = _max_job_id(spark)
     sdf = QUERIES[name](spark, SF_DIR)
+    reads = readable_blocks(sdf)
     # driver canon sort_values a pandas frame — list/dict cells crash
     # it (CORRECTNESS_r03); registered outputs must be scalar columns
     nested = [
@@ -134,6 +155,7 @@ def test_oracle_parity(spark, duck, name):
     srows = [tuple(r) for r in sdf.collect()]
     if budget is not None:
         jobs = _max_job_id(spark) - job0
+    _assert_owns_its_blocks(spark, name, sdf, before, reads)
 
     # pandas fetch = the driver's dtype-faithful path (HUGEINT→float64)
     opdf = duck.execute(ORACLES[name]).df()
@@ -158,6 +180,10 @@ def test_oracle_parity(spark, duck, name):
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
 def test_rows_only_queries_run(spark, name):
+    copurchase_edges(spark, SF_DIR)
+    before = _persistent_rdds(spark)
     sdf = QUERIES[name](spark, SF_DIR)
+    reads = readable_blocks(sdf)
     assert sdf.count() >= 0
     assert len(sdf.schema.fields) > 0
+    _assert_owns_its_blocks(spark, name, sdf, before, reads)
