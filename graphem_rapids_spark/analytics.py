@@ -11,12 +11,15 @@ sampled-source distributed Brandes over one shared backward pass
 fallback (networkx guarded to n<5000,
 ``benchmarks/run_benchmarks.py:313-319``) is kept beside it.
 
-Statistics (A7–A10): graph stats, Spearman via mean-rank windows +
-built-in ``corr`` (Pearson on ranks — exactly scipy's definition),
-Poisson-bootstrap confidence intervals (the scalable resampling
-scheme: each row appears Poisson(1) times per trial, so 1000 trials
-run as one exploded groupBy instead of 1000 jobs), full pairwise
-correlation matrix.
+Statistics (A7–A10): graph stats, Spearman as Pearson on mean-tie
+ranks (exactly scipy's definition) — ranked and correlated in numpy on
+the driver when the collected cells fit under
+``session.DRIVER_COLLECT_MAX_ROWS``, else by one distributed
+prefix-sum rank pass (``scale.global_mean_ranks``) and one
+``covar_samp`` aggregate — Poisson-bootstrap confidence intervals (the
+scalable resampling scheme: each row appears Poisson(1) times per
+trial, so 1000 trials run as one exploded groupBy instead of 1000
+jobs), full pairwise correlation matrix.
 """
 
 from __future__ import annotations
@@ -1101,7 +1104,7 @@ def harmonic_centrality(
     )
 
 
-def _bfs_levels(edge_tbl, level0, keys, max_depth, col=None, agg=None):
+def _bfs_levels(edge_tbl, level0, keys, max_depth, col=None, agg=None, level0_n=None):
     """The one accumulate-every-level frontier sweep — batched
     multi-source BFS under closeness/harmonic/eccentricity, the
     Brandes-family forward pass and the IC cascade. ``edge_tbl``
@@ -1115,15 +1118,19 @@ def _bfs_levels(edge_tbl, level0, keys, max_depth, col=None, agg=None):
     Each level is one :func:`checkpoint_count` job; the frontier is
     broadcast only while provably small (its count is free), else
     shuffle-joined. ``seen`` is a flat union of checkpointed levels,
-    so nothing grows but the union. Returns the per-level tables and
-    their sizes (the Brandes backward pass reuses the sizes for the
-    same broadcast↔shuffle choice)."""
+    so nothing grows but the union. A caller that has already
+    materialized and counted ``level0`` passes its size as
+    ``level0_n``. Returns the per-level tables and their sizes (the
+    Brandes backward pass reuses the sizes for the same
+    broadcast↔shuffle choice)."""
     from graphem_rapids_spark import session
 
     broadcast_max = session.BROADCAST_POSITIONS_MAX
     on = [k for k in keys if k in edge_tbl.columns] + ["id"]
     carried = [col] if col else []
-    frontier, frontier_n = checkpoint_count(level0)
+    if level0_n is None:
+        level0, level0_n = checkpoint_count(level0)
+    frontier, frontier_n = level0, level0_n
     levels, level_counts = [frontier], [frontier_n]
     seen = frontier.select(*keys, "id")
     for _ in range(max_depth):
@@ -1391,27 +1398,62 @@ def full_correlation_matrix(df: DataFrame, cols: list[str]) -> dict:
     """Pairwise Spearman ρ over measure columns (reference
     ``visualization.py:52-90``; scipy.stats.spearmanr semantics:
     Pearson correlation of mean ranks, ties averaged) as
-    ``{(a, b): ρ}``. Every column is ranked in ONE distributed
-    prefix-sum pass (``scale.global_mean_ranks``: exact tie ranks at any
-    row count, nulls lowest, NaN highest), then all correlations are ONE
-    aggregate. Zero-variance pairs (a constant column, fewer than two
-    rows) are NaN."""
-    from graphem_rapids_spark.scale import global_mean_ranks
+    ``{(a, b): ρ}``. Zero-variance pairs (a constant column, fewer than
+    two rows) are NaN.
 
-    ranks = [f"_r{i}" for i in range(len(cols))]
-    row = global_mean_ranks(df.select(*cols), cols, ranks).agg(
-        *[
-            _corr_safe(ranks[i], ranks[j]).alias(f"{i}|{j}")
-            for i in range(len(cols))
-            for j in range(i, len(cols))
-        ]
-    ).first()
+    The selected columns are materialized and counted in one job, so
+    the input plan (e.g. a join) runs once whichever path follows:
+
+    - rows × columns ≤ ``session.DRIVER_COLLECT_MAX_ROWS``: the columns
+      are collected and ranked on the driver in Spark SQL's order
+      (``scale.driver_mean_ranks``), then Pearson of the ranks in numpy;
+    - above it, every column is ranked in ONE distributed prefix-sum
+      pass (``scale.global_mean_ranks``: exact tie ranks at any row
+      count, nulls lowest, NaN highest), then all correlations are ONE
+      aggregate."""
+    from graphem_rapids_spark import session
+    from graphem_rapids_spark.scale import driver_rankable, global_mean_ranks
+
+    data, n = checkpoint_count(df.select(*cols), sever_stats=False)
+    d = len(cols)
+    pairs = [(i, j) for i in range(d) for j in range(i, d)]
+    if n * d <= session.DRIVER_COLLECT_MAX_ROWS and all(
+        driver_rankable(f.dataType) for f in data.schema.fields
+    ):
+        m = _driver_rank_correlation(data.toArrow(), d)
+        corr = {(i, j): m[i, j] for i, j in pairs}
+    else:
+        ranks = [f"_r{i}" for i in range(d)]
+        row = global_mean_ranks(data, cols, ranks).agg(
+            *[_corr_safe(ranks[i], ranks[j]).alias(f"{i}|{j}") for i, j in pairs]
+        ).first()
+        corr = {(i, j): row[f"{i}|{j}"] for i, j in pairs}
     out = {}
-    for i, a in enumerate(cols):
-        for j in range(i, len(cols)):
-            v = row[f"{i}|{j}"]
-            out[(a, cols[j])] = out[(cols[j], a)] = float(v) if v is not None else float("nan")
+    for (i, j), v in corr.items():
+        v = float("nan") if v is None else float(v)
+        out[(cols[i], cols[j])] = out[(cols[j], cols[i])] = v
     return out
+
+
+def _driver_rank_correlation(tbl, d: int):
+    """d×d Pearson matrix of the mean ranks of a collected table's d
+    columns, as :func:`_corr_safe`: sample covariance over the product
+    of sample deviations, NaN where that product is 0 or there are
+    fewer than two rows."""
+    import numpy as np
+
+    from graphem_rapids_spark.scale import driver_mean_ranks
+
+    n = tbl.num_rows
+    if n < 2:
+        return np.full((d, d), np.nan)
+    r = np.column_stack([driver_mean_ranks(tbl.column(i)) for i in range(d)])
+    c = r - r.mean(axis=0)
+    cov = c.T @ c / (n - 1)
+    sd = np.sqrt(np.diag(cov))
+    den = np.outer(sd, sd)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den > 0, cov / den, np.nan)
 
 
 def spearman_correlation(df: DataFrame, col_a: str, col_b: str) -> float:

@@ -9,10 +9,14 @@
   extra key column (SURVEY.md §2.4)
 - I4 random baseline (``benchmark.py:344-349``)
 
-IC as dataflow: iterated frontier expansion — frontier ⋈ edges →
-Bernoulli(p) hash filter → anti-join against the activated set. Monte
-Carlo trials are an extra ``trial`` key column, so all trials run in
-the same shuffles (no driver loop over trials).
+IC as dataflow: one pass flips every (trial, directed edge) coin into
+a live-edge table; the cascade is then reachability over it — iterated
+frontier expansion, frontier ⋈ live edges → anti-join against the
+activated set. Monte Carlo trials are an extra ``trial`` key column, so
+all trials run in the same shuffles (no driver loop over trials). When
+the live edges and the output bound fit under
+``session.DRIVER_COLLECT_MAX_ROWS`` the reachability sweep runs in
+numpy on the driver instead, as the reference's NDlib loop does.
 
 Determinism: per-(trial, src→dst) coin flips come from the shared
 cross-engine mixer (``functions.mix_uniform`` on a collision-free
@@ -31,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphem_rapids_spark.analytics import _bfs_levels
-from graphem_rapids_spark.checkpoint import eager_materialize, owned
+from graphem_rapids_spark.checkpoint import checkpoint_count, owned
 
 from graphem_rapids_spark.functions import edge_coin_key, mix_uniform
 from graphem_rapids_spark.graph.canon import symmetrize_edges
@@ -75,9 +79,20 @@ def independent_cascade(
     """Run IC; returns activated set (trial, [*key_cols], id).
 
     ``seeds`` must have column ``id`` (+ any ``key_cols`` for batched
-    evaluation, e.g. greedy's candidate_id). All trials/keys share the
-    same iteration loop — one Spark job per cascade step.
+    evaluation, e.g. greedy's candidate_id). Seed rows come back as
+    given (duplicates too); every later vertex once per (trial, keys)
+    group, reached within ``max_iter`` frontier steps.
+
+    The live-edge table and the level-0 (trial, keys, id) table are
+    each materialized and counted in one job. When the live edges plus
+    an output bound — level-0 rows × (live edges + 1) — fit under
+    ``session.DRIVER_COLLECT_MAX_ROWS``, both are collected and the
+    cascade is a numpy reachability sweep on the driver
+    (:func:`_driver_cascade`). Otherwise all trials/keys share one
+    distributed frontier sweep, one Spark job per cascade step.
     """
+    from graphem_rapids_spark import session
+
     spark = edges.sparkSession
     trials_df = spark.range(trials).select(F.col("id").cast("int").alias("trial"))
     keys = ["trial", *key_cols]
@@ -91,17 +106,87 @@ def independent_cascade(
     # per round (measured: the probe+coin work dominated the kernel's
     # 60+ CPU-seconds at sf0.1). Same coin expression → same live set
     # → identical activated sets.
-    live = eager_materialize(
+    live, live_n = checkpoint_count(
         symmetrize_edges(edges)
         .crossJoin(trials_df)
         .filter(_coin([F.col("src"), F.col("dst"), F.col("trial")], seed) < p)
-        .select("trial", "src", "dst")
+        .select("trial", "src", "dst"),
+        sever_stats=False,
     )
+    level0, level0_n = checkpoint_count(
+        seeds.crossJoin(trials_df).select(*keys, "id")
+    )
+    if live_n + level0_n * (live_n + 1) <= session.DRIVER_COLLECT_MAX_ROWS:
+        return _driver_cascade(live, level0, keys, max_iter)
     # the cascade is the frontier sweep over the live edges
-    levels, _ = _bfs_levels(
-        live, seeds.crossJoin(trials_df).select(*keys, "id"), keys, max_iter
-    )
+    levels, _ = _bfs_levels(live, level0, keys, max_iter, level0_n=level0_n)
     return reduce(DataFrame.unionAll, levels)
+
+
+def _driver_cascade(live: DataFrame, level0: DataFrame, keys: list[str], max_iter: int):
+    """The cascade on the driver: the rows of the distributed sweep
+    (level 0 as given, then each (group, id) first reached at step
+    1..``max_iter``), where a group is one (trial, *key_cols) value of
+    ``level0`` and it spreads over its trial's live edges.
+
+    Pairs are coded group·V + vertex over the dense vertex index V; a
+    step expands the frontier through the live edges sorted by
+    (trial, src), keeps the codes not seen before, and stops when none
+    are new."""
+    import numpy as np
+    import pandas as pd
+
+    spark = live.sparkSession
+    # the distributed sweep's output schema (analysis only, no job)
+    step = live.withColumnRenamed("src", "id").join(level0, ["trial", "id"])
+    schema = level0.unionAll(step.select(*keys, F.col("dst").alias("id"))).schema
+
+    lv = live.toArrow()
+    trial, src, dst = (lv.column(c).to_numpy().astype(np.int64) for c in ("trial", "src", "dst"))
+    l0 = level0.toArrow()
+    rows = {c: l0.column(c).to_pylist() for c in [*keys, "id"]}
+    # a seed with a null id reaches nothing (no equi-join match)
+    seeded = [i for i, v in enumerate(rows["id"]) if v is not None]
+    seed_ids = np.array([rows["id"][i] for i in seeded], np.int64)
+    verts = np.unique(np.concatenate([src, dst, seed_ids]))
+    nv = len(verts)
+    # one group per distinct (trial, *key_cols) value of the seed rows
+    group_of: dict[tuple, int] = {}
+    seed_group = [
+        group_of.setdefault(tuple(rows[c][i] for c in keys), len(group_of)) for i in seeded
+    ]
+    groups = list(group_of)
+    g_trial = np.array([g[0] for g in groups], np.int64)
+    seen = np.unique(np.array(seed_group, np.int64) * nv + np.searchsorted(verts, seed_ids))
+    edge_key = trial * nv + np.searchsorted(verts, src)
+    order = np.argsort(edge_key, kind="stable")
+    edge_key, edge_dst = edge_key[order], np.searchsorted(verts, dst)[order]
+
+    reached, frontier = [], seen
+    for _ in range(max_iter):
+        g, v = np.divmod(frontier, nv)
+        k = g_trial[g] * nv + v
+        lo = np.searchsorted(edge_key, k, "left")
+        cnt = np.searchsorted(edge_key, k, "right") - lo
+        total = int(cnt.sum())
+        if total == 0:
+            break
+        # the live-edge slots lo[i] .. lo[i]+cnt[i]-1 of every frontier pair
+        slot = np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(total)
+        msgs = np.unique(np.repeat(g, cnt) * nv + edge_dst[slot])
+        frontier = msgs[~np.isin(msgs, seen, assume_unique=True)]
+        if frontier.size == 0:
+            break
+        reached.append(frontier)
+        seen = np.union1d(seen, frontier)
+
+    new = np.concatenate(reached) if reached else np.zeros(0, np.int64)
+    g, v = np.divmod(new, nv)
+    out = {c: rows[c] + [groups[x][k] for x in g.tolist()] for k, c in enumerate(keys)}
+    # plain Python scalars: the row-wise createDataFrame verifier (Arrow
+    # off) rejects numpy ones
+    out["id"] = rows["id"] + verts[v].tolist()
+    return spark.createDataFrame(pd.DataFrame(out, dtype=object), schema)
 
 
 @owned

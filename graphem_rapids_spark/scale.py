@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from graphem_rapids_spark.checkpoint import owned, persist
 
@@ -150,6 +151,52 @@ def global_mean_ranks(df: DataFrame, cols: list[str], outs: list[str]) -> DataFr
             "_rank_key"
         )
     return out
+
+
+def driver_rankable(dtype) -> bool:
+    """Whether :func:`driver_mean_ranks` orders ``dtype`` exactly as
+    Spark SQL does: numbers, booleans, dates, timestamps, binary and
+    binary-collated strings (UTF-8 byte order is code-point order)."""
+    return isinstance(
+        dtype,
+        (T.NumericType, T.BooleanType, T.DateType, T.TimestampType,
+         T.TimestampNTZType, T.BinaryType),
+    ) or dtype == T.StringType()
+
+
+def driver_mean_ranks(values):
+    """Mean-tie ranks (1-based float64 numpy array) of one collected
+    Arrow column, in Spark SQL's ascending order — the driver twin of
+    :func:`global_mean_ranks`: nulls first as one tie group, then the
+    values, then NaN last as its own group; −0.0 ties 0.0. Values are
+    ranked as they are, never through float64 unless they are floats,
+    so integers and decimals keep their exact order.
+
+    Floats go through numpy: ``pyarrow.compute.rank`` with nulls at the
+    start ties NaN with the nulls."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    nulls = values.is_null().to_numpy(zero_copy_only=False)
+    present = values.drop_null()
+    if pa.types.is_floating(present.type):
+        x = present.to_numpy().astype(np.float64, copy=False)
+        nan = np.isnan(x)
+        uniq, inv = np.unique(x[~nan], return_inverse=True)  # −0.0 == 0.0
+        dense = np.empty(len(x), np.int64)
+        dense[~nan] = inv + 1
+        dense[nan] = len(uniq) + 1
+    else:
+        dense = pc.rank(present, sort_keys="ascending", tiebreaker="dense").to_numpy()
+    codes = np.zeros(len(nulls), np.int64)  # code 0: the null group
+    codes[~nulls] = dense
+    counts = np.bincount(codes)
+    less = np.cumsum(counts) - counts
+    # the same arithmetic as global_mean_ranks: less + 1 + (c − 1)/2
+    return (less + 1 + (counts - 1) / 2.0)[codes]
 
 
 @owned

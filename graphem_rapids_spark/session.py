@@ -38,6 +38,17 @@ BROADCAST_POSITIONS_MAX = int(os.environ.get("GRAPHEM_BROADCAST_POS_MAX", "10000
 # min-label propagation (each star round costs ~3 shuffles vs
 # min-label's 1, so small graphs stay on the cheap path)
 CC_STAR_MIN_VERTICES = int(os.environ.get("GRAPHEM_CC_STAR_MIN", "5000000"))
+# small-state tails (IC reachability, Spearman ranks) finish in numpy on
+# the driver when the rows they would collect — an upper bound known
+# before the collect — are at most this many; above it the distributed
+# plan runs. Read at call time (tests set it to 0 to force the
+# distributed path). Measured on local[4] (4-core host, median of 3 warm
+# calls, driver vs distributed): Spearman of 2 columns at 10⁵ cells
+# 0.16 vs 1.83 s, at 10⁶ cells 0.33 vs 3.15 s; IC with 50 level-0 rows
+# at a 10⁵ bound 0.81 vs 1.78 s, at 10⁶ 0.87 vs 1.64 s. The driver wins
+# at both sizes; the cap stays at 10⁶ to bound driver memory (tens of
+# MB), and a cluster's distributed plan gains from more executors
+DRIVER_COLLECT_MAX_ROWS = 1_000_000
 
 DRIVER_MEM_CAP_GB = 48
 DRIVER_MEM_FRACTION = 0.5
@@ -192,6 +203,7 @@ def get_backend_info(spark: SparkSession | None = None) -> dict:
             "driver_eig_max_vertices": DRIVER_EIG_MAX_VERTICES,
             "cc_star_min_vertices": CC_STAR_MIN_VERTICES,
             "broadcast_positions_max": BROADCAST_POSITIONS_MAX,
+            "driver_collect_max_rows": DRIVER_COLLECT_MAX_ROWS,
         },
     }
 

@@ -41,6 +41,35 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def on_both_paths(monkeypatch):
+    """``on_both_paths(run)`` → ``[run() on the distributed path,
+    run() on the driver path]``: the small-state kernels (IC, Spearman)
+    finish on the driver below ``session.DRIVER_COLLECT_MAX_ROWS``, and
+    a cap of 0 forces their distributed plan."""
+    from graphem_rapids_spark import session
+
+    def run_both(run):
+        out = []
+        for cap in (0, session.DRIVER_COLLECT_MAX_ROWS):
+            monkeypatch.setattr(session, "DRIVER_COLLECT_MAX_ROWS", cap)
+            out.append(run())
+        return out
+
+    return run_both
+
+
+def max_job_id(spark) -> int:
+    """Highest job id after draining the listener bus — the status
+    store keeps only the last jobs, so count by id, not list size."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    cls = sc._jvm.java.lang.Class.forName("org.apache.spark.status.JobDataWrapper")
+    it = jsc.statusStore().store().view(cls).reverse().max(1).iterator()
+    return it.next().info().jobId() if it.hasNext() else -1
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

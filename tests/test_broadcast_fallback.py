@@ -54,6 +54,8 @@ def test_weighted_pagerank_shuffle_path_matches_broadcast(spark):
 
 
 def test_ic_shuffle_path_matches_broadcast(linked_triangles, monkeypatch):
+    # the distributed sweep both times (below the cap it runs on the driver)
+    monkeypatch.setattr(session, "DRIVER_COLLECT_MAX_ROWS", 0)
     seeds = linked_triangles.sparkSession.createDataFrame([(0,)], "id long")
 
     def run():

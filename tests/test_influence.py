@@ -1,31 +1,48 @@
 """Influence tests (reference tests/test_influence.py via SURVEY.md §5):
 monotonicity in p, empty seeds ⇒ 0, star-hub seed selection, greedy
-sanity, deterministic trials."""
+sanity, deterministic trials — and the same cascade rows from the
+driver sweep and the distributed one (``on_both_paths``)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from graphem_rapids_spark.embedding.embedder import GraphEmbedderSpark
+from graphem_rapids_spark.graph.canon import symmetrize_edges
 from graphem_rapids_spark.influence import (
+    _coin,
     estimated_influence,
     graphem_seed_selection,
     greedy_seed_selection,
+    independent_cascade,
     random_seed_baseline,
 )
+
+
+def _cascade_rows(edges, seeds, **kw):
+    act = independent_cascade(edges, seeds, **kw)
+    rows = sorted(tuple(r) for r in act.collect())
+    act.unpersist()
+    return [(f.name, f.dataType) for f in act.schema.fields], rows
 
 
 def test_empty_seeds_zero(spark, path10):
     assert estimated_influence(path10, [], p=0.5) == 0.0
 
 
-def test_seeds_always_counted(spark, path10):
+def test_seeds_always_counted(spark, path10, on_both_paths):
     # p=0 ⇒ influence = len(seeds)
-    assert estimated_influence(path10, [0, 9], p=0.0, trials=3) == 2.0
+    got = on_both_paths(
+        lambda: estimated_influence(path10, [0, 9], p=0.0, trials=3)
+    )
+    assert got == [2.0, 2.0]
 
 
-def test_p1_reaches_component(spark, path10):
+def test_p1_reaches_component(spark, path10, on_both_paths):
     # p=1 on a path ⇒ everything reached
-    assert estimated_influence(path10, [0], p=1.0, trials=2) == 10.0
+    got = on_both_paths(
+        lambda: estimated_influence(path10, [0], p=1.0, trials=2)
+    )
+    assert got == [10.0, 10.0]
 
 
 def test_monotone_in_p(spark):
@@ -40,10 +57,13 @@ def test_monotone_in_p(spark):
     assert vals[0] <= vals[1] + 2 and vals[1] <= vals[2] + 2
 
 
-def test_influence_deterministic(spark, path10):
-    a = estimated_influence(path10, [0], p=0.4, trials=10, seed=5)
-    b = estimated_influence(path10, [0], p=0.4, trials=10, seed=5)
-    assert a == b
+def test_influence_deterministic(spark, path10, on_both_paths):
+    def run():
+        return estimated_influence(path10, [0], p=0.4, trials=10, seed=5)
+
+    a = on_both_paths(run)
+    b = on_both_paths(run)
+    assert a == b and a[0] == a[1]
 
 
 def test_star_hub_selected(spark, star10):
@@ -56,13 +76,90 @@ def test_star_hub_selected(spark, star10):
     assert len(rows) == 1 and rows[0]["rank"] == 1
 
 
-def test_greedy_on_two_triangles(spark, two_triangles):
+def test_greedy_on_two_triangles(spark, two_triangles, on_both_paths):
     # with k=2 and p=1, greedy must pick one vertex from each triangle
-    chosen = greedy_seed_selection(two_triangles, 6, k=2, p=1.0, trials=2, seed=0)
-    assert len(chosen) == 2
-    assert (chosen[0] < 3) != (chosen[1] < 3)
+    dist, drv = on_both_paths(
+        lambda: greedy_seed_selection(two_triangles, 6, k=2, p=1.0, trials=2, seed=0),
+    )
+    assert dist == drv and len(drv) == 2
+    assert (drv[0] < 3) != (drv[1] < 3)
 
 
 def test_random_baseline_bounds(spark, path10):
     v = random_seed_baseline(path10, 10, k=2, p=0.2, trials=5, n_sets=4, seed=2)
     assert 2.0 <= v <= 10.0
+
+
+
+def _live_trials(edges, p, trials, seed):
+    """The trials with at least one live edge (the kernel's own coins)."""
+    spark = edges.sparkSession
+    trial = spark.range(trials).select(F.col("id").cast("int").alias("trial"))
+    live = symmetrize_edges(edges).crossJoin(trial).filter(
+        _coin([F.col("src"), F.col("dst"), F.col("trial")], seed) < p
+    )
+    return {r.trial for r in live.select("trial").distinct().collect()}
+
+
+@pytest.mark.parametrize(
+    "seed_rows, schema, kw, expect",
+    [
+        # greedy's batching: one cascade per (trial, cand)
+        ([(c, c) for c in range(4)] + [(c, 9) for c in range(4)], "cand int, id long",
+         {"key_cols": ("cand",), "p": 0.5, "trials": 3}, None),
+        # duplicate seed rows come back as given
+        ([(0,), (0,), (5,)], "id long", {"p": 0.0, "trials": 2},
+         [(0, 0), (0, 0), (0, 5), (1, 0), (1, 0), (1, 5)]),
+        ([(0,), (0,), (5,)], "id long", {"p": 0.4, "trials": 4}, None),
+        # seeds outside the edge list reach nothing but still count
+        ([(0,), (100,), (-7,)], "id long", {"p": 0.5, "trials": 3}, None),
+        # the max_iter cut-off: p=1 reaches two steps down the path
+        ([(0,)], "id long", {"p": 1.0, "trials": 2, "max_iter": 2},
+         [(t, i) for t in range(2) for i in range(3)]),
+        # no live edge in any trial
+        ([(3,), (200,)], "id long", {"p": 0.0, "trials": 2},
+         [(0, 3), (0, 200), (1, 3), (1, 200)]),
+    ],
+    ids=["cand_keys", "duplicate_seeds_p0", "duplicate_seeds", "outside_seeds",
+         "max_iter", "no_live_edges"],
+)
+def test_ic_driver_path_matches_distributed(
+    spark, path10, on_both_paths, seed_rows, schema, kw, expect
+):
+    seeds = spark.createDataFrame(seed_rows, schema)
+    dist, drv = on_both_paths(lambda: _cascade_rows(path10, seeds, seed=7, **kw))
+    assert drv == dist
+    fields, rows = drv
+    assert [name for name, _ in fields] == ["trial", *kw.get("key_cols", ()), "id"]
+    if expect is not None:
+        assert rows == expect
+
+
+def test_ic_trial_without_live_edges(spark, on_both_paths):
+    # some trials have live edges and some have none
+    path3 = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
+    kw = {"p": 0.15, "trials": 8, "seed": 1}
+    live = _live_trials(path3, kw["p"], kw["trials"], kw["seed"])
+    assert 0 < len(live) < kw["trials"]
+    seeds = spark.createDataFrame([(0,)], "id long")
+    dist, drv = on_both_paths(lambda: _cascade_rows(path3, seeds, **kw))
+    assert drv == dist
+    rows = drv[1]
+    assert {t for t, _ in rows} == set(range(kw["trials"]))
+    # a trial without live edges activates only its seed
+    for t in set(range(kw["trials"])) - live:
+        assert [r for r in rows if r[0] == t] == [(t, 0)]
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_ic_driver_rows_pass_the_row_verifier(spark, path10, arrow):
+    # Arrow off: createDataFrame verifies every row and rejects numpy scalars
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        seeds = spark.createDataFrame([(1, 0), (2, 4)], "cand int, id long")
+        _, rows = _cascade_rows(path10, seeds, p=1.0, trials=1, key_cols=("cand",))
+    finally:
+        spark.conf.set(key, before)
+    assert rows == [(0, 1, i) for i in range(10)] + [(0, 2, i) for i in range(10)]

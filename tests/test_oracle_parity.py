@@ -22,6 +22,7 @@ import pytest
 import __spark_entry__ as entry_mod
 from graphem_rapids_spark.checkpoint import readable_blocks, release
 from graphem_rapids_spark.queries import copurchase_edges
+from tests.conftest import max_job_id
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 from oracle_check import canon, table_hash  # noqa: E402  (driver-strict canon)
@@ -59,7 +60,7 @@ JOB_BUDGETS = {
     "closeness_sampled": 23,
     "harmonic_sampled": 20,
     "graph_eccentricity_sampled": 20,
-    "influence_ic": 47,
+    "influence_ic": 11,
     "graph_weighted_sssp": 52,
     "weighted_closeness_sampled": 50,
     "tokenizer_bpe_train_rounds": 20,
@@ -84,8 +85,8 @@ JOB_BUDGETS = {
     "graph_densest_subgraph": 46,
     "embedding_pca_power": 1905,
     "graph_effective_diameter": 19,
-    "spearman_qty_price": 16,
-    "spearman_matrix": 18,
+    "spearman_qty_price": 6,
+    "spearman_matrix": 6,
 }
 
 
@@ -98,17 +99,6 @@ def duck():
         )
     yield con
     con.close()
-
-
-def _max_job_id(spark) -> int:
-    """Highest job id after draining the listener bus — the status
-    store keeps only the last jobs, so count by id, not list size."""
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    cls = sc._jvm.java.lang.Class.forName("org.apache.spark.status.JobDataWrapper")
-    it = jsc.statusStore().store().view(cls).reverse().max(1).iterator()
-    return it.next().info().jobId() if it.hasNext() else -1
 
 
 def _persistent_rdds(spark) -> set[int]:
@@ -140,7 +130,7 @@ def test_oracle_parity(spark, duck, name):
     copurchase_edges(spark, SF_DIR)  # memoized; shared by the graph queries
     before = _persistent_rdds(spark)
     if budget is not None:
-        job0 = _max_job_id(spark)
+        job0 = max_job_id(spark)
     sdf = QUERIES[name](spark, SF_DIR)
     reads = readable_blocks(sdf)
     # driver canon sort_values a pandas frame — list/dict cells crash
@@ -154,7 +144,7 @@ def test_oracle_parity(spark, duck, name):
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
     if budget is not None:
-        jobs = _max_job_id(spark) - job0
+        jobs = max_job_id(spark) - job0
     _assert_owns_its_blocks(spark, name, sdf, before, reads)
 
     # pandas fetch = the driver's dtype-faithful path (HUGEINT→float64)

@@ -1,24 +1,33 @@
-"""scale.py — distributed global rank / dense index must be
-bit-identical to the single-partition window formulation it replaces
+"""scale.py — distributed global rank / dense index, and the driver
+ranks Spearman uses below ``session.DRIVER_COLLECT_MAX_ROWS``, must be
+bit-identical to the single-partition window formulation they replace
 (Spearman and relabel feed hash-gated oracles, so exactness is the
 contract, not approximation)."""
 
+import datetime
 import math
 import random
+from decimal import Decimal
 
 import numpy as np
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from graphem_rapids_spark import session
 from graphem_rapids_spark.analytics import (
     full_correlation_matrix,
     rank_column,
     spearman_correlation,
 )
-from graphem_rapids_spark.checkpoint import release
+from graphem_rapids_spark.checkpoint import checkpoint_count, release
 from graphem_rapids_spark.graph.canon import relabel_contiguous
-from graphem_rapids_spark.scale import global_dense_index, global_mean_ranks
+from graphem_rapids_spark.scale import (
+    driver_mean_ranks,
+    global_dense_index,
+    global_mean_ranks,
+)
+from tests.conftest import max_job_id
 
 
 def _window_mean_rank(df, col, out):
@@ -106,12 +115,13 @@ def test_relabel_contiguous_still_dense_and_ordered(spark):
     assert pairs == {(0, 1), (0, 2), (1, 2), (0, 3)}
 
 
-def test_spearman_unchanged(spark):
+def test_spearman_unchanged(spark, on_both_paths):
     # perfect monotone relation with ties -> rho == 1 exactly
     df = spark.createDataFrame(
         [(float(i // 3), float((i // 3) ** 2)) for i in range(99)], "a double, b double"
     )
-    assert spearman_correlation(df, "a", "b") == pytest.approx(1.0, abs=1e-12)
+    for rho in on_both_paths(lambda: spearman_correlation(df, "a", "b")):
+        assert rho == pytest.approx(1.0, abs=1e-12)
 
 
 # ---- Spearman contract: the prefix-sum rank correlation must give
@@ -141,12 +151,15 @@ def tie_pairs(spark):
     return spark.createDataFrame(rows, "a double, b long").repartition(8), want
 
 
-def test_spearman_matches_numpy_average_ranks(tie_pairs):
+def test_spearman_matches_numpy_average_ranks(tie_pairs, on_both_paths):
     df, want = tie_pairs
-    assert abs(spearman_correlation(df, "a", "b") - want) <= 1e-12
+    for rho in on_both_paths(lambda: spearman_correlation(df, "a", "b")):
+        assert abs(rho - want) <= 1e-12
 
 
-def test_spearman_same_without_aqe(spark, tie_pairs):
+def test_spearman_same_without_aqe(spark, tie_pairs, monkeypatch):
+    # the distributed plan (below the cap the ranks are driver-side)
+    monkeypatch.setattr(session, "DRIVER_COLLECT_MAX_ROWS", 0)
     df, want = tie_pairs
     before = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -157,39 +170,135 @@ def test_spearman_same_without_aqe(spark, tie_pairs):
     assert abs(got - want) <= 1e-12
 
 
-def test_spearman_constant_column_is_nan(spark):
+def test_spearman_constant_column_is_nan(spark, on_both_paths):
     df = spark.createDataFrame([(float(i), 4.0) for i in range(50)], "a double, b double")
-    assert math.isnan(spearman_correlation(df, "a", "b"))
-    mat = full_correlation_matrix(df, ["a", "b"])
-    assert math.isnan(mat[("a", "b")]) and math.isnan(mat[("b", "a")])
+
+    def run():
+        return spearman_correlation(df, "a", "b"), full_correlation_matrix(df, ["a", "b"])
+
+    for rho, mat in on_both_paths(run):
+        assert math.isnan(rho)
+        assert math.isnan(mat[("a", "b")]) and math.isnan(mat[("b", "a")])
 
 
 @pytest.mark.parametrize("n", [0, 1])
-def test_spearman_fewer_than_two_rows_is_nan(spark, n):
+def test_spearman_fewer_than_two_rows_is_nan(spark, n, on_both_paths):
     df = spark.createDataFrame([(1.0, 2.0)][:n], "a double, b double")
-    assert math.isnan(spearman_correlation(df, "a", "b"))
+    for rho in on_both_paths(lambda: spearman_correlation(df, "a", "b")):
+        assert math.isnan(rho)
 
 
-def test_spearman_null_and_nan_keep_sql_order(spark):
+def test_spearman_null_and_nan_keep_sql_order(spark, on_both_paths):
     # Spark SQL's order: null below every value, NaN above, each its own
     # tie group — the value the window/prefix-sum ranks gave
     rows = [(1.0, 2.0), (2.0, None), (None, 1.0), (3.0, 5.0), (4.0, 4.0), (5.0, 7.0), (math.nan, 3.0)]
     df = spark.createDataFrame(rows, "a double, b double")
-    assert spearman_correlation(df, "a", "b") == pytest.approx(0.6428571428571427, abs=1e-12)
+    for rho in on_both_paths(lambda: spearman_correlation(df, "a", "b")):
+        assert rho == pytest.approx(0.6428571428571427, abs=1e-12)
 
 
-def test_full_correlation_matrix_matches_pairwise(tie_pairs):
+def test_full_correlation_matrix_matches_pairwise(tie_pairs, on_both_paths):
     df, want = tie_pairs
-    mat = full_correlation_matrix(df.withColumn("c", -F.col("a")), ["a", "b", "c"])
-    assert abs(mat[("a", "b")] - want) <= 1e-12
-    assert abs(mat[("c", "b")] + want) <= 1e-12
-    assert mat[("a", "c")] == pytest.approx(-1.0, abs=1e-12)
-    assert all(mat[(x, x)] == pytest.approx(1.0, abs=1e-12) for x in "abc")
+    three = df.withColumn("c", -F.col("a"))
+    for mat in on_both_paths(lambda: full_correlation_matrix(three, ["a", "b", "c"])):
+        assert abs(mat[("a", "b")] - want) <= 1e-12
+        assert abs(mat[("c", "b")] + want) <= 1e-12
+        assert mat[("a", "c")] == pytest.approx(-1.0, abs=1e-12)
+        assert all(mat[(x, x)] == pytest.approx(1.0, abs=1e-12) for x in "abc")
 
 
-def test_spearman_frees_its_rank_table(spark, tie_pairs):
+def test_spearman_frees_its_rank_table(spark, tie_pairs, on_both_paths):
+    # cap 0 runs the distributed rank table; the driver path frees its
+    # materialized input too
     df, _ = tie_pairs
     storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
     before = len(storage())
-    full_correlation_matrix(df, ["a", "b"])
+    on_both_paths(lambda: full_correlation_matrix(df, ["a", "b"]))
     assert len(storage()) == before
+
+
+# ---- driver ranks: below session.DRIVER_COLLECT_MAX_ROWS Spearman ranks
+# the collected columns in numpy, in Spark SQL's order
+BIG = 2**53  # above it, neighboring longs share one float64
+
+
+def test_driver_mean_ranks_match_window(spark):
+    # exact values (longs past 2⁵³, decimals past float64's digits),
+    # nulls first, NaN last as one group, -0.0 tied with 0.0
+    rng = random.Random(9)
+    tiny = Decimal("1e-20")
+    rows = [
+        (
+            i,
+            rng.choice([None, math.nan, -0.0, 0.0, 1.5, 1.5, -2.0, math.inf]),
+            rng.choice([None, BIG, BIG + 1, BIG + 2, -BIG, 3]),
+            rng.choice([None, Decimal("0.1"), Decimal("0.1") + tiny, Decimal("-5"), Decimal("0.1") - tiny]),
+            rng.choice([None, "b", "a", "é", "ab", ""]),
+            rng.choice([None, True, False]),
+            rng.choice([None, datetime.date(2020, 1, 2), datetime.date(1999, 5, 6)]),
+            rng.choice([None, 1.25, -1.25, 0.0]),
+        )
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "id long, a double, b long, c decimal(38,21), s string, t boolean, d date, f float",
+    ).repartition(4)
+    cols = ["a", "b", "c", "s", "t", "d", "f"]
+    tbl = df.toArrow()
+    ids = tbl.column("id").to_pylist()
+    got = {c: dict(zip(ids, driver_mean_ranks(tbl.column(c)).tolist())) for c in cols}
+    want = df
+    for c in cols:
+        want = _window_mean_rank(want, c, "r" + c)
+    for r in want.collect():
+        assert [got[c][r.id] for c in cols] == [r["r" + c] for c in cols]
+
+
+@pytest.mark.parametrize(
+    "rows, schema, want",
+    [
+        # ties, nulls, NaN and ±0.0 in a double and a long column
+        ([(x, y) for x, y in zip([0.0, -0.0, None, math.nan, 2.0, 2.0, math.nan, 1.0] * 5,
+                                 [1, None, 3, 3, 0, 7, 7, None] * 5)], "a double, b long", None),
+        # longs that float64 cannot tell apart: exact ranks give ρ = 1
+        ([(BIG + i, i) for i in (1, 0, 3, 2, 5, 4)], "a long, b int", 1.0),
+        # decimals finer than float64
+        ([(Decimal("0.1") + Decimal(i) * Decimal("1e-25"), -i) for i in (2, 0, 1, 3)],
+         "a decimal(38,30), b int", -1.0),
+    ],
+    ids=["ties_nulls_nan_zeros", "long_past_2_53", "decimal"],
+)
+def test_spearman_driver_path_matches_distributed(spark, on_both_paths, rows, schema, want):
+    df = spark.createDataFrame(rows, schema).repartition(3)
+    dist, drv = on_both_paths(lambda: spearman_correlation(df, "a", "b"))
+    assert abs(dist - drv) <= 1e-12
+    if want is not None:
+        assert drv == pytest.approx(want, abs=1e-12)
+
+
+def test_spearman_reads_its_input_once(spark, monkeypatch):
+    # an unmaterialized join input runs its exchanges once: the ranks
+    # read the materialized columns, not the join a second time
+    monkeypatch.setattr(session, "DRIVER_COLLECT_MAX_ROWS", 0)
+    rng = random.Random(3)
+    left = spark.createDataFrame(
+        [(i % 500, rng.random()) for i in range(2000)], "id long, x double"
+    ).repartition(4)
+    right = left.groupBy("id").agg(F.count("*").alias("n"))
+
+    def jobs(run):
+        start = max_job_id(spark)
+        run()
+        return max_job_id(spark) - start
+
+    def materialized_then_spearman():
+        data, _ = checkpoint_count(left.join(right, "id").select("x", "n"))
+        spearman_correlation(data, "x", "n")
+        release(data)
+
+    direct = jobs(lambda: spearman_correlation(left.join(right, "id"), "x", "n"))
+    # no more jobs than materializing the join first (which even adds a
+    # job: Spearman materializes the checkpoint again); a second read of
+    # the join runs its exchange jobs again (20 vs 17 jobs on local[4])
+    assert direct <= jobs(materialized_then_spearman)
