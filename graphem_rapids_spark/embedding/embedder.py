@@ -1,6 +1,6 @@
 """Force-directed graph embedder — the reference's core "query engine"
 (E2–E14, ``backends/embedder_pytorch.py``), re-expressed as DataFrame
-dataflow:
+dataflow (small graphs run the same round in numpy, below):
 
 - gather-by-index → equi-join edges⋈positions (broadcast when small)
 - scatter-add     → groupBy(id) hash aggregate with per-component sums
@@ -22,17 +22,34 @@ Semantics preserved exactly (SURVEY.md §7.4 item 5):
   (``:723-734``), scatter-added per endpoint
 - update + center + divide by per-dim sample std + 1e-6 (``:795-804``)
 
-Iteration/lineage strategy (the Pregel problem, SURVEY.md §4): every
-iteration checkpoints its moved positions (``localCheckpoint``, lazy
-on the intersection path), which truncates lineage each round; the
-superseded round's blocks are released once a later scan has read
-them.
+Two strategies, chosen once in the constructor after one job that
+materializes and counts the canonical edge table:
 
-Scale notes: positions are n×(d+1) doubles — broadcast-joined while
-they fit (< ~1e8 vertices with 64 MB threshold the planner decides);
-edge joins otherwise shuffle on id with AQE handling skew. The kNN
-side is bounded by ``sample_size ≤ 1024`` queries regardless of graph
-size, exactly like the reference.
+- **driver** (``n_edges ≤ session.DRIVER_COLLECT_MAX_ROWS`` and
+  ``n ≤ session.DRIVER_EIG_MAX_VERTICES``, read at construction):
+  the edge table is collected once through Arrow and the spectral
+  init and every layout round run in numpy on the driver, the
+  reference's own single-device form. Positions are an n×d array;
+  each round is :meth:`GraphEmbedderSpark._driver_round`, the same
+  steps in the same order as the Spark expressions below, with the
+  same sample (:func:`functions.xxhash64_np` is Spark's hash) and the
+  same kNN kernel (:func:`sweep_topk`). A round runs no Spark job;
+  :attr:`GraphEmbedderSpark.positions` ships the array back as one
+  frame per round, on demand. Per-vertex force sums add in a
+  different order than Spark's hash aggregate, so the two paths agree
+  to rounding (~1e-12 after a few rounds), not bit for bit.
+- **distributed** (larger graphs): positions are a DataFrame and each
+  round is a join/aggregate dataflow. Every round checkpoints its
+  moved positions (``localCheckpoint``, lazy on the intersection
+  path), which truncates lineage each round; the superseded round's
+  blocks are released once a later scan has read them (the Pregel
+  problem, SURVEY.md §4).
+
+Scale notes (distributed path): positions are n×(d+1) doubles —
+broadcast-joined while they fit (< ~1e8 vertices with 64 MB threshold
+the planner decides); edge joins otherwise shuffle on id with AQE
+handling skew. The kNN side is bounded by ``sample_size ≤ 1024``
+queries regardless of graph size, exactly like the reference.
 """
 
 from __future__ import annotations
@@ -41,19 +58,100 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graphem_rapids_spark import session
 from graphem_rapids_spark.checkpoint import (
+    checkpoint_count,
     eager_checkpoint,
-    eager_materialize,
     lazy_checkpoint,
     persist,
     release,
 )
 
-from graphem_rapids_spark.embedding.laplacian import laplacian_embedding
+from graphem_rapids_spark.embedding.laplacian import laplacian_embedding, positions_frame
+from graphem_rapids_spark.functions import xxhash64_np
 from graphem_rapids_spark.graph.canon import canonicalize_edges
 from graphem_rapids_spark.graph.generators import SparkGraph
 
 _EPS = 1e-6
+
+
+def sweep_topk(
+    queries: np.ndarray, points: np.ndarray, ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exact k nearest ``points`` (rows) of every ``queries`` row by
+    squared euclidean distance, ties broken by ``ids``: ``(rows, d2)``,
+    each (n_queries, min(k, n_points)), sorted by (d2, id) per query.
+
+    Sorted sweep: the points are sorted once by coordinate 0, and each
+    query sweeps outward from its insertion slot in geometrically
+    growing chunks, with the running k-th-best distance as the window
+    bound — a point whose coordinate-0 gap squared already exceeds it
+    cannot enter the top-k (d2 ≥ gap²). Midpoints are low-dimensional
+    layout points, so a query examines a small slice; memory stays
+    linear in the points (no queries × points matrix). Per-element d2
+    is summed dimension by dimension in index order, the same floats
+    as the matrix form, and the kept set is the k smallest by
+    (d2, id) lexicographic — deterministic, and a superset-proof
+    partial for a later (d2, id) merge across partitions."""
+    n_points, n_dims = points.shape
+    n_q = queries.shape[0]
+    kk = min(k, n_points)
+    out_i = np.empty((n_q, kk), dtype=np.int64)
+    out_d = np.empty((n_q, kk))
+    if kk == 0:
+        return out_i, out_d
+    order = np.argsort(points[:, 0], kind="stable")
+    Ms = points[order]
+    ids_s = ids[order]
+    key = np.ascontiguousarray(Ms[:, 0])
+    empty_d = np.empty(0)
+    empty_s = np.empty(0, dtype=np.int64)
+    for qi in range(n_q):
+        q = queries[qi]
+        q0 = q[0]
+        lo = hi = int(np.searchsorted(key, q0))
+        cand_d, cand_s = empty_d, empty_s  # cand_s: slots in sorted order
+        # geometric window growth: small first probe (the top-k bound
+        # usually lands within a few hundred neighbors by coordinate
+        # 0), doubling while the bound stays unmet
+        chunk = 512
+        while lo > 0 or hi < n_points:
+            lg = (q0 - key[lo - 1]) ** 2 if lo > 0 else np.inf
+            rg = (key[hi] - q0) ** 2 if hi < n_points else np.inf
+            if cand_d.shape[0] >= kk:
+                bound = cand_d[-1]
+                if lg > bound and rg > bound:
+                    break
+            if rg <= lg:
+                start, stop = hi, min(n_points, hi + chunk)
+                hi = stop
+            else:
+                start, stop = max(0, lo - chunk), lo
+                lo = start
+            chunk *= 2
+            d2b = (Ms[start:stop, 0] - q0) ** 2
+            for d in range(1, n_dims):
+                d2b += (Ms[start:stop, d] - q[d]) ** 2
+            cd = np.concatenate([cand_d, d2b])
+            cs = np.concatenate([cand_s, np.arange(start, stop)])
+            sel = np.lexsort((ids_s[cs], cd))[:kk]
+            cand_d, cand_s = cd[sel], cs[sel]
+        out_d[qi] = cand_d
+        out_i[qi] = order[cand_s]
+    return out_i, out_d
+
+
+def _orient(ax, ay, bx, by, cx, cy):
+    """2-D orientation determinant (:738-774); Column or array operands."""
+    return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
+
+
+def _sq_norm(parts):
+    """Σ x² over ``parts`` in index order (the Spark expression's order)."""
+    out = parts[0] * parts[0]
+    for x in parts[1:]:
+        out = out + x * x
+    return out
 
 
 class GraphEmbedderSpark:
@@ -124,13 +222,20 @@ class GraphEmbedderSpark:
         # row checkpoint, not .persist(): the columnar cache build pays
         # a compression-encoder pass per column (~10-25 µs/row) that a
         # full-table-scanning consumer never earns back (see
-        # checkpoint.eager_materialize)
-        self.edges = eager_materialize(
+        # checkpoint.eager_materialize); one job writes it and counts
+        self.edges, self.n_edges = checkpoint_count(
             base_edges.select(*cols).withColumn(
                 "edge_id", F.xxhash64("src", "dst")
-            )
+            ),
+            sever_stats=False,
         )
-        self.n_edges = self.edges.count()
+        self._driver = (
+            self.n_edges <= session.DRIVER_COLLECT_MAX_ROWS
+            and self.n <= session.DRIVER_EIG_MAX_VERTICES
+        )
+        if self._driver:
+            self._init_driver(cols)
+            return
         self._positions = persist(laplacian_embedding(
             self.edges, self.n, self.dim, seed=self.seed,
             # self.edges is src<dst distinct by construction (canonical
@@ -144,12 +249,40 @@ class GraphEmbedderSpark:
         self._pos_owner = self._positions
         self._stale_blocks: list[DataFrame] = []
 
+    def _init_driver(self, cols: list[str]) -> None:
+        """Driver path set-up: collect the edge table once, in the
+        (src, dst) order the spectral collect sorts by on the cluster
+        (so the init is the same floats), and solve the init on it."""
+        tbl = self.edges.toArrow().combine_chunks()
+        arr = {
+            c: tbl.column(c).to_numpy(zero_copy_only=False)
+            for c in (*cols, "edge_id")
+        }
+        order = np.lexsort((arr["dst"], arr["src"]))
+        self._src = arr["src"].astype(np.int64)[order]
+        self._dst = arr["dst"].astype(np.int64)[order]
+        self._eid = arr["edge_id"].astype(np.int64)[order]
+        self._w = arr["weight"].astype(np.float64)[order] if self.weighted else None
+        self._P = laplacian_embedding(
+            (self._src, self._dst), self.n, self.dim, seed=self.seed,
+            assume_canonical=True,
+        )
+        self._pos_frame: DataFrame | None = None
+
     # -- position access (E14) ------------------------------------------
     @property
     def positions(self) -> DataFrame:
-        return self._positions
+        """(id, pos) — on the driver path one frame per round, built on
+        first use."""
+        if not self._driver:
+            return self._positions
+        if self._pos_frame is None:
+            self._pos_frame = positions_frame(self.edges.sparkSession, self._P)
+        return self._pos_frame
 
     def get_positions(self) -> np.ndarray:
+        if self._driver:
+            return self._P.copy()
         rows = self._positions.orderBy("id").collect()
         out = np.zeros((self.n, self.dim))
         for r in rows:
@@ -157,6 +290,12 @@ class GraphEmbedderSpark:
         return out
 
     def set_positions(self, df: DataFrame) -> None:
+        if self._driver:
+            P = np.zeros((self.n, self.dim))
+            for r in df.select("id", "pos").collect():
+                P[r.id] = r.pos
+            self._P, self._pos_frame = P, None
+            return
         old_owner = self._pos_owner
         self._positions = persist(df)
         self._positions.count()  # materializes before any release
@@ -195,7 +334,7 @@ class GraphEmbedderSpark:
             d = d.withColumn(
                 f"_df{i}", F.col("p2").getItem(i) - F.col("p1").getItem(i)
             )
-        dist = F.sqrt(sum(F.col(f"_df{i}") * F.col(f"_df{i}") for i in dims))
+        dist = F.sqrt(_sq_norm([F.col(f"_df{i}") for i in dims]))
         d = d.withColumn("_dist", dist + F.lit(_EPS))
         mag = F.lit(-self.k_attr) * (F.col("_dist") - F.lit(self.L_min))
         if self.weighted:  # heavier edges pull proportionally harder
@@ -295,29 +434,9 @@ class GraphEmbedderSpark:
 
         mcols = [f"m{i}" for i in dims]
 
-        n_dims = len(mcols)
-        n_q = len(q_ids)
-
         def partial_topk(batches):
             import pandas as pd
 
-            # Sorted-sweep exact top-k (r8 opt round): the former kernel
-            # evaluated the FULL rows x s distance matrix per batch
-            # (~57 ms/batch warm even with preallocated buffers —
-            # memory-bandwidth-bound under 10-way task concurrency).
-            # Midpoints are low-dim layout points, so sorting the
-            # partition once by coordinate 0 and sweeping outward from
-            # each query with the running k-th-best distance as the
-            # window bound examines only a tiny, provably sufficient
-            # slice: a point whose coordinate-0 gap squared already
-            # exceeds the current k-th smallest d2 cannot enter the
-            # top-k (d2 >= gap^2). Per-element d2 values are
-            # bit-identical to the matrix form (same per-dim
-            # subtraction/addition order); the kept set is the k
-            # smallest by (d2, edge_id) LEXICOGRAPHIC, which is
-            # deterministic and a superset-proof partial for the
-            # downstream (d2 asc, edge_id asc) global window (the old
-            # argpartition kept an arbitrary tied subset).
             es, ms = [], []
             for pdf in batches:
                 es.append(pdf["edge_id"].to_numpy(dtype=np.int64))
@@ -328,59 +447,13 @@ class GraphEmbedderSpark:
                 )
             if not es:
                 return
-            E = np.concatenate(es) if len(es) > 1 else es[0]
-            M = np.vstack(ms) if len(ms) > 1 else ms[0]
-            rows = E.shape[0]
-            kk_eff = min(kk, rows)
-            order = np.argsort(M[:, 0], kind="stable")
-            Ms = M[order]
-            Es = E[order]
-            key = np.ascontiguousarray(Ms[:, 0])
-            out_e = np.empty((n_q, kk_eff), dtype=np.int64)
-            out_d = np.empty((n_q, kk_eff))
-            empty_d = np.empty(0)
-            empty_e = np.empty(0, dtype=np.int64)
-            for qi in range(n_q):
-                q = q_mid[qi]
-                q0 = q[0]
-                pos = int(np.searchsorted(key, q0))
-                lo = hi = pos
-                cand_d, cand_e = empty_d, empty_e
-                # geometric window growth: small first probe (the top-k
-                # bound usually lands within a few hundred neighbors by
-                # coordinate 0), doubling while the bound stays unmet
-                chunk = 512
-                while lo > 0 or hi < rows:
-                    lg = (q0 - key[lo - 1]) ** 2 if lo > 0 else np.inf
-                    rg = (key[hi] - q0) ** 2 if hi < rows else np.inf
-                    if cand_d.shape[0] >= kk_eff:
-                        bound = cand_d[-1]
-                        if lg > bound and rg > bound:
-                            break
-                    if rg <= lg:
-                        nhi = min(rows, hi + chunk)
-                        blk = slice(hi, nhi)
-                        hi = nhi
-                    else:
-                        nlo = max(0, lo - chunk)
-                        blk = slice(nlo, lo)
-                        lo = nlo
-                    chunk *= 2
-                    d2b = (Ms[blk, 0] - q0) ** 2
-                    for d in range(1, n_dims):
-                        d2b += (Ms[blk, d] - q[d]) ** 2
-                    cd = np.concatenate([cand_d, d2b])
-                    ce = np.concatenate([cand_e, Es[blk]])
-                    sel = np.lexsort((ce, cd))[:kk_eff]
-                    cand_d = cd[sel]
-                    cand_e = ce[sel]
-                out_d[qi, : cand_d.shape[0]] = cand_d
-                out_e[qi, : cand_e.shape[0]] = cand_e
+            E = np.concatenate(es)
+            rows, d2 = sweep_topk(q_mid, np.vstack(ms), E, kk)
             yield pd.DataFrame(
                 {
-                    "qid": np.repeat(q_ids, kk_eff),
-                    "edge_id": out_e.reshape(-1),
-                    "_d2": out_d.reshape(-1),
+                    "qid": np.repeat(q_ids, rows.shape[1]),
+                    "edge_id": E[rows].reshape(-1),
+                    "_d2": d2.reshape(-1),
                 }
             )
 
@@ -432,17 +505,14 @@ class GraphEmbedderSpark:
         )
 
         # 2-D orientation intersection test (:738-774) — coords 0,1 only
-        def orient(ax, ay, bx, by, cx, cy):
-            return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-
         px, py = F.col("qp1").getItem(0), F.col("qp1").getItem(1)
         p2x, p2y = F.col("qp2").getItem(0), F.col("qp2").getItem(1)
         qx, qy = F.col("p1").getItem(0), F.col("p1").getItem(1)
         q2x, q2y = F.col("p2").getItem(0), F.col("p2").getItem(1)
-        o1 = orient(px, py, p2x, p2y, qx, qy)
-        o2 = orient(px, py, p2x, p2y, q2x, q2y)
-        o3 = orient(qx, qy, q2x, q2y, px, py)
-        o4 = orient(qx, qy, q2x, q2y, p2x, p2y)
+        o1 = _orient(px, py, p2x, p2y, qx, qy)
+        o2 = _orient(px, py, p2x, p2y, q2x, q2y)
+        o3 = _orient(qx, qy, q2x, q2y, px, py)
+        o4 = _orient(qx, qy, q2x, q2y, p2x, p2y)
         crossing = pairs.filter((o1 * o2 < 0) & (o3 * o4 < 0))
 
         # repulsion from 4-endpoint midpoint (:723-734)
@@ -458,7 +528,7 @@ class GraphEmbedderSpark:
             diffs = [
                 F.col(pos_col).getItem(i) - F.col("_m").getItem(i) for i in dims
             ]
-            dist = F.sqrt(sum(di * di for di in diffs)) + F.lit(_EPS)
+            dist = F.sqrt(_sq_norm(diffs)) + F.lit(_EPS)
             return F.struct(
                 F.col(id_col).alias("id"),
                 *[
@@ -487,8 +557,65 @@ class GraphEmbedderSpark:
             release(df)
         self._stale_blocks = []
 
+    def _driver_round(self) -> None:
+        """One layout step on the driver: the distributed round's steps
+        and float expressions, in its order, over the n×d array."""
+        P, src, dst, eid = self._P, self._src, self._dst, self._eid
+        p1, p2 = P[src], P[dst]
+        # spring law (E2): +F on src, −F on dst
+        diff = p2 - p1
+        dist = (np.sqrt(_sq_norm(diff.T)) + _EPS)[:, None]
+        mag = -self.k_attr * (dist - self.L_min)
+        if self.weighted:
+            mag = mag * self._w[:, None]
+        at, forces = [src, dst], [mag * diff / dist, -mag * diff / dist]
+        if self.k_inter > 0 and self.n_edges > 1:
+            mids = (p1 + p2) / 2.0
+            # the top-s sample by Spark's hash, ascending as signed int64
+            s = min(self.sample_size, self.n_edges)
+            q = np.argsort(xxhash64_np(eid, self.seed + self._iter), kind="stable")[:s]
+            rows, _ = sweep_topk(mids[q], mids, eid, self.n_neighbors + 1)
+            # drop self, keep the first k by (d2, edge_id)
+            keep = eid[rows] != eid[q][:, None]
+            keep &= np.cumsum(keep, axis=1) <= self.n_neighbors
+            qe, ne = np.repeat(q, keep.sum(axis=1)), rows[keep]
+            ends = [src[qe], dst[qe], src[ne], dst[ne]]
+            qa, qb, na, nb = ends
+            # candidate filter i<j on edge ids, shared-vertex exclusion
+            ok = (eid[qe] < eid[ne]) & ~((qa == na) | (qa == nb) | (qb == na) | (qb == nb))
+            # the 2-D orientation test on coords 0,1 (no crossing in 1-D)
+            pts = [P[v[ok]] for v in ends]
+            if self.dim >= 2:
+                (px, py), (p2x, p2y), (qx, qy), (q2x, q2y) = ((x[:, 0], x[:, 1]) for x in pts)
+                o1 = _orient(px, py, p2x, p2y, qx, qy)
+                o2 = _orient(px, py, p2x, p2y, q2x, q2y)
+                o3 = _orient(qx, qy, q2x, q2y, px, py)
+                o4 = _orient(qx, qy, q2x, q2y, p2x, p2y)
+                cross = (o1 * o2 < 0) & (o3 * o4 < 0)
+                pts = [x[cross] for x in pts]
+                # repulsion of each endpoint from the 4-endpoint midpoint
+                m = ((pts[0] + pts[1]) + (pts[2] + pts[3])) / 4.0
+                for v, x in zip(ends, pts):
+                    d = x - m
+                    r = (np.sqrt(_sq_norm(d.T)) + _EPS)[:, None]
+                    at.append(v[ok][cross])
+                    forces.append(self.k_inter * d / (r * r))
+        at, forces = np.concatenate(at), np.concatenate(forces)
+        moved = P + np.column_stack(
+            [np.bincount(at, weights=f, minlength=self.n) for f in forces.T]
+        )
+        # center + per-dim sample std (ddof=1; 0 for one vertex, as
+        # coalesce(stddev_samp, 0))
+        std = moved.std(axis=0, ddof=1) if self.n > 1 else np.zeros(self.dim)
+        self._P = (moved - moved.mean(axis=0)) / (std + _EPS)
+        self._pos_frame = None
+        self._iter += 1
+
     def update_positions(self) -> None:
         """One layout step (E2–E12, ``update_positions`` :776-806)."""
+        if self._driver:
+            self._driver_round()
+            return
         ee = self._edge_endpoints()
         if self.k_inter > 0 and self.n_edges > 1:
             inter, mids_cache = self._intersection_contribs(ee)
@@ -580,11 +707,11 @@ class GraphEmbedderSpark:
         """E13 (``run_layout`` :808-833)."""
         for _ in range(num_iterations):
             self.update_positions()
-        return self._positions
+        return self.positions
 
     def radial_distances(self) -> DataFrame:
         """(id, radius) — ‖pos‖₂ (reference ``influence.py:31-33``)."""
-        return self._positions.select(
+        return self.positions.select(
             "id", self._norm(F.col("pos")).alias("radius")
         )
 

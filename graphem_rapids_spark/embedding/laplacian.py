@@ -1,12 +1,15 @@
 """Spectral (Laplacian) initialization — reference E1
 (``embedder_pytorch.py:337-379``): normalized Laplacian, k+1 smallest
-eigenvectors, drop the trivial first; random-init fallback on failure.
+eigenvectors, drop the trivial first; random-init fallback when the
+numpy solve fails (a failed Spark read raises).
 
 Two strategies, auto-selected by size (mirroring the reference's own
 backend-selection ethos, ``utils/backend_selection.py:178-196``):
 
 - **driver** (n ≤ DRIVER_EIG_MAX_VERTICES): collect the edge list, solve
-  in numpy, parallelize the n×k result back. The solver depends on n:
+  in numpy, parallelize the n×k result back — or, given edge arrays the
+  caller already collected, return the n×k array. The solver depends
+  on n:
 
   - n ≤ DRIVER_EXACT_MAX_VERTICES: exact. Block LOBPCG on the shifted
     operator ``2I − L``, converged to a residual of ``_LOBPCG_TOL``;
@@ -62,21 +65,28 @@ _LOBPCG_WINDOW = 20
 
 
 def laplacian_embedding(
-    edges: DataFrame,
+    edges: DataFrame | tuple[np.ndarray, np.ndarray],
     n_vertices: int,
     n_components: int = 2,
     seed: int = 0,
     max_driver_n: int | None = None,
     power_iters: int = 30,
     assume_canonical: bool = False,
-) -> DataFrame:
+) -> DataFrame | np.ndarray:
     """positions(id, pos: array<double>) from the spectral embedding.
 
     ``assume_canonical=True`` promises src<dst distinct edges (the
     embedder's contract for ``self.edges``), letting the driver path
     skip its O(nnz log nnz) dedupe sort — the collect is ordered on
     the cluster instead, so the summation order (hence every float)
-    stays deterministic across core counts."""
+    stays deterministic across core counts.
+
+    ``edges`` may instead be the ``(src, dst)`` int64 arrays already
+    collected to the driver, sorted by (src, dst) when canonical: the
+    driver solve then runs on them and returns the n×k array (the
+    embedder's driver layout)."""
+    if isinstance(edges, tuple):
+        return _driver_solve(*edges, n_vertices, n_components, seed, assume_canonical)
     if max_driver_n is None:
         from graphem_rapids_spark.session import DRIVER_EIG_MAX_VERTICES
 
@@ -90,13 +100,55 @@ def laplacian_embedding(
     )
 
 
+def positions_frame(spark, pos: np.ndarray) -> DataFrame:
+    """positions(id, pos) of the n×k array ``pos``, row i = vertex i.
+
+    Plain Python ints/floats (not numpy scalars/arrays): the row-wise
+    createDataFrame verifier (taken when Arrow conversion is disabled)
+    rejects numpy.float64 inside array<double>. ``.tolist()`` converts
+    both the container and every element, so the same frame works with
+    Arrow on AND off."""
+    import pandas as pd
+
+    out = pd.DataFrame(
+        {"id": list(range(pos.shape[0])), "pos": pos.tolist()}, dtype=object
+    )
+    return spark.createDataFrame(out, "id long, pos array<double>")
+
+
 def _driver_eigh(
     edges: DataFrame, n: int, k: int, seed: int, assume_canonical: bool = False
 ) -> DataFrame:
     """Driver-side eigensolve — the reference's own strategy
     (``embedder_pytorch.py:337-379`` collects to the driver regardless
-    of size). Pure numpy (scipy is not a dependency), on the normalized
-    Laplacian with L_ii = 0 on isolated rows:
+    of size): collect the edge list, :func:`_driver_solve`, ship the
+    n×k result back. A failed collect raises."""
+    sel = edges.select("src", "dst")
+    if assume_canonical:
+        # caller guarantees src<dst distinct: no dedupe needed. A
+        # cluster-side total order replaces the driver-side
+        # O(nnz log nnz) unique sort (measured 1.1 s of the 3.2 s
+        # eigensolve at nnz=2.4M), keeping the mirror-sum order —
+        # hence every float — deterministic across core counts.
+        sel = sel.orderBy("src", "dst")
+    # Arrow collect → numpy; combine_chunks first so the conversion is
+    # one C-level concat instead of a per-chunk flatten (255 collect
+    # batches at bench scale)
+    tbl = sel.toArrow().combine_chunks()
+    src, dst = (
+        tbl.column(c).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+        for c in ("src", "dst")
+    )
+    emb = _driver_solve(src, dst, n, k, seed, assume_canonical)
+    return positions_frame(edges.sparkSession, emb)
+
+
+def _driver_solve(
+    src: np.ndarray, dst: np.ndarray, n: int, k: int, seed: int, assume_canonical: bool
+) -> np.ndarray:
+    """The n×k spectral embedding of the (src, dst) edge list in numpy
+    (scipy is not a dependency), on the normalized Laplacian with
+    L_ii = 0 on isolated rows:
 
     - n ≤ DRIVER_EXACT_MAX_VERTICES: exact bottom nontrivial
       eigenvectors — block LOBPCG (:func:`_numpy_lobpcg`), or dense
@@ -104,63 +156,35 @@ def _driver_eigh(
     - larger n: :func:`_numpy_orthogonal_iteration`, a capped block
       power iteration.
 
-    All three share the sign canonicalization below."""
-    spark = edges.sparkSession
+    All three share the sign canonicalization below. A numpy solver
+    error (``LinAlgError``) takes the reference's random init."""
+    rows = np.concatenate([src, dst])
+    cols = np.concatenate([dst, src])
+    if rows.size and (rows.min() < 0 or rows.max() >= n):
+        raise ValueError(f"edge endpoints must be vertex ids in [0, {n})")
+    if not assume_canonical:
+        # dedupe multi-edges via pair codes (n ≤ 1e6 → no overflow)
+        code = np.unique(rows * np.int64(n) + cols)
+        rows, cols = code // n, code % n
+    deg = np.bincount(rows, minlength=n).astype(np.float64)
     try:
-        sel = edges.select("src", "dst")
-        if assume_canonical:
-            # caller guarantees src<dst distinct: no dedupe needed. A
-            # cluster-side total order replaces the driver-side
-            # O(nnz log nnz) unique sort (measured 1.1 s of the 3.2 s
-            # eigensolve at nnz=2.4M), keeping the mirror-sum order —
-            # hence every float — deterministic across core counts.
-            sel = sel.orderBy("src", "dst")
-        try:
-            # Arrow collect → numpy; combine_chunks first so the
-            # conversion is one C-level concat instead of a per-chunk
-            # flatten (255 collect batches at bench scale)
-            tbl = sel.toArrow().combine_chunks()
-            src = tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            dst = tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-        except Exception:
-            pdf = sel.toPandas()
-            src = pdf["src"].to_numpy(np.int64)
-            dst = pdf["dst"].to_numpy(np.int64)
-        rows = np.concatenate([src, dst])
-        cols = np.concatenate([dst, src])
-        if not assume_canonical:
-            # dedupe multi-edges via pair codes (n ≤ 1e6 → no overflow)
-            code = np.unique(rows * np.int64(n) + cols)
-            rows, cols = code // n, code % n
-        deg = np.bincount(rows, minlength=n).astype(np.float64)
         if n > DRIVER_EXACT_MAX_VERTICES:
             emb = _numpy_orthogonal_iteration(rows, cols, deg, n, k, seed)
         else:
             emb = _numpy_lobpcg(rows, cols, deg, n, k, seed)
             if emb is None:
                 emb = _dense_eigh(rows, cols, deg, n, k)
-        if emb.shape[1] < k:  # degenerate tiny graphs: pad with zeros
-            emb = np.hstack([emb, np.zeros((n, k - emb.shape[1]))])
-        # sign canonicalization so the embedding is deterministic
-        # (eig sign is arbitrary; layout is reflection-invariant anyway)
-        signs = np.sign(emb[np.abs(emb).argmax(axis=0), np.arange(emb.shape[1])])
-        signs[signs == 0] = 1.0
-        emb = emb * signs
-    except Exception:
+    except np.linalg.LinAlgError:
         # reference fallback: 0.1 * randn (embedder_pytorch.py:366-369)
         rng = np.random.default_rng(seed)
-        emb = rng.standard_normal((n, k)) * 0.1
-    import pandas as pd
-
-    # Plain Python ints/floats (not numpy scalars/arrays): the row-wise
-    # createDataFrame verifier (taken when Arrow conversion is disabled)
-    # rejects numpy.float64 inside array<double>. ``.tolist()`` converts
-    # both the container and every element, so the same frame works with
-    # Arrow on AND off.
-    out = pd.DataFrame(
-        {"id": list(range(n)), "pos": emb.tolist()}, dtype=object
-    )
-    return spark.createDataFrame(out, "id long, pos array<double>")
+        return rng.standard_normal((n, k)) * 0.1
+    if emb.shape[1] < k:  # degenerate tiny graphs: pad with zeros
+        emb = np.hstack([emb, np.zeros((n, k - emb.shape[1]))])
+    # sign canonicalization so the embedding is deterministic
+    # (eig sign is arbitrary; layout is reflection-invariant anyway)
+    signs = np.sign(emb[np.abs(emb).argmax(axis=0), np.arange(emb.shape[1])])
+    signs[signs == 0] = 1.0
+    return emb * signs
 
 
 def _dinv(deg: np.ndarray) -> np.ndarray:

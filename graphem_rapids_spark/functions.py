@@ -10,14 +10,66 @@ flips, bootstrap resampling, Independent-Cascade edge coins).
 
 ``xxhash64``-based variants (graph/generators.py, influence seeds)
 remain for operators that don't need cross-engine replay — xxhash has
-better mixing but no DuckDB twin.
+better mixing but no DuckDB twin. :func:`xxhash64_np` is Spark's
+``xxhash64`` in numpy, for kernels that finish on the driver with the
+same hash keys as their Spark plan.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 MIX_M = 2147483648  # 2^31
+
+# Spark's XXH64 (org.apache.spark.sql.catalyst.expressions.XXH64)
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+_XXHASH_SEED = 42  # F.xxhash64's seed
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = h ^ (h >> np.uint64(33))
+    h = h * _P2
+    h = h ^ (h >> np.uint64(29))
+    h = h * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def _hash_long(x: np.ndarray, h: np.ndarray) -> np.ndarray:
+    h = h + _P5 + np.uint64(8)
+    h = h ^ (_rotl(x * _P2, 31) * _P1)
+    return _fmix(_rotl(h, 27) * _P1 + _P4)
+
+
+def _hash_int(x: np.ndarray, h: np.ndarray) -> np.ndarray:
+    h = h + _P5 + np.uint64(4)
+    h = h ^ ((x & np.uint64(0xFFFFFFFF)) * _P1)
+    return _fmix(_rotl(h, 23) * _P2 + _P3)
+
+
+def xxhash64_np(*cols) -> np.ndarray:
+    """``F.xxhash64(*cols)`` over int64 arrays and Python int literals,
+    bit for bit: an array is a bigint column; an int is the literal
+    ``F.lit(v)`` makes — an int column when it fits 32 bits, else a
+    bigint. Returns signed int64, Spark's sort order."""
+    h = np.full(np.broadcast_shapes(*map(np.shape, cols)), _XXHASH_SEED, np.uint64)
+    with np.errstate(over="ignore"):
+        for c in cols:
+            if isinstance(c, np.ndarray):
+                h = _hash_long(c.astype(np.int64).view(np.uint64), h)
+            elif -(2**31) <= c < 2**31:
+                h = _hash_int(np.array(c, np.int64).view(np.uint64), h)
+            else:
+                h = _hash_long(np.array(c, np.int64).view(np.uint64), h)
+    return h.view(np.int64)
 
 
 def mix_uniform(t, seed: int):

@@ -199,12 +199,15 @@ def estimated_influence(
     max_iter: int = 200,
 ) -> float:
     """Mean influenced-node count over Monte-Carlo trials (reference
-    ``ndlib_estimated_influence``, ``influence.py:40-84``)."""
+    ``ndlib_estimated_influence``, ``influence.py:40-84``). ``seeds``
+    is a seed set, as NDlib's: a repeated id counts once."""
     spark = edges.sparkSession
-    if not isinstance(seeds, DataFrame):
-        if len(seeds) == 0:
-            return 0.0
-        seeds = spark.createDataFrame([(int(s),) for s in seeds], "id long")
+    if isinstance(seeds, DataFrame):
+        seeds = seeds.select("id").distinct()
+    elif len(seeds) == 0:
+        return 0.0
+    else:
+        seeds = spark.createDataFrame([(s,) for s in sorted({int(s) for s in seeds})], "id long")
     act = independent_cascade(edges, seeds, p, trials, seed, max_iter)
     per_trial = act.groupBy("trial").agg(F.count("*").alias("n"))
     out = per_trial.agg(F.avg("n")).first()[0]

@@ -38,16 +38,22 @@ BROADCAST_POSITIONS_MAX = int(os.environ.get("GRAPHEM_BROADCAST_POS_MAX", "10000
 # min-label propagation (each star round costs ~3 shuffles vs
 # min-label's 1, so small graphs stay on the cheap path)
 CC_STAR_MIN_VERTICES = int(os.environ.get("GRAPHEM_CC_STAR_MIN", "5000000"))
-# small-state tails (IC reachability, Spearman ranks) finish in numpy on
-# the driver when the rows they would collect — an upper bound known
-# before the collect — are at most this many; above it the distributed
-# plan runs. Read at call time (tests set it to 0 to force the
-# distributed path). Measured on local[4] (4-core host, median of 3 warm
-# calls, driver vs distributed): Spearman of 2 columns at 10⁵ cells
-# 0.16 vs 1.83 s, at 10⁶ cells 0.33 vs 3.15 s; IC with 50 level-0 rows
-# at a 10⁵ bound 0.81 vs 1.78 s, at 10⁶ 0.87 vs 1.64 s. The driver wins
-# at both sizes; the cap stays at 10⁶ to bound driver memory (tens of
-# MB), and a cluster's distributed plan gains from more executors
+# small-state tails (IC reachability, Spearman ranks) and the force
+# layout finish in numpy on the driver when the rows they would collect
+# — an upper bound known before the collect; the layout's edge count —
+# are at most this many; above it the distributed plan runs. Read at
+# call time (tests set it to 0 to force the distributed path). Measured
+# on local[4] (4-core host, median of 3 warm calls, driver vs
+# distributed): Spearman of 2 columns at 10⁵ cells 0.16 vs 1.83 s, at
+# 10⁶ cells 0.33 vs 3.15 s; IC with 50 level-0 rows at a 10⁵ bound 0.81
+# vs 1.78 s, at 10⁶ 0.87 vs 1.64 s; one layout round (heavy-tailed
+# graph, average degree 8, 128 sampled edges) at 0.97×10⁵ edges 0.13 s
+# (0.63 s with the positions frame shipped back) vs 3.35 s, at
+# 1.15×10⁶ edges 1.0 s (3.1 s shipped) vs 7.0 s. The driver wins at
+# every size; the cap stays at 10⁶ to bound driver memory — at the cap
+# the layout holds ~35 MB of edge arrays and peaks ~180 MB in a round
+# (tracemalloc), the other tails tens of MB — and a cluster's
+# distributed plan gains from more executors
 DRIVER_COLLECT_MAX_ROWS = 1_000_000
 
 DRIVER_MEM_CAP_GB = 48

@@ -44,9 +44,10 @@ def spark():
 @pytest.fixture
 def on_both_paths(monkeypatch):
     """``on_both_paths(run)`` → ``[run() on the distributed path,
-    run() on the driver path]``: the small-state kernels (IC, Spearman)
-    finish on the driver below ``session.DRIVER_COLLECT_MAX_ROWS``, and
-    a cap of 0 forces their distributed plan."""
+    run() on the driver path]``: the small-state kernels (IC, Spearman,
+    the force layout) finish on the driver below
+    ``session.DRIVER_COLLECT_MAX_ROWS``, and a cap of 0 forces their
+    distributed plan."""
     from graphem_rapids_spark import session
 
     def run_both(run):

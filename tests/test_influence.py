@@ -163,3 +163,13 @@ def test_ic_driver_rows_pass_the_row_verifier(spark, path10, arrow):
     finally:
         spark.conf.set(key, before)
     assert rows == [(0, 1, i) for i in range(10)] + [(0, 2, i) for i in range(10)]
+
+
+def test_estimated_influence_counts_a_seed_once(spark, path10, on_both_paths):
+    # a seed set, as NDlib's: a repeated seed is one seed, for list and
+    # DataFrame input
+    dup = spark.createDataFrame([(0,), (0,)], "id long")
+    got = on_both_paths(
+        lambda: [estimated_influence(path10, s, p=0.0) for s in ([0, 0], dup)]
+    )
+    assert got == [[1.0, 1.0], [1.0, 1.0]]

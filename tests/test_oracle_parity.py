@@ -87,6 +87,10 @@ JOB_BUDGETS = {
     "graph_effective_diameter": 19,
     "spearman_qty_price": 6,
     "spearman_matrix": 6,
+    "layout_seed_selection": 14,
+    "graph_weighted_layout": 23,
+    "layout_invariants": 16,
+    "weighted_layout_invariants": 25,
 }
 
 
@@ -119,6 +123,10 @@ def _assert_owns_its_blocks(spark, name, sdf, before, reads):
     assert not left, f"{name}: persistent RDDs {sorted(left)} left after release"
 
 
+def _job_budget(name):
+    return JOB_BUDGETS.get(name) if os.path.basename(SF_DIR.rstrip("/")) == "sf0.001" else None
+
+
 def _canon_rows(rows, cols):
     order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
     return sorted("|".join(canon(r[i]) for i in order) for r in rows)
@@ -126,7 +134,7 @@ def _canon_rows(rows, cols):
 
 @pytest.mark.parametrize("name", sorted(ORACLES.keys()))
 def test_oracle_parity(spark, duck, name):
-    budget = JOB_BUDGETS.get(name) if os.path.basename(SF_DIR.rstrip("/")) == "sf0.001" else None
+    budget = _job_budget(name)
     copurchase_edges(spark, SF_DIR)  # memoized; shared by the graph queries
     before = _persistent_rdds(spark)
     if budget is not None:
@@ -170,10 +178,15 @@ def test_oracle_parity(spark, duck, name):
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
 def test_rows_only_queries_run(spark, name):
+    budget = _job_budget(name)
     copurchase_edges(spark, SF_DIR)
     before = _persistent_rdds(spark)
+    job0 = max_job_id(spark)
     sdf = QUERIES[name](spark, SF_DIR)
     reads = readable_blocks(sdf)
     assert sdf.count() >= 0
+    if budget is not None:
+        jobs = max_job_id(spark) - job0
+        assert jobs <= budget, f"{name}: {jobs} Spark jobs > budget {budget}"
     assert len(sdf.schema.fields) > 0
     _assert_owns_its_blocks(spark, name, sdf, before, reads)
