@@ -69,8 +69,6 @@ def laplacian_embedding(
     n_vertices: int,
     n_components: int = 2,
     seed: int = 0,
-    max_driver_n: int | None = None,
-    power_iters: int = 30,
     assume_canonical: bool = False,
 ) -> DataFrame | np.ndarray:
     """positions(id, pos: array<double>) from the spectral embedding.
@@ -87,17 +85,13 @@ def laplacian_embedding(
     embedder's driver layout)."""
     if isinstance(edges, tuple):
         return _driver_solve(*edges, n_vertices, n_components, seed, assume_canonical)
-    if max_driver_n is None:
-        from graphem_rapids_spark.session import DRIVER_EIG_MAX_VERTICES
+    from graphem_rapids_spark import session
 
-        max_driver_n = DRIVER_EIG_MAX_VERTICES
-    if n_vertices <= max_driver_n:
+    if n_vertices <= session.DRIVER_EIG_MAX_VERTICES:
         return _driver_eigh(
             edges, n_vertices, n_components, seed, assume_canonical
         )
-    return _distributed_orthogonal_iteration(
-        edges, n_vertices, n_components, seed, power_iters
-    )
+    return _distributed_orthogonal_iteration(edges, n_vertices, n_components, seed)
 
 
 def positions_frame(spark, pos: np.ndarray) -> DataFrame:
@@ -392,7 +386,7 @@ def _matvec_normalized_adjacency(sym_edges: DataFrame, deg: DataFrame, X: DataFr
 
 @owned
 def _distributed_orthogonal_iteration(
-    edges: DataFrame, n: int, n_components: int, seed: int, iters: int
+    edges: DataFrame, n: int, n_components: int, seed: int, iters: int = 30
 ) -> DataFrame:
     """Block power iteration with analytic deflation of the trivial
     eigenvector v0 ∝ D^{1/2}·1 of M = D^{-1/2} A D^{-1/2}."""

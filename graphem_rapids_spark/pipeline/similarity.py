@@ -19,10 +19,13 @@ Cosine here = dot(a,b)/(‖a‖‖b‖) computed in float64.
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame, Window
 
 from graphem_rapids_spark.checkpoint import eager_checkpoint as _eager_ckpt
-from graphem_rapids_spark.checkpoint import owned, persist, release
+from graphem_rapids_spark.checkpoint import owned, persist
 from pyspark.sql import functions as F
 
 
@@ -786,23 +789,38 @@ def pca_power_int8(
     components: int = 1,
 ) -> DataFrame:
     """(component, dim, v_micro, lam) — top-``components`` principal
-    components of the int8-quantized embedding cloud via DISTRIBUTED
-    power iteration with exact integer arithmetic at every
-    accumulation (the embedding-analysis companion to
-    :func:`quantize_int8` / :func:`project_jl`; the reference's
-    spectral surface runs n_components-wide eigendecompositions on
-    GPU dense tensors — this is its k>1 path, round-5 stretch).
+    components of the int8-quantized embedding cloud via power
+    iteration with exact integer arithmetic at every accumulation (the
+    embedding-analysis companion to :func:`quantize_int8` /
+    :func:`project_jl`; the reference's spectral surface runs
+    n_components-wide eigendecompositions on GPU dense tensors — this
+    is its k>1 path).
 
-    Components beyond the first come from per-iteration Gram–Schmidt
-    deflation: each matvec ``u = B·v`` is orthogonalized against every
-    already-extracted component ``w`` by subtracting
-    ``round((Σu·w / Σw·w) · w_i)`` — the coefficient is a ratio of
-    exact integer sums, the one rounded double product per element is
-    cast to BIGINT only after ``round()`` (integer-valued doubles cast
-    identically on both engines; a raw double→BIGINT cast would not:
-    Spark truncates, DuckDB rounds), and the subtraction happens in
-    BIGINT. The trajectory therefore stays bit-reproducible and the
-    SQL oracle replays all components exactly.
+    One distributed pass builds the centered scatter matrix from
+    integer sufficient statistics ``C_ij = n·Σq_iq_j − S_iS_j``
+    (BIGINT), floor-divided by n via pmod (both engines' ``%`` is
+    C-style, so ``(c − ((c % n + n) % n)) / n`` is an exact integer
+    floor division — no float, no negative-division semantics
+    mismatch). Pair statistics are one map-side upper-triangle explode
+    (d(d+1)/2 structs per row — no positional self-join) into an
+    (i, j)-keyed aggregate. The d(d+1)/2 entries are collected once and
+    mirrored into a d×d matrix of Python ints; every power round then
+    runs on the driver (:func:`_power_rounds`). The iteration state is
+    d×d whatever the number of vectors, so this holds at any n — as
+    MLlib's ``RowMatrix.computePrincipalComponents`` does with its
+    Gramian.
+
+    Each matvec ``u = B·v`` sums BIGINT·micro-unit products
+    (|u| ≤ 64·B_max·1e6 < 2⁵³ for n ≤ 4·10⁶ vectors, so the ONE
+    int→double conversion per element is exact); the only rounded
+    conversion is the decimal Σu² feeding IEEE sqrt, identical
+    cross-engine. v re-quantizes to 1e6 micro-units per round.
+    Components beyond the first come from per-round Gram–Schmidt
+    deflation: ``u`` is orthogonalized against every already-extracted
+    component ``w`` by subtracting ``round((Σu·w / Σw·w) · w_i)`` —
+    a ratio of exact integer sums, one rounded double product per
+    element, subtracted as an integer. The trajectory is therefore
+    bit-reproducible and the SQL oracle replays all components exactly.
 
     ``iters`` may be a per-component list: later components converge
     at the (λ_{k+1}/λ_k) Rayleigh ratio of the DEFLATED spectrum,
@@ -811,28 +829,7 @@ def pca_power_int8(
     budget the output on a near-degenerate spectrum is a top-subspace
     mixture — the oracle contract is exact trajectory parity, and the
     numpy-agreement pytest pins direction quality where the synthetic
-    data's gaps allow.
-
-    Exactness discipline: the centered scatter matrix is built from
-    integer sufficient statistics ``C_ij = n·Σq_iq_j − S_iS_j``
-    (BIGINT), floor-divided by n via pmod (both engines' ``%`` is
-    C-style, so ``(c − ((c % n + n) % n)) / n`` is an exact integer
-    floor division — no float, no negative-division semantics
-    mismatch). Each iteration's matvec ``u = B·v`` sums
-    BIGINT·micro-unit products (|u| ≤ 64·B_max·1e6 < 2⁵³ for
-    n ≤ 4·10⁶ vectors, so the ONE int→double conversion per element
-    is exact); the only rounded conversion is the decimal Σu² feeding
-    IEEE sqrt, identical cross-engine. v re-quantizes to 1e6
-    micro-units per iteration, so the whole trajectory is
-    bit-reproducible and the SQL oracle replays it exactly.
-
-    Physical shape: pair statistics are one map-side upper-triangle
-    explode (d(d+1)/2 structs per row — no positional self-join) into
-    a (i, j)-keyed aggregate; the 64×64 scatter table and 64-row
-    vector iterate with tiny joins (localCheckpoint per step)."""
-    from graphem_rapids_spark.pipeline.similarity import quantize_int8
-
-    spark = vectors.sparkSession
+    data's gaps allow."""
     q = quantize_int8(vectors, id_col, vec_col).select(
         F.col("q").cast("array<long>").alias("_q")
     )
@@ -869,113 +866,76 @@ def pca_power_int8(
         "i", "j",
         F.expr("(c - ((c % n + n) % n)) div n").cast("long").alias("b"),
     )
-    # checkpoint every generation (stats severed): the norm crossJoin
-    # references u twice, so a 40-iteration chain would compound its
-    # size estimate (SCALE.md §"Deep self-join chains")
-    full = _eager_ckpt(
-        b.unionAll(
-            b.filter(F.col("i") != F.col("j")).select(
-                F.col("j").alias("i"), F.col("i").alias("j"), "b"
-            )
-        )
-    )
+    B = [[0] * dim for _ in range(dim)]
+    for i, j, bij in b.collect():
+        B[i][j] = B[j][i] = bij
     iters_by_comp = (
         list(iters) if isinstance(iters, (list, tuple)) else [iters] * components
     )
-    if len(iters_by_comp) < components:
-        iters_by_comp += [iters_by_comp[-1]] * (components - len(iters_by_comp))
-    outs = []
-    # (w_df(vi, w), g_df(g)) per extracted component — the deflation
-    # basis the remaining components' loops read: w_df projects the
-    # component's final v, g_df is a one-row checkpoint
-    basis: list = []
-    for comp in range(1, components + 1):
-        v = _eager_ckpt(
-            spark.range(dim).select(
-                F.col("id").cast("long").alias("vi"),
-                F.lit(1000000).cast("long").alias("v"),
-            )
-        )
-        u = None
-        v_prev = v
-        for _t in range(iters_by_comp[comp - 1]):
-            if u is not None:
-                release(u)
-            if v_prev is not v:
-                release(v_prev)
+    iters_by_comp += [iters_by_comp[-1]] * (components - len(iters_by_comp))
+    pcs = _power_rounds(B, iters_by_comp[:components])
+    rows = [
+        (comp, i, vi, lam)
+        for comp, (v, lam) in enumerate(pcs, 1)
+        for i, vi in enumerate(v)
+    ]
+    return vectors.sparkSession.createDataFrame(
+        rows, "component bigint, dim int, v_micro bigint, lam double"
+    ).select("component", "dim", "v_micro", F.round("lam", 6).alias("lam"))
+
+
+_INT64 = 1 << 63
+_DECIMAL38 = 10**38
+
+
+def _bigint(x: int) -> int:
+    """x, or the ArithmeticError an ANSI BIGINT result raises."""
+    if not -_INT64 <= x < _INT64:
+        raise ArithmeticError(f"BIGINT overflow: {x}")
+    return x
+
+
+def _decimal_dot(a: list[int], b: list[int]) -> int:
+    """Σa_i·b_i, or the ArithmeticError a ``decimal(38,0)`` sum raises."""
+    t = sum(x * y for x, y in zip(a, b))
+    if abs(t) >= _DECIMAL38:
+        raise ArithmeticError(f"decimal(38,0) overflow: {t}")
+    return t
+
+
+def _half_up(x: float) -> int:
+    """Spark's ``round(x)`` of a double (BigDecimal HALF_UP at scale 0);
+    every x.5 below 2⁵² is itself a double, so the exact binary value
+    rounds the same way as Spark's decimal string."""
+    return int(Decimal(x).to_integral_value(ROUND_HALF_UP))
+
+
+def _power_rounds(
+    B: list[list[int]], iters_by_comp: list[int]
+) -> list[tuple[list[int], float]]:
+    """[(v, unrounded Rayleigh quotient)] per component: the integer
+    power iteration of :func:`pca_power_int8` on the d×d scatter ``B``,
+    each component deflated against the earlier ones in order."""
+    d = len(B)
+    basis: list[tuple[list[int], int]] = []  # (w, Σw²) per component
+    out = []
+    for rounds in iters_by_comp:
+        v = [1_000_000] * d
+        for _ in range(rounds):
             v_prev = v
-            u_raw = (
-                full.join(v, full["j"] == v["vi"])
-                .groupBy("i")
-                .agg(F.sum(F.col("b") * F.col("v")).alias("u"))
-            )
-            for w_df, g_df in basis:
-                uj = u_raw.join(w_df, u_raw["i"] == w_df["vi"])
-                coef = uj.agg(
-                    F.sum(F.col("u").cast("decimal(38,0)") * F.col("w")).alias("cf")
-                )
-                # proj_i = round((cf / g) * w_i) as an exact
-                # integer-valued double, THEN cast; subtract in BIGINT
-                u_raw = (
-                    uj.crossJoin(F.broadcast(coef))
-                    .crossJoin(F.broadcast(g_df))
-                    .select(
-                        "i",
-                        (
-                            F.col("u")
-                            - F.round(
-                                F.col("cf").cast("double")
-                                / F.col("g").cast("double")
-                                * F.col("w").cast("double")
-                            ).cast("long")
-                        ).alias("u"),
-                    )
-                )
-            u = _eager_ckpt(u_raw)
-            norm = u.agg(
-                F.sqrt(
-                    F.sum(F.col("u").cast("decimal(38,0)") * F.col("u")).cast("double")
-                ).alias("nrm")
-            )
-            v = _eager_ckpt(
-                u.crossJoin(F.broadcast(norm)).select(
-                    F.col("i").alias("vi"),
-                    F.round(F.col("u").cast("double") / F.col("nrm") * F.lit(1e6))
-                    .cast("long")
-                    .alias("v"),
-                )
-            )
-        # Rayleigh quotient from the final matvec pair (u = deflated
-        # B·v_prev): lam = (v_prev·u)/(v_prev·v_prev) — exact decimal
-        # sums, one double division
-        ray = (
-            u.join(v_prev, u["i"] == v_prev["vi"])
-            .agg(
-                (
-                    F.sum(F.col("v").cast("decimal(38,0)") * F.col("u")).cast("double")
-                    / F.sum(F.col("v").cast("decimal(38,0)") * F.col("v")).cast(
-                        "double"
-                    )
-                ).alias("lam")
-            )
-            .select(F.round("lam", 6).alias("lam"))
-        )
-        outs.append(
-            v.crossJoin(F.broadcast(ray)).select(
-                F.lit(comp).cast("long").alias("component"),
-                F.col("vi").alias("dim"),
-                F.col("v").alias("v_micro"),
-                "lam",
-            )
-        )
-        if comp < components:
-            w_df = v.select("vi", F.col("v").alias("w"))
-            g_df = _eager_ckpt(w_df.agg(F.sum(F.col("w") * F.col("w")).alias("g")))
-            basis.append((w_df, g_df))
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionAll(o)
-    return result
+            u = [_bigint(sum(bij * vj for bij, vj in zip(row, v))) for row in B]
+            for w, g in basis:
+                cf = float(_decimal_dot(u, w))
+                u = [
+                    _bigint(ui - _half_up(cf / float(g) * float(wi)))
+                    for ui, wi in zip(u, w)
+                ]
+            nrm = math.sqrt(float(_decimal_dot(u, u)))
+            v = [_half_up(float(ui) / nrm * 1e6) for ui in u]
+        lam = float(_decimal_dot(v_prev, u)) / float(_decimal_dot(v_prev, v_prev))
+        out.append((v, lam))
+        basis.append((v, _bigint(sum(x * x for x in v))))
+    return out
 
 
 def kcenter_select(

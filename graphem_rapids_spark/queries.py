@@ -8705,17 +8705,17 @@ _PCA_ITERS = 40
 
 
 def embedding_pca_power(spark, sf_dir):
-    """Top-2 principal components of the embedding table via
-    distributed integer power iteration with per-iteration
-    Gram–Schmidt deflation (see
-    :func:`pipeline.similarity.pca_power_int8`): centered scatter
-    from exact BIGINT sufficient statistics, ``_PCA_ITERS_BY_COMP``
-    fixed iterations per component (the deflated component earns a
-    3x budget: its Rayleigh ratio on the flat synthetic spectrum is
-    worse than the leading gap) with micro-unit re-quantization and an
-    integer-exact orthogonalization step — the whole 2-component
-    trajectory replays bit-for-bit in the SQL oracle. Output: 128
-    rows (component, dim, v_micro, lam)."""
+    """Top-2 principal components of the embedding table via integer
+    power iteration with per-iteration Gram–Schmidt deflation (see
+    :func:`pipeline.similarity.pca_power_int8`): one distributed pass
+    builds the centered scatter from exact BIGINT sufficient
+    statistics, then ``_PCA_ITERS_BY_COMP`` fixed iterations per
+    component run on the driver over the collected 64×64 matrix (the
+    deflated component earns a 3x budget: its Rayleigh ratio on the
+    flat synthetic spectrum is worse than the leading gap) with
+    micro-unit re-quantization and an integer-exact orthogonalization
+    step — the whole 2-component trajectory replays bit-for-bit in the
+    SQL oracle. Output: 128 rows (component, dim, v_micro, lam)."""
     emb = _t(spark, sf_dir, "embeddings")
     return S.pca_power_int8(
         emb, iters=list(_PCA_ITERS_BY_COMP), components=len(_PCA_ITERS_BY_COMP)

@@ -83,7 +83,7 @@ JOB_BUDGETS = {
     "graph_mis_luby": 93,
     "graph_matching_luby": 68,
     "graph_densest_subgraph": 46,
-    "embedding_pca_power": 1905,
+    "embedding_pca_power": 10,
     "graph_effective_diameter": 19,
     "spearman_qty_price": 6,
     "spearman_matrix": 6,

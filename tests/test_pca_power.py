@@ -1,4 +1,5 @@
-"""Distributed integer power-iteration PCA: direction agreement with
+"""Integer power-iteration PCA (distributed scatter pass, power rounds
+on the driver over the collected d×d matrix): direction agreement with
 a numpy eigendecomposition of the same int8 lattice for BOTH
 components (k=2 via per-iteration Gram-Schmidt deflation), plus
 invariants (unit micro-norm, orthogonality, deterministic reruns).
