@@ -5,7 +5,7 @@ dataflow (small graphs run the same round in numpy, below):
 - gather-by-index → equi-join edges⋈positions (broadcast when small)
 - scatter-add     → groupBy(id) hash aggregate with per-component sums
 - topk            → row_number window over distance
-- normalization   → global agg (mean, stddev_samp) + crossJoin(1 row)
+- normalization   → global agg (mean, stddev_samp), applied as literals
 
 Semantics preserved exactly (SURVEY.md §7.4 item 5):
 - spring law ``F = -k_attr·(dist−L_min)·unit(p2−p1)`` with +1e-6 on
@@ -39,17 +39,20 @@ materializes and counts the canonical edge table:
   different order than Spark's hash aggregate, so the two paths agree
   to rounding (~1e-12 after a few rounds), not bit for bit.
 - **distributed** (larger graphs): positions are a DataFrame and each
-  round is a join/aggregate dataflow. Every round checkpoints its
-  moved positions (``localCheckpoint``, lazy on the intersection
-  path), which truncates lineage each round; the superseded round's
-  blocks are released once a later scan has read them (the Pregel
-  problem, SURVEY.md §4).
+  round is a join/aggregate dataflow, one :func:`checkpoint.iterate`
+  round (the Pregel problem, SURVEY.md §4). Its state is the moved,
+  unnormalized positions, lazily checkpointed; the centring/scaling
+  aggregate is its one full scan, after which the previous state and
+  the midpoint table are released. Positions are the state normalized
+  by the collected stats, so the edge table and the state are all the
+  embedder keeps cached.
 
 Scale notes (distributed path): positions are n×(d+1) doubles —
-broadcast-joined while they fit (< ~1e8 vertices with 64 MB threshold
-the planner decides); edge joins otherwise shuffle on id with AQE
-handling skew. The kNN side is bounded by ``sample_size ≤ 1024``
-queries regardless of graph size, exactly like the reference.
+broadcast-joined while n ≤ ``session.BROADCAST_POSITIONS_MAX`` (the
+iterative kernels' one vertex-table rule); edge joins otherwise
+shuffle on id with AQE handling skew. The kNN side is bounded by
+``sample_size ≤ 1024`` queries regardless of graph size, exactly like
+the reference.
 """
 
 from __future__ import annotations
@@ -59,9 +62,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphem_rapids_spark import session
+from graphem_rapids_spark.analytics import _vertex_table_fits_broadcast
 from graphem_rapids_spark.checkpoint import (
     checkpoint_count,
-    eager_checkpoint,
+    # unused here, but bound by name: perfbench's tracer rewraps this
+    # module's checkpoint functions and its tests read the binding
+    eager_checkpoint,  # noqa: F401
+    iterate,
     lazy_checkpoint,
     persist,
     release,
@@ -236,18 +243,15 @@ class GraphEmbedderSpark:
         if self._driver:
             self._init_driver(cols)
             return
-        self._positions = persist(laplacian_embedding(
+        # the round state :func:`iterate` carries and releases: the
+        # persisted init, then each round's checkpointed `moved`
+        self._state = self._positions = persist(laplacian_embedding(
             self.edges, self.n, self.dim, seed=self.seed,
             # self.edges is src<dst distinct by construction (canonical
             # contract or the canonicalize/groupBy above): the driver
             # eigensolve can skip its dedupe sort
             assume_canonical=True,
         ))
-        # frame owning the blocks behind _positions (the persisted
-        # init, then each round's checkpointed `moved`) + releases
-        # deferred until a later scan materializes their last reader
-        self._pos_owner = self._positions
-        self._stale_blocks: list[DataFrame] = []
 
     def _init_driver(self, cols: list[str]) -> None:
         """Driver path set-up: collect the edge table once, in the
@@ -289,27 +293,12 @@ class GraphEmbedderSpark:
             out[r.id] = r.pos
         return out
 
-    def set_positions(self, df: DataFrame) -> None:
-        if self._driver:
-            P = np.zeros((self.n, self.dim))
-            for r in df.select("id", "pos").collect():
-                P[r.id] = r.pos
-            self._P, self._pos_frame = P, None
-            return
-        old_owner = self._pos_owner
-        self._positions = persist(df)
-        self._positions.count()  # materializes before any release
-        self._pos_owner = self._positions
-        self._release_stale()
-        if old_owner is not None:
-            release(old_owner)
-
     # -- internals -------------------------------------------------------
     def _pos_as(self, alias_id: str, alias_pos: str) -> DataFrame:
         p = self._positions.select(
             F.col("id").alias(alias_id), F.col("pos").alias(alias_pos)
         )
-        return F.broadcast(p) if self.n <= 50_000_000 // (self.dim + 1) else p
+        return F.broadcast(p) if _vertex_table_fits_broadcast(self.n) else p
 
     def _edge_endpoints(self) -> DataFrame:
         """edges with both endpoint positions gathered (E2/E3 join)."""
@@ -401,10 +390,7 @@ class GraphEmbedderSpark:
         # LAZY (r8 opt round): the per-iteration sample right below is
         # a TakeOrdered over this table — a full scan of every
         # partition — so it materializes the checkpoint blocks itself
-        # and the dedicated materialization job folds away. Converting
-        # the plan to an RDD here also fires the positions broadcast,
-        # which fully scans (hence materializes) the previous round's
-        # lazily checkpointed `moved`.
+        # and the dedicated materialization job folds away.
         mids = lazy_checkpoint(mids, sever_stats=False)
         s = min(self.sample_size, self.n_edges)
         # sample the ≤s query edges straight from the MATERIALIZED
@@ -549,14 +535,6 @@ class GraphEmbedderSpark:
         ).select("c.*")
         return out, mids
 
-    def _release_stale(self) -> None:
-        """Free checkpoint/persist blocks whose last reader has now
-        materialized (deferred from the previous iteration — see
-        :meth:`update_positions`)."""
-        for df in self._stale_blocks:
-            release(df)
-        self._stale_blocks = []
-
     def _driver_round(self) -> None:
         """One layout step on the driver: the distributed round's steps
         and float expressions, in its order, over the n×d array."""
@@ -616,92 +594,47 @@ class GraphEmbedderSpark:
         if self._driver:
             self._driver_round()
             return
-        ee = self._edge_endpoints()
-        if self.k_inter > 0 and self.n_edges > 1:
-            inter, mids_cache = self._intersection_contribs(ee)
-            # the eager midpoint materialization inside
-            # _intersection_contribs was this iteration's first full
-            # scan of the previous positions — every lazily
-            # checkpointed frame from the previous round is
-            # materialized now, so its inputs can be freed
-            self._release_stale()
-            # spring forces read the CACHED midpoint table (it carries
-            # src/dst/p1/p2) — the edges⋈positions gather join runs
-            # once per iteration, not once per force family
-            spring = self._spring_contribs(mids_cache)
-            contribs = spring.unionAll(inter)
-        else:
-            mids_cache = None
-            spring = self._spring_contribs(ee)
-            contribs = spring
-        forces = contribs.groupBy("id").agg(
-            *[F.sum(F.col(f"f{d}")).alias(f"f{d}") for d in range(self.dim)]
-        )
-        moved = (
-            self._positions.join(forces, "id", "left")
-            .select(
-                "id",
-                F.array(
-                    *[
-                        F.col("pos").getItem(d) + F.coalesce(F.col(f"f{d}"), F.lit(0.0))
-                        for d in range(self.dim)
-                    ]
-                ).alias("pos"),
+        dims = range(self.dim)
+        held = {}
+
+        def step(_state, _r):
+            """positions ⋈ this round's forces: the moved positions."""
+            ee = self._edge_endpoints()
+            if self.k_inter > 0 and self.n_edges > 1:
+                inter, held["mids"] = self._intersection_contribs(ee)
+                # spring forces read the midpoint checkpoint (it carries
+                # src/dst/p1/p2) — the edges⋈positions gather join runs
+                # once per round, not once per force family
+                contribs = self._spring_contribs(held["mids"]).unionAll(inter)
+            else:
+                contribs = self._spring_contribs(ee)
+            forces = contribs.groupBy("id").agg(*[F.sum(f"f{d}").alias(f"f{d}") for d in dims])
+            shifted = [F.col("pos").getItem(d) + F.coalesce(f"f{d}", F.lit(0.0)) for d in dims]
+            return self._positions.join(forces, "id", "left").select(
+                "id", F.array(*shifted).alias("pos")
             )
-        )
-        # localCheckpoint BEFORE the normalization stats: `moved` is
-        # referenced twice (stats broadcast subjob + final projection)
-        # and would otherwise run the whole force pipeline twice per
-        # iteration. Checkpointing every iteration also truncates the
-        # logical plan (persist() alone caches data but not the plan —
-        # analysis cost grows exponentially without truncation).
-        #
-        # LAZY on the intersection path (r8 opt round): the next full
-        # scan of `moved` — the stats aggregate feeding the broadcast,
-        # or the next iteration's eager midpoint materialization —
-        # computes the force pipeline ONCE and persists every
-        # partition as a side effect, folding the dedicated
-        # materialization job (and its block re-scan) into work the
-        # loop does anyway. The spring-only path keeps the eager form:
-        # nothing there is guaranteed to scan `moved` before the next
-        # round stacks another lazy plan on top.
-        if mids_cache is not None:
-            moved = moved.transform(lazy_checkpoint)
-        else:
-            moved = moved.transform(eager_checkpoint)
-        # center + per-dim sample-std scale (:801-804; torch.std is ddof=1)
-        stats = moved.agg(
-            *[F.avg(F.col("pos").getItem(d)).alias(f"m{d}") for d in range(self.dim)],
-            *[F.stddev_samp(F.col("pos").getItem(d)).alias(f"s{d}") for d in range(self.dim)],
-        )
-        newpos = moved.crossJoin(F.broadcast(stats)).select(
-            "id",
-            F.array(
-                *[
-                    (F.col("pos").getItem(d) - F.col(f"m{d}"))
-                    / (F.coalesce(F.col(f"s{d}"), F.lit(0.0)) + F.lit(_EPS))
-                    for d in range(self.dim)
-                ]
-            ).alias("pos"),
-        )
+
+        def stop(moved, _r):
+            # center + per-dim sample-std scale (:801-804; torch.std is
+            # ddof=1): the round's one full scan, which materializes
+            # `moved` — the midpoint table has no reader after it
+            held["stats"] = moved.agg(
+                *[F.avg(F.col("pos").getItem(d)) for d in dims],
+                *[F.stddev_samp(F.col("pos").getItem(d)) for d in dims],
+            ).first()
+            if "mids" in held:
+                release(held["mids"])
+
+        self._state, _ = iterate(self._state, step, 1, stop=stop)
+        mean, std = held["stats"][: self.dim], held["stats"][self.dim :]
+        # a projection over the checkpointed state (O(1) plan depth);
+        # coalesce(stddev_samp, 0) for one vertex
+        scaled = [
+            (F.col("pos").getItem(d) - F.lit(mean[d])) / F.lit((std[d] or 0.0) + _EPS)
+            for d in dims
+        ]
+        self._positions = self._state.select("id", F.array(*scaled).alias("pos"))
         self._iter += 1
-        old_owner = self._pos_owner
-        # _positions stays a thin projection over the checkpointed
-        # `moved` — O(1) plan depth, no extra materialization pass
-        self._positions = newpos
-        self._pos_owner = moved
-        if mids_cache is not None:
-            # lazy path: `moved` is not materialized yet and its
-            # lineage still reads the previous positions' blocks and
-            # the midpoint cache — defer both releases until the next
-            # full scan proves materialization (_release_stale)
-            self._stale_blocks += [
-                df for df in (old_owner, mids_cache) if df is not None
-            ]
-        elif old_owner is not None:
-            # eager path: `moved` is materialized, the previous
-            # positions' blocks have no reader left
-            release(old_owner)
 
     def run_layout(self, num_iterations: int = 100) -> DataFrame:
         """E13 (``run_layout`` :808-833)."""

@@ -2456,9 +2456,9 @@ def connected_components_star(spark, sf_dir):
     return labels.groupBy("component").agg(F.count("*").alias("size"))
 
 
-def layout_seed_selection(spark, sf_dir):
-    """Flagship: co-purchase graph → spectral init → force layout →
-    radial top-10 (the reference's headline query, README.md:170-189)."""
+def _copurchase_layout(spark, sf_dir):
+    """The flagship layout: the contiguously relabeled co-purchase
+    graph → spectral init → 2 force rounds. ``(emb, mapping)``."""
     from graphem_rapids_spark.embedding.embedder import GraphEmbedderSpark
     from graphem_rapids_spark.graph.canon import relabel_contiguous
 
@@ -2468,24 +2468,14 @@ def layout_seed_selection(spark, sf_dir):
         e, n, n_components=2, seed=42, sample_size=128, canonical=True
     )
     emb.run_layout(2)
-    r = emb.radial_distances()
-    top = (
-        r.orderBy(F.col("radius").desc(), F.col("id").asc())
-        .limit(10)
-        .join(mapping, r.id == mapping.new_id)
-        .select(F.col("old_id").alias("part_id"), F.round("radius", 4).alias("radius"))
-    )
-    return top
+    return emb, mapping
 
 
-def graph_weighted_layout(spark, sf_dir):
-    """Weighted force layout: co-purchase multiplicity (how many
-    orders share the pair) scales the spring magnitude, so frequently
-    co-bought parts settle at tighter equilibrium — the weighted
-    variant the reference declares future work (SURVEY §1.2). Radial
-    top-10. Float-iterative ⇒ rows-only; the weighted force law is
-    pinned exactly by test_weighted_spring_force_oracle and the
-    unit-weight path is bit-identical to the flagship's."""
+def _weighted_copurchase_layout(spark, sf_dir):
+    """:func:`_copurchase_layout` with co-purchase multiplicity (how
+    many orders share the pair) as the spring weight. The vertex set
+    equals the unweighted graph's (same distinct (order, part)
+    co-occurrence pairs; only edge weights differ)."""
     from graphem_rapids_spark.embedding.embedder import GraphEmbedderSpark
     from graphem_rapids_spark.graph.canon import relabel_contiguous
 
@@ -2512,15 +2502,16 @@ def graph_weighted_layout(spark, sf_dir):
         .select("src", F.col("new_id").alias("dst"), "w")
     )
     emb = GraphEmbedderSpark(
-        wre,
-        n,
-        n_components=2,
-        seed=42,
-        sample_size=128,
-        canonical=True,
+        wre, n, n_components=2, seed=42, sample_size=128, canonical=True,
         weight_col="w",
     )
     emb.run_layout(2)
+    return emb, mapping
+
+
+def _radial_top10(emb, mapping):
+    """(part_id, radius): the layout's 10 largest radii (ties by id),
+    joined back to the original part keys."""
     r = emb.radial_distances()
     return (
         r.orderBy(F.col("radius").desc(), F.col("id").asc())
@@ -2528,6 +2519,23 @@ def graph_weighted_layout(spark, sf_dir):
         .join(mapping, r.id == mapping.new_id)
         .select(F.col("old_id").alias("part_id"), F.round("radius", 4).alias("radius"))
     )
+
+
+def layout_seed_selection(spark, sf_dir):
+    """Flagship: co-purchase graph → spectral init → force layout →
+    radial top-10 (the reference's headline query, README.md:170-189)."""
+    return _radial_top10(*_copurchase_layout(spark, sf_dir))
+
+
+def graph_weighted_layout(spark, sf_dir):
+    """Weighted force layout: co-purchase multiplicity scales the
+    spring magnitude, so frequently co-bought parts settle at tighter
+    equilibrium — the weighted variant the reference declares future
+    work (SURVEY §1.2). Radial top-10. Float-iterative ⇒ rows-only;
+    the weighted force law is pinned exactly by
+    test_weighted_spring_force_oracle and the unit-weight path is
+    bit-identical to the flagship's."""
+    return _radial_top10(*_weighted_copurchase_layout(spark, sf_dir))
 
 
 def layout_invariants(spark, sf_dir):
@@ -2546,16 +2554,7 @@ def layout_invariants(spark, sf_dir):
     by that join and show up here). Mirrors the reference's own
     invariant-test strategy for the float layout
     (tests/test_pytorch_backend.py:326-379)."""
-    from graphem_rapids_spark.embedding.embedder import GraphEmbedderSpark
-    from graphem_rapids_spark.graph.canon import relabel_contiguous
-
-    e, mapping = relabel_contiguous(copurchase_edges(spark, sf_dir), canonical=True)
-    n = mapping.count()
-    emb = GraphEmbedderSpark(
-        e, n, n_components=2, seed=42, sample_size=128, canonical=True
-    )
-    emb.run_layout(2)
-    return _layout_invariant_stats(emb, mapping)
+    return _layout_invariant_stats(*_copurchase_layout(spark, sf_dir))
 
 
 def _layout_invariant_stats(emb, mapping):
@@ -2574,13 +2573,7 @@ def _layout_invariant_stats(emb, mapping):
             F.sum(F.when(bad, 1).otherwise(0)), F.lit(0)
         ).cast("long").alias("n_nonfinite"),
     )
-    r = emb.radial_distances()
-    top = (
-        r.orderBy(F.col("radius").desc(), F.col("id").asc())
-        .limit(10)
-        .join(mapping, r.id == mapping.new_id)
-    )
-    sstats = top.agg(F.count("*").cast("long").alias("n_seeds"))
+    sstats = _radial_top10(emb, mapping).agg(F.count("*").cast("long").alias("n_seeds"))
     return pstats.crossJoin(sstats)
 
 
@@ -2590,36 +2583,9 @@ def weighted_layout_invariants(spark, sf_dir):
     same deterministic shape facts — one position per vertex of the
     weighted co-purchase graph, 2-D, all-finite, mapping-surviving
     top-10 — derived by the oracle from the graph alone. The weighted
-    graph's vertex set equals the unweighted one (same distinct
-    (order, part) co-occurrence pairs; only edge weights differ), so
-    the oracle CTE is shared."""
-    from graphem_rapids_spark.embedding.embedder import GraphEmbedderSpark
-    from graphem_rapids_spark.graph.canon import relabel_contiguous
-
-    op = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = op.select(F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("dst"))
-    we = (
-        a.join(b, (F.col("ok") == F.col("ok2")) & (F.col("src") < F.col("dst")))
-        .groupBy("src", "dst")
-        .agg(F.count("*").cast("double").alias("w"))
-        .transform(_eager_ckpt)
-    )
-    _, mapping = relabel_contiguous(we.select("src", "dst"), canonical=True)
-    n = mapping.count()
-    m = mapping
-    wre = (
-        we.join(m, we.src == m.old_id)
-        .select(F.col("new_id").alias("src"), "dst", "w")
-        .join(m, F.col("dst") == m.old_id)
-        .select("src", F.col("new_id").alias("dst"), "w")
-    )
-    emb = GraphEmbedderSpark(
-        wre, n, n_components=2, seed=42, sample_size=128, canonical=True,
-        weight_col="w",
-    )
-    emb.run_layout(2)
-    return _layout_invariant_stats(emb, mapping)
+    graph's vertex set equals the unweighted one, so the oracle CTE is
+    shared."""
+    return _layout_invariant_stats(*_weighted_copurchase_layout(spark, sf_dir))
 
 
 _LAYOUT_INVARIANTS_SQL = f"""{_COPURCHASE_SQL_CTE},

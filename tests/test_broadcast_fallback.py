@@ -6,6 +6,7 @@ hash-checks these queries regardless of physical strategy."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -114,6 +115,38 @@ def test_betweenness_shuffle_path_matches_broadcast(linked_triangles, monkeypatc
     monkeypatch.setattr(session, "BROADCAST_POSITIONS_MAX", 0)
     sh = _collect_map(betweenness_sampled(linked_triangles, 6))
     assert bc == sh
+
+
+def test_layout_shuffle_path_matches_broadcast(spark, monkeypatch):
+    """The distributed force layout gathers positions through a
+    shuffle join above BROADCAST_POSITIONS_MAX (with auto-broadcast
+    off too): same layout to 1e-9 and the same radial top-10. Force
+    sums add in another order, so not bit for bit."""
+    from graphem_rapids_spark.embedding.embedder import GraphEmbedderSpark
+    from graphem_rapids_spark.graph.generators import generate_sbm
+
+    monkeypatch.setattr(session, "DRIVER_COLLECT_MAX_ROWS", 0)
+    g = generate_sbm(n_per_block=50, num_blocks=4, p_in=0.2, p_out=0.01, seed=3, spark=spark)
+
+    def run():
+        emb = GraphEmbedderSpark(g.edges, g.n_vertices, n_components=2, seed=11, sample_size=64)
+        emb.run_layout(3)
+        r = emb.radial_distances()
+        top = r.orderBy(F.col("radius").desc(), F.col("id").asc()).limit(10)
+        plan = emb._edge_endpoints()._jdf.queryExecution().executedPlan().toString()
+        return emb.get_positions(), [row.id for row in top.collect()], plan
+
+    P_bc, top_bc, plan_bc = run()
+    monkeypatch.setattr(session, "BROADCAST_POSITIONS_MAX", 0)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        P_sh, top_sh, plan_sh = run()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "BroadcastHashJoin" in plan_bc and "BroadcastHashJoin" not in plan_sh
+    assert np.abs(P_bc - P_sh).max() <= 1e-9
+    assert top_bc == top_sh
 
 
 def _ppr_reference(edge_list, seeds, alpha=0.85, iters=200):

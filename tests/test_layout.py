@@ -2,7 +2,8 @@
 finiteness, coordinate bound, no dimension collapse, determinism, and
 an exact spring-force oracle on K4 (FIXTURES.md) — each on the driver
 layout and the distributed one (``on_both_paths``), plus the two
-paths' parity and the driver path's job count."""
+paths' parity, each path's job count and the distributed path's
+cached blocks."""
 
 import math
 from contextlib import contextmanager
@@ -11,6 +12,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from graphem_rapids_spark import session
 from graphem_rapids_spark.embedding.embedder import GraphEmbedderSpark
 from graphem_rapids_spark.embedding.laplacian import laplacian_embedding
 from graphem_rapids_spark.functions import xxhash64_np
@@ -278,6 +280,49 @@ def test_driver_layout_runs_no_job_per_round(spark):
     emb.run_layout(5)
     assert len(_top10(emb)) == 10
     assert max_job_id(spark) - job0 <= 5
+
+
+def _cached_rdds(spark) -> set[int]:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+@pytest.mark.parametrize("k_inter", [0.5, 0.0])
+def test_distributed_layout_caches_two_blocks(spark, monkeypatch, k_inter):
+    """The distributed round frees its superseded state and its
+    midpoint table inside the round: after every round, and after the
+    positions are read, the embedder holds exactly the edge table and
+    the round state."""
+    monkeypatch.setattr(session, "DRIVER_COLLECT_MAX_ROWS", 0)
+    g = generate_sbm(n_per_block=50, num_blocks=4, p_in=0.2, p_out=0.01, seed=3, spark=spark)
+    before = _cached_rdds(spark)
+    emb = GraphEmbedderSpark(
+        g.edges, g.n_vertices, n_components=2, seed=11, sample_size=64, k_inter=k_inter
+    )
+    held = []
+    for _ in range(4):
+        emb.update_positions()
+        held.append(len(_cached_rdds(spark) - before))
+    emb.get_positions()
+    held.append(len(_cached_rdds(spark) - before))
+    assert held == [2] * 5
+
+
+def test_distributed_round_job_count(spark, monkeypatch):
+    """Every distributed round after the first runs the same number of
+    jobs, 10 measured; the bound (10 + 1) sits below the 12 a round ran
+    when its stats were a broadcast cross join the next round read and
+    its releases were deferred to the next round."""
+    monkeypatch.setattr(session, "DRIVER_COLLECT_MAX_ROWS", 0)
+    g = generate_sbm(n_per_block=50, num_blocks=4, p_in=0.2, p_out=0.01, seed=3, spark=spark)
+    emb = GraphEmbedderSpark(g.edges, g.n_vertices, n_components=2, seed=11, sample_size=64)
+    emb.update_positions()
+    jobs = []
+    for _ in range(3):
+        job0 = max_job_id(spark)
+        emb.update_positions()
+        jobs.append(max_job_id(spark) - job0)
+    assert len(set(jobs)) == 1, jobs
+    assert jobs[0] <= 11, jobs
 
 
 def test_xxhash64_port_matches_spark(spark):
